@@ -2,11 +2,13 @@
 
 Re-derives reference ``handyspark/extensions/evaluation.py`` WITHOUT the
 JVM bridge (``call``/``call2`` Tuple2-RDD deserialization into mllib): the
-entire threshold-metric family is ONE Spark plan — group scores, cumulative
+threshold-metric family is ONE Spark plan — group scores, cumulative
 sums over a score-descending window — and every curve is a projection of
 that plan. mllib endpoint conventions preserved (evaluation.py:14-34):
 roc prepends (0,0) and appends (1,1); pr prepends (0, p@lowest-recall);
-getMetricsByThreshold appends the (0, 1, 1, 0) sentinel row.
+getMetricsByThreshold appends the (0, 1, 1, 0) sentinel row. Those
+sentinel rows are built inside the plan (a one-row range exploded by
+``inline``), so no Python-side rows are pickled into the query.
 
 Scale note: the cumulative pass uses distributed partition-offset
 ranking (``operators.rank.ranged_cumsum``) — the curve build is one
@@ -14,13 +16,40 @@ range exchange over distinct scores, N-way parallel, with no
 single-partition window even when scores are fully continuous
 (|distinct| ~ |rows|). ``score_bins`` additionally pre-bins scores to a
 fixed precision when a smaller curve is wanted.
+
+``areaUnderROC`` is NOT a projection of the curve: it has its own
+single-branch plan (``operators.rank.ranged_partition_aggs``: grouped
+scores -> range exchange -> running tp inside each range partition ->
+one row of partial sums per partition), and the driver combines those
+rows (one per shuffle partition at most) in partition order. One SQL
+execution, no local checkpoint, no totals join.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.rank import ranged_cumsum
+from ..core.util import HandyException
+from ..operators.rank import ranged_cumsum, ranged_partition_aggs
+
+
+def _const_rows(spark, names: list[str], rows: list[tuple]) -> DataFrame:
+    """Constant double rows built inside the plan: one range row exploded
+    by ``inline`` — no Python RDD scan, no Python worker."""
+    structs = [F.struct(*[F.lit(float(v)).alias(c)
+                          for c, v in zip(names, r)]) for r in rows]
+    return spark.range(1).select(F.inline(F.array(*structs)))
+
+
+def _auc_from_sums(area2: float | None, P: float | None,
+                   N: float | None) -> float:
+    """AUC = Σ _neg·(2·tp − _pos) / (2·P·N); undefined (named error, not
+    a divide-by-zero) when either class is absent or there are no rows."""
+    if not P or not N:
+        raise HandyException(
+            f"areaUnderROC is undefined: needs both classes, got "
+            f"{int(P or 0)} positive and {int(N or 0)} negative labels")
+    return float(area2) / (2.0 * P * N)
 
 
 class BinaryClassificationMetrics:
@@ -43,15 +72,19 @@ class BinaryClassificationMetrics:
                                  .alias("label"))
         self._cum = None
 
+    def _grouped(self) -> DataFrame:
+        """(score, _pos, _neg): label counts per distinct score."""
+        return (self._scores.groupBy("score")
+                .agg(F.sum("label").alias("_pos"),
+                     F.sum(F.lit(1.0) - F.col("label")).alias("_neg")))
+
     # -- the single shared plan --------------------------------------------
     def _curve(self) -> DataFrame:
         """Per distinct score (desc): cumulative tp/fp + totals. One
         grouped agg + one distributed cumsum; P/N come free from the
         cumsum's per-partition totals (no extra pass over the scores)."""
         if self._cum is None:
-            g = (self._scores.groupBy("score")
-                 .agg(F.sum("label").alias("_pos"),
-                      F.sum(F.lit(1.0) - F.col("label")).alias("_neg"))
+            g = (self._grouped()
                  # pin the (|distinct scores|-row) grouped frame so the
                  # expensive score extraction + grouping runs ONCE — the
                  # cumsum's range-exchange sampling pass would otherwise
@@ -67,8 +100,8 @@ class BinaryClassificationMetrics:
         return self._cum
 
     def persist(self) -> "BinaryClassificationMetrics":
-        """Materialize the shared curve once so every downstream metric
-        (roc/pr/auc/thresholds/fMeasure/getMetricsByThreshold) is a cheap
+        """Materialize the shared curve once so every curve metric
+        (roc/pr/thresholds/fMeasure/getMetricsByThreshold) is a cheap
         projection of the cached frame instead of a full rebuild. The
         curve is |distinct scores| rows — small after score_bins/rounding;
         cache-friendly even at 100 TB input."""
@@ -92,9 +125,9 @@ class BinaryClassificationMetrics:
             (F.col("tp") / F.col("P")).alias("tpr"),
             "score")
         spark = c.sparkSession
-        ends = spark.createDataFrame(
-            [(0.0, 0.0, float("inf")), (1.0, 1.0, float("-inf"))],
-            "fpr double, tpr double, score double")
+        ends = _const_rows(spark, ["fpr", "tpr", "score"],
+                           [(0.0, 0.0, float("inf")),
+                            (1.0, 1.0, float("-inf"))])
         return (c.unionByName(ends).orderBy(F.desc("score"))
                  .select("fpr", "tpr"))
 
@@ -106,9 +139,8 @@ class BinaryClassificationMetrics:
             "score")
         first = c.orderBy(F.desc("score")).first()
         spark = c.sparkSession
-        head = spark.createDataFrame(
-            [(0.0, float(first.precision), float("inf"))],
-            "recall double, precision double, score double")
+        head = _const_rows(spark, ["recall", "precision", "score"],
+                           [(0.0, first.precision, float("inf"))])
         return (head.unionByName(c).orderBy(F.desc("score"))
                     .select("recall", "precision"))
 
@@ -141,24 +173,40 @@ class BinaryClassificationMetrics:
             (F.col("tp") / F.col("P")).alias("recall"),
             (F.col("tp") / (F.col("tp") + F.col("fp"))).alias("precision"))
         spark = c.sparkSession
-        tail = spark.createDataFrame([(0.0, 1.0, 1.0, 0.0)],
-                                     "threshold double, fpr double, "
-                                     "recall double, precision double")
+        tail = _const_rows(spark, ["threshold", "fpr", "recall",
+                                   "precision"], [(0.0, 1.0, 1.0, 0.0)])
         return c.unionByName(tail)
+
+    def _auc_parts(self) -> DataFrame:
+        """The AUC plan, ONE branch: per range partition p of the grouped
+        scores (score desc), (pid, A_p, P_p, N_p) with the partition-local
+        running tp in A_p = Σ _neg·(2·tp_local − _pos)."""
+        return ranged_partition_aggs(
+            self._grouped(), [F.col("score").desc()], ["_pos"],
+            # _loc__pos: the running _pos inside the partition
+            [F.sum(F.col("_neg") * (2 * F.col("_loc__pos") -
+                                    F.col("_pos"))).alias("A"),
+             F.sum("_pos").alias("P"), F.sum("_neg").alias("N")])
 
     @property
     def areaUnderROC(self) -> float:
         """Trapezoid integration of the ROC curve, lag-free: each distinct
         score's segment is Δfpr = _neg/N and mean-tpr = (tpr + prev_tpr)/2
-        = (2·tp − _pos)/(2P), both already in the curve frame — so the AUC
-        is ONE aggregation with no ordering requirement at all (the lag
-        form needed a global window; this needs none). The final curve
-        point is exactly (1,1), so no closing segment."""
-        area = self._curve().agg(F.sum(
-            (F.col("_neg") / F.col("N")) *
-            (2 * F.col("tp") - F.col("_pos")) / (2 * F.col("P")))
-        ).collect()[0][0]
-        return float(area)
+        = (2·tp − _pos)/(2P), so AUC = Σ _neg·(2·tp − _pos) / (2·P·N)
+        with no ordering requirement on the sum. The final curve point is
+        exactly (1,1), so no closing segment. Raises ``HandyException``
+        when one class is absent (AUC undefined).
+
+        The per-partition sums of ``_auc_parts`` are combined on the
+        driver in partition order: with off_p = Σ_{q<p} P_q the global
+        tp = tp_local + off_p, so A = Σ_p (A_p + 2·off_p·N_p). Every sum
+        is of integer-valued doubles, exact below 2^53."""
+        area2 = P = N = 0.0
+        for r in sorted(self._auc_parts().collect(), key=lambda r: r[0]):
+            area2 += r.A + 2 * P * r.N      # P so far = off_p
+            P += r.P
+            N += r.N
+        return _auc_from_sums(area2, P, N)
 
     @property
     def areaUnderPR(self) -> float:

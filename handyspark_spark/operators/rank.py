@@ -19,7 +19,11 @@ ranking:
 
 Everything stays lazy in ONE query, so Catalyst's ReuseExchange dedupes
 the range exchange between the cumsum branch and the totals branch —
-callers pay one wide shuffle total. Used by spearman ranks
+callers pay one wide shuffle total. A caller that only needs an
+aggregate over the running sums (e.g. an area under a curve) skips step
+3's join: ``ranged_partition_aggs`` reduces each range partition to one
+row in the plan and the driver applies the offsets to those rows. Used
+by spearman ranks
 (operators/agg.py), BinaryClassificationMetrics (ml/evaluation.py), the
 KS ECDF (operators/stats.py) and ``_gen_row_ids`` (core/frame.py); see
 VERDICT r1 "unpartitioned-window family".
@@ -31,7 +35,7 @@ from pyspark.sql import functions as F
 
 __all__ = ["grouped_ranged_cumsum", "grouped_rank_suite", "keyed_top_k",
            "melted_avg_ranks", "ntile_expr", "ranged_avg_rank",
-           "ranged_cumsum", "ranged_row_number"]
+           "ranged_cumsum", "ranged_partition_aggs", "ranged_row_number"]
 
 _PID = "_rcs_pid"
 
@@ -48,6 +52,46 @@ def _num_partitions(df: DataFrame, num_partitions: int | None) -> int:
         return int(num_partitions)
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions",
                                         "200"))
+
+
+def _range_tagged(df: DataFrame, exprs: list[Column], n: int) -> DataFrame:
+    """Step 1: ``df`` range-partitioned on ``exprs`` with every row
+    tagged by its partition id (monotone in the order; ties never
+    straddle partitions)."""
+    return (df.repartitionByRange(n, *exprs)
+              .withColumn(_PID, F.spark_partition_id()))
+
+
+def _local_cumsums(d: DataFrame, exprs: list[Column], value_cols: list[str],
+                   prefix: str) -> DataFrame:
+    """Step 2: running sums ``{prefix}{c}`` (inclusive) of ``value_cols``
+    inside each range partition of a ``_range_tagged`` frame."""
+    w_in = (Window.partitionBy(_PID).orderBy(*exprs)
+            .rowsBetween(Window.unboundedPreceding, 0))
+    return d.select("*", *[F.sum(c).over(w_in).alias(f"{prefix}{c}")
+                           for c in value_cols])
+
+
+def ranged_partition_aggs(df: DataFrame, order_by: list,
+                          value_cols: list[str], aggs: list[Column],
+                          num_partitions: int | None = None,
+                          prefix: str = "_loc_") -> DataFrame:
+    """Steps 1-2 of ``ranged_cumsum`` in ONE branch, reduced to one row
+    per range partition: ``aggs`` may read the input columns and the
+    partition-local running sums ``{prefix}{c}`` of ``value_cols``.
+
+    The first output column is the partition id; the collected rows
+    (``num_partitions`` at most, empty partitions absent) sorted by it
+    are in ``order_by`` order. A caller combines them on the driver with
+    the prefix offsets of step 3 — the global running sum at a row is
+    its local one plus the sum of its partition's predecessors' totals.
+    One branch means one range exchange: no pid alignment to protect, so
+    no checkpoint and no totals join.
+    """
+    exprs = _order_exprs(order_by)
+    d = _range_tagged(df, exprs, _num_partitions(df, num_partitions))
+    return (_local_cumsums(d, exprs, value_cols, prefix)
+            .groupBy(_PID).agg(*aggs))
 
 
 def ranged_cumsum(df: DataFrame, order_by: list, value_cols: list[str],
@@ -88,8 +132,7 @@ def ranged_cumsum(df: DataFrame, order_by: list, value_cols: list[str],
     # upstream plan — for a curve built over an expensive scan (e.g.
     # metrics scores extracted from a wide array column) the upstream now
     # runs twice (sample + exchange) instead of 4x.
-    d = (df.repartitionByRange(n, *exprs)
-           .withColumn(_PID, F.spark_partition_id()))
+    d = _range_tagged(df, exprs, n)
     if pin:
         # the checkpoint swaps the SQL subplan for a LogicalRDD, so the
         # range exchange stops being visible in downstream plan strings;
@@ -97,11 +140,8 @@ def ranged_cumsum(df: DataFrame, order_by: list, value_cols: list[str],
         # the cost of branch replay + reuse-dependent pid alignment)
         d = d.localCheckpoint(eager=False)
 
-    w_in = (Window.partitionBy(_PID).orderBy(*exprs)
-            .rowsBetween(Window.unboundedPreceding, 0))
-    cum = d.select(
-        "*", *[F.sum(c).over(w_in).alias(f"{prefix}{c}__local")
-               for c in value_cols])
+    local = f"{prefix}_local_"
+    cum = _local_cumsums(d, exprs, value_cols, local)
 
     ptot = d.groupBy(_PID).agg(
         *[F.sum(c).alias(f"_tot_{c}") for c in value_cols])
@@ -117,8 +157,8 @@ def ranged_cumsum(df: DataFrame, order_by: list, value_cols: list[str],
     for c in value_cols:
         out = out.withColumn(
             f"{prefix}{c}",
-            F.col(f"{prefix}{c}__local") + F.col(f"_off_{c}"))
-    drop = [_PID] + [f"{prefix}{c}__local" for c in value_cols] \
+            F.col(f"{local}{c}") + F.col(f"_off_{c}"))
+    drop = [_PID] + [f"{local}{c}" for c in value_cols] \
         + [f"_off_{c}" for c in value_cols]
     return out.drop(*drop), ptot.drop(_PID)
 
@@ -760,8 +800,7 @@ def grouped_rank_suite(df: DataFrame, group_cols: list[str],
     oexprs = [F.col(c) for c in order_cols]
     exprs = [F.col(c) for c in group_cols] + oexprs
     n = _num_partitions(df, num_partitions)
-    d = (df.repartitionByRange(n, *exprs)
-           .withColumn(_PID, F.spark_partition_id()))
+    d = _range_tagged(df, exprs, n)
     if pin:
         d = d.localCheckpoint(eager=False)
 

@@ -7,9 +7,12 @@
 - ``ks_test``: one-sample Kolmogorov–Smirnov D statistic via a fully
   distributed ECDF plan — distinct-value counts, partition-offset
   cumulative ranking (``rank.ranged_cumsum``, no single-partition
-  window), CDF evaluated executor-side by an Arrow-batched pandas UDF,
-  D reduced with one max-aggregation. The reference shelled out to
-  commons-math for 18 named distributions
+  window), D reduced with one max-aggregation. The CDF is a JVM
+  expression inside the same plan for the distributions in
+  ``_NATIVE_CDF`` (uniform, exponential — an auto-fitted uniform's
+  min/max ride the same action as a broadcast 1-row crossJoin), and an
+  executor-side Arrow-batched pandas UDF for the rest. The reference
+  shelled out to commons-math for 18 named distributions
   (/root/reference/handyspark/stats.py:41-42); all 18 are provided here
   as pure-python CDFs (same constructor-parameter conventions as the
   commons-math classes the reference instantiates), plus an arbitrary
@@ -189,9 +192,9 @@ def _ks_plan(df: DataFrame, colname: str, dist: str = "normal",
     key = dist.lower().strip() if cdf is None else None
     fit_df = None
     if cdf is None and params is None:
-        if dist == "normal":
+        if key == "normal":
             fit_exprs = [F.mean(colname), F.stddev(colname)]
-        elif dist == "uniform":
+        elif key == "uniform":
             fit_exprs = [F.min(colname), F.max(colname)]
         else:
             raise ValueError(
@@ -210,7 +213,7 @@ def _ks_plan(df: DataFrame, colname: str, dist: str = "normal",
     if key in _NATIVE_CDF:
         if fit_df is not None:
             ecdf = ecdf.crossJoin(F.broadcast(fit_df))
-            pargs = [F.col(f"_p{i}") for i in range(2)]
+            pargs = [F.col(f"_p{i}") for i in range(len(fit_exprs))]
         else:
             pargs = [F.lit(float(p)) for p in params]
         ecdf = ecdf.withColumn("_cdf",

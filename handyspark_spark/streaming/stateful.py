@@ -399,6 +399,10 @@ def drift_from_state(spark, state_path: str,
     |slices| x |buckets| rows, no stream or corpus scan. Pass the same
     ``store`` the maintainer used."""
     from ..pipeline.drift import drift_report_from_hist
+    # the report caches its histogram input; a swap-protocol commit
+    # replaces the table under the SAME path, so without this a later
+    # call matches the first call's cache entry and returns stale rows
+    spark.catalog.refreshByPath(state_path)
     state = (store or PosixSwapStateStore()).read(spark, state_path)
     if state is None:
         raise FileNotFoundError(f"no state table at {state_path}")

@@ -1,6 +1,8 @@
 """DataFrame-native metrics + stats vs numpy/pandas oracles (mirrors
 reference tests/handyspark/extensions/test_evaluation.py and
 test_stats.py strategy, sklearn-free)."""
+import re
+
 import numpy as np
 import numpy.testing as npt
 import pytest
@@ -77,6 +79,135 @@ def test_array_score_column(tables):
     assert 0.0 <= m.areaUnderROC <= 1.0
 
 
+def _trapz_auc(score, label):
+    """ROC AUC by np.trapz over the (0,0) + per-distinct-score + (1,1)
+    curve; NaN when a class is absent (0/0 rates)."""
+    score, label = np.asarray(score, float), np.asarray(label, float)
+    P, N = label.sum(), (1 - label).sum()
+    with np.errstate(invalid="ignore", divide="ignore"):
+        pts = [(0.0, 0.0)] + [
+            ((1 - label[score >= t]).sum() / N, label[score >= t].sum() / P)
+            for t in np.unique(score)[::-1]] + [(1.0, 1.0)]
+    pts = np.array(pts)
+    return float(np.trapz(pts[:, 1], pts[:, 0]))
+
+
+def _auc(df):
+    from handyspark_spark.ml.evaluation import BinaryClassificationMetrics
+    return BinaryClassificationMetrics(df).areaUnderROC
+
+
+@pytest.mark.parametrize("case", ["ties_negative", "empty_partitions"])
+def test_auc_single_branch_matches_trapz(spark, case):
+    """The single-branch AUC and np.trapz agree to 1e-12 relative — on
+    heavy ties with negative scores, and with more shuffle partitions
+    than distinct scores (most range partitions empty)."""
+    rng = np.random.RandomState(11)
+    n = 3000
+    if case == "ties_negative":
+        score = np.round(rng.normal(-1.0, 2.0, n), 1)
+    else:
+        score = rng.choice([-2.5, 0.0, 0.75], n)
+    label = (score + rng.normal(0, 2.0, n) > -0.5).astype(float)
+    df = spark.createDataFrame(
+        [(float(s), float(y)) for s, y in zip(score, label)],
+        "score double, label double")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    if case == "empty_partitions":
+        spark.conf.set("spark.sql.shuffle.partitions", "37")
+    try:
+        got = _auc(df)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    exp = _trapz_auc(score, label)
+    assert abs(got - exp) <= 1e-12 * exp, (got, exp)
+
+
+@pytest.mark.parametrize("rows", [
+    [(0.3, 1.0), (0.9, 1.0), (0.1, 1.0)],        # positives only
+    [(0.3, 0.0), (0.9, 0.0)],                    # negatives only
+    [],                                          # no rows
+])
+def test_auc_undefined_raises_named_error(spark, rows):
+    """P == 0 or N == 0: numpy's trapz is NaN; the AUC raises a
+    HandyException naming the problem — no ZeroDivisionError, no ANSI
+    DIVIDE_BY_ZERO from inside the plan."""
+    from handyspark_spark.core.util import HandyException
+    if rows:
+        assert np.isnan(_trapz_auc(*zip(*rows)))
+    df = spark.createDataFrame(rows, "score double, label double")
+    with pytest.raises(HandyException, match="undefined"):
+        _auc(df)
+
+
+def test_auc_all_scores_tied_is_half(spark):
+    rows = [(0.4, float(i % 3 == 0)) for i in range(30)]
+    assert _trapz_auc(*zip(*rows)) == 0.5
+    df = spark.createDataFrame(rows, "score double, label double")
+    assert _auc(df) == 0.5
+
+
+def _count_sql_execs(spark, fn):
+    """(fn(), number of SQL executions fn started): execution ids are
+    dense, so count the ids defined past the high-water mark."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus.waitUntilEmpty()
+    ex = store.executionsList()
+    hw = ex.last().executionId() if ex.nonEmpty() else -1
+    out = fn()
+    bus.waitUntilEmpty()
+    n = 0
+    while store.execution(hw + 1 + n).isDefined():
+        n += 1
+    return out, n
+
+
+def test_auc_plan_shape(spark, scored, scored_pd):
+    """The AUC is one SQL execution over one branch: no local
+    checkpoint, no window ordered by score without the range-partition
+    key, and no RDD left pinned after the call."""
+    from handyspark_spark.ml.evaluation import BinaryClassificationMetrics
+
+    from test_rank import assert_no_global_window_on
+    m = BinaryClassificationMetrics(scored, "score", "label")
+    plan = m._auc_parts()._jdf.queryExecution().executedPlan().toString()
+    assert "LocalCheckpoint" not in plan and "ExistingRDD" not in plan
+    assert "rangepartitioning" in plan
+    assert_no_global_window_on(m._auc_parts(), "score")
+
+    sc = spark.sparkContext
+    pinned = sc._jsc.getPersistentRDDs().size()
+    auc, execs = _count_sql_execs(spark, lambda: m.areaUnderROC)
+    assert execs == 1
+    assert sc._jsc.getPersistentRDDs().size() == pinned
+    npt.assert_allclose(auc, _trapz_auc(scored_pd.score, scored_pd.label),
+                        rtol=1e-12)
+
+
+def test_curve_sentinel_rows_built_in_plan(spark, scored, scored_pd):
+    """roc/pr/getMetricsByThreshold sentinel rows come from the plan, not
+    a Python-side RDD: the only RDD scans left are the curve's own
+    checkpoints. Values and types are the mllib conventions."""
+    from handyspark_spark.ml.evaluation import BinaryClassificationMetrics
+    m = BinaryClassificationMetrics(scored, "score", "label")
+
+    def rdd_scans(df):
+        return df._jdf.queryExecution().executedPlan().toString() \
+            .count("ExistingRDD")
+
+    base = rdd_scans(m._curve())
+    for out in (m.roc(), m.pr(), m.getMetricsByThreshold()):
+        assert rdd_scans(out) == base
+        assert {t for _, t in out.dtypes} == {"double"}
+    roc = m.roc().collect()
+    assert tuple(roc[0]) == (0.0, 0.0) and tuple(roc[-1]) == (1.0, 1.0)
+    top = scored_pd[scored_pd.score == scored_pd.score.max()].label.mean()
+    assert tuple(m.pr().first()) == (0.0, top)
+    assert tuple(m.getMetricsByThreshold().collect()[-1]) == \
+        (0.0, 1.0, 1.0, 0.0)
+
+
 def test_welch_ttest_vs_numpy(tables, pdf_tables):
     from handyspark_spark.operators.stats import ttest
     res = ttest(tables["customer"], "c_acctbal", "c_mktsegment")
@@ -130,6 +261,8 @@ def test_ks_statistic_vs_numpy(tables, pdf_tables):
             np.abs(np.arange(0, n) / n - cdf).max())
     res = ks_test(tables["events"], "value", dist="uniform")
     npt.assert_almost_equal(res["statistic"], d, decimal=9)
+    # the auto-fit branch matches the normalized name, as the CDF does
+    assert ks_test(tables["events"], "value", dist=" Uniform ") == res
 
 
 def test_ks_native_cdf_equals_udf_path(tables):
@@ -171,7 +304,12 @@ def test_ks_native_cdf_equals_udf_path(tables):
     for plan in (uni, exp):
         assert "ArrowEvalPython" not in plan
         assert "BatchEvalPython" not in plan
-    assert "BroadcastNestedLoopJoin" in uni or "BroadcastExchange" in uni
+    # the fused fit: its _p0/_p1 columns feed the in-plan CDF and are
+    # absent when params are given (every KS plan also broadcasts the
+    # ECDF total, so a broadcast alone does not pin the fit)
+    for col in ("_p0", "_p1"):
+        assert re.search(rf"\b{col}#", uni), col
+        assert not re.search(rf"\b{col}#", exp), col
     # the normal path (no native expression) still uses the UDF
     norm = _ks_plan(ev, "value", dist="normal",
                     params=(0.0, 1.0))._jdf.queryExecution() \

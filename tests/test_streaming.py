@@ -715,6 +715,29 @@ def test_maintain_drift_monitor_matches_batch(spark, tables, tmp_path):
     assert got == exp
 
 
+def test_drift_from_state_sees_each_fold(spark, tmp_path):
+    """drift_from_state after each of three folded micro-batches reads
+    the CURRENT state: one new slice per batch gives 0, 1, 2 report
+    rows, with no clearCache between calls (the report caches its
+    histogram and the swap commit reuses the state path)."""
+    from handyspark_spark.streaming.stateful import (drift_from_state,
+                                                     maintain_drift_monitor)
+    src = str(tmp_path / "ev_slices")
+    state = str(tmp_path / "drift_state_3")
+    ckpt = str(tmp_path / "ckpt_drift_3")
+    got = []
+    for i, day in enumerate(["d1", "d2", "d3"]):
+        rows = [(day, b) for b in ["a", "b", "c"][: i + 1] * (i + 2)]
+        (spark.createDataFrame(rows, "day string, event_type string")
+         .coalesce(1).write.mode("append").parquet(src))
+        stream = (spark.readStream.schema("day string, event_type string")
+                  .parquet(src))
+        maintain_drift_monitor(stream, "day", "event_type", state,
+                               ckpt).awaitTermination(120)
+        got.append(drift_from_state(spark, state).count())
+    assert got == [0, 1, 2]
+
+
 def test_maintain_hll_sketch_estimates_match_exact(spark, tables, tmp_path):
     """Streamed HLL state estimate ~= exact per-group distinct count."""
     from pyspark.sql import functions as F
