@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.util import HandyException
+
 __all__ = [
     "summary_plan", "value_counts_plan", "mode_plan", "nunique_plan",
     "isnull_plan", "entropy_plan", "mutual_info_plan", "corr_plan",
@@ -257,14 +259,14 @@ def corr_plan(df: DataFrame, colnames: list[str], method: str = "pearson",
     once); Spearman via rank transform + Pearson (ref dataframe.py:495-505
     used mllib RDD Statistics — replaced with pure DataFrame ops).
 
-    EAGERNESS NOTE (spearman, no strata only): probing the zero-exchange
-    fast path runs ONE Spark job at plan-CONSTRUCTION time (a
-    map-side-combined distinct count over the ranked columns — see
-    ``broadcast_dim_ranks``), and when the gate accepts, the rank dim
-    stays persisted for the returned plan's lifetime (bounded managed
-    registry). Callers that only want to BUILD/inspect a lazy plan
-    should pass ``max_dim_rows=0``, which skips the probe entirely and
-    always takes the (fully lazy) melted-window path.
+    Spearman without strata: a column pair runs ``rank.joint_spearman``
+    (one ``groupBy(x, y).count()``) unless the pair is near-unique;
+    otherwise ranks come from broadcast rank dims when the combined
+    distinct count is at most ``max_dim_rows``, else (and always with
+    strata) from the melted-window ranks. EAGER: the row count, the
+    joint table's checkpoint and the dim probe run jobs at plan
+    construction; ``max_dim_rows=0`` skips them all for a fully lazy
+    melted-window plan.
 
     ``pairwise`` (spearman only): pandas-parity mode for MISALIGNED
     nulls — each (x, y) pair filters to its pairwise-complete rows and
@@ -352,60 +354,18 @@ def corr_plan(df: DataFrame, colnames: list[str], method: str = "pearson",
         # window/agg key), where the old loops paid one full-table
         # exchange (unkeyed) or one distinct-agg + join-back (keyed)
         # PER column
-        from .rank import (broadcast_dim_ranks, grouped_spearman_matrix,
+        from .rank import (broadcast_dim_ranks, joint_spearman,
                            melted_avg_ranks)
-        if not strata and max_dim_rows > 0 and len(colnames) == 2:
-            # Grouped fast path (round 12): for a PAIR whose JOINT
-            # value cardinality is bounded, the whole statistic
-            # reduces to one joint-frequency aggregation + dim-sized
-            # prefix sums — no per-row rank attachment at all (the
-            # broadcast path's 2x per-row hash probes into a ~600k
-            # relation measured 10.4s warm at sf10 vs 0.7s for the
-            # bare scan+corr; the joint count agg is 4.8s). Applies
-            # even when one column's cardinality is unbounded, where
-            # the combined-dims gate below must reject. Row-gated:
-            # below GROUPED_SPEARMAN_MIN_ROWS the plan's ~7-stage
-            # fixed overhead loses to the one-pass broadcast path
-            # (sf0.1 measured 6.8s vs 3.2s). Returns the finished
-            # long-form matrix; None -> older gates.
-            #
-            # Row-count PRE-gate (r12): the joint-cardinality HLL probe
-            # is a full corpus pass (0.45s at sf0.1, ~rows-linear — the
-            # per-row struct+HLL eval), but below
-            # GROUPED_SPEARMAN_MIN_ROWS its answer cannot change the
-            # strategy: the grouped plan is rejected on rows alone. So
-            # gate on a zero-column count() first (empty ReadSchema
-            # scan, near-metadata cost: 0.17s at sf0.1, and at scale
-            # still cheap relative to the probe it replaces) and run
-            # the HLL probe only when the row gate passes. The probe
-            # then recomputes its own row count as one more aggregate
-            # riding its existing corpus agg job (no separate count
-            # job) — the value counted here is only the gate.
-            from .rank import (GROUPED_SPEARMAN_MIN_ROWS,
-                               grouped_spearman_small)
-            if colnames[0] != colnames[1]:
-                # NOTE the count() is near-free only for base parquet
-                # scans (empty ReadSchema); a computed df re-executes
-                # its plan here — acceptable because every branch below
-                # is itself at least one corpus pass over the same plan.
-                nrows = df.count()
-                if nrows >= GROUPED_SPEARMAN_MIN_ROWS:
-                    # big-corpus path: HLL joint-cardinality probe
-                    # (its own count rides that probe agg) gates the
-                    # joint plan against near-unique pairs
-                    out = grouped_spearman_matrix(
-                        df, list(colnames),
-                        min_rows=GROUPED_SPEARMAN_MIN_ROWS)
-                else:
-                    # sub-row-gate path (round 13): |joint| <= rows <
-                    # joint_cap by construction, so NO probe — one
-                    # joint agg is the only corpus-sized job, vs the
-                    # broadcast-dim path's two corpus passes + 2
-                    # per-row hash probes (sf0.1 settled 3.3s -> ~1.8s)
-                    out = grouped_spearman_small(df, list(colnames),
-                                                 nrows=nrows)
-                if out is not None:
-                    return out
+        if (not strata and max_dim_rows > 0 and len(colnames) == 2
+                and colnames[0] != colnames[1]):
+            # joint-frequency plan: no per-row rank attachment at all;
+            # the count bounds |joint| and picks its branch. The count
+            # is near-free only for base parquet scans (empty
+            # ReadSchema); a computed df re-executes here, which every
+            # branch below would do too.
+            out = joint_spearman(df, list(colnames), df.count())
+            if out is not None:
+                return out
         ranked = None
         if not strata and max_dim_rows > 0:
             # Zero-exchange fast path (round 8): when the ranked
@@ -657,25 +617,31 @@ def exact_quantiles_distributed(
     (value, count) pair into a single final buffer — at sf10 that
     single-reducer merge cost ~13.7s per query where selection-by-rank
     runs 3-5s. NaN is masked to NULL first on both paths (NaN sorts
-    above every double)."""
+    above every double). A column with no non-null values has no
+    quantiles: ``HandyException`` naming it, on both paths."""
     if n_rows is None:
         n_rows = df.count()   # parquet count pushdown: metadata-cheap
     if n_rows < EXACT_QUANTILE_DISTRIBUTED_MIN_ROWS:
         exprs = [percentile_expr(c, qs, exact=True).alias(c)
                  for c, qs in cols.items()]
         row = summary_plan(nan_to_null(df, list(cols)), exprs).collect()[0]
-        return {c: dict(zip(cols[c], row[c])) for c in cols}
-    parts = []
-    for c, qs in cols.items():
-        p = percentile_distributed_plan(
-            nan_to_null(df.select(c), [c]), c, qs)
-        parts.append(p.select(F.lit(c).alias("_col"), "q", "value"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    res: dict[str, dict[float, float]] = {c: {} for c in cols}
-    for r in out.collect():
-        res[r["_col"]][r["q"]] = r["value"]
+        res = {c: dict(zip(cols[c], row[c] or [])) for c in cols}
+    else:
+        parts = []
+        for c, qs in cols.items():
+            p = percentile_distributed_plan(
+                nan_to_null(df.select(c), [c]), c, qs)
+            parts.append(p.select(F.lit(c).alias("_col"), "q", "value"))
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        res = {c: {} for c in cols}
+        for r in out.collect():
+            res[r["_col"]][r["q"]] = r["value"]
+    for c in cols:
+        if not res[c]:
+            raise HandyException(f"exact quantiles of column {c!r} are "
+                                 "undefined: it has no non-null values")
     return res
 
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.util import HandyException
 from . import agg as A
 
 
@@ -142,7 +143,8 @@ def fit_fence_values(df: DataFrame, colnames: list[str], k: float = 1.5,
     small row counts, the distributed selection-by-rank plan above the
     crossover (same type-7 values; the native single-reducer
     (value, count) merge made every exact-fence query ~13s at sf10 —
-    SCALE.md round-10)."""
+    SCALE.md round-10). A column (or stratum) with no non-null values
+    has no fences: ``HandyException`` naming it."""
     if exact and not strata:
         qmap = A.exact_quantiles_distributed(
             df, {c: [0.25, 0.75] for c in colnames})
@@ -160,8 +162,13 @@ def fit_fence_values(df: DataFrame, colnames: list[str], k: float = 1.5,
                            strata).toPandas()
     rows = []
     for r in stats.to_dict("records"):
-        row = {s: r[s] for s in (strata or [])}
+        key = {s: r[s] for s in (strata or [])}
+        row = dict(key)
         for c in colnames:
+            if r[f"_qq_{c}"] is None:
+                where = f" in stratum {key}" if strata else ""
+                raise HandyException(f"fences of column {c!r} are undefined"
+                                     f"{where}: it has no non-null values")
             q1, q3 = r[f"_qq_{c}"]
             iqr = q3 - q1
             row[c] = (q1 - k * iqr, q3 + k * iqr)

@@ -423,214 +423,73 @@ def broadcast_dim_ranks(df: DataFrame, cols: list[str],
     return out
 
 
-#: Row count below which the joint-frequency plan's fixed overhead
-#: (joint agg + persist + two ranged_cumsums + rank-dim joins, ~7
-#: stages) loses to the single-pass broadcast-dim path: measured sf0.1
-#: (600k rows) broadcast 3.2s vs grouped 6.8s settled, while sf10 (60M
-#: rows) grouped 8.4s vs broadcast 10.3s. Crossover is between 6M and
-#: 60M; gate at 30M so sf1-sized inputs keep the cheap plan.
-GROUPED_SPEARMAN_MIN_ROWS = 30_000_000
-
-
-def grouped_spearman_matrix(df: DataFrame, cols: list[str],
-                            joint_cap: int = 32_000_000,
-                            num_partitions: int | None = None,
-                            min_rows: int = 0
-                            ) -> DataFrame | None:
-    """Spearman correlation of TWO columns with NO per-row rank
-    attachment — the joint-frequency form of the rank-then-``F.corr``
-    pipeline.
-
-    Why: rank-based plans keep paying per-row random access into
-    value-sized hash structures. ``broadcast_dim_ranks`` + ``F.corr``
-    probes a ~600k-entry broadcast relation twice per row (measured
-    10.4s warm for the corr pass alone at sf10 vs 0.7s for the bare
-    scan+corr), and grouping the corpus by one column with 4 aggregate
-    buffers pays the same cache-miss tax inside the aggregation hash
-    map (8.5s). The cheapest corpus-sized shape measured is the plain
-    JOINT count — ``groupBy(x, y).count()`` with one buffer (4.8s at
-    60M rows / 600k groups) — and every rank moment Spearman needs is
-    computable from that joint table:
-
-    1. one map-side HLL probe gates on the joint cardinality;
-    2. ``g = groupBy(x, y).count()`` over rows with either side
-       non-null — the ONLY corpus-sized exchange (managed-persisted:
-       three downstream branches read it);
-    3. marginal dims by summing ``g`` (600k-row aggs), average ranks
-       via distributed exclusive prefix sums (``ranged_cumsum``) —
-       never a single-partition window, never a broadcast of a big
-       dim;
-    4. rank dims shuffle-join back onto ``g`` (600k-row joins) and a
-       scalar aggregation of count-weighted centered co-moments.
-
-    Rank semantics match the fused melted/broadcast paths exactly:
-    each column ranks over its OWN non-null rows (``g`` keeps
-    x-null/y-non-null groups and vice versa, so each marginal includes
-    the rows the other column would drop), and the corr runs over
-    pairwise-complete rows only. Ranks are centered by their exact
-    full-column mean ``(n+1)/2`` before the co-moment sums so they
-    don't cancel catastrophically at scale (raw rank products reach
-    ~1e22 at 60M rows).
-
-    Returns the 3-row long-form matrix ``(col_x, col_y, corr)`` in
-    ``[(x,x), (x,y), (y,y)]`` order (diagonals are 1.0 when the rank
-    variance is positive over >= 2 rows, NULL otherwise — the
-    zero-denominator convention), or ``None`` when the joint
-    cardinality exceeds ``joint_cap`` (both columns near-unique:
-    callers fall back to the melted window path, whose cost doesn't
-    depend on cardinality) or the corpus has fewer than ``min_rows``
-    rows (the multi-stage fixed overhead loses to the one-pass
-    broadcast-dim plan on small inputs — dispatchers pass
-    ``GROUPED_SPEARMAN_MIN_ROWS``; the row count rides the same probe
-    agg, no extra job). EAGER: runs the one-pass HLL+count probe at
-    call time.
-    """
-    if len(cols) != 2 or cols[0] == cols[1]:
-        return None
-    cx, cy = cols
-    x, y = F.col(cx).cast("double"), F.col(cy).cast("double")
-    probe = df.agg(F.approx_count_distinct(F.struct(x, y)).alias("dxy"),
-                   F.count(F.lit(1)).alias("nrows")).collect()[0]
-    if probe["dxy"] > joint_cap or probe["nrows"] < min_rows:
-        return None
-
-    from ..core.cache import managed_persist
-    g = (df.filter(x.isNotNull() | y.isNotNull())
-         .groupBy(x.alias("_x"), y.alias("_y"))
-         .agg(F.count(F.lit(1)).alias("_c")))
-    # three branches (x-dim, y-dim, complete-pair join) read g; the
-    # persist materializes inside the first branch's checkpoint job
-    g = managed_persist(g)
-
-    def rank_dim(key: str, alias_v: str, alias_r: str, alias_n: str):
-        """(value, centered avg rank) over the column's own non-nulls,
-        plus a 1-row (n, d) stats frame — all from ``g``."""
-        dim = (g.filter(F.col(key).isNotNull())
-               .groupBy(key).agg(F.sum("_c").alias("_k")))
-        cum, ptot = ranged_cumsum(dim, [key], ["_k"],
-                                  num_partitions=num_partitions,
-                                  prefix="_cum_")
-        tot = ptot.agg(F.sum("_tot__k").alias("_n"))
-        # avg rank = exclusive prefix + (cnt+1)/2, centered by the
-        # exact full-column mean rank (n+1)/2 (exact even with ties)
-        r = (F.col("_cum__k") - (F.col("_k") - 1) / 2.0
-             - (F.col("_n") + 1) / 2.0)
-        ranked = (cum.crossJoin(F.broadcast(tot))
-                  .select(F.col(key).alias(alias_v), r.alias(alias_r)))
-        stats = (cum.crossJoin(F.broadcast(tot))
-                 .agg(F.first("_n").alias(alias_n),
-                      F.count(F.lit(1)).alias(f"{alias_n}_d")))
-        return ranked, stats
-
-    xr, xstats = rank_dim("_x", "_xv", "_rx", "nx")
-    yr, ystats = rank_dim("_y", "_yv", "_ry", "ny")
-
-    j = (g.filter(F.col("_x").isNotNull() & F.col("_y").isNotNull())
-         .join(xr, F.col("_x") == F.col("_xv"))
-         .join(yr, F.col("_y") == F.col("_yv")))
-    c = F.col("_c")
-    res = j.agg(
-        F.sum(c).alias("n"),
-        F.sum(c * F.col("_rx")).alias("sx"),
-        F.sum(c * F.col("_rx") * F.col("_rx")).alias("sxx"),
-        F.sum(c * F.col("_ry")).alias("sy"),
-        F.sum(c * F.col("_ry") * F.col("_ry")).alias("syy"),
-        F.sum(c * F.col("_rx") * F.col("_ry")).alias("sxy"))
-    # ranks are centered by full-column means; the standard corr form
-    # then removes the residual means of the complete-pair subset, so
-    # misaligned nulls stay exact
-    n = F.col("n")
-    num = F.col("sxy") - F.col("sx") * F.col("sy") / n
-    den2 = ((F.col("sxx") - F.col("sx") * F.col("sx") / n)
-            * (F.col("syy") - F.col("sy") * F.col("sy") / n))
-    corr_xy = F.when((n >= 2) & (den2 > 0), num / F.sqrt(den2))
-    diag_x = F.when((F.col("nx") >= 2) & (F.col("nx_d") >= 2), F.lit(1.0))
-    diag_y = F.when((F.col("ny") >= 2) & (F.col("ny_d") >= 2), F.lit(1.0))
-    both = res.crossJoin(F.broadcast(xstats)).crossJoin(F.broadcast(ystats))
-    return both.select(F.stack(
-        F.lit(3),
-        F.lit(cx), F.lit(cx), diag_x,
-        F.lit(cx), F.lit(cy), corr_xy,
-        F.lit(cy), F.lit(cy), diag_y).alias("col_x", "col_y", "corr"))
-
-
-#: Joint-table row count at or below which ``grouped_spearman_small``
-#: uses the compact dim machinery (melt + 2-partition window cumsum +
-#: broadcast rank dims) instead of the grouped ranged cumsum — the same
+#: Joint-table row count at or below which ``joint_spearman`` ranks
+#: with range-frame windows directly on the joint rows instead of the
+#: ranged form (melted dims + ``grouped_ranged_cumsum``) — the same
 #: measured-row-count gate pattern as ``COMPACT_CUMSUM_MAX_DISTINCT``
-#: in the exact-quantile family: the input was just MEASURED small and
-#: is the aggregated joint table, never raw rows.
+#: in the exact-quantile family: the input is the aggregated joint
+#: table, never raw rows.
 COMPACT_SPEARMAN_MAX_JOINT = 1_000_000
 
+#: Joint cardinality above which ``joint_spearman`` declines: both
+#: columns are near-unique, the joint table is corpus-sized, and the
+#: caller's rank paths cost no more. Probed (HLL) only when the input
+#: has more rows than this, since ``|joint| <= rows``.
+SPEARMAN_MAX_JOINT = 32_000_000
 
-def grouped_spearman_small(df: DataFrame, cols: list[str],
-                           nrows: int | None = None,
-                           compact_max: int = COMPACT_SPEARMAN_MAX_JOINT,
-                           num_partitions: int | None = None
-                           ) -> DataFrame | None:
-    """Joint-frequency Spearman for corpora BELOW
-    ``GROUPED_SPEARMAN_MIN_ROWS`` — the downward extension of
-    ``grouped_spearman_matrix`` (round 13).
 
-    Same math (one ``groupBy(x, y).count()``, every rank moment derived
-    from the joint table, identical centered co-moment algebra), tuned
-    for the regime where the dispatcher's row count already bounds the
-    joint cardinality, so NO cardinality probe is needed
-    (``|joint| <= rows < min_rows <= joint_cap`` by construction) and
-    the joint agg is the ONLY corpus-sized job. The old broadcast-dim
-    path paid TWO corpus passes (dim-probe agg + per-row
-    broadcast-probe corr) plus two hash probes per row.
+def joint_spearman(df: DataFrame, cols: list[str],
+                   nrows: int) -> DataFrame | None:
+    """Spearman correlation of TWO columns from their joint frequency
+    table ``g = groupBy(x, y).count()`` — the ONLY corpus-sized exchange
+    (one count buffer per group), with no per-row rank attachment:
+    ``broadcast_dim_ranks`` + ``F.corr`` instead probes a value-sized
+    broadcast relation twice per row.
 
-    Compact form (``|joint| <= compact_max``): both columns' average
-    ranks are attached DIRECTLY to the joint rows with range-frame
-    windows over the measured-tiny table — no melt, no dim joins, no
-    broadcast builds, one linear plan:
+    ``nrows`` is the caller's row count of ``df``; ``|joint| <= nrows``
+    decides what must be measured. Above ``SPEARMAN_MAX_JOINT`` rows an
+    HLL probe of ``struct(x, y)`` returns ``None`` for a near-unique
+    pair (the caller falls back). At most ``COMPACT_SPEARMAN_MAX_JOINT``
+    rows take the compact form FULLY LAZY; otherwise ``g`` is eagerly
+    ``localCheckpoint``'d and its measured count picks compact or
+    ranged.
 
-        rank(v) = S - (E - 1)/2,  centered by (N + 1)/2
+    Compact form: average ranks attached to the joint rows by
+    range-frame windows, ``rank(v) = S - (E - 1)/2`` centered by
+    ``(N + 1)/2``, where S is the count-weighted prefix INCLUSIVE of the
+    tie group (range frame to ``currentRow``), E the tie group's count
+    and N the column's non-null total — one window sort per column.
+    Ranged form: melted dims + ``grouped_ranged_cumsum`` + shuffle rank
+    joins, so a large joint table never funnels into one task.
 
-    where per column S = running count-weighted prefix INCLUSIVE of the
-    whole tie group (range frame to ``currentRow``: range bounds pull
-    every tied row in), E = the tie group's count (range frame
-    ``currentRow..currentRow``), N = the column's non-null total (the
-    unbounded frame). All three ride ONE window sort; the second
-    column re-sorts the same single partition. When the dispatcher's
-    ``nrows`` is itself <= ``compact_max`` the plan stays FULLY LAZY
-    (|joint| <= rows needs no measuring); otherwise the joint table is
-    eagerly ``localCheckpoint``'d once and its MEASURED count picks
-    compact vs the scale-safe ranged form (melted dims +
-    ``grouped_ranged_cumsum`` + shuffle rank joins — a near-unique
-    joint table never funnels into one task), exactly the
-    exact-quantile compact/ranged gate pattern (guide §2.4).
+    Semantics match the fused rank-then-``F.corr`` paths: each column
+    ranks over its own non-null rows, NaN is one terminal tie group
+    (Spark's total order; groupBy normalizes it), ranks are centered
+    before the sums so they don't cancel at scale, and corr runs over
+    pairwise-complete rows. A diagonal is 1.0 exactly when its column
+    has >= 2 rows and ``sum(c * r^2) > 0`` — exactly zero for a single
+    distinct value (every centered rank is 0), and a sum of
+    non-negative terms cannot cancel otherwise.
 
-    Rank/NULL/NaN semantics match ``grouped_spearman_matrix``: each
-    column ranks over its own non-null rows (NULLs sort first and are
-    excluded by the conditional count; Spark's NaN total order — NaN =
-    NaN, NaN last — gives NaN one terminal tie group, as groupBy
-    normalization does on the big path), ranks center by the exact
-    (n+1)/2 before the sums, corr runs over pairwise-complete rows.
-    Diagonals are 1.0 exactly when the column has >= 2 non-null rows
-    and >= 2 distinct values, tested as ``sum(c * r^2) > 0`` over the
-    column's rows: with centered ranks the sum is EXACTLY zero for one
-    distinct value (every rank exactly 0) and a sum of non-negative
-    terms with at least one >= 0.25 otherwise — float addition of
-    non-negatives cannot cancel, so the test is exact, equivalent to
-    the big path's ``n_distinct >= 2``.
-
-    Returns the 3-row long-form matrix, or ``None`` for non-pair
-    inputs. EAGER only on the measured branch (``nrows`` absent or >
-    ``compact_max``)."""
+    Returns the 3-row long-form matrix ``(col_x, col_y, corr)`` in
+    ``[(x,x), (x,y), (y,y)]`` order (NULL where the denominator is
+    zero), or ``None`` for non-pair inputs and near-unique pairs."""
     if len(cols) != 2 or cols[0] == cols[1]:
         return None
     cx, cy = cols
     x, y = F.col(cx).cast("double"), F.col(cy).cast("double")
+    if nrows > SPEARMAN_MAX_JOINT:
+        dxy = df.agg(F.approx_count_distinct(F.struct(x, y))).first()[0]
+        if dxy > SPEARMAN_MAX_JOINT:
+            return None
     g = (df.filter(x.isNotNull() | y.isNotNull())
          .groupBy(x.alias("_x"), y.alias("_y"))
          .agg(F.count(F.lit(1)).alias("_c")))
-    if nrows is not None and nrows <= compact_max:
-        compact = True       # |joint| <= rows: provably tiny, stay lazy
+    if nrows <= COMPACT_SPEARMAN_MAX_JOINT:
+        compact = True       # |joint| <= rows: provably small, stay lazy
     else:
         g = g.localCheckpoint(eager=True)
-        compact = g.count() <= compact_max  # cached count, no data pass
+        compact = g.count() <= COMPACT_SPEARMAN_MAX_JOINT  # cached count
 
     if compact:
         def rank_over(frame: DataFrame, key: str, alias: str) -> DataFrame:
@@ -648,17 +507,16 @@ def grouped_spearman_small(df: DataFrame, cols: list[str],
 
         ranked = rank_over(rank_over(g, "_x", "_rx"), "_y", "_ry")
     else:
-        # ranged form: ONE melted dim subtree for both columns (the big
-        # path's two per-column rank_dim branches fuse into a single
-        # groupBy over 2|joint| melted rows; posexplode keeps each
-        # non-null side, so each marginal still includes rows the other
-        # column would drop), distributed cumsum, shuffle joins back
+        # ranged form: ONE melted dim subtree for both columns (a
+        # single groupBy over 2|joint| melted rows; posexplode keeps
+        # each non-null side, so each marginal still includes rows the
+        # other column would drop), distributed cumsum, shuffle joins
+        # back
         melted = (g.select(F.posexplode(F.array("_x", "_y"))
                            .alias("_cid", "_v"), "_c")
                   .filter(F.col("_v").isNotNull()))
         dims = melted.groupBy("_cid", "_v").agg(F.sum("_c").alias("_k"))
-        cum = grouped_ranged_cumsum(dims, ["_cid"], ["_v"], ["_k"],
-                                    num_partitions=num_partitions)
+        cum = grouped_ranged_cumsum(dims, ["_cid"], ["_v"], ["_k"])
         tot = dims.groupBy("_cid").agg(F.sum("_k").alias("_n"))
         r = (F.col("_cum__k") - (F.col("_k") - 1) / 2.0
              - (F.col("_n") + 1) / 2.0)

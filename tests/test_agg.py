@@ -1,5 +1,7 @@
 """Aggregation core vs pandas oracle (the reference's differential-test
 strategy, SURVEY.md §5)."""
+import re
+
 import numpy as np
 import numpy.testing as npt
 import pytest
@@ -368,11 +370,13 @@ def test_corr_pairwise_shape_matches_fused_on_empty_strata(spark):
     assert abs(pw[("a", "x", "y")] - fused[("a", "x", "y")]) < 1e-9
 
 
-def test_spearman_broadcast_dim_fast_path_equals_melted(spark):
+def test_spearman_broadcast_dim_fast_path_equals_melted(spark, monkeypatch):
     """Round-8 zero-exchange spearman: the broadcast rank-dim path must
     equal the melted-window path (and pandas) on data with ties,
     misordered ids, and NULLs; forcing the dim gate to reject must
-    fall back to the melted path with identical results."""
+    fall back to the melted path with identical results. Each forced
+    path is checked in the plan that ran: the broadcast path joins on
+    the ``_dv_`` dim key, the melted path pivots back on ``_rid``."""
     import math
     import random
 
@@ -390,19 +394,26 @@ def test_spearman_broadcast_dim_fast_path_equals_melted(spark):
     def corr_of(df_out):
         return {(r.col_x, r.col_y): r.corr for r in df_out.collect()}
 
+    def plan_of(df_out):
+        return df_out._jdf.queryExecution().executedPlan().toString()
+
     fast = corr_of(corr_plan(sdf, ["x", "y"], method="spearman"))
-    # force the OTHER strategies by making each gate reject: grouped
-    # off -> broadcast-dim path; grouped+broadcast off -> melted
+    # force the OTHER strategies by making each gate reject: joint
+    # plan off -> broadcast-dim path; joint + broadcast off -> melted
     import handyspark_spark.operators.rank as R
-    orig_b, orig_g = R.broadcast_dim_ranks, R.grouped_spearman_matrix
-    R.grouped_spearman_matrix = lambda *a, **k: None
-    try:
-        bcast = corr_of(corr_plan(sdf, ["x", "y"], method="spearman"))
-        R.broadcast_dim_ranks = lambda *a, **k: None
-        melted = corr_of(corr_plan(sdf, ["x", "y"], method="spearman"))
-    finally:
-        R.broadcast_dim_ranks = orig_b
-        R.grouped_spearman_matrix = orig_g
+    monkeypatch.setattr(R, "joint_spearman", lambda *a, **k: None)
+    out = corr_plan(sdf, ["x", "y"], method="spearman")
+    plan = plan_of(out)
+    assert re.search(r"BroadcastHashJoin \[[^\]]*\], \[[^\]]*_dv_\d",
+                     plan), plan
+    assert "_rid" not in plan
+    bcast = corr_of(out)
+    monkeypatch.setattr(R, "broadcast_dim_ranks", lambda *a, **k: None)
+    out = corr_plan(sdf, ["x", "y"], method="spearman")
+    plan = plan_of(out)
+    assert "_rid" in plan and "_dv_" not in plan, plan
+    melted = corr_of(out)
+    monkeypatch.undo()
     assert set(fast) == set(bcast) == set(melted)
     for k in fast:
         assert abs(fast[k] - melted[k]) < 1e-9, k
@@ -433,7 +444,8 @@ def test_exact_quantile_gate_paths_identical(tables):
     """The row-count gate picks a STRATEGY, never a value: the native
     fused percentile aggregate and the distributed selection-by-rank
     plan must return the same type-7 quantiles on the same data
-    (n_rows= forces each branch regardless of actual size)."""
+    (n_rows= forces each branch regardless of actual size), and both
+    refuse a column with no values the same way."""
     from handyspark_spark.operators import agg as A
     df = tables["lineitem"]
     cols = {"l_extendedprice": [0.25, 0.5, 0.75], "l_quantity": [0.5]}
@@ -442,6 +454,19 @@ def test_exact_quantile_gate_paths_identical(tables):
     for c in cols:
         for q in cols[c]:
             assert dist[c][q] == pytest.approx(native[c][q], rel=1e-12)
+    # no non-null values: a named error on both branches, and from the
+    # fence fit's approximate path, never a raw TypeError / KeyError
+    from handyspark_spark.core.util import HandyException
+    from handyspark_spark.operators.fill import fit_fence_values
+    spark = df.sparkSession
+    for rows in ([(None,), (None,)], []):
+        v = spark.createDataFrame(rows, "v double")
+        for n_rows in (0, 10**12):
+            with pytest.raises(HandyException, match="column 'v'"):
+                A.exact_quantiles_distributed(v, {"v": [.25, .75]},
+                                              n_rows=n_rows)
+        with pytest.raises(HandyException, match="column 'v'"):
+            fit_fence_values(v, ["v"])
 
 
 def test_percentile_cumsum_gate_paths_identical(tables, monkeypatch):

@@ -379,141 +379,127 @@ def test_keyed_top_k_equals_plain_window(spark):
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_grouped_spearman_matrix_vs_pandas_misaligned_nulls(spark):
-    """The grouped (no per-row rank join) spearman must reproduce the
-    fused-path semantics exactly: each column ranked over its OWN
-    non-nulls, corr over pairwise-complete rows — on data with ties,
-    NULLs on BOTH sides (misaligned), and in both orientations (small
-    side first / second)."""
+def _spearman_inputs(spark):
+    """(name, frame, rows) inputs for ``joint_spearman``: ties, NULLs on
+    both sides (misaligned), NaN, a constant column, an all-NULL column
+    and an empty frame. Every non-empty input repeats its rows, so its
+    joint table is smaller than its row count and every branch can be
+    forced on it."""
     import random
-
-    from handyspark_spark.operators.rank import grouped_spearman_matrix
-
-    rng = random.Random(11)
-    rows = [(rng.choice([None, float(rng.randint(0, 6))]),        # small
-             rng.choice([None, float(rng.randint(0, 4000)) / 7])) # big
-            for _ in range(3000)]
-    sdf = spark.createDataFrame(rows, "x double, y double")
-
-    def expected(pdf, cx, cy):
-        # fused convention: own-non-null ranks, pairwise-complete corr
-        rx = pdf[cx].rank(method="average")
-        ry = pdf[cy].rank(method="average")
-        m = pdf[cx].notna() & pdf[cy].notna()
-        return rx[m].corr(ry[m])
-
-    pdf = pd.DataFrame(rows, columns=["x", "y"])
-    for cols in (["x", "y"], ["y", "x"]):
-        out = {(r.col_x, r.col_y): r.corr
-               for r in grouped_spearman_matrix(sdf, cols).collect()}
-        a, b = cols
-        assert abs(out[(a, b)] - expected(pdf, a, b)) < 1e-9
-        assert abs(out[(a, a)] - 1.0) < 1e-12
-        assert abs(out[(b, b)] - 1.0) < 1e-12
-
-    # gate: joint cardinality over the cap -> None (callers fall back)
-    assert grouped_spearman_matrix(sdf, ["x", "y"], joint_cap=2) is None
-    # gate: corpus smaller than min_rows -> None (small inputs keep
-    # the one-pass broadcast-dim plan; threshold measured in rank.py)
-    assert grouped_spearman_matrix(sdf, ["x", "y"],
-                                   min_rows=10**9) is None
-    # degenerate: constant column -> NULL corr and NULL diagonal
-    const = spark.createDataFrame([(1.0, float(i)) for i in range(50)],
-                                  "x double, y double")
-    out = {(r.col_x, r.col_y): r.corr
-           for r in grouped_spearman_matrix(const, ["x", "y"]).collect()}
-    assert out[("x", "y")] is None and out[("x", "x")] is None
-    assert abs(out[("y", "y")] - 1.0) < 1e-12
-
-
-def test_grouped_spearman_small_equals_big_and_pandas(spark):
-    """``grouped_spearman_small`` (the sub-row-gate joint-frequency
-    plan, round 13) must reproduce ``grouped_spearman_matrix`` and the
-    fused-path semantics exactly — on ties, misaligned NULLs, both
-    column orientations, and on BOTH its internal branches (compact
-    2-partition window vs grouped ranged cumsum, forced via
-    ``compact_max``)."""
-    import random
-
-    from handyspark_spark.operators.rank import (grouped_spearman_matrix,
-                                                 grouped_spearman_small)
 
     rng = random.Random(13)
-    rows = [(rng.choice([None, float(rng.randint(0, 6))]),
-             rng.choice([None, float(rng.randint(0, 4000)) / 7]))
-            for _ in range(3000)]
-    sdf = spark.createDataFrame(rows, "x double, y double")
-    pdf = pd.DataFrame(rows, columns=["x", "y"])
-
-    def expected(pdf, cx, cy):
-        rx = pdf[cx].rank(method="average")
-        ry = pdf[cy].rank(method="average")
-        m = pdf[cx].notna() & pdf[cy].notna()
-        return rx[m].corr(ry[m])
-
-    for cols in (["x", "y"], ["y", "x"]):
-        big = {(r.col_x, r.col_y): r.corr
-               for r in grouped_spearman_matrix(sdf, cols).collect()}
-        for cmax in (10**6, 0):   # compact branch / ranged branch
-            out = {(r.col_x, r.col_y): r.corr
-                   for r in grouped_spearman_small(
-                       sdf, cols, compact_max=cmax).collect()}
-            a, b = cols
-            assert abs(out[(a, b)] - expected(pdf, a, b)) < 1e-9
-            assert abs(out[(a, b)] - big[(a, b)]) < 1e-12
-            assert abs(out[(a, a)] - 1.0) < 1e-12
-            assert abs(out[(b, b)] - 1.0) < 1e-12
-
-    # non-pair inputs -> None (dispatcher falls through)
-    assert grouped_spearman_small(sdf, ["x"]) is None
-    assert grouped_spearman_small(sdf, ["x", "x"]) is None
-
-    # degenerate shapes: constant column / all-null column / empty —
-    # NULL corr + NULL diagonal conventions identical to the big path
-    const = spark.createDataFrame([(1.0, float(i)) for i in range(50)],
-                                  "x double, y double")
-    out = {(r.col_x, r.col_y): r.corr
-           for r in grouped_spearman_small(const, ["x", "y"]).collect()}
-    assert out[("x", "y")] is None and out[("x", "x")] is None
-    assert abs(out[("y", "y")] - 1.0) < 1e-12
-
-    allnull = spark.createDataFrame(
-        [(None, float(i)) for i in range(50)], "x double, y double")
-    out = {(r.col_x, r.col_y): r.corr
-           for r in grouped_spearman_small(allnull, ["x", "y"]).collect()}
-    assert out[("x", "y")] is None and out[("x", "x")] is None
-    assert abs(out[("y", "y")] - 1.0) < 1e-12
-
-    empty = spark.createDataFrame([], "x double, y double")
-    out = {(r.col_x, r.col_y): r.corr
-           for r in grouped_spearman_small(empty, ["x", "y"]).collect()}
-    assert set(out) == {("x", "y"), ("x", "x"), ("y", "y")}
-    assert all(v is None for v in out.values())
-
-
-def test_grouped_spearman_small_nan_matches_big_path(spark):
-    """NaN gets one terminal tie group under the compact window form
-    (Spark total order: NaN = NaN, NaN sorts last) exactly as groupBy
-    normalization gives it one group on the big/ranged paths."""
-    import random
-
-    from handyspark_spark.operators.rank import (grouped_spearman_matrix,
-                                                 grouped_spearman_small)
-
-    rng = random.Random(7)
+    base = [(rng.choice([None, float(rng.randint(0, 6))]),          # ties
+             rng.choice([None, float(rng.randint(0, 4000)) / 7]))   # wide
+            for _ in range(1500)]
     nan = float("nan")
-    rows = [(rng.choice([None, nan, float(rng.randint(0, 5))]),
-             rng.choice([None, nan, float(rng.randint(0, 300)) / 7]))
-            for _ in range(2000)]
+    with_nan = [(rng.choice([None, nan, float(rng.randint(0, 5))]),
+                 rng.choice([None, nan, float(rng.randint(0, 300)) / 7]))
+                for _ in range(1000)]
+    inputs = {
+        "misaligned_nulls": base + base[::-1],
+        "nan": with_nan * 2,
+        "constant": [(1.0, float(i % 25)) for i in range(50)],
+        "all_null": [(None, float(i % 25)) for i in range(50)],
+        "empty": [],
+    }
+    return [(name, spark.createDataFrame(rows, "x double, y double"), rows)
+            for name, rows in inputs.items()]
+
+
+def _pandas_spearman(rows, cx, cy):
+    """The fused convention in pandas: each column ranked (average) over
+    its own non-null rows, corr over pairwise-complete rows. NaN maps to
+    +inf, Spark's order: one NaN tie group, sorted last. Returns the
+    ``{(a, b): corr}`` matrix, None where undefined."""
+    import math
+
+    def val(v):
+        return math.inf if v is not None and math.isnan(v) else v
+
+    pdf = pd.DataFrame([(val(x), val(y)) for x, y in rows],
+                       columns=["x", "y"], dtype="float64")
+    rk = {c: pdf[c].rank(method="average") for c in ("x", "y")}
+    out = {}
+    for a, b in ((cx, cx), (cx, cy), (cy, cy)):
+        m = pdf[a].notna() & pdf[b].notna()
+        v = rk[a][m].corr(rk[b][m])
+        out[(a, b)] = None if pd.isna(v) else v
+    return out
+
+
+def _force_joint_branch(monkeypatch, branch, nrows, njoint):
+    """Set the two Spearman constants so ``joint_spearman`` takes
+    ``branch`` on an input of ``nrows`` rows and ``njoint`` joint
+    groups (all-NULL pairs excluded, as the joint table drops them)."""
+    import handyspark_spark.operators.rank as R
+    compact, cap = {
+        "lazy_compact": (nrows, nrows),
+        "measured_compact": (njoint, nrows),
+        "ranged": (njoint - 1, nrows),
+        "probed_compact": (njoint, nrows - 1),   # HLL runs and accepts
+    }[branch]
+    monkeypatch.setattr(R, "COMPACT_SPEARMAN_MAX_JOINT", compact)
+    monkeypatch.setattr(R, "SPEARMAN_MAX_JOINT", cap)
+
+
+@pytest.mark.parametrize("branch", ["lazy_compact", "measured_compact",
+                                    "ranged", "probed_compact"])
+def test_joint_spearman_branches_match_pandas(spark, monkeypatch, branch):
+    """Every branch of ``joint_spearman`` reproduces the fused-path
+    semantics (pandas, 1e-9) on ties, misaligned NULLs, NaN and
+    degenerate columns, in both column orientations — and the branch
+    forced is the one that ran: the HLL probe and the joint table's
+    eager checkpoint are spied on, the ranged form's melted dims (``_cid``)
+    are read from the plan."""
+    from handyspark_spark.operators.rank import joint_spearman
+
+    DataFrame = type(spark.range(0))     # the concrete (classic) class
+    ran = []
+    cp, acd = DataFrame.localCheckpoint, F.approx_count_distinct
+    monkeypatch.setattr(DataFrame, "localCheckpoint",
+                        lambda self, eager=True, **k: (
+                            eager and ran.append("checkpoint"))
+                        or cp(self, eager, **k))
+    monkeypatch.setattr(F, "approx_count_distinct", lambda *a, **k:
+                        ran.append("probe") or acd(*a, **k))
+    forced_ran = {"lazy_compact": [], "measured_compact": ["checkpoint"],
+                  "ranged": ["checkpoint"],
+                  "probed_compact": ["probe", "checkpoint"]}[branch]
+    for name, sdf, rows in _spearman_inputs(spark):
+        if rows:
+            njoint = len({(repr(x), repr(y)) for x, y in rows
+                          if (x, y) != (None, None)})
+            assert njoint < len(rows), name
+            _force_joint_branch(monkeypatch, branch, len(rows), njoint)
+        for cols in (["x", "y"], ["y", "x"]):
+            del ran[:]
+            out = joint_spearman(sdf, cols, len(rows))
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            got = {(r.col_x, r.col_y): r.corr for r in out.collect()}
+            want = _pandas_spearman(rows, *cols)
+            assert list(got) == list(want), (name, cols)
+            for k, v in want.items():
+                if v is None:
+                    assert got[k] is None, (name, k)
+                else:
+                    assert abs(got[k] - v) < 1e-9, (name, k)
+            # 0 rows is under every gate: always the lazy compact form
+            assert ran == (forced_ran if rows else []), (name, ran)
+            assert ("_cid" in plan) == (branch == "ranged"
+                                        and bool(rows)), name
+
+
+def test_joint_spearman_declines_near_unique_and_non_pairs(spark,
+                                                           monkeypatch):
+    """``None`` (the caller falls through to its rank paths) when the HLL
+    probe measures a joint table above ``SPEARMAN_MAX_JOINT``, and for
+    inputs that are not a pair of distinct columns."""
+    import handyspark_spark.operators.rank as R
+
+    rows = [(float(i % 7), float(i)) for i in range(200)]
     sdf = spark.createDataFrame(rows, "x double, y double")
-    big = {(r.col_x, r.col_y): r.corr
-           for r in grouped_spearman_matrix(sdf, ["x", "y"]).collect()}
-    for cmax in (10**6, 0):
-        out = {(r.col_x, r.col_y): r.corr
-               for r in grouped_spearman_small(
-                   sdf, ["x", "y"], compact_max=cmax).collect()}
-        for k in big:
-            if big[k] is None:
-                assert out[k] is None
-            else:
-                assert abs(out[k] - big[k]) < 1e-12
+    assert R.joint_spearman(sdf, ["x"], 200) is None
+    assert R.joint_spearman(sdf, ["x", "x"], 200) is None
+    assert R.joint_spearman(sdf, ["x", "y"], 200) is not None
+    monkeypatch.setattr(R, "SPEARMAN_MAX_JOINT", 100)
+    assert R.joint_spearman(sdf, ["x", "y"], 200) is None
