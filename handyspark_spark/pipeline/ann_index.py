@@ -1,20 +1,22 @@
 """Persistable ANN index artifacts: train once, probe many times.
 
-``ivf_topk``/``pq_topk`` fit their quantizer/codebooks inline — right
-for exploration, wrong at 100 TB where the index is trained once on a
-sample and reused by every query batch for months. These classes wrap
-the same fit/search code behind a save/load artifact, following the
-fitted-state pattern of ``ml.base.HandyImputer`` (statsDict there; a
-parquet directory here, because centroid matrices are numeric arrays,
-not JSON-sized dicts).
+``ivf_topk``/``pq_topk``/``ivfpq_topk`` fit their quantizer/codebooks
+inline — right for exploration, wrong at 100 TB where the index is
+trained once on a sample and reused by every query batch for months.
+These classes wrap the same fit/search code behind a save/load
+artifact, following the fitted-state pattern of ``ml.base.HandyImputer``
+(statsDict there; a parquet directory here, because centroid matrices
+are numeric arrays, not JSON-sized dicts).
 
-Artifact layout (one directory per index, any Hadoop-visible FS — both
-files are written WITH Spark, so object stores work; no driver-local
+Artifact layout (one directory per index, any Hadoop-visible FS — every
+file is written WITH Spark, so object stores work; no driver-local
 I/O):
 
 - ``<path>/meta.parquet``  — 1 row: kind + fit params as a JSON string
-- ``<path>/cells.parquet`` — IVF: (cell, pos, val) long-form centroids
-                             PQ:  (subspace, code, pos, val) codebooks
+- ``<path>/cells.parquet`` — IVF, IVF-PQ: (cell, pos, val) centroids
+                             PQ: (subspace, code, pos, val) codebooks
+- ``<path>/books.parquet`` — IVF-PQ: (subspace, code, pos, val)
+                             residual codebooks
 
 Long-form (one row per vector component) keeps the schema fixed across
 dim/m/nbits and trivially reassembles into the numpy matrices the
@@ -33,8 +35,9 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .similarity import (ivf_fit_centroids, ivf_topk, ivfpq_fit,
-                         ivfpq_topk, pq_codebooks, pq_topk)
+from .similarity import (_nearest_cell_udf, ivf_fit_centroids, ivf_topk,
+                         ivfpq_encode, ivfpq_fit, ivfpq_topk, pq_codebooks,
+                         pq_encode, pq_topk)
 
 __all__ = ["IVFIndex", "PQIndex", "IVFPQIndex"]
 
@@ -51,6 +54,28 @@ def _read_meta(spark: SparkSession, path: str, expect_kind: str) -> dict:
         raise ValueError(f"index at {path} is a {row['kind']!r} artifact, "
                          f"not {expect_kind!r}")
     return json.loads(row["params"])
+
+
+# long-form axes of the two persisted matrices; the DuckDB ANN oracles
+# read these parquet schemas directly
+_CELLS = ("cell", "pos")                 # centroids (cell, pos, val)
+_BOOKS = ("subspace", "code", "pos")     # codebooks (subspace, code, pos, val)
+
+
+def _write_long(spark: SparkSession, path: str, M: np.ndarray, axes):
+    """One (axes..., val) row per matrix entry, one parquet file."""
+    rows = [tuple(int(i) for i in ix) + (float(v),)
+            for ix, v in np.ndenumerate(M)]
+    schema = ", ".join(f"{a} int" for a in axes) + ", val double"
+    (spark.createDataFrame(rows, schema)
+     .repartition(1).write.mode("overwrite").parquet(path))
+
+
+def _read_long(spark: SparkSession, path: str, shape, axes) -> np.ndarray:
+    M = np.zeros(shape, dtype=np.float64)
+    for r in spark.read.parquet(path).collect():
+        M[tuple(r[a] for a in axes)] = r["val"]
+    return M
 
 
 class IVFIndex:
@@ -80,12 +105,7 @@ class IVFIndex:
 
     def save(self, path: str, spark: SparkSession | None = None):
         spark = spark or SparkSession.getActiveSession()
-        rows = [(int(cell), int(pos), float(v))
-                for cell, vec in enumerate(self.centroids)
-                for pos, v in enumerate(vec)]
-        (spark.createDataFrame(rows, "cell int, pos int, val double")
-         .repartition(1).write.mode("overwrite")
-         .parquet(f"{path}/cells.parquet"))
+        _write_long(spark, f"{path}/cells.parquet", self.centroids, _CELLS)
         _write_meta(spark, path, self.KIND,
                     {"vec_col": self.vec_col, "id_col": self.id_col,
                      "kmeans_iters": self.kmeans_iters,
@@ -96,29 +116,17 @@ class IVFIndex:
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IVFIndex":
         p = _read_meta(spark, path, cls.KIND)
-        rows = spark.read.parquet(f"{path}/cells.parquet").collect()
-        C = np.zeros((p["n_centroids"], p["dim"]), dtype=np.float64)
-        for r in rows:
-            C[r["cell"], r["pos"]] = r["val"]
+        C = _read_long(spark, f"{path}/cells.parquet",
+                       (p["n_centroids"], p["dim"]), _CELLS)
         return cls(C, p["vec_col"], p["id_col"], p["kmeans_iters"])
 
     def assign(self, df: DataFrame, cell_col: str = "_cell") -> DataFrame:
         """Nearest-centroid cell id per row (one Arrow-batched BLAS
         matmul projection) — use to write the corpus partitioned by
         cell once, so probes prune at the file level."""
-        import pandas as pd
         b_C = df.sparkSession.sparkContext.broadcast(self.centroids)
-
-        def _cell_fn(vs):
-            X = np.array(vs.tolist(), dtype=np.float64)
-            X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True),
-                            1e-12)
-            return pd.Series(
-                np.argmax(X @ b_C.value.T, axis=1).astype("int32"))
-
-        _cell = F.pandas_udf(_cell_fn, "int")
-        return df.withColumn(
-            cell_col, _cell(F.col(self.vec_col).cast("array<double>")))
+        return df.withColumn(cell_col, _nearest_cell_udf(b_C)(
+            F.col(self.vec_col).cast("array<double>")))
 
     def search(self, df: DataFrame, queries: DataFrame, k: int = 5,
                nprobe: int = 4) -> DataFrame:
@@ -152,13 +160,8 @@ class PQIndex:
 
     def save(self, path: str, spark: SparkSession | None = None):
         spark = spark or SparkSession.getActiveSession()
+        _write_long(spark, f"{path}/cells.parquet", self.books, _BOOKS)
         m, k, dsub = self.books.shape
-        rows = [(j, c, pos, float(self.books[j, c, pos]))
-                for j in range(m) for c in range(k) for pos in range(dsub)]
-        (spark.createDataFrame(
-            rows, "subspace int, code int, pos int, val double")
-         .repartition(1).write.mode("overwrite")
-         .parquet(f"{path}/cells.parquet"))
         _write_meta(spark, path, self.KIND,
                     {"vec_col": self.vec_col, "id_col": self.id_col,
                      "m": int(m), "k": int(k), "dsub": int(dsub)})
@@ -167,10 +170,8 @@ class PQIndex:
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "PQIndex":
         p = _read_meta(spark, path, cls.KIND)
-        rows = spark.read.parquet(f"{path}/cells.parquet").collect()
-        B = np.zeros((p["m"], p["k"], p["dsub"]), dtype=np.float64)
-        for r in rows:
-            B[r["subspace"], r["code"], r["pos"]] = r["val"]
+        B = _read_long(spark, f"{path}/cells.parquet",
+                       (p["m"], p["k"], p["dsub"]), _BOOKS)
         return cls(B, p["vec_col"], p["id_col"])
 
     def encode(self, df: DataFrame, code_col: str = "pq_code") -> DataFrame:
@@ -179,7 +180,6 @@ class PQIndex:
         ``search(..., encoded=...)`` scans codes instead of re-encoding
         raw vectors. New batches stay comparable because the codebooks
         are frozen."""
-        from .similarity import pq_encode
         return pq_encode(df, self.books, self.vec_col, self.id_col,
                          code_col)
 
@@ -222,19 +222,9 @@ class IVFPQIndex:
 
     def save(self, path: str, spark: SparkSession | None = None):
         spark = spark or SparkSession.getActiveSession()
-        rows = [(int(cell), int(pos), float(v))
-                for cell, vec in enumerate(self.centroids)
-                for pos, v in enumerate(vec)]
-        (spark.createDataFrame(rows, "cell int, pos int, val double")
-         .repartition(1).write.mode("overwrite")
-         .parquet(f"{path}/cells.parquet"))
+        _write_long(spark, f"{path}/cells.parquet", self.centroids, _CELLS)
+        _write_long(spark, f"{path}/books.parquet", self.books, _BOOKS)
         m, k, dsub = self.books.shape
-        rows = [(j, c, pos, float(self.books[j, c, pos]))
-                for j in range(m) for c in range(k) for pos in range(dsub)]
-        (spark.createDataFrame(
-            rows, "subspace int, code int, pos int, val double")
-         .repartition(1).write.mode("overwrite")
-         .parquet(f"{path}/books.parquet"))
         _write_meta(spark, path, self.KIND,
                     {"vec_col": self.vec_col, "id_col": self.id_col,
                      "n_centroids": int(self.centroids.shape[0]),
@@ -245,12 +235,10 @@ class IVFPQIndex:
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IVFPQIndex":
         p = _read_meta(spark, path, cls.KIND)
-        C = np.zeros((p["n_centroids"], p["dim"]), dtype=np.float64)
-        for r in spark.read.parquet(f"{path}/cells.parquet").collect():
-            C[r["cell"], r["pos"]] = r["val"]
-        B = np.zeros((p["m"], p["k"], p["dsub"]), dtype=np.float64)
-        for r in spark.read.parquet(f"{path}/books.parquet").collect():
-            B[r["subspace"], r["code"], r["pos"]] = r["val"]
+        C = _read_long(spark, f"{path}/cells.parquet",
+                       (p["n_centroids"], p["dim"]), _CELLS)
+        B = _read_long(spark, f"{path}/books.parquet",
+                       (p["m"], p["k"], p["dsub"]), _BOOKS)
         return cls(C, B, p["vec_col"], p["id_col"])
 
     def encode(self, df: DataFrame, cell_col: str = "cell",
@@ -260,7 +248,6 @@ class IVFPQIndex:
         and every later ``search(..., encoded=...)`` scans codes
         instead of re-encoding raw vectors. New batches stay
         comparable because the codebooks are frozen."""
-        from .similarity import ivfpq_encode
         return ivfpq_encode(df, self.centroids, self.books,
                             self.vec_col, self.id_col, cell_col, code_col)
 

@@ -1,18 +1,22 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, per the standard ANN playbook:
-
 - ``brute_force_topk``: exact cosine top-k via a broadcast join of the
   (small) query set against the corpus — the correctness baseline. The
   dot product is a native ``F.zip_with`` + ``F.aggregate`` expression
   (JVM-side, no Python). Per-query top-k via window ``row_number``.
-- ``lsh_topk`` / ``lsh_neardup_pairs``: random-hyperplane (signed random
-  projection) LSH — bucket vectors by sign bits, search only within
-  matching buckets. The scale path: shuffle is one groupBy on bucket ids,
-  and the pair space shrinks exponentially with bits.
-- ``ivf_topk``: IVF-style variant — k-means-ish coarse centroids (sampled
-  deterministically), vectors assigned to nearest centroid, queries probe
-  ``nprobe`` nearest centroids only.
+- ``neardup_pairs_blas`` / ``lsh_neardup_pairs``: exact blocked-BLAS and
+  random-hyperplane (signed random projection) LSH near-duplicate
+  pairs.
+- ``ivf_topk``: IVF-flat — coarse centroids (sampled deterministically),
+  vectors assigned to the nearest centroid, queries probe their
+  ``nprobe`` nearest cells with exact cosine.
+- ``ivfpq_topk``: IVF-PQ — coarse cells plus product-quantized
+  residual codes, scored by one asymmetric-distance (ADC) scan.
+  ``pq_topk`` (flat PQ) is the same scan over one all-zero cell.
+- ``semdedup_pairs`` / ``semdedup_drops``: SemDeDup cluster-then-prune.
+
+The IVF/PQ/IVF-PQ family reads vectors through one boundary,
+``_unit_rows`` (list -> float64 matrix of unit rows).
 """
 from __future__ import annotations
 
@@ -21,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..core.util import HandyException
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -205,7 +211,7 @@ def lsh_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
 
 def _cap_query_rows(queries: DataFrame, max_query_rows: int | None,
                     op: str) -> None:
-    """Loud guard for the "queries are small" contract: ``pq_topk``
+    """Loud guard for the "queries are small" contract: ``ivfpq_topk``
     collects the query frame to build driver-side LUTs and ``ivf_topk``
     broadcasts it — both are bounded by |queries|, and a caller passing
     a corpus-sized frame would melt the driver/executors silently.
@@ -223,6 +229,43 @@ def _cap_query_rows(queries: DataFrame, max_query_rows: int | None,
             f"search, or pass max_query_rows=None to force")
 
 
+def _unit_rows(vs, dim: int | None = None) -> np.ndarray:
+    """The IVF/PQ vector boundary: a sequence of vectors (an Arrow-batch
+    pandas Series or collected lists) -> float64 (n, dim) matrix of
+    L2-unit rows. The norm is floored at 1e-12, so a zero vector stays
+    a zero row instead of turning into NaN. ``dim`` shapes an empty
+    input."""
+    X = np.array(list(vs), dtype=np.float64)
+    if dim is not None:
+        X = X.reshape(len(X), dim)
+    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    return X
+
+
+def _sample_unit_rows(df: DataFrame, vec_col: str, id_col: str, n: int,
+                      fit: str) -> np.ndarray:
+    """Bounded deterministic fit sample: the first ``n`` vectors in
+    md5(id) order, as unit rows. An empty corpus is a named error."""
+    rows = (df.orderBy(F.md5(F.col(id_col).cast("string")))
+            .limit(n)
+            .select(F.col(vec_col).cast("array<double>").alias("_v"))
+            .collect())
+    if not rows:
+        raise HandyException(
+            f"{fit} needs a sample to fit on: the corpus has no vectors")
+    return _unit_rows([r["_v"] for r in rows])
+
+
+def _nearest_cell_udf(b_C):
+    """pandas_udf: id of the nearest (max inner product) broadcast
+    centroid per vector, one BLAS matmul per Arrow batch — a literal
+    centroid expression tree (n_centroids × dim constants) blows past
+    codegen limits and is ~10× slower."""
+    def _cell(vs):
+        return pd.Series(
+            np.argmax(_unit_rows(vs) @ b_C.value.T, axis=1).astype("int32"))
+    return F.pandas_udf(_cell, "int")
+
 
 def ivf_fit_centroids(df: DataFrame, n_centroids: int = 16,
                       vec_col: str = "embedding", id_col: str = "vec_id",
@@ -235,41 +278,21 @@ def ivf_fit_centroids(df: DataFrame, n_centroids: int = 16,
     returned (n_centroids × dim) matrix is driver-tiny. At 100 TB this
     runs ONCE — persist it with ``pipeline.ann_index.IVFIndex`` instead
     of refitting per query batch."""
-    import pandas as pd
-
-    cents = (df.orderBy(F.md5(F.col(id_col).cast("string")))
-               .limit(n_centroids)
-               .select(F.col(vec_col).cast("array<double>").alias("_cent"))
-               .collect())
-    C = np.array([r["_cent"] for r in cents], dtype=np.float64)
-    C /= np.linalg.norm(C, axis=1, keepdims=True)
+    C = _sample_unit_rows(df, vec_col, id_col, n_centroids,
+                          "ivf_fit_centroids")
     sc = df.sparkSession.sparkContext
-
     for _ in range(kmeans_iters):
         b_it = sc.broadcast(C)
-
-        def _assign(vs, _b=b_it):
-            X = np.array(vs.tolist(), dtype=np.float64)
-            X /= np.linalg.norm(X, axis=1, keepdims=True)
-            return pd.Series(
-                np.argmax(X @ _b.value.T, axis=1).astype("int32"))
-
-        assign_udf = F.pandas_udf(_assign, "int")
         a = (df.select(F.col(vec_col).cast("array<double>").alias("_v"))
-             .withColumn("_cell", assign_udf(F.col("_v")))
+             .withColumn("_cell", _nearest_cell_udf(b_it)(F.col("_v")))
              .select("_cell", F.posexplode("_v").alias("pos", "val")))
-        rows = (a.groupBy("_cell", "pos").agg(F.avg("val").alias("m"))
-                .collect())
-        C_new = C.copy()
-        agg = {}
-        for r in rows:
-            agg.setdefault(r["_cell"], {})[r["pos"]] = r["m"]
-        for cell, d in agg.items():
-            vec = np.array([d[p] for p in sorted(d)], dtype=np.float64)
-            n = np.linalg.norm(vec)
-            if n > 0:
-                C_new[cell] = vec / n
-        C = C_new
+        M = np.zeros_like(C)
+        for r in (a.groupBy("_cell", "pos").agg(F.avg("val").alias("m"))
+                  .collect()):
+            M[r["_cell"], r["pos"]] = r["m"]
+        U = _unit_rows(M)
+        # an empty cell (zero row) keeps its previous centroid
+        C = np.where(U.any(axis=1, keepdims=True), U, C)
         b_it.destroy()
     return C
 
@@ -290,37 +313,24 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     ``pipeline.ann_index.IVFIndex.load``) — skips the fit entirely, the
     train-once/probe-many production shape. Without it the quantizer is
     fitted inline by ``ivf_fit_centroids`` (see it for ``kmeans_iters``)."""
-    import pandas as pd
-
     _cap_query_rows(queries, max_query_rows, "ivf_topk")
     C = centroids if centroids is not None else ivf_fit_centroids(
         df, n_centroids, vec_col, id_col, kmeans_iters)
     nprobe = min(nprobe, len(C))
-    sc = df.sparkSession.sparkContext
-    b_C = sc.broadcast(C)
-
-    # centroid assignment as one BLAS matmul per Arrow batch — a literal
-    # centroid expression tree (n_centroids × dim constants) blows past
-    # codegen limits and is ~10× slower
-    def _cell_fn(vs):
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X /= np.linalg.norm(X, axis=1, keepdims=True)
-        return pd.Series(np.argmax(X @ b_C.value.T, axis=1).astype("int32"))
+    b_C = df.sparkSession.sparkContext.broadcast(C)
 
     def _cells_fn(vs):
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X /= np.linalg.norm(X, axis=1, keepdims=True)
-        order = np.argsort(-(X @ b_C.value.T), axis=1)[:, :nprobe]
+        order = np.argsort(-(_unit_rows(vs) @ b_C.value.T),
+                           axis=1)[:, :nprobe]
         return pd.Series([row.astype("int32").tolist() for row in order])
 
-    _cell = F.pandas_udf(_cell_fn, "int")
     _cells = F.pandas_udf(_cells_fn, "array<int>")
 
     c = with_norm(
         df.select(F.col(id_col).alias("neighbor_id"),
                   F.col(vec_col).cast("array<double>").alias("_c0")),
         F.col("_c0"), "_cv", "_cn").drop("_c0")
-    c = c.withColumn("_cell", _cell(F.col("_cv")))
+    c = c.withColumn("_cell", _nearest_cell_udf(b_C)(F.col("_cv")))
     q = with_norm(
         queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).cast("array<double>").alias("_q0")),
@@ -396,7 +406,10 @@ def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
 
 
 # ---------------------------------------------------------------------------
-# Product quantization (PQ) — memory-bounded approximate search codes
+# Product quantization (PQ) — memory-bounded approximate search codes.
+# Flat PQ is IVF-PQ with one all-zero coarse cell: the residual is the
+# vector itself, the centroid term is 0 and every row is probed, so
+# ``pq_encode``/``pq_topk`` run the IVF-PQ encoder and ADC scan below.
 # ---------------------------------------------------------------------------
 
 def pq_codebooks(df: DataFrame, vec_col: str = "embedding",
@@ -409,12 +422,7 @@ def pq_codebooks(df: DataFrame, vec_col: str = "embedding",
     ``iters`` Lloyd rounds, seeded init) per subspace. Returns
     (m, 2^nbits, dim/m). The codebook is driver-tiny (m * k * dsub
     floats) and broadcast to encoders/searchers."""
-    rows = (df.orderBy(F.md5(F.col(id_col).cast("string")))
-            .limit(sample_n)
-            .select(F.col(vec_col).cast("array<double>").alias("_v"))
-            .collect())
-    X = np.array([r["_v"] for r in rows], dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _sample_unit_rows(df, vec_col, id_col, sample_n, "pq_codebooks")
     return _fit_subspace_books(X, m, nbits, iters, seed)
 
 
@@ -443,30 +451,20 @@ def _fit_subspace_books(X: np.ndarray, m: int, nbits: int,
     return books
 
 
+def _zero_cell(books: np.ndarray) -> np.ndarray:
+    """The single all-zero coarse centroid that makes IVF-PQ flat PQ."""
+    m, _, dsub = np.shape(books)
+    return np.zeros((1, m * dsub))
+
+
 def pq_encode(df: DataFrame, books: np.ndarray,
               vec_col: str = "embedding", id_col: str = "vec_id",
               code_col: str = "pq_code") -> DataFrame:
-    """Encode every vector as ``m`` small centroid ids — a pure
-    Arrow-batched projection (one argmin per subspace, vectorized).
-    Output is |docs| x m bytes-ish: the memory-bounded representation
-    ANN search scans instead of the raw vectors."""
-    m, k, dsub = books.shape
-    b_books = df.sparkSession.sparkContext.broadcast(books)
-
-    @F.pandas_udf("array<int>")
-    def _enc(vs: pd.Series) -> pd.Series:
-        B = b_books.value
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        codes = np.empty((len(X), m), dtype=np.int64)
-        for j in range(m):
-            S = X[:, j * dsub:(j + 1) * dsub]
-            d2 = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = d2.argmin(axis=1)
-        return pd.Series([c.tolist() for c in codes])
-
-    return df.withColumn(
-        code_col, _enc(F.col(vec_col).cast("array<double>")))
+    """Add the ``m``-code column: ``ivfpq_encode`` over one all-zero
+    cell, without the cell column."""
+    return (ivfpq_encode(df, _zero_cell(books), books, vec_col, id_col,
+                         "_pq_cell", code_col)
+            .drop("_pq_cell"))
 
 
 def pq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
@@ -477,43 +475,12 @@ def pq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
             encoded: DataFrame | None = None,
             dtype: str = "float32",
             max_query_rows: int | None = 100_000) -> DataFrame:
-    """PQ/ADC approximate top-k: corpus scanned as codes, each query
-    precomputes an (m x 2^nbits) inner-product lookup table against the
-    codebooks, score = sum of table entries addressed by the code —
-    asymmetric distance computation. Per Arrow batch the score matrix is
-    a vectorized LUT gather; each batch emits only its local top-k per
-    query (output k x |queries| rows per batch, NEVER the full cross
-    product), then one window takes the global top-k. The exact
-    ``brute_force_topk`` is the oracle; recall is pinned in tests.
-
-    ``rerank=C`` is the production pattern: ADC selects the top C
-    candidates per query (C >> k), then ONLY those C rows are re-scored
-    with exact cosine against the raw vectors — recall approaches exact
-    at C/|corpus| of the exact cost. Without it, pure ADC recall is
-    bounded by quantization error (worst on unclustered vectors).
-
-    ``books``: pre-trained codebooks (e.g. loaded via
-    ``pipeline.ann_index.PQIndex.load``) — skips the training sample,
-    the train-once/probe-many production shape.
-
-    ``encoded``: a pre-encoded corpus frame carrying (``id_col``,
-    pq_code) — the ``pq_encode`` output, typically read back from a
-    persisted parquet layout. The ADC scan then touches ONLY the code
-    columns (never re-encodes raw vectors — at 100 TB that is the
-    difference between scanning |docs| x m small ints and re-running
-    the encode projection per query batch); requires ``books`` (the
-    frozen codebooks the codes were encoded with). The raw ``df`` is
-    still consulted by the ``rerank`` path, which joins true vectors
-    back for ONLY the shortlisted rows.
-
-    ``dtype`` picks the ADC LUT-gather precision. fp32 is the
-    PRODUCTION DEFAULT (round-8 A/B at sf1, 200k-vector corpus, 2000
-    queries: 3.44s -> 2.30s median, 1.5x — the scan is memory-bound
-    and fp32 halves LUT traffic; quantization error already dwarfs
-    fp32 rounding, the rerank path rescores in exact fp64 cosine, and
-    the top-k came out IDENTICAL across all 2000 queries). Pass
-    'float64' for a bit-stable fp64 shortlist — the convention the
-    exported-codebook DuckDB oracles pin."""
+    """Flat PQ/ADC approximate top-k: ``ivfpq_topk`` over one all-zero
+    cell, so the scan, tie, ``rerank`` and ``dtype`` contracts are
+    ``ivfpq_topk``'s. Without ``books`` the codebooks are fitted inline
+    by ``pq_codebooks``; ``encoded`` is a ``pq_encode`` output carrying
+    (``id_col``, pq_code) and requires the ``books`` it was encoded
+    with."""
     _cap_query_rows(queries, max_query_rows, "pq_topk")
     if encoded is not None and books is None:
         raise ValueError(
@@ -523,102 +490,12 @@ def pq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     if books is None:
         books = pq_codebooks(df, vec_col, id_col, m=m, nbits=nbits,
                              sample_n=sample_n, seed=seed)
-    else:
-        books = np.asarray(books, dtype=np.float64)
-        m, _, _ = books.shape
     if encoded is not None:
-        enc = encoded.select(F.col(id_col).alias("neighbor_id"),
-                             "pq_code")
-    else:
-        enc = pq_encode(df, books, vec_col, id_col).select(
-            F.col(id_col).alias("neighbor_id"), "pq_code")
-    # The ADC scan's parallelism must come from the CLUSTER, not from
-    # however many files the compact codes table happens to occupy: a
-    # 200k-row codes.parquet reads as ~3 input splits, serializing a
-    # |queries| x |codes| numpy scan into 3 tasks (measured 98s at
-    # 2000 x 200k where 32 tasks do it in ~8s). The codes are a few
-    # bytes per row, so the round-robin shuffle is trivial next to one
-    # serialized scan; at production scale the table spans >= cluster
-    # parallelism in files and this is a no-op.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if enc.rdd.getNumPartitions() < par:
-        enc = enc.repartition(par)
-
-    qrows = (queries.select(F.col(id_col).alias("query_id"),
-                            F.col(vec_col).cast("array<double>")
-                            .alias("_q")).collect())
-    qids = np.array([r["query_id"] for r in qrows])
-    Q = np.array([r["_q"] for r in qrows], dtype=np.float64)
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    mm, kk, dsub = books.shape
-    # LUT[q, j, c] = <q_subj, books[j, c]> — built in fp64, downcast
-    # once here so fp32 runs gather/accumulate half-width end to end
-    _dt = np.float32 if dtype in ("float32", "fp32") else np.float64
-    lut = np.einsum("qjd,jcd->qjc",
-                    Q.reshape(len(Q), mm, dsub), books).astype(_dt)
-    sc = df.sparkSession.sparkContext
-    b_lut, b_qids = sc.broadcast(lut), sc.broadcast(qids)
-
-    # id fields keep the input id column's type (string/int/long ids all
-    # round-trip; a hardcoded long would corrupt non-long ids)
-    _idt = df.schema[id_col].dataType
-    out_schema = T.StructType([
-        T.StructField("query_id", _idt),
-        T.StructField("neighbor_id", _idt),
-        T.StructField("score", T.DoubleType())])
-
-    def _batch_topk(it):
-        L, ids = b_lut.value, b_qids.value
-        nq = len(ids)
-        take = max(k, rerank or 0)
-        for pdf in it:
-            codes = np.array(pdf["pq_code"].tolist(), dtype=np.int64)
-            nb = np.asarray(pdf["neighbor_id"])
-            # scores: (nq, rows) = sum_j LUT[:, j, codes[:, j]]
-            s = np.zeros((nq, len(codes)), dtype=L.dtype)
-            for j in range(mm):
-                s += L[:, j, codes[:, j]]
-            # self-matches are masked BEFORE the local top-take: the
-            # query's own corpus row would otherwise consume a slot in
-            # its batch, silently shrinking the effective shortlist by
-            # one vs the (top-`take` excluding self) contract
-            s[ids[:, None] == nb[None, :]] = -np.inf
-            kk_local = min(take, len(codes))
-            top = np.argpartition(-s, kk_local - 1, axis=1)[:, :kk_local]
-            # deterministic (score desc, neighbor_id asc) selection at
-            # the cut: argpartition breaks score ties arbitrarily, so a
-            # tied candidate with the SMALLER id could be dropped here
-            # while the global window would have kept it. Repair only
-            # the queries whose ties straddle the boundary (near-dup
-            # corpora hit this constantly — equal codes => equal ADC).
-            v = np.take_along_axis(s, top, axis=1).min(axis=1)
-            n_gt = (s > v[:, None]).sum(axis=1)
-            n_eq = (s == v[:, None]).sum(axis=1)
-            for qi in np.nonzero(n_gt + n_eq > kk_local)[0]:
-                gti = np.nonzero(s[qi] > v[qi])[0]
-                eqi = np.nonzero(s[qi] == v[qi])[0]
-                need = kk_local - len(gti)
-                keep = eqi[np.argsort(nb[eqi], kind="stable")[:need]]
-                top[qi] = np.concatenate([gti, keep])
-            res = {"query_id": np.repeat(ids, kk_local),
-                   "neighbor_id": nb[top.ravel()],
-                   "score": np.take_along_axis(s, top, axis=1).ravel()}
-            yield pd.DataFrame(res)
-
-    cand = enc.mapInPandas(_batch_topk, out_schema)
-    cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("neighbor_id"))
-    if rerank is None:
-        return (cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "neighbor_id",
-                        F.round("score", 6).alias("score"), "rank"))
-    shortlist = (cand.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= rerank)
-                 .select("query_id", "neighbor_id"))
-    return _exact_rerank(df, queries, shortlist, k, vec_col, id_col,
-                         shortlist_rows=len(qids) * rerank)
+        encoded = encoded.select(id_col, "pq_code", F.lit(0).alias("cell"))
+    return ivfpq_topk(df, queries, k=k, nprobe=1, vec_col=vec_col,
+                      id_col=id_col, rerank=rerank,
+                      centroids=_zero_cell(books), books=books,
+                      encoded=encoded, dtype=dtype, max_query_rows=None)
 
 
 def _exact_rerank(df: DataFrame, queries: DataFrame, shortlist: DataFrame,
@@ -627,8 +504,7 @@ def _exact_rerank(df: DataFrame, queries: DataFrame, shortlist: DataFrame,
     """Exact re-rank of a (query_id, neighbor_id) shortlist: join raw
     vectors back in (hash join keyed on the corpus id — touches only
     candidate rows) and score true cosine; the broadcast query frame
-    carries the query vectors. Shared by the PQ and IVF-PQ rerank
-    paths.
+    carries the query vectors.
 
     ``shortlist_rows``: the caller's |queries| x rerank bound. When the
     shortlist is KNOWN large (the exact-switch shape, rerank ~ corpus)
@@ -679,13 +555,8 @@ def ivfpq_fit(df: DataFrame, n_centroids: int = 16, m: int = 8,
     code budget quantizes much finer. Returns (centroids, books) — both
     driver-tiny; persist with ``pipeline.ann_index.IVFPQIndex`` at scale
     (train ONCE, probe for months)."""
+    X = _sample_unit_rows(df, vec_col, id_col, sample_n, "ivfpq_fit")
     C = ivf_fit_centroids(df, n_centroids, vec_col, id_col, kmeans_iters)
-    rows = (df.orderBy(F.md5(F.col(id_col).cast("string")))
-            .limit(sample_n)
-            .select(F.col(vec_col).cast("array<double>").alias("_v"))
-            .collect())
-    X = np.array([r["_v"] for r in rows], dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     cells = np.argmax(X @ C.T, axis=1)
     books = _fit_subspace_books(X - C[cells], m, nbits, iters, seed)
     return C, books
@@ -712,8 +583,7 @@ def ivfpq_encode(df: DataFrame, centroids: np.ndarray, books: np.ndarray,
     @F.pandas_udf(f"{cell_col} int, {code_col} array<int>")
     def _enc(vs: pd.Series) -> pd.DataFrame:
         Cv, Bv = b_C.value, b_books.value
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+        X = _unit_rows(vs)
         cells = np.argmax(X @ Cv.T, axis=1)
         R = X - Cv[cells]
         codes = np.empty((len(X), mm), dtype=np.int64)
@@ -747,13 +617,21 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
 
         score(q, x) ≈ <q, centroid[cell(x)]> + Σ_j LUT[q, j, code_j(x)]
 
-    where the LUT holds residual-codebook inner products. Per Arrow
-    batch the probe test is a boolean gather and the score a vectorized
-    LUT sum; each batch emits only its local top-take per query, then
-    one window takes the global top-k (identical output contract to
-    ``pq_topk``). At 100 TB the encoded corpus is written once
-    PARTITIONED BY CELL, so a probe reads nprobe/n_centroids of the
-    files — the scan here filters the same fraction row-wise.
+    where the LUT holds residual-codebook inner products (asymmetric
+    distance computation). Per Arrow batch the probe test is a boolean
+    gather and the score a vectorized LUT sum; each batch emits only
+    its local top-take per query (NEVER the full cross product), then
+    one window takes the global top-k by (score desc, neighbor_id asc).
+    At 100 TB the encoded corpus is written once PARTITIONED BY CELL,
+    so a probe reads nprobe/n_centroids of the files — the scan here
+    filters the same fraction row-wise. ``pq_topk`` is this scan over
+    one all-zero cell.
+
+    ``rerank=C`` is the production pattern: ADC selects the top C
+    candidates per query (C >> k), then ONLY those C rows are re-scored
+    with exact cosine against the raw vectors — recall approaches exact
+    at C/|corpus| of the exact cost. Without it, pure ADC recall is
+    bounded by quantization error (worst on unclustered vectors).
 
     ``nprobe >= n_centroids`` plus ``rerank >= |corpus|`` is the exact
     switch (every cell probed, every ADC candidate exact-rescored):
@@ -771,11 +649,13 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     with). The raw ``df`` is still consulted by the ``rerank`` path,
     which joins true vectors back for ONLY the shortlisted rows.
 
-    ``dtype='float32'`` (the production default — round-8 sf1 A/B:
-    2.53s -> 1.89s median, 1.34x, identical top-k) runs the ADC scan
-    (centroid term + LUT gather) in fp32 — half the memory traffic;
-    see ``pq_topk``. Pass 'float64' for the bit-stable shortlist the
-    exported-codebook oracles pin."""
+    ``dtype='float32'`` is the production default: the scan
+    (centroid term + LUT gather) is memory-bound and fp32 halves its
+    traffic (round-8 sf1 A/B, 200k vectors, 2000 queries: flat PQ
+    3.44s -> 2.30s, IVF-PQ 2.53s -> 1.89s median, identical top-k);
+    quantization error already dwarfs fp32 rounding and the rerank
+    rescores in exact fp64 cosine. Pass 'float64' for the bit-stable
+    shortlist the exported-codebook DuckDB oracles pin."""
     _cap_query_rows(queries, max_query_rows, "ivfpq_topk")
     if encoded is not None and (centroids is None or books is None):
         raise ValueError(
@@ -788,44 +668,53 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
             vec_col=vec_col, id_col=id_col, seed=seed)
     C = np.asarray(centroids, dtype=np.float64)
     books = np.asarray(books, dtype=np.float64)
-    n_centroids = len(C)
+    n_centroids, dim = C.shape
     nprobe = min(nprobe, n_centroids)
-    mm, kk, dsub = books.shape
+    mm, _, dsub = books.shape
     sc = df.sparkSession.sparkContext
 
-    if encoded is not None:
-        enc = encoded.select(F.col(id_col).alias("neighbor_id"),
-                             "cell", "pq_code")
-    else:
-        enc = ivfpq_encode(df, C, books, vec_col, id_col) \
-            .select(F.col(id_col).alias("neighbor_id"), "cell", "pq_code")
-    # Same file-layout-vs-cluster parallelism guard as pq_topk: any
-    # cell filter the caller pushed into `encoded` sits BELOW this
-    # shuffle, so parquet cell pruning still happens at the scan; only
-    # the surviving (pruned) rows are spread.
+    if encoded is None:
+        encoded = ivfpq_encode(df, C, books, vec_col, id_col)
+    enc = encoded.select(F.col(id_col).alias("neighbor_id"),
+                         "cell", "pq_code")
+    # The ADC scan's parallelism must come from the CLUSTER, not from
+    # however many files the compact codes table happens to occupy: a
+    # 200k-row codes.parquet reads as ~3 input splits, serializing a
+    # |queries| x |codes| numpy scan into 3 tasks (measured 98s at
+    # 2000 x 200k where 32 tasks do it in ~8s). The codes are a few
+    # bytes per row, so the round-robin shuffle is trivial next to one
+    # serialized scan. Any cell filter the caller pushed into `encoded`
+    # sits BELOW this shuffle, so parquet cell pruning still happens at
+    # the scan; only the surviving (pruned) rows are spread.
     if enc.rdd.getNumPartitions() < sc.defaultParallelism:
         enc = enc.repartition(sc.defaultParallelism)
 
     qrows = (queries.select(F.col(id_col).alias("query_id"),
                             F.col(vec_col).cast("array<double>")
                             .alias("_q")).collect())
+    if not qrows:                 # no queries: same schema, no rows
+        enc = enc.limit(0)
     qids = np.array([r["query_id"] for r in qrows])
-    Q = np.array([r["_q"] for r in qrows], dtype=np.float64)
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    Q = _unit_rows([r["_q"] for r in qrows], dim)
     cent_term = Q @ C.T                                   # (nq, ncent)
     # probe mask: True where query q probes cell c — selected in fp64
-    # so probe choice never shifts with the scan dtype
-    order = np.argsort(-cent_term, axis=1)[:, :nprobe]
-    probe = np.zeros((len(Q), n_centroids), dtype=bool)
-    np.put_along_axis(probe, order, True, axis=1)
+    # so probe choice never shifts with the scan dtype; probing every
+    # cell needs no mask
+    probe = None
+    if nprobe < n_centroids:
+        order = np.argsort(-cent_term, axis=1)[:, :nprobe]
+        probe = np.zeros((len(Q), n_centroids), dtype=bool)
+        np.put_along_axis(probe, order, True, axis=1)
+    # LUT[q, j, c] = <q_subj, books[j, c]> — built in fp64, downcast
+    # once here so fp32 runs gather/accumulate half-width end to end
     _dt = np.float32 if dtype in ("float32", "fp32") else np.float64
     lut = np.einsum("qjd,jcd->qjc", Q.reshape(len(Q), mm, dsub),
                     books).astype(_dt)
-    b_lut = sc.broadcast(lut)
-    b_qids = sc.broadcast(qids)
-    b_cent = sc.broadcast(cent_term.astype(_dt))
-    b_probe = sc.broadcast(probe)
+    b_lut, b_qids = sc.broadcast(lut), sc.broadcast(qids)
+    b_cent, b_probe = sc.broadcast(cent_term.astype(_dt)), sc.broadcast(probe)
 
+    # id fields keep the input id column's type (string/int/long ids all
+    # round-trip; a hardcoded long would corrupt non-long ids)
     _idt = df.schema[id_col].dataType
     out_schema = T.StructType([
         T.StructField("query_id", _idt),
@@ -835,24 +724,33 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     def _batch_topk(it):
         L, ids = b_lut.value, b_qids.value
         CT, P = b_cent.value, b_probe.value
-        nq = len(ids)
         take = max(k, rerank or 0)
         for pdf in it:
             codes = np.array(pdf["pq_code"].tolist(), dtype=np.int64)
             cells = np.asarray(pdf["cell"], dtype=np.int64)
             nb = np.asarray(pdf["neighbor_id"])
-            s = CT[:, cells].copy()                     # (nq, rows)
+            s = CT[:, cells]                 # (nq, rows), a fresh copy
             for j in range(mm):
                 s += L[:, j, codes[:, j]]
             # rows outside a query's probed cells never compete —
             # masked BEFORE the local top-take, exactly mirroring the
             # file-level pruning of a cell-partitioned layout
-            s[~P[:, cells]] = -np.inf
+            if P is not None:
+                s[~P[:, cells]] = -np.inf
+            # self-matches are masked BEFORE the local top-take too: the
+            # query's own corpus row would otherwise consume a slot in
+            # its batch, silently shrinking the effective shortlist by
+            # one vs the (top-`take` excluding self) contract
             s[ids[:, None] == nb[None, :]] = -np.inf
             kk_local = min(take, len(codes))
             top = np.argpartition(-s, kk_local - 1, axis=1)[:, :kk_local]
-            # deterministic tie repair at the cut (same contract as
-            # pq_topk: score desc, neighbor_id asc)
+            # deterministic (score desc, neighbor_id asc) selection at
+            # the cut: argpartition breaks score ties arbitrarily, so a
+            # tied candidate with the SMALLER id could be dropped here
+            # while the global window would have kept it. Repair only
+            # the queries whose finite ties straddle the boundary
+            # (near-dup corpora hit this constantly — equal codes =>
+            # equal ADC).
             v = np.take_along_axis(s, top, axis=1).min(axis=1)
             n_gt = (s > v[:, None]).sum(axis=1)
             n_eq = (s == v[:, None]).sum(axis=1)

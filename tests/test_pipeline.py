@@ -2053,7 +2053,7 @@ def test_pq_topk_deterministic_under_ties_and_batching(spark):
     result computed independently in numpy from the same codebooks."""
     import numpy as np
     import pandas as pd
-    from handyspark_spark.pipeline.similarity import pq_topk
+    from handyspark_spark.pipeline.similarity import ivfpq_topk, pq_topk
     rng = np.random.RandomState(9)
     base = rng.randn(6, 8)
     # 50 copies of each of 6 distinct vectors, interleaved ids
@@ -2067,12 +2067,18 @@ def test_pq_topk_deterministic_under_ties_and_batching(spark):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch",
                          None)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "37")
+    qs = df.filter(F.col("vec_id") < 3)
     try:
         # fp64 pinned: the independent expectation below computes the
-        # ADC scores in float64 numpy (library default is now fp32)
-        got = pq_topk(df, df.filter(F.col("vec_id") < 3), k=5,
-                      books=books, rerank=None,
-                      dtype="float64").collect()
+        # ADC scores in float64 numpy (library default is now fp32).
+        # Two all-zero cells with nprobe=1 run the same ADC through the
+        # probe mask (every row lands in the probed cell 0).
+        runs = {
+            "pq_topk": pq_topk(df, qs, k=5, books=books, rerank=None,
+                               dtype="float64").collect(),
+            "ivfpq_topk_masked": ivfpq_topk(
+                df, qs, k=5, centroids=np.zeros((2, 8)), nprobe=1,
+                books=books, dtype="float64").collect()}
     finally:
         if old is not None:
             spark.conf.set(
@@ -2093,11 +2099,69 @@ def test_pq_topk_deterministic_under_ties_and_batching(spark):
                                      + lut[1, codes[i, 1]])
                   for i in range(300) if int(ids[i]) != q}
         want = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-        got_q = sorted([r for r in got if r.query_id == q],
-                       key=lambda r: r.rank)
-        assert [r.neighbor_id for r in got_q] == [w[0] for w in want], q
-        for r, w in zip(got_q, want):
-            assert abs(r.score - round(w[1], 6)) < 1e-9
+        for name, got in runs.items():
+            got_q = sorted([r for r in got if r.query_id == q],
+                           key=lambda r: r.rank)
+            assert [r.neighbor_id for r in got_q] == \
+                [w[0] for w in want], (name, q)
+            for r, w in zip(got_q, want):
+                assert abs(r.score - round(w[1], 6)) < 1e-9, name
+
+
+@pytest.mark.parametrize("case", [
+    "ivf_fit_centroids", "pq_codebooks", "ivfpq_fit",
+    "ivf_topk", "pq_topk", "pq_topk_rerank", "ivfpq_topk",
+    "ivfpq_topk_rerank"])
+def test_ann_empty_inputs(emb, case):
+    """Degenerate-input contract of the IVF/PQ family: a fit on an empty
+    corpus raises a named HandyException (not a numpy AxisError), and
+    a search with an empty query frame returns no rows under the same
+    schema as a non-empty search."""
+    from handyspark_spark.core.util import HandyException
+    from handyspark_spark.pipeline import similarity as S
+    fits = {"ivf_fit_centroids": dict(n_centroids=8),
+            "pq_codebooks": dict(m=8, nbits=4, sample_n=256),
+            "ivfpq_fit": dict(n_centroids=8, m=8, nbits=4, sample_n=256)}
+    if case in fits:
+        with pytest.raises(HandyException,
+                           match=f"{case} .*the corpus has no vectors"):
+            getattr(S, case)(emb.limit(0), **fits[case])
+        return
+    name = case.replace("_rerank", "")
+    kw = {"ivf_topk": dict(n_centroids=8, nprobe=2),
+          "pq_topk": dict(m=8, nbits=4, sample_n=256),
+          "ivfpq_topk": dict(n_centroids=8, nprobe=2, m=8, nbits=4,
+                             sample_n=256)}[name]
+    if case.endswith("_rerank"):
+        kw["rerank"] = 10
+    qs = emb.filter(F.col("vec_id") % 40 == 0)
+    want = getattr(S, name)(emb, qs, k=3, **kw)
+    got = getattr(S, name)(emb, qs.limit(0), k=3, **kw)
+    assert got.schema == want.schema
+    assert got.count() == 0 and want.count() > 0
+
+
+def test_ivf_zero_vector_gives_no_nan_centroid(spark):
+    """A zero vector sampled as a centroid used to divide by a bare 0
+    norm: centroid 0 became NaN and np.argmax (NaN is the max) then put
+    every row in cell 0. Unit rows floor the norm, so the centroid stays
+    a zero row and the assignment spreads over the other cells."""
+    import hashlib
+    import pandas as pd
+    from handyspark_spark.pipeline.ann_index import IVFIndex
+    rng = np.random.RandomState(3)
+    X = rng.randn(400, 16)
+    first = min(range(400),
+                key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    X[first] = 0.0                  # the md5-first id is sampled first
+    df = spark.createDataFrame(pd.DataFrame(
+        {"vec_id": np.arange(400, dtype="int64"),
+         "embedding": [r.tolist() for r in X]}))
+    idx = IVFIndex.fit(df, n_centroids=8)
+    assert not np.isnan(idx.centroids).any()
+    assert not idx.centroids[0].any()
+    occupied = idx.assign(df).select("_cell").distinct().count()
+    assert occupied > 1
 
 
 def test_index_cache_rejects_same_n_different_data(spark, tmp_path):
