@@ -83,6 +83,40 @@ def settle_gate(threshold=1.0, window=5.0, max_wait=600.0):
               f"({waited:.0f}/{max_wait:.0f}s)", file=sys.stderr)
 
 
+def warm_session(spark, sf_dir: str) -> None:
+    """Pay a session's one-time costs before anything is timed: file
+    listing, JIT and python-worker spin-up, so per-query timings reflect
+    steady-state operator cost."""
+    from handyspark_spark.sources.loader import TABLES, load_table
+    for t in TABLES:
+        load_table(spark, sf_dir, t).count()
+    # the FIRST parquet write in a session pays ~4-5s of committer/codec
+    # JIT — warm it so index-persisting queries (ann_ivf_index, ann_pq)
+    # time their actual fit/save/search, not JVM warmup
+    import tempfile
+    spark.range(1).coalesce(1).write.mode("overwrite").parquet(
+        tempfile.mkdtemp(prefix="hsq_bench_warm_") + "/warm.parquet")
+    # the FIRST ranged_cumsum in a session pays ~4s of one-time cost
+    # (RangePartitioner sampling + localCheckpoint + window/broadcast
+    # JIT) — measured as percentiles_exact reading 7.7s in-suite vs
+    # 3.7s warm-standalone at sf0.1. Warm it on a 1k-row frame so the
+    # first distributed-quantile query times its operator, not the JVM
+    from handyspark_spark.operators.agg import percentile_distributed_plan
+    percentile_distributed_plan(
+        spark.range(1000).selectExpr("CAST(id AS DOUBLE) AS v"),
+        "v", [0.5]).collect()
+    # percentile_distributed_plan takes a compact single-window cumsum
+    # below 1M distinct values, so the call above does not exercise the
+    # ranged machinery — warm it directly so the first ranged_cumsum
+    # consumer in suite order (KS/ROC family) still times its operator,
+    # not the one-time JIT
+    from handyspark_spark.operators.rank import ranged_cumsum
+    ranged_cumsum(
+        spark.range(1000).selectExpr("CAST(id AS DOUBLE) AS v",
+                                     "CAST(1 AS LONG) AS c"),
+        ["v"], ["c"]).count()
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -108,37 +142,7 @@ def main():
     import __spark_entry__ as E
     qs = E.queries()
 
-    # warmup: file listing + JIT + python-worker spin-up paid once, so
-    # per-query timings reflect steady-state operator cost
-    from handyspark_spark.sources.loader import TABLES, load_table
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()
-    # the FIRST parquet write in a session pays ~4-5s of committer/codec
-    # JIT — warm it so index-persisting queries (ann_ivf_index, ann_pq)
-    # time their actual fit/save/search, not JVM warmup
-    import tempfile
-    spark.range(1).coalesce(1).write.mode("overwrite").parquet(
-        tempfile.mkdtemp(prefix="hsq_bench_warm_") + "/warm.parquet")
-    # the FIRST ranged_cumsum in a session pays ~4s of one-time cost
-    # (RangePartitioner sampling + localCheckpoint + window/broadcast
-    # JIT) — measured as percentiles_exact reading 7.7s in-suite vs
-    # 3.7s warm-standalone at sf0.1. Warm it on a 1k-row frame so the
-    # first distributed-quantile query times its operator, not the JVM
-    from handyspark_spark.operators.agg import percentile_distributed_plan
-    percentile_distributed_plan(
-        spark.range(1000).selectExpr("CAST(id AS DOUBLE) AS v"),
-        "v", [0.5]).collect()
-    # r12: percentile_distributed_plan now takes a compact single-window
-    # cumsum below 1M distinct values, so the call above no longer
-    # exercises the ranged machinery — warm it directly so the first
-    # ranged_cumsum consumer in suite order (KS/ROC family) still times
-    # its operator, not the one-time JIT
-    from handyspark_spark.operators.rank import ranged_cumsum
-    _rc, _ = ranged_cumsum(
-        spark.range(1000).selectExpr("CAST(id AS DOUBLE) AS v",
-                                     "CAST(1 AS LONG) AS c"),
-        ["v"], ["c"])
-    _rc.count()
+    warm_session(spark, sf_dir)
 
     sink = os.environ.get("SPARK_GRAFT_BENCH_SINK", "collect")
     skip = {s for s in os.environ.get("SPARK_GRAFT_BENCH_SKIP",

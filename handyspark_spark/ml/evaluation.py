@@ -81,8 +81,8 @@ class BinaryClassificationMetrics:
     # -- the single shared plan --------------------------------------------
     def _curve(self) -> DataFrame:
         """Per distinct score (desc): cumulative tp/fp + totals. One
-        grouped agg + one distributed cumsum; P/N come free from the
-        cumsum's per-partition totals (no extra pass over the scores)."""
+        grouped agg + one distributed cumsum; P/N are the cumsum's
+        grand-total columns (no extra pass over the scores)."""
         if self._cum is None:
             g = (self._grouped()
                  # pin the (|distinct scores|-row) grouped frame so the
@@ -90,13 +90,10 @@ class BinaryClassificationMetrics:
                  # cumsum's range-exchange sampling pass would otherwise
                  # replay the full input scan a second time
                  .localCheckpoint(eager=False))
-            cum, ptot = ranged_cumsum(
-                g, [F.col("score").desc()], ["_pos", "_neg"])
-            tot = ptot.agg(F.sum("_tot__pos").alias("P"),
-                           F.sum("_tot__neg").alias("N"))
-            self._cum = (cum.withColumnRenamed("_cum__pos", "tp")
-                            .withColumnRenamed("_cum__neg", "fp")
-                            .crossJoin(F.broadcast(tot)))
+            self._cum = ranged_cumsum(
+                g, [F.col("score").desc()], ["_pos", "_neg"]
+            ).withColumnsRenamed({"_cum__pos": "tp", "_cum__neg": "fp",
+                                  "_n__pos": "P", "_n__neg": "N"})
         return self._cum
 
     def persist(self) -> "BinaryClassificationMetrics":

@@ -6,8 +6,7 @@ from .sketch import (cms_build, cms_estimate, cms_merge, cms_topk,
                      kll_state, theta_overlap, theta_state)
 from .incremental import (finalize_state, merge_states,
                           partial_aggregate)
-from .rank import (grouped_ranged_cumsum, ranged_avg_rank, ranged_cumsum,
-                   ranged_row_number)
+from .rank import ranged_cumsum, ranged_row_number
 from .quality import Check, constraint_report
 from .timeseries import resample, rolling_zscore, scd2_history
 from .events import cohort_retention, event_transitions, trailing_features
@@ -25,5 +24,4 @@ __all__ = ["asof_join", "trailing_features", "event_transitions", "cohort_retent
            "cms_build", "cms_estimate", "cms_merge", "cms_topk",
            "hll_state", "hll_merge_estimate", "kll_state",
            "kll_merge_quantiles", "theta_state", "theta_overlap",
-           "ranged_cumsum", "ranged_row_number", "ranged_avg_rank",
-           "grouped_ranged_cumsum"]
+           "ranged_cumsum", "ranged_row_number"]

@@ -519,10 +519,9 @@ def percentile_distributed_plan(df: DataFrame, colname: str,
         w = (Window.orderBy("v")
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         cum = counts.select("v", "c", F.sum("c").over(w).alias("_cum_c"))
-        tot = counts.agg(F.sum("c").alias("_n"))
     else:
-        cum, ptot = ranged_cumsum(counts, ["v"], ["c"])
-        tot = ptot.agg(F.sum("_tot_c").alias("_n"))
+        cum = ranged_cumsum(counts, ["v"], ["c"])
+    tot = counts.agg(F.sum("c").alias("_n"))
     spark = df.sparkSession
     targets = spark.createDataFrame([(float(q),) for q in qs], "q double")
     # fractional 1-based rank of each target under type-7
@@ -654,14 +653,16 @@ def quantile_normalize_plan(df: DataFrame, value_col: str,
     raw scales differ before mixing on a shared threshold.
 
     Scalable shape: distinct (group, value) counts first (bounded
-    state), then ``grouped_ranged_cumsum`` for the per-group running
+    state), then grouped ``ranged_cumsum`` for the per-group running
     totals — a per-group window would put an entire group's rows in one
     task. Output: (by, value_col, out_col), one row per distinct value;
     join back on (by, value) to score rows."""
-    from .rank import grouped_ranged_cumsum
+    from .rank import ranged_cumsum
     g = (df.groupBy(F.col(by), F.col(value_col).alias("_v"))
          .agg(F.count(F.lit(1)).alias("_c")))
-    cum = grouped_ranged_cumsum(g, [by], [F.col("_v")], ["_c"])
+    # the cumsum's group total _n__c counts the NULL-value group too; the
+    # CDF's denominator is the non-null count
+    cum = ranged_cumsum(g, [F.col("_v")], ["_c"], [by])
     totals = df.groupBy(by).agg(F.count(value_col).alias("_n"))
     out = cum.join(F.broadcast(totals), by)
     return out.select(

@@ -3,269 +3,170 @@
 The standard fix for the global-``Window.orderBy`` anti-pattern: a window
 with no ``partitionBy`` funnels EVERY row into one task, so for a
 continuous column (|distinct| ~ |rows|) the whole dataset lands on a
-single executor core. The distributed equivalent is partition-offset
-ranking:
+single executor core. The reference ran its running quantities that way
+(the ROC/PR curve, the KS ECDF, ``_gen_row_ids``). Here they share ONE
+private core, ``_ranged_prefix``:
 
-1. ``repartitionByRange`` on the ordering — ONE range exchange (the same
-   exchange a global sort needs, but the result stays N-way parallel).
-   RangePartitioner gives partition ``i`` the i-th key range in sort
-   order and maps equal keys to the same partition, so
-   ``spark_partition_id()`` is monotone in the global order and ties
-   never straddle partitions.
-2. Cumulative sums *within* each partition under
-   ``Window.partitionBy(pid)`` — parallel, no further shuffle.
-3. Per-partition totals -> prefix offsets via a window over the (tiny,
-   ``num_partitions``-row) totals table, broadcast-joined back on pid.
+1. ``repartitionByRange`` on ``(group, order)`` — ONE range exchange
+   (the same exchange a global sort needs, but the result stays N-way
+   parallel, and a big group SPANS partitions). RangePartitioner gives
+   partition ``i`` the i-th key range in sort order and maps equal keys
+   to the same partition, so ``spark_partition_id()`` is monotone in the
+   global order and ties never straddle partitions. The tagged frame is
+   pinned by a lazy ``localCheckpoint``, so both branches below read one
+   materialized partitioning.
+2. The caller's windows per ``(pid, group)`` — parallel, no further
+   shuffle.
+3. The caller's totals per ``(pid, group)``; over that tiny table
+   (partitions x boundary-spanning groups rows) each total becomes an
+   exclusive prefix offset and a group total, broadcast-joined back.
 
-Everything stays lazy in ONE query, so Catalyst's ReuseExchange dedupes
-the range exchange between the cumsum branch and the totals branch —
-callers pay one wide shuffle total. A caller that only needs an
-aggregate over the running sums (e.g. an area under a curve) skips step
-3's join: ``ranged_partition_aggs`` reduces each range partition to one
-row in the plan and the driver applies the offsets to those rows. Used
-by spearman ranks
-(operators/agg.py), BinaryClassificationMetrics (ml/evaluation.py), the
-KS ECDF (operators/stats.py) and ``_gen_row_ids`` (core/frame.py); see
-VERDICT r1 "unpartitioned-window family".
+``ranged_cumsum`` (running sums + group totals), ``ranged_row_number``
+and ``grouped_rank_suite`` are thin wrappers over it. A caller that only
+needs an aggregate over the running sums (an area under a curve) skips
+step 3: ``ranged_partition_aggs`` reduces each range partition to one
+row in a single-branch plan and the driver applies the offsets.
+
+Callers: ``ranged_cumsum`` — the ROC/PR curve (ml/evaluation.py), the KS
+ECDF and ``ks_2samp`` (operators/stats.py), exact distributed
+percentiles and quantile normalization (operators/agg.py),
+``joint_spearman``'s ranged form (below), ``pack_sequences``
+(pipeline/text.py) and ``token_budget_sample`` (pipeline/sample.py);
+``ranged_row_number`` — ``_gen_row_ids`` (core/frame.py);
+``grouped_rank_suite`` — the rank_suite query; ``ranged_partition_aggs``
+— ``areaUnderROC``. Spearman's M-column ranks use value-derived buckets
+instead (``melted_avg_ranks``, ``broadcast_dim_ranks``).
 """
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
-__all__ = ["grouped_ranged_cumsum", "grouped_rank_suite", "keyed_top_k",
-           "melted_avg_ranks", "ntile_expr", "ranged_avg_rank",
-           "ranged_cumsum", "ranged_partition_aggs", "ranged_row_number"]
+__all__ = ["grouped_rank_suite", "keyed_top_k", "melted_avg_ranks",
+           "ntile_expr", "ranged_cumsum", "ranged_partition_aggs",
+           "ranged_row_number"]
 
 _PID = "_rcs_pid"
 
 
 def _order_exprs(order_by) -> list[Column]:
-    out = []
-    for o in order_by:
-        out.append(F.col(o) if isinstance(o, str) else o)
-    return out
+    return [F.col(o) if isinstance(o, str) else o for o in order_by]
 
 
-def _num_partitions(df: DataFrame, num_partitions: int | None) -> int:
-    if num_partitions:
-        return int(num_partitions)
+def _shuffle_partitions(df: DataFrame) -> int:
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions",
                                         "200"))
 
 
-def _range_tagged(df: DataFrame, exprs: list[Column], n: int) -> DataFrame:
+def _range_tagged(df: DataFrame, exprs: list[Column]) -> DataFrame:
     """Step 1: ``df`` range-partitioned on ``exprs`` with every row
     tagged by its partition id (monotone in the order; ties never
     straddle partitions)."""
-    return (df.repartitionByRange(n, *exprs)
+    return (df.repartitionByRange(_shuffle_partitions(df), *exprs)
               .withColumn(_PID, F.spark_partition_id()))
 
 
-def _local_cumsums(d: DataFrame, exprs: list[Column], value_cols: list[str],
-                   prefix: str) -> DataFrame:
-    """Step 2: running sums ``{prefix}{c}`` (inclusive) of ``value_cols``
-    inside each range partition of a ``_range_tagged`` frame."""
-    w_in = (Window.partitionBy(_PID).orderBy(*exprs)
-            .rowsBetween(Window.unboundedPreceding, 0))
-    return d.select("*", *[F.sum(c).over(w_in).alias(f"{prefix}{c}")
-                           for c in value_cols])
+def _running(w: WindowSpec, value_cols: list[str]) -> list[Column]:
+    """Inclusive running sums ``_loc_{c}`` of ``value_cols`` under the
+    ordered window ``w``."""
+    w = w.rowsBetween(Window.unboundedPreceding, 0)
+    return [F.sum(c).over(w).alias(f"_loc_{c}") for c in value_cols]
+
+
+def _ranged_prefix(df: DataFrame, group_cols: Sequence[str],
+                   order_by: list,
+                   local: Callable[[WindowSpec], list[Column]],
+                   totals: list[Column]) -> DataFrame:
+    """The one two-pass plan (module docstring, steps 1-3). ``local(w)``
+    returns the window columns to add, where ``w`` is the ordered
+    per-``(pid, group)`` window; each aliased aggregate ``t`` in
+    ``totals`` comes back as the group total ``t`` plus ``_off{t}``, its
+    sum over the group's preceding range partitions."""
+    group_cols = list(group_cols)
+    oexprs = _order_exprs(order_by)
+    # the lazy localCheckpoint pins ONE materialized range partitioning
+    # for the window branch and the totals branch: unpinned, the two
+    # branches are column-pruned differently on wide frames, their
+    # range exchanges stop being canonically equal and each samples its
+    # OWN boundaries, silently misaligning pids. It also stops each
+    # branch (and the sampling pass) replaying the upstream plan.
+    d = (_range_tagged(df, [F.col(g) for g in group_cols] + oexprs)
+         .localCheckpoint(eager=False))
+    w = Window.partitionBy(_PID, *group_cols).orderBy(*oexprs)
+    tot = d.groupBy(_PID, *group_cols).agg(*totals)
+    names = tot.columns[len(group_cols) + 1:]
+    w_off = (Window.partitionBy(*group_cols).orderBy(_PID)
+             .rowsBetween(Window.unboundedPreceding, -1))
+    w_all = Window.partitionBy(*group_cols)
+    off = tot.select(
+        _PID, *group_cols,
+        *[F.coalesce(F.sum(t).over(w_off), F.lit(0)).alias(f"_off{t}")
+          for t in names],
+        *[F.sum(t).over(w_all).alias(t) for t in names])
+    return (d.select("*", *local(w))
+            .join(F.broadcast(off), on=[_PID, *group_cols], how="left")
+            .drop(_PID))
 
 
 def ranged_partition_aggs(df: DataFrame, order_by: list,
-                          value_cols: list[str], aggs: list[Column],
-                          num_partitions: int | None = None,
-                          prefix: str = "_loc_") -> DataFrame:
+                          value_cols: list[str],
+                          aggs: list[Column]) -> DataFrame:
     """Steps 1-2 of ``ranged_cumsum`` in ONE branch, reduced to one row
     per range partition: ``aggs`` may read the input columns and the
-    partition-local running sums ``{prefix}{c}`` of ``value_cols``.
+    partition-local running sums ``_loc_{c}`` of ``value_cols``.
 
     The first output column is the partition id; the collected rows
-    (``num_partitions`` at most, empty partitions absent) sorted by it
-    are in ``order_by`` order. A caller combines them on the driver with
-    the prefix offsets of step 3 — the global running sum at a row is
-    its local one plus the sum of its partition's predecessors' totals.
-    One branch means one range exchange: no pid alignment to protect, so
-    no checkpoint and no totals join.
+    (``spark.sql.shuffle.partitions`` at most, empty partitions absent)
+    sorted by it are in ``order_by`` order. A caller combines them on
+    the driver with the prefix offsets of step 3 — the global running
+    sum at a row is its local one plus the sum of its partition's
+    predecessors' totals. One branch means one range exchange: no pid
+    alignment to protect, so no checkpoint and no totals join.
     """
     exprs = _order_exprs(order_by)
-    d = _range_tagged(df, exprs, _num_partitions(df, num_partitions))
-    return (_local_cumsums(d, exprs, value_cols, prefix)
+    w = Window.partitionBy(_PID).orderBy(*exprs)
+    return (_range_tagged(df, exprs).select("*", *_running(w, value_cols))
             .groupBy(_PID).agg(*aggs))
 
 
 def ranged_cumsum(df: DataFrame, order_by: list, value_cols: list[str],
-                  num_partitions: int | None = None,
-                  prefix: str = "_cum_",
-                  pin: bool = True) -> tuple[DataFrame, DataFrame]:
-    """Global cumulative sums of ``value_cols`` over the total order
-    ``order_by`` (list of column names or Column sort expressions, e.g.
-    ``[F.col("score").desc()]``), without a single-partition window.
+                  group_cols: Sequence[str] = ()) -> DataFrame:
+    """Cumulative sums of ``value_cols`` over the total order
+    ``order_by`` (column names or Column sort expressions, e.g.
+    ``[F.col("score").desc()]``) — per ``group_cols`` group when given,
+    else global — without a single-partition or per-group window (a
+    group holding 90% of the rows still spans many tasks).
 
-    Returns ``(cum, ptot)``:
-
-    - ``cum``: the input rows (plus ``{prefix}{col}`` running-total
-      columns, inclusive of the current row) — order-preserving w.r.t.
-      ``order_by`` within each range partition.
-    - ``ptot``: one row per value col of GRAND totals is derivable via
-      ``ptot.agg(F.sum(...))``; shape is ``num_partitions`` rows of
-      per-partition sums. Callers that need totals as columns can
-      ``crossJoin(F.broadcast(ptot.agg(...)))`` — the range exchange is
-      shared with ``cum``'s, so the extra branch re-reads shuffle output,
-      not the source.
-
-    INVARIANT (callers): ``df`` must carry ONLY the order + value columns.
-    Exchange reuse between the two branches relies on their canonicalized
-    plans being equal; extra columns get pruned from the totals branch
-    but not the cumsum branch, the exchanges diverge, and each samples
-    its own range boundaries — misaligning pids between branches. All
-    in-repo callers pass pre-aggregated (key, counts) frames. For wide
-    frames use ``ranged_row_number`` (checkpoint-pinned) or
-    ``ranged_avg_rank`` (value-derived buckets) instead.
-    """
-    exprs = _order_exprs(order_by)
-    n = _num_partitions(df, num_partitions)
-    # lazy localCheckpoint pins ONE materialized range partitioning shared
-    # by the cumsum and totals branches. Besides guaranteeing pid
-    # alignment without leaning on exchange reuse, it stops the branches
-    # AND the RangePartitioner sampling pass from each replaying the whole
-    # upstream plan — for a curve built over an expensive scan (e.g.
-    # metrics scores extracted from a wide array column) the upstream now
-    # runs twice (sample + exchange) instead of 4x.
-    d = _range_tagged(df, exprs, n)
-    if pin:
-        # the checkpoint swaps the SQL subplan for a LogicalRDD, so the
-        # range exchange stops being visible in downstream plan strings;
-        # pin=False keeps the plain plan for tests/plan inspection (at
-        # the cost of branch replay + reuse-dependent pid alignment)
-        d = d.localCheckpoint(eager=False)
-
-    local = f"{prefix}_local_"
-    cum = _local_cumsums(d, exprs, value_cols, local)
-
-    ptot = d.groupBy(_PID).agg(
-        *[F.sum(c).alias(f"_tot_{c}") for c in value_cols])
-    # offsets: window over num_partitions rows — bounded by cluster
-    # parallelism (thousands), not data size; single-partition here is fine
-    w_off = (Window.orderBy(_PID)
-             .rowsBetween(Window.unboundedPreceding, -1))
-    off = ptot.select(
-        _PID, *[F.coalesce(F.sum(f"_tot_{c}").over(w_off), F.lit(0))
-                .alias(f"_off_{c}") for c in value_cols])
-
-    out = cum.join(F.broadcast(off), on=_PID, how="left")
-    for c in value_cols:
-        out = out.withColumn(
-            f"{prefix}{c}",
-            F.col(f"{local}{c}") + F.col(f"_off_{c}"))
-    drop = [_PID] + [f"{local}{c}" for c in value_cols] \
-        + [f"_off_{c}" for c in value_cols]
-    return out.drop(*drop), ptot.drop(_PID)
+    Returns the input rows plus, for each value column ``c``,
+    ``_cum_{c}`` (the running total, inclusive of the current row) and
+    ``_n_{c}`` (the group's total, the grand total without groups)."""
+    out = _ranged_prefix(df, group_cols, order_by,
+                         lambda w: _running(w, value_cols),
+                         [F.sum(c).alias(f"_n_{c}") for c in value_cols])
+    return (out.withColumns({f"_cum_{c}": F.col(f"_loc_{c}")
+                             + F.col(f"_off_n_{c}") for c in value_cols})
+            .drop(*[f"_loc_{c}" for c in value_cols],
+                  *[f"_off_n_{c}" for c in value_cols]))
 
 
 def ranged_row_number(df: DataFrame, order_by: list,
-                      name: str = "_row_id", start: int = 0,
-                      num_partitions: int | None = None) -> DataFrame:
-    """Global 0-based (by default) row numbers over ``order_by`` — the
-    distributed ``row_number`` (per-partition row_number + broadcast
-    prefix counts). Ties are numbered arbitrarily-but-deterministically
+                      name: str = "_row_id") -> DataFrame:
+    """Global 0-based row numbers over ``order_by`` — the distributed
+    ``row_number``: a local row number plus the preceding partitions'
+    row count. Ties are numbered arbitrarily-but-deterministically
     within their range partition, same contract as the global window
     form."""
-    exprs = _order_exprs(order_by)
-    n = _num_partitions(df, num_partitions)
-    # lazy localCheckpoint pins ONE materialized range partitioning for
-    # both the row-number branch and the counts branch: on wide frames
-    # the branches are column-pruned differently, the range exchanges
-    # stop being canonically equal, and each would sample its OWN
-    # boundaries — silently misaligning pids between ranks and offsets
-    d = (df.repartitionByRange(n, *exprs)
-           .withColumn(_PID, F.spark_partition_id())
-           .localCheckpoint(eager=False))
-    w_in = Window.partitionBy(_PID).orderBy(*exprs)
-    local = d.withColumn("_rn_local", F.row_number().over(w_in))
-    counts = d.groupBy(_PID).agg(F.count(F.lit(1)).alias("_cnt"))
-    w_off = (Window.orderBy(_PID)
-             .rowsBetween(Window.unboundedPreceding, -1))
-    off = counts.select(
-        _PID, F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"))
-    out = (local.join(F.broadcast(off), on=_PID, how="left")
-           .withColumn(name,
-                       F.col("_rn_local") + F.col("_off") - F.lit(1 - start))
-           .drop(_PID, "_rn_local", "_off"))
-    return out
+    out = _ranged_prefix(df, (), order_by,
+                         lambda w: [F.row_number().over(w).alias("_lrn")],
+                         [F.count(F.lit(1)).alias("_cnt")])
+    return (out.withColumn(name, F.col("_lrn") + F.col("_off_cnt") - 1)
+            .drop("_lrn", "_cnt", "_off_cnt"))
 
 
 _BKT = "_rar_bkt"
-
-
-def ranged_avg_rank(df: DataFrame, col: str, name: str,
-                    num_partitions: int | None = None,
-                    bounds: list[float] | None = None) -> DataFrame:
-    """Fractional (average) ranks of a NUMERIC ``col`` attached to every
-    ROW — `scipy.stats.rankdata(method='average')` semantics, distributed.
-
-    Unlike ranking the distinct values and joining them back (a full
-    sort-merge join when |distinct| ~ |rows|, e.g. continuous columns),
-    this ranks rows in place. And unlike ``repartitionByRange``-based
-    two-branch plans, the bucket id is COMPUTED FROM THE VALUE against
-    approx-quantile boundaries fetched once up front — every plan branch
-    derives the identical bucket for a row, so there is no dependence on
-    exchange reuse. (RangePartitioner samples boundaries per exchange;
-    when Catalyst prunes the two branches to different column sets the
-    exchanges stop being reusable and the sampled pids silently diverge
-    between the rank branch and the offsets branch — observed as
-    nondeterministic ranks on wide frames.)
-
-    Cost: one approxQuantile pass (driver fetches ``num_partitions - 1``
-    doubles), one wide hash exchange for the bucket-keyed window, one
-    vocabulary-sized counts aggregation, one broadcast join. Rank VALUES
-    are boundary-invariant: ties always share a bucket (bucket is a
-    function of the value), so average ranks are exact regardless of how
-    balanced the sampled boundaries are.
-
-    NULLs get a NULL rank and do not occupy rank positions.
-
-    ``bounds``: precomputed boundary values (callers ranking several
-    columns batch ONE ``approxQuantile([cols...])`` pass instead of one
-    job per column)."""
-    c = F.col(col)
-    n = _num_partitions(df, num_partitions)
-    if bounds is None:
-        probs = [i / n for i in range(1, n)]
-        bounds = df.stat.approxQuantile(col, probs, max(0.25 / n, 1e-4))
-    uniq = sorted(set(bounds))
-    if uniq:
-        arr = F.array(*[F.lit(float(b)) for b in uniq])
-        bkt = F.size(F.filter(arr, lambda b: b < c.cast("double")))
-    else:  # empty / all-null column — single bucket
-        bkt = F.lit(0)
-    d = df.withColumn(_BKT,
-                      F.when(c.isNull(), F.lit(-1)).otherwise(bkt))
-    w_rank = Window.partitionBy(_BKT).orderBy(c)
-    # tie count as the PEER count of the same sorted window (range frame
-    # (0,0) = rows equal in the order value): shares w_rank's exchange
-    # and sort — a partitionBy(_BKT, c) window would add a second hash
-    # exchange of the full data per ranked column
-    w_ties = w_rank.rangeBetween(Window.currentRow, Window.currentRow)
-    local = (d.withColumn("_lrk", F.rank().over(w_rank))
-              .withColumn("_ties", F.count(F.lit(1)).over(w_ties)))
-    counts = (d.filter(c.isNotNull())
-              .groupBy(_BKT).agg(F.count(F.lit(1)).alias("_cnt")))
-    # prefix offsets over <= num_partitions rows — bounded by cluster
-    # parallelism, not data size; single-partition here is fine
-    w_off = (Window.orderBy(_BKT)
-             .rowsBetween(Window.unboundedPreceding, -1))
-    off = counts.select(
-        _BKT,
-        F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"))
-    out = (local.join(F.broadcast(off), on=_BKT, how="left")
-           .withColumn(
-               name,
-               F.when(c.isNull(), F.lit(None).cast("double"))
-               .otherwise(F.col("_off") + F.col("_lrk")
-                          + (F.col("_ties") - 1) / 2.0))
-           .drop(_BKT, "_lrk", "_ties", "_off"))
-    return out
 
 
 def melted_avg_ranks(df: DataFrame, cols: list[str],
@@ -274,28 +175,28 @@ def melted_avg_ranks(df: DataFrame, cols: list[str],
                      prefix: str = "_rk_",
                      strata: list[str] | None = None) -> DataFrame:
     """Fractional (average) ranks of SEVERAL numeric columns in ONE wide
-    exchange — the M-column form of ``ranged_avg_rank``, which pays one
-    full-table bucket exchange PER column (an M-column spearman matrix =
-    M sequential full shuffles, each over a frame one rank-column wider
-    than the last).
+    exchange — a per-column loop pays one full-table bucket exchange
+    PER column (an M-column spearman matrix = M sequential full
+    shuffles, each over a frame one rank-column wider than the last).
 
     Shape: melt rows to ``(row_id, col_id, value)`` (a projection +
     ``posexplode`` — no shuffle), bucket every melted row against ITS
-    column's approx-quantile boundaries (value-derived buckets, same
-    tie-safety argument as ``ranged_avg_rank``), rank all columns under
-    a single ``(col_id, bucket)``-keyed window, then pivot ranks back to
-    one row per input row. Exchange count is CONSTANT in M: one M·N-row
-    window exchange, one vocabulary-sized counts aggregation, one M·N-row
-    pivot-back exchange (vs 2M+… growing exchanges for the per-column
-    loop). Total shuffled bytes are ~2× one melt of the ranked columns —
+    column's approx-quantile boundaries (value-derived buckets: every
+    plan branch derives the identical bucket for a value and ties always
+    share one, so no pid alignment and no dependence on exchange reuse),
+    rank all columns under a single ``(col_id, bucket)``-keyed window,
+    then pivot ranks back to one row per input row. Exchange count is
+    CONSTANT in M: one M·N-row window exchange, one vocabulary-sized
+    counts aggregation, one M·N-row pivot-back exchange (vs 2M+…
+    growing exchanges for the per-column loop). Total shuffled bytes are ~2× one melt of the ranked columns —
     but the table's OTHER columns never enter any exchange, while the
     per-column loop reshuffles the full accumulating frame every time.
 
     Returns one row per input row that has at least one non-null ranked
     value: ``(_rid, {prefix}{col}...)`` — rank columns NULL where the
-    input value was NULL (pairwise-skip convention, matching
-    ``ranged_avg_rank``). Rows with every ranked value NULL are absent
-    (they contribute nothing to rank positions or correlations).
+    input value was NULL (the pairwise-skip convention). Rows with every
+    ranked value NULL are absent (they contribute nothing to rank
+    positions or correlations).
 
     ``strata``: rank WITHIN each stratum — every window/aggregation key
     gains the strata columns (so the exchange count stays constant in M
@@ -308,7 +209,7 @@ def melted_avg_ranks(df: DataFrame, cols: list[str],
     tasks. Output gains the strata columns (constant per row id).
     """
     strata = list(strata or [])
-    n = _num_partitions(df, num_partitions)
+    n = int(num_partitions or _shuffle_partitions(df))
     if bounds is None:
         probs = [i / n for i in range(1, n)]
         bs = df.stat.approxQuantile(list(cols), probs,
@@ -363,7 +264,6 @@ def melted_avg_ranks(df: DataFrame, cols: list[str],
 
 
 def broadcast_dim_ranks(df: DataFrame, cols: list[str],
-                        prefix: str = "_rk_",
                         max_dim_rows: int = 4_000_000) -> DataFrame | None:
     """Fractional (average) ranks via DISTINCT-VALUE rank dimensions —
     the zero-full-table-exchange form, applicable when the ranked
@@ -381,7 +281,7 @@ def broadcast_dim_ranks(df: DataFrame, cols: list[str],
     at sf10 on lineitem (60M rows, 2 columns): 57s melted → see
     SCALE.md round-8.
 
-    Returns the base frame plus ``{prefix}{col}`` double columns (NULL
+    Returns the base frame plus ``_rk_{col}`` double columns (NULL
     where the value was NULL — the pairwise-skip convention), or
     ``None`` when the combined dim exceeds ``max_dim_rows`` (truly
     continuous columns at scale): the caller falls back to the melted
@@ -415,7 +315,7 @@ def broadcast_dim_ranks(df: DataFrame, cols: list[str],
         dim_c = F.broadcast(
             ranked.filter(F.col("_cid") == i)
             .select(F.col("_v").alias(f"_dv_{i}"),
-                    F.col("_r").alias(f"{prefix}{c}")))
+                    F.col("_r").alias(f"_rk_{c}")))
         out = (out.join(dim_c,
                         F.col(c).cast("double") == F.col(f"_dv_{i}"),
                         "left")
@@ -425,7 +325,7 @@ def broadcast_dim_ranks(df: DataFrame, cols: list[str],
 
 #: Joint-table row count at or below which ``joint_spearman`` ranks
 #: with range-frame windows directly on the joint rows instead of the
-#: ranged form (melted dims + ``grouped_ranged_cumsum``) — the same
+#: ranged form (melted dims + grouped ``ranged_cumsum``) — the same
 #: measured-row-count gate pattern as ``COMPACT_CUMSUM_MAX_DISTINCT``
 #: in the exact-quantile family: the input is the aggregated joint
 #: table, never raw rows.
@@ -459,7 +359,7 @@ def joint_spearman(df: DataFrame, cols: list[str],
     ``(N + 1)/2``, where S is the count-weighted prefix INCLUSIVE of the
     tie group (range frame to ``currentRow``), E the tie group's count
     and N the column's non-null total — one window sort per column.
-    Ranged form: melted dims + ``grouped_ranged_cumsum`` + shuffle rank
+    Ranged form: melted dims + grouped ``ranged_cumsum`` + shuffle rank
     joins, so a large joint table never funnels into one task.
 
     Semantics match the fused rank-then-``F.corr`` paths: each column
@@ -516,12 +416,10 @@ def joint_spearman(df: DataFrame, cols: list[str],
                            .alias("_cid", "_v"), "_c")
                   .filter(F.col("_v").isNotNull()))
         dims = melted.groupBy("_cid", "_v").agg(F.sum("_c").alias("_k"))
-        cum = grouped_ranged_cumsum(dims, ["_cid"], ["_v"], ["_k"])
-        tot = dims.groupBy("_cid").agg(F.sum("_k").alias("_n"))
+        cum = ranged_cumsum(dims, ["_v"], ["_k"], ["_cid"])
         r = (F.col("_cum__k") - (F.col("_k") - 1) / 2.0
-             - (F.col("_n") + 1) / 2.0)
-        rdim = (cum.join(F.broadcast(tot), "_cid")
-                .select("_cid", "_v", r.alias("_r")))
+             - (F.col("_n__k") + 1) / 2.0)
+        rdim = cum.select("_cid", "_v", r.alias("_r"))
         xr = (rdim.filter(F.col("_cid") == 0)
               .select(F.col("_v").alias("_xv"), F.col("_r").alias("_rx")))
         yr = (rdim.filter(F.col("_cid") == 1)
@@ -618,9 +516,7 @@ def ntile_expr(rn: Column, n: Column, k: int) -> Column:
 
 
 def grouped_rank_suite(df: DataFrame, group_cols: list[str],
-                       order_cols: list[str],
-                       num_partitions: int | None = None,
-                       pin: bool = True) -> DataFrame:
+                       order_cols: list[str]) -> DataFrame:
     """The per-group ranking family (row_number / rank / dense_rank /
     peer counts / group sizes) WITHOUT a per-group window — the
     distributed fix for ``Window.partitionBy(low_cardinality_key)``,
@@ -628,20 +524,12 @@ def grouped_rank_suite(df: DataFrame, group_cols: list[str],
     the cluster is (a 3-value status column = 3 tasks for the whole
     dataset).
 
-    Shape (the ``grouped_ranged_cumsum`` two-branch pattern):
-
-    1. ``repartitionByRange`` on ``(group_cols + order_cols)`` — ONE
-       range exchange; a big group SPANS partitions, so parallelism is
-       ``num_partitions``, not |groups|. RangePartitioner sends equal
-       tuples to the same partition, so order-tuple TIES never straddle
-       partitions — local rank/peer math stays exact.
-    2. Per-``(pid, group)`` window: local row_number / rank /
-       dense_rank / peer count — all share one sort, no extra shuffle.
-    3. Per-``(pid, group)`` totals: row count + distinct-tuple count
-       (``countDistinct(struct(order_cols))`` — struct, so tuples
-       containing NULLs still count). Prefix sums over this TINY table
-       (≤ partitions × boundary-spanning groups rows) give each pid its
-       row/dense offsets and each group its size; broadcast-joined back.
+    ``_ranged_prefix`` over ``(group_cols, order_cols)``: a big group
+    SPANS range partitions, and order-tuple TIES never straddle one, so
+    the local row_number / rank / dense_rank / peer count (one shared
+    sort) stay exact once offset by the preceding partitions' row count
+    and distinct-tuple count (``countDistinct(struct(order_cols))`` —
+    struct, so tuples containing NULLs still count).
 
     Adds columns: ``_rn`` (row_number), ``_rank``, ``_dense_rank``,
     ``_peers`` (rows tied with this one on the full order tuple),
@@ -651,92 +539,22 @@ def grouped_rank_suite(df: DataFrame, group_cols: list[str],
 
     Order columns are ascending with Spark's NULLS FIRST; callers
     aligning with engines that default NULLS LAST must pre-filter or
-    flip nulls explicitly. ``pin`` as in ``ranged_cumsum``: the lazy
-    localCheckpoint pins ONE materialized range partitioning shared by
-    the rank and totals branches (pid alignment without leaning on
-    exchange reuse); ``pin=False`` keeps the plain plan for tests."""
+    flip nulls explicitly."""
     oexprs = [F.col(c) for c in order_cols]
-    exprs = [F.col(c) for c in group_cols] + oexprs
-    n = _num_partitions(df, num_partitions)
-    d = _range_tagged(df, exprs, n)
-    if pin:
-        d = d.localCheckpoint(eager=False)
 
-    w = Window.partitionBy(_PID, *group_cols).orderBy(*oexprs)
-    # peers = COUNT over the RANGE frame (current row, current row) =
-    # rows equal on the whole order tuple; shares w's exchange and sort
-    w_peers = w.rangeBetween(Window.currentRow, Window.currentRow)
-    local = (d.withColumn("_lrn", F.row_number().over(w))
-              .withColumn("_lrk", F.rank().over(w))
-              .withColumn("_ldr", F.dense_rank().over(w))
-              .withColumn("_peers", F.count(F.lit(1)).over(w_peers)))
+    def local(w):
+        # peers = COUNT over the RANGE frame (current row, current row) =
+        # rows equal on the whole order tuple; shares w's exchange and sort
+        w_peers = w.rangeBetween(Window.currentRow, Window.currentRow)
+        return [F.row_number().over(w).alias("_lrn"),
+                F.rank().over(w).alias("_lrk"),
+                F.dense_rank().over(w).alias("_ldr"),
+                F.count(F.lit(1)).over(w_peers).alias("_peers")]
 
-    tot = d.groupBy(_PID, *group_cols).agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.countDistinct(F.struct(*oexprs)).alias("_dcnt"))
-    # prefix offsets within each group across pids + the group size:
-    # windows over the totals table — bounded by cluster parallelism
-    # (× groups crossing a partition boundary), not data size
-    w_off = (Window.partitionBy(*group_cols).orderBy(_PID)
-             .rowsBetween(Window.unboundedPreceding, -1))
-    w_all = Window.partitionBy(*group_cols)
-    off = tot.select(
-        _PID, *group_cols,
-        F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off_rn"),
-        F.coalesce(F.sum("_dcnt").over(w_off), F.lit(0)).alias("_off_dr"),
-        F.sum("_cnt").over(w_all).alias("_n"))
-
-    return (local.join(F.broadcast(off), on=[_PID, *group_cols],
-                       how="left")
-            .withColumn("_rn", F.col("_lrn") + F.col("_off_rn"))
-            .withColumn("_rank", F.col("_lrk") + F.col("_off_rn"))
-            .withColumn("_dense_rank", F.col("_ldr") + F.col("_off_dr"))
-            .drop(_PID, "_lrn", "_lrk", "_ldr", "_off_rn", "_off_dr"))
-
-
-def grouped_ranged_cumsum(df: DataFrame, group_cols: list[str],
-                          order_by: list, value_cols: list[str],
-                          num_partitions: int | None = None,
-                          prefix: str = "_cum_") -> DataFrame:
-    """Per-group cumulative sums that stay parallel when ONE group holds
-    most of the data. ``Window.partitionBy(group)`` puts an entire
-    group's rows in a single task — for a training corpus where one
-    source is 90% of rows that is the same single-reducer failure mode
-    as a global ``Window.orderBy``. Instead: range-partition on
-    ``(group, order)`` so a big group SPANS partitions (one wide
-    exchange, same as the window would need), per-(pid, group) local
-    cumsums, and per-group prefix offsets from a totals table bounded by
-    ``num_partitions x |groups spanning a boundary|`` — broadcast-joined
-    back. Same two-pass shape as ``ranged_cumsum``; lazy localCheckpoint
-    pins one materialized partitioning for both branches."""
-    gexprs = [F.col(g) for g in group_cols]
-    oexprs = _order_exprs(order_by)
-    exprs = gexprs + oexprs
-    n = _num_partitions(df, num_partitions)
-    d = (df.repartitionByRange(n, *exprs)
-           .withColumn(_PID, F.spark_partition_id())
-           .localCheckpoint(eager=False))
-    w_in = (Window.partitionBy(_PID, *group_cols).orderBy(*oexprs)
-            .rowsBetween(Window.unboundedPreceding, 0))
-    cum = d.select(
-        "*", *[F.sum(c).over(w_in).alias(f"{prefix}{c}__local")
-               for c in value_cols])
-    ptot = d.groupBy(_PID, *group_cols).agg(
-        *[F.sum(c).alias(f"_tot_{c}") for c in value_cols])
-    # offsets within each group across pids: the totals table is tiny
-    # (<= partitions x groups rows), so the per-group window is bounded
-    # by cluster parallelism, not data size
-    w_off = (Window.partitionBy(*group_cols).orderBy(_PID)
-             .rowsBetween(Window.unboundedPreceding, -1))
-    off = ptot.select(
-        _PID, *group_cols,
-        *[F.coalesce(F.sum(f"_tot_{c}").over(w_off), F.lit(0))
-          .alias(f"_off_{c}") for c in value_cols])
-    out = cum.join(F.broadcast(off), on=[_PID, *group_cols], how="left")
-    for c in value_cols:
-        out = out.withColumn(
-            f"{prefix}{c}",
-            F.col(f"{prefix}{c}__local") + F.col(f"_off_{c}"))
-    drop = [_PID] + [f"{prefix}{c}__local" for c in value_cols] \
-        + [f"_off_{c}" for c in value_cols]
-    return out.drop(*drop)
+    out = _ranged_prefix(df, group_cols, oexprs, local,
+                         [F.count(F.lit(1)).alias("_n"),
+                          F.countDistinct(F.struct(*oexprs)).alias("_dn")])
+    return (out.withColumns({"_rn": F.col("_lrn") + F.col("_off_n"),
+                             "_rank": F.col("_lrk") + F.col("_off_n"),
+                             "_dense_rank": F.col("_ldr") + F.col("_off_dn")})
+            .drop("_lrn", "_lrk", "_ldr", "_off_n", "_off_dn", "_dn"))

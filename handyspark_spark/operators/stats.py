@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.util import HandyException
 from .rank import ranged_cumsum
 from .special import betainc_reg, gammainc_lower, norm_cdf, t_sf
 
@@ -79,10 +80,8 @@ def _ecdf_plan(df: DataFrame, colname: str) -> DataFrame:
     counts = (df.select(F.col(colname).cast("double").alias("v"))
                 .dropna()
                 .groupBy("v").agg(F.count(F.lit(1)).alias("c")))
-    cum, ptot = ranged_cumsum(counts, ["v"], ["c"])
-    tot = ptot.agg(F.sum("_tot_c").alias("total"))
-    return (cum.withColumnRenamed("_cum_c", "cum")
-               .crossJoin(F.broadcast(tot)))
+    return ranged_cumsum(counts, ["v"], ["c"]).withColumnsRenamed(
+        {"_cum_c": "cum", "_n_c": "total"})
 
 
 # -- named-distribution CDFs -------------------------------------------------
@@ -277,7 +276,9 @@ def ks_2samp(df: DataFrame, colname: str, group_col: str,
     (``ranged_cumsum``) shared by BOTH groups; 3 scalars to the driver.
 
     Returns {statistic, n_a, n_b, p_value, reject_at_05} with the
-    asymptotic Kolmogorov p-value."""
+    asymptotic Kolmogorov p-value. Raises ``HandyException`` naming the
+    cohort when either has no non-null ``colname`` value (the statistic
+    is undefined)."""
     g = F.col(group_col)
     counts = (df.filter(g.isin([group_a, group_b]))
               .select(F.col(colname).cast("double").alias("v"),
@@ -286,17 +287,22 @@ def ks_2samp(df: DataFrame, colname: str, group_col: str,
               .dropna(subset=["v"])
               .groupBy("v").agg(F.sum("_a").alias("ca"),
                                 F.sum("_b").alias("cb")))
-    cum, ptot = ranged_cumsum(counts, ["v"], ["ca", "cb"])
-    tot = ptot.agg(F.sum("_tot_ca").alias("na"),
-                   F.sum("_tot_cb").alias("nb"))
-    gap = F.abs(F.col("_cum_ca") / F.col("na")
-                - F.col("_cum_cb") / F.col("nb"))
-    row = (cum.crossJoin(F.broadcast(tot))
-           .agg(F.max(gap).alias("d"), F.max("na").alias("na"),
-                F.max("nb").alias("nb")).collect()[0])
-    d = float(row["d"] or 0.0)
+    na_, nb_ = F.col("_n_ca"), F.col("_n_cb")
+    # an absent cohort has a zero total: no ECDF, and no division by it
+    gap = F.when((na_ > 0) & (nb_ > 0),
+                 F.abs(F.col("_cum_ca") / na_ - F.col("_cum_cb") / nb_))
+    row = (ranged_cumsum(counts, ["v"], ["ca", "cb"])
+           .agg(F.max(gap).alias("d"), F.max(na_).alias("na"),
+                F.max(nb_).alias("nb")).collect()[0])
     na, nb = int(row["na"] or 0), int(row["nb"] or 0)
-    lam = d * math.sqrt(na * nb / (na + nb)) if na and nb else 0.0
+    empty = [f"{name}={grp!r}" for name, grp, n in
+             (("group_a", group_a, na), ("group_b", group_b, nb)) if not n]
+    if empty:
+        raise HandyException(
+            f"ks_2samp is undefined: no non-null {colname!r} value in "
+            f"cohort {' or '.join(empty)} of {group_col!r}")
+    d = float(row["d"])
+    lam = d * math.sqrt(na * nb / (na + nb))
     p = _kolmogorov_sf(lam)
     return {"statistic": d, "n_a": na, "n_b": nb, "p_value": p,
             "reject_at_05": p < 0.05}

@@ -127,7 +127,7 @@ def token_budget_sample(df: DataFrame, key_col: str, weight_col,
 
     Membership depends only on (key, salt, budget and the group's
     weight distribution): stable across cluster layouts and reruns.
-    The running total uses ``grouped_ranged_cumsum`` — one wide range
+    The running total uses ``ranged_cumsum`` — one wide range
     exchange, N-way parallel even when one group dominates the corpus
     (a per-group window would funnel that group into a single task)."""
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
@@ -135,9 +135,9 @@ def token_budget_sample(df: DataFrame, key_col: str, weight_col,
     group = [by] if by else []
     narrow = df.select(*group, F.col(key_col).alias("_tbs_key"),
                        u.alias("_tbs_u"), w.alias("_tbs_w"))
-    from ..operators.rank import grouped_ranged_cumsum
-    cum = grouped_ranged_cumsum(
-        narrow, group, [F.col("_tbs_u"), F.col("_tbs_key")], ["_tbs_w"])
+    from ..operators.rank import ranged_cumsum
+    cum = ranged_cumsum(narrow, [F.col("_tbs_u"), F.col("_tbs_key")],
+                        ["_tbs_w"], group)
     kept = (cum.filter(F.col("_cum__tbs_w") <= budget)
             .select(F.col("_tbs_key").alias(key_col),
                     F.col("_cum__tbs_w").alias("_tbs_cum")))

@@ -407,8 +407,7 @@ def pack_sequences(df: DataFrame, text_col: str = "text",
     counts = df.select(F.col(id_col),
                        F.size(tokens(text_col)).cast("long")
                        .alias("n_tokens"))
-    # narrow (order, value) frame — ranged_cumsum's documented invariant
-    cum, _ = ranged_cumsum(counts, [id_col], ["n_tokens"])
+    cum = ranged_cumsum(counts, [id_col], ["n_tokens"])
     off = (F.col("_cum_n_tokens") - F.col("n_tokens")).alias("tok_offset")
     first = F.floor(F.col("tok_offset") / seq_len)
     last = F.floor((F.col("tok_offset") + F.col("n_tokens") - 1) / seq_len)

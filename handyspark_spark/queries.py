@@ -3699,7 +3699,7 @@ FROM c WHERE cum <= 20000
 """)
 def q_token_budget_sample(spark, sf_dir):
     """Per-source token-budget cap: deterministic hash-priority order,
-    distributed per-group running totals (grouped_ranged_cumsum — no
+    distributed per-group running totals (grouped ranged_cumsum — no
     per-source single-task window)."""
     from .pipeline.sample import token_budget_sample
     from .pipeline.text import token_count
@@ -4484,7 +4484,7 @@ FROM g JOIN t ON g.source = t.source
 def q_quantile_normalize(spark, sf_dir):
     """Per-source quantile normalization (empirical CDF of token count)
     — makes quality scores comparable across sources before a shared
-    mixing threshold; distinct-value pre-agg + grouped_ranged_cumsum,
+    mixing threshold; distinct-value pre-agg + grouped ranged_cumsum,
     never a whole-group single-task window."""
     from .operators.agg import quantile_normalize_plan
     from .pipeline.text import token_count

@@ -344,6 +344,23 @@ def test_ks_2samp_same_vs_shifted(spark):
     assert abs(shift["p_value"] - _kolmogorov_sf(lam)) < 1e-12
 
 
+@pytest.mark.parametrize("rows, cohorts", [
+    ([(1.0, "a"), (2.0, "a"), (3.0, "c")], "group_b='b'"),   # absent
+    ([], "group_a='a' or group_b='b'"),                      # empty
+    ([(None, "a"), (None, "b")], "group_a='a' or group_b='b'"),  # all NULL
+], ids=["absent_cohort", "empty", "all_null"])
+def test_ks_2samp_undefined_raises_named_error(spark, rows, cohorts):
+    """A cohort with no non-null value: the two-sample statistic is
+    undefined. A named HandyException, not an ANSI DIVIDE_BY_ZERO from
+    inside the plan nor a silent (0.0, 1.0) result."""
+    from handyspark_spark.core.util import HandyException
+    from handyspark_spark.operators.stats import ks_2samp
+    df = spark.createDataFrame(rows, "v double, g string")
+    with pytest.raises(HandyException,
+                       match=re.escape(f"cohort {cohorts} of 'g'")):
+        ks_2samp(df, "v", "g", "a", "b")
+
+
 def test_chi2_independence_detects_dependence(spark):
     import numpy as np
 

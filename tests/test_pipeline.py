@@ -908,10 +908,10 @@ def test_token_budget_sample_layout_independent(spark, tables):
 
 def test_grouped_ranged_cumsum_matches_pandas(spark, tables, pdf_tables):
     from pyspark.sql import functions as F
-    from handyspark_spark.operators.rank import grouped_ranged_cumsum
+    from handyspark_spark.operators.rank import ranged_cumsum
     df = tables["orders"].select("o_custkey", "o_orderkey", "o_totalprice")
-    out = grouped_ranged_cumsum(df, ["o_custkey"], ["o_orderkey"],
-                                ["o_totalprice"])
+    out = ranged_cumsum(df, ["o_orderkey"], ["o_totalprice"],
+                        ["o_custkey"])
     got = {(r["o_custkey"], r["o_orderkey"]):
            round(r["_cum_o_totalprice"], 4) for r in out.collect()}
     pdf = pdf_tables["orders"].sort_values(["o_custkey", "o_orderkey"])

@@ -10,7 +10,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from handyspark_spark.operators.rank import ranged_cumsum, ranged_row_number
+from handyspark_spark.operators.rank import (_range_tagged, ranged_cumsum,
+                                             ranged_row_number)
 
 
 def _window_specs(df):
@@ -25,7 +26,7 @@ def assert_no_global_window_on(df, *data_cols):
     """Every window that orders by one of ``data_cols`` must be
     partitioned by the range-partition id or the quantile-bucket id (the
     tiny offsets window orders by _rcs_pid/_rar_bkt only, which is
-    allowed — its input is num_partitions rows)."""
+    allowed — its input is one row per range partition or bucket)."""
     for spec in _window_specs(df):
         for c in data_cols:
             if re.search(rf"\b{re.escape(c)}#", spec):
@@ -47,17 +48,26 @@ def skewed_pdf():
     })
 
 
-def test_ranged_cumsum_matches_pandas(spark, skewed_pdf):
+@pytest.mark.parametrize("group_cols", [(), ("g",)],
+                         ids=["ungrouped", "grouped"])
+def test_ranged_cumsum_matches_pandas(spark, skewed_pdf, group_cols):
+    """Running sums and the group total ``_n_w`` (the grand total
+    without groups) vs pandas — grouped on a skewed 3-value key whose
+    largest group spans most range partitions."""
     df = spark.createDataFrame(skewed_pdf)
-    cum, ptot = ranged_cumsum(df, ["x"], ["w"], num_partitions=8)
-    got = cum.select("x", "_cum_w").toPandas().sort_values("x")
+    got = (ranged_cumsum(df, ["x"], ["w"], group_cols)
+           .select("x", "_cum_w", "_n_w").toPandas()
+           .set_index("x").sort_index())
     exp = skewed_pdf.sort_values("x")
-    exp_cum = exp["w"].cumsum()
-    assert np.allclose(got["_cum_w"].to_numpy(),
-                       exp_cum.to_numpy())
-    # grand total from the per-partition totals branch
-    tot = ptot.agg(F.sum("_tot_w")).collect()[0][0]
-    assert tot == pytest.approx(skewed_pdf["w"].sum())
+    keys = [exp[g] for g in group_cols]
+    if keys:
+        exp = exp.assign(cum=exp.groupby(keys)["w"].cumsum(),
+                         n=exp.groupby(keys)["w"].transform("sum"))
+    else:
+        exp = exp.assign(cum=exp["w"].cumsum(), n=exp["w"].sum())
+    exp = exp.set_index("x").sort_index()
+    np.testing.assert_allclose(got["_cum_w"], exp["cum"])
+    np.testing.assert_allclose(got["_n_w"], exp["n"])
 
 
 def test_ranged_cumsum_desc_and_ties(spark, skewed_pdf):
@@ -66,8 +76,7 @@ def test_ranged_cumsum_desc_and_ties(spark, skewed_pdf):
     # range partitioning must keep equal keys together so the per-key
     # inclusive cumsum totals stay exact
     counts = df.groupBy("g").agg(F.sum("w").alias("w"))
-    cum, _ = ranged_cumsum(counts, [F.col("g").desc()], ["w"],
-                           num_partitions=8)
+    cum = ranged_cumsum(counts, [F.col("g").desc()], ["w"])
     got = {r["g"]: r["_cum_w"] for r in cum.collect()}
     exp = (skewed_pdf.groupby("g")["w"].sum()
            .sort_index(ascending=False).cumsum())
@@ -77,33 +86,36 @@ def test_ranged_cumsum_desc_and_ties(spark, skewed_pdf):
 
 def test_ranged_row_number_is_a_permutation(spark, skewed_pdf):
     df = spark.createDataFrame(skewed_pdf)
-    out = ranged_row_number(df, ["x"], name="_rid", num_partitions=8)
+    out = ranged_row_number(df, ["x"], name="_rid")
     got = out.select("x", "_rid").toPandas().sort_values("_rid")
     assert list(got["_rid"]) == list(range(len(skewed_pdf)))
     # ids follow the sort order
     assert got["x"].is_monotonic_increasing
 
 
-def test_ranged_row_number_start_1(spark):
-    df = spark.range(100).select(F.col("id").alias("v"))
-    out = ranged_row_number(df, ["v"], name="n", start=1,
-                            num_partitions=4)
-    rows = {r["v"]: r["n"] for r in out.collect()}
-    assert rows[0] == 1 and rows[99] == 100
+def assert_pinned_and_pid_keyed(df, data_col):
+    """The plan reads the lazily checkpointed range-tagged frame, and
+    it has data windows over ``data_col``, each keyed by the pid."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan          # the localCheckpoint pin
+    data = [s for s in _window_specs(df)
+            if re.search(rf"\b{re.escape(data_col)}#", s)]
+    assert data, "no window over the data column"
+    for spec in data:
+        assert "_rcs_pid#" in spec, f"window not keyed by the pid: {spec}"
 
 
 def test_cumsum_plan_has_no_global_data_window(spark, skewed_pdf):
     df = spark.createDataFrame(skewed_pdf)
-    cum, _ = ranged_cumsum(df, ["x"], ["w"], num_partitions=8)
+    cum = ranged_cumsum(df, ["x"], ["w"])
     assert_no_global_window_on(cum, "x", "w")
-    # the default (pinned) path hides the exchange inside the
-    # checkpointed subplan; inspect the un-pinned plan for the
-    # distributed sort exchange shape
-    cum_plain, _ = ranged_cumsum(df, ["x"], ["w"], num_partitions=8,
-                                 pin=False)
-    assert_no_global_window_on(cum_plain, "x", "w")
-    plan = cum_plain._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan  # the distributed sort exchange
+    assert_pinned_and_pid_keyed(cum, "x")
+    # the pin hides the exchange inside the checkpointed subplan; the
+    # range-tagging step it pins is the distributed sort exchange
+    tagged = _range_tagged(df, [F.col("x")])
+    plan = tagged._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"rangepartitioning\(x#\d+ ASC NULLS FIRST, 8\)",
+                     plan)
 
 
 def test_metrics_curve_plan_partitioned(spark, tables):
@@ -202,39 +214,6 @@ def test_ks_unknown_dist_raises(spark):
         ks_test(df, "v", dist="gamma")
 
 
-def test_ranged_avg_rank_matches_pandas_and_is_deterministic(spark):
-    """Row-level average ranks vs pandas rank(method='average'), with
-    ties and NULLs, across layouts — and identical assignment on
-    repeated runs (regression: the two-branch repartitionByRange form
-    sampled boundaries per branch and misaligned pids on wide frames)."""
-    from handyspark_spark.operators.rank import ranged_avg_rank
-    rng = np.random.RandomState(3)
-    vals = np.round(rng.uniform(0, 50, 5000), 0)      # heavy ties
-    pdf = pd.DataFrame({
-        "id": np.arange(5000),
-        "v": vals,
-        "pad1": rng.randn(5000), "pad2": rng.randn(5000),  # wide frame
-    })
-    pdf.loc[::17, "v"] = None
-    # NaN->null explicitly: without Arrow, createDataFrame keeps float
-    # NaN as NaN (a sortable value in Spark) instead of null, and the
-    # rank comparison against pandas (NaN rank = NaN) diverges
-    rows = pdf.astype(object).where(pdf.notna(), None)
-    sdf = spark.createDataFrame(
-        rows, "id long, v double, pad1 double, pad2 double") \
-        .repartition(7)
-    exp = pdf.set_index("id")["v"].rank(method="average")
-    outs = []
-    for _ in range(3):
-        got = (ranged_avg_rank(sdf, "v", "_rk", num_partitions=8)
-               .select("id", "_rk").toPandas()
-               .set_index("id")["_rk"].sort_index())
-        outs.append(got)
-    np.testing.assert_allclose(outs[0].values, exp.sort_index().values)
-    for o in outs[1:]:
-        np.testing.assert_array_equal(outs[0].values, o.values)
-
-
 def test_melted_avg_ranks_matches_pandas(spark):
     """All-columns-at-once ranks == per-column pandas average ranks,
     including ties and NULLs (null rank stays null, rows with every
@@ -314,8 +293,7 @@ def test_grouped_rank_suite_matches_window_and_stays_parallel(
     from handyspark_spark.operators.rank import (grouped_rank_suite,
                                                  ntile_expr)
     df = spark.createDataFrame(skewed_pdf.reset_index(names="id"))
-    r = grouped_rank_suite(df.select("id", "g", "w"), ["g"], ["w"],
-                           num_partitions=8)
+    r = grouped_rank_suite(df.select("id", "g", "w"), ["g"], ["w"])
     w = Window.partitionBy("g").orderBy("w")
     ref = df.select(
         "id", "g", "w",
@@ -343,16 +321,16 @@ def test_grouped_rank_suite_matches_window_and_stays_parallel(
            .set_index(["g", "t"]).sort_index())
     np.testing.assert_array_equal(nt["count"], ntw["count"])
 
-    # plan pin: the un-pinned plan shows the distributed range exchange
-    # (8-way), and every data-sized window is keyed by the pid — no
-    # window partitioned by the raw 3-value group key alone
-    rp = grouped_rank_suite(df.select("id", "g", "w"), ["g"], ["w"],
-                            num_partitions=8, pin=False)
-    plan = rp._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan
-    for spec in _window_specs(rp):
-        if re.search(r"\bw#", spec):        # windows over the data col
-            assert "_rcs_pid#" in spec, f"3-task window survived: {spec}"
+    # plan pin: every data-sized window is keyed by the pid — no window
+    # partitioned by the raw 3-value group key alone — and the pinned
+    # range tagging is the distributed (8-way) range exchange on
+    # (group, order)
+    assert_pinned_and_pid_keyed(r, "w")
+    tagged = _range_tagged(df.select("id", "g", "w"),
+                           [F.col("g"), F.col("w")])
+    plan = tagged._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"rangepartitioning\(g#\d+ ASC NULLS FIRST, "
+                     r"w#\d+ ASC NULLS FIRST, 8\)", plan)
 
 
 def test_keyed_top_k_equals_plain_window(spark):

@@ -52,23 +52,9 @@ def main():
                      f"(registry has {len(qs)})")
         qs = {n: qs[n] for n in names}
 
-    # warmup (mirror bench.py)
+    from bench import warm_session
     from handyspark_spark.sources.loader import TABLES, load_table
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()
-    import tempfile
-    spark.range(1).coalesce(1).write.mode("overwrite").parquet(
-        tempfile.mkdtemp(prefix="hsq_prof_warm_") + "/warm.parquet")
-    from handyspark_spark.operators.agg import percentile_distributed_plan
-    percentile_distributed_plan(
-        spark.range(1000).selectExpr("CAST(id AS DOUBLE) AS v"),
-        "v", [0.5]).collect()
-    from handyspark_spark.operators.rank import ranged_cumsum
-    _rc, _ = ranged_cumsum(
-        spark.range(1000).selectExpr("CAST(id AS DOUBLE) AS v",
-                                     "CAST(1 AS LONG) AS c"),
-        ["v"], ["c"])
-    _rc.count()
+    warm_session(spark, sf_dir)
 
     # 1. scheduling floor: a trivial 1-row action
     triv = []
