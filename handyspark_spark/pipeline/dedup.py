@@ -1,14 +1,16 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five dedup strategies, each chosen for a different scale/fidelity point:
+Six dedup strategies, each chosen for a different scale/fidelity point:
 
 - ``exact_duplicates``: md5-keyed hash groupBy — one shuffle on a 128-bit
   key, the 100 TB workhorse for byte-identical dedup.
 - ``fingerprint_duplicates``: same shuffle on the canonical token-set
   fingerprint (catches reordered/whitespace-variant docs).
-- ``ngram_jaccard_pairs``: exact Jaccard over token sets via a
-  token-inverted-index self-join — quadratic in docs-per-token, intended
-  for verification at small scale and as the oracle for MinHash.
+- ``ngram_jaccard_pairs``: exact Jaccard over token sets — a bitmask
+  self-join on tiny vocabularies, else a prefix-filtered or
+  inverted-index token join; quadratic in docs-per-token, intended for
+  verification at small scale and as the oracle for MinHash.
+  ``containment_pairs`` shares its bitmask and inverted plans.
 - ``minhash_signatures`` / ``minhash_lsh_pairs``: MinHash + banded LSH —
   the scale path. Hashes are md5-derived (first 8 hex chars as uint), so
   signatures are engine-reproducible (DuckDB computes identical values).
@@ -121,45 +123,123 @@ def _smallest_k_per_key(df: DataFrame, key_cols: list[str],
     return keyed_top_k(df, key_cols, [order_col], k, n_salts=n_salts)
 
 
+# Pair-family plan thresholds: the plan is picked by measuring the input
+# against these, never by a caller's flag.
+_BITMASK_MAX_ROWS = 100_000      # the bitmask self-join is O(n²)
+_BITMASK_MAX_VOCAB = 58          # HLL headroom under the 63-bit mask
+_PREFIX_MIN_THRESHOLD = 0.5      # below it the prefix sliver is too long
+
+
+def _bitmask_self_join(ts: DataFrame,
+                       capped: bool) -> tuple[DataFrame, DataFrame] | None:
+    """Small-vocabulary pair plan shared by ``ngram_jaccard_pairs`` and
+    ``containment_pairs``: each token set packs into one bigint over an
+    exact, collected token dictionary, and pairs come from a broadcast
+    self-join of ``(_id, _m)`` — integer bit ops, no exploded shuffle.
+    On a <= 58-token vocabulary every token is a stop token, and the
+    inverted join fans out to ~|vocab| x n²/2 rows (measured 30x slower
+    at sf0.1).
+
+    Returns the probe side (aliased ``a``, spread over the default
+    parallelism) and the broadcast build side (aliased ``b``), or
+    ``None`` when the plan does not apply: a cap is set (the bitmask
+    never prunes tokens or postings), the HLL probe sees more than
+    ``_BITMASK_MAX_VOCAB`` tokens or ``_BITMASK_MAX_ROWS`` documents,
+    the exact vocabulary exceeds 63 tokens (bit 63 would overflow a
+    signed long), or the vocabulary is empty."""
+    if capped:
+        return None
+    toks = ts.select("_id", F.explode("_toks").alias("t"))
+    stats = toks.agg(F.approx_count_distinct("t").alias("n"),
+                     F.approx_count_distinct("_id").alias("docs")
+                     ).collect()[0]
+    if (stats["n"] > _BITMASK_MAX_VOCAB
+            or stats["docs"] > _BITMASK_MAX_ROWS):
+        return None
+    vocab = sorted(r["t"] for r in toks.select("t").distinct().collect())
+    if not vocab or len(vocab) > 63:
+        return None
+    tok_bit = F.create_map(*[x for i, t in enumerate(vocab)
+                             for x in (F.lit(t), F.lit(1 << i))])
+    mask = F.aggregate(
+        F.transform(F.col("_toks"), lambda t: tok_bit[t]),
+        F.lit(0).cast("long"), lambda acc, b: acc.bitwiseOR(b))
+    m = ts.select(F.col("_id"), mask.alias("_m"))
+    # spread the STREAMED side: a small corpus often arrives as one
+    # parquet partition, which would run the whole O(n^2) loop join in
+    # a single task — repartitioning the probe side makes the broadcast
+    # nested-loop N-way parallel (measured 13s -> ~2s at sf0.1)
+    spread = m.sparkSession.sparkContext.defaultParallelism
+    return m.repartition(spread).alias("a"), F.broadcast(m.alias("b"))
+
+
+def _inverted_pair_counts(ts: DataFrame, max_token_df: int | None,
+                          max_postings_per_token: int | None,
+                          max_candidate_pairs: int | None,
+                          op: str) -> DataFrame:
+    """General pair plan: explode distinct tokens, drop tokens in more
+    than ``max_token_df`` docs, keep the ``max_postings_per_token``
+    smallest ids per token, guard the candidate volume, then self-join
+    on the token and count. Returns ``(id_a, id_b, _inter, _na, _nb)``
+    with ``id_a < id_b``: the intersection counted over the kept
+    postings and each side's FULL set size. The size rides each posting
+    row (8 bytes) and comes out of the pair aggregation via first() —
+    a separate sizes branch would cost a second scan+tokenize pass plus
+    two keyed joins against the pair stream."""
+    inv = ts.select("_id", F.size("_toks").alias("_n"),
+                    F.explode("_toks").alias("_tok"))
+    if max_token_df is not None:
+        df_counts = (inv.groupBy("_tok")
+                     .agg(F.count(F.lit(1)).alias("_df"))
+                     .filter(F.col("_df") <= max_token_df))
+        inv = inv.join(F.broadcast(df_counts.select("_tok")), "_tok")
+    if max_postings_per_token is not None:
+        inv = _smallest_k_per_key(inv, ["_tok"], "_id",
+                                  max_postings_per_token)
+    inv = _cap_candidate_pairs(
+        inv, ["_tok"], max_candidate_pairs, op,
+        materialize=max_postings_per_token is not None)
+    a, b = inv.alias("a"), inv.alias("b")
+    return (a.join(b, (F.col("a._tok") == F.col("b._tok")) &
+                      (F.col("a._id") < F.col("b._id")))
+            .groupBy(F.col("a._id").alias("id_a"),
+                     F.col("b._id").alias("id_b"))
+            .agg(F.count(F.lit(1)).alias("_inter"),
+                 F.first(F.col("a._n")).alias("_na"),
+                 F.first(F.col("b._n")).alias("_nb")))
+
+
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id",
                         threshold: float = 0.8,
                         max_token_df: int | None = None,
-                        strategy: str = "auto",
-                        max_bitmask_rows: int | None = 100_000,
                         max_postings_per_token: int | None = None,
                         max_candidate_pairs: int | None = 100_000_000,
                         ) -> DataFrame:
-    """Exact pairwise Jaccard >= threshold. Two physical strategies,
-    picked adaptively:
+    """Exact pairwise Jaccard >= threshold over distinct-token sets,
+    as ``(id_a, id_b, jaccard)`` with ``id_a < id_b``. The plan is
+    picked from the input and the caps:
 
-    - ``bitmask`` (vocab <= 63 distinct tokens): token set encoded as a
-      63-bit mask via a broadcast token dictionary; Jaccard =
-      bit_count(a&b)/bit_count(a|b) over a broadcast self-join — integer
-      bit ops, no exploded shuffle. The win on stop-word-dense corpora
-      where every token appears in most documents.
-    - ``prefix`` (high thresholds): prefix-filtered all-pairs (Bayardo
-      et al., WWW'07): tokens globally ordered rarest-first; a pair with
+    - ``bitmask`` when no cap is set and the corpus is small in both
+      vocabulary (<= 58 tokens by HLL, <= 63 exactly) and documents
+      (<= 100k): Jaccard = bit_count(a&b)/bit_count(a|b) over a
+      broadcast self-join (see ``_bitmask_self_join``). It is O(n²),
+      which is why the document bound is enforced.
+    - ``prefix`` otherwise, for threshold >= 0.5: prefix-filtered
+      all-pairs (Bayardo et al., WWW'07; see ``_jaccard_prefix``).
+      Tokens are globally ordered rarest-first, and a pair with
       Jaccard >= t must share a token among each side's FIRST
-      ``|A| - floor(t*|A|) + 1`` ordered tokens (at t=0.95 that is ~5%
-      of the doc, and by construction its RAREST tokens), so the
-      candidate join runs on a small, low-df sliver of the inverted
-      index; candidates are then verified exactly via array_intersect.
-    - ``inverted`` (general): explode distinct tokens -> join on token ->
-      |intersection| per pair -> |union| = |A|+|B|-|inter|.
-      ``max_token_df`` drops tokens appearing in more than that many docs
-      (stop-token blowup guard — at 100 TB you ALWAYS set this, or LSH
-      first and use this only to verify candidates).
+      ``|A| - floor(t*|A|) + 1`` ordered tokens, so the candidate join
+      runs on a small, low-df sliver of the inverted index; candidates
+      are then verified exactly via array_intersect.
+    - ``inverted`` otherwise (threshold < 0.5, where the prefix sliver
+      is too long to pay off): explode -> join on token -> |A∩B| per
+      pair, |A∪B| = |A|+|B|-|A∩B|.
 
-    ``auto`` picks bitmask under tiny vocabularies, else ``prefix`` for
-    threshold >= 0.5 (where the prefix sliver is short enough to pay
-    off) and ``inverted`` below.
-
-    The bitmask path is an O(n²) broadcast self-join — a verification
-    tool, not a scale path. ``max_bitmask_rows`` (default 100k) is an
-    ENFORCED guard: auto-selection falls back to ``inverted`` above it,
-    and an explicit ``strategy="bitmask"`` raises ValueError rather than
-    silently going quadratic. Pass ``max_bitmask_rows=None`` to opt out.
+    ``max_token_df`` drops tokens appearing in more than that many docs
+    from the index and the intersection (sizes stay full-set, so scores
+    only shrink) — the stop-token blowup guard; at 100 TB you ALWAYS
+    set this, or LSH first and use this only to verify candidates.
 
     ``max_candidate_pairs`` (default 100M): loud cap on the token-join
     candidate volume (sum over join tokens of C(df, 2)) — computed with
@@ -177,78 +257,30 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     On the INVERTED path intersections are counted from the truncated
     postings, so scores become a deterministic UNDER-estimate for pairs
     that straddle a truncated posting — a sampled audit, not exact
-    scoring; prefer the prefix path when capping.
+    scoring.
     """
-    if strategy not in ("auto", "bitmask", "prefix", "inverted"):
-        raise ValueError(f"unknown strategy {strategy!r}; expected "
-                         f"'auto', 'bitmask', 'prefix' or 'inverted'")
     ts = _token_sets(df, text_col, id_col)
-    if strategy == "auto":
-        # bitmask changes semantics under max_token_df (it never prunes
-        # high-DF tokens) — only the prefix/inverted paths honor that
-        # knob (intersections over kept tokens, sizes over full sets)
-        if max_token_df is not None:
-            strategy = "prefix" if threshold >= 0.5 else "inverted"
-        else:
-            stats = (ts.select("_id", F.explode("_toks").alias("t"))
-                     .agg(F.approx_count_distinct("t").alias("n"),
-                          F.approx_count_distinct("_id").alias("docs"))
-                     .collect()[0])
-            too_big = (max_bitmask_rows is not None
-                       and stats["docs"] > max_bitmask_rows)
-            strategy = ("bitmask" if stats["n"] <= 58 and not too_big
-                        else "prefix" if threshold >= 0.5
-                        else "inverted")
-            if strategy == "bitmask":
-                try:
-                    return _jaccard_bitmask(ts, id_col, threshold)
-                except ValueError:
-                    # approx_count_distinct under-estimated; true vocab
-                    # exceeds the 63-bit budget — use the general path
-                    strategy = "inverted"
-    if strategy == "bitmask":
-        if max_bitmask_rows is not None:
-            n = ts.limit(max_bitmask_rows + 1).count()
-            if n > max_bitmask_rows:
-                raise ValueError(
-                    f"bitmask strategy is O(n²) and the corpus exceeds "
-                    f"max_bitmask_rows={max_bitmask_rows}; use "
-                    f"strategy='inverted' (with max_token_df) or LSH, "
-                    f"or pass max_bitmask_rows=None to force")
-        return _jaccard_bitmask(ts, id_col, threshold)
-    if strategy == "prefix":
+    bm = _bitmask_self_join(ts, max_token_df is not None
+                            or max_postings_per_token is not None)
+    if bm is not None:
+        a, b = bm
+        pairs = a.join(b, F.col("a._id") < F.col("b._id"))
+        ids = [F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")]
+        ab = F.col("a._m").bitwiseAND(F.col("b._m"))
+        inter = F.bit_count(ab).cast("double")
+        union = F.bit_count(F.col("a._m").bitwiseOR(F.col("b._m")))
+    elif threshold >= _PREFIX_MIN_THRESHOLD:
         return _jaccard_prefix(ts, threshold, max_token_df,
                                max_postings_per_token, max_candidate_pairs)
-    # full-set size rides each posting row (8 bytes) and comes out of
-    # the pair aggregation via first() — the separate sizes branch cost
-    # a second scan+tokenize pass (no cross-branch common-subplan
-    # elimination) plus TWO keyed joins against the pair stream
-    inv = ts.select("_id", F.size("_toks").alias("_n"),
-                    F.explode("_toks").alias("_tok"))
-    if max_token_df is not None:
-        df_counts = (inv.groupBy("_tok")
-                     .agg(F.count(F.lit(1)).alias("_df"))
-                     .filter(F.col("_df") <= max_token_df))
-        inv = inv.join(F.broadcast(df_counts.select("_tok")), "_tok")
-    if max_postings_per_token is not None:
-        inv = _smallest_k_per_key(inv, ["_tok"], "_id",
-                                  max_postings_per_token)
-    inv = _cap_candidate_pairs(
-        inv, ["_tok"], max_candidate_pairs,
-        "ngram_jaccard_pairs(inverted)",
-        materialize=max_postings_per_token is not None)
-    a = inv.alias("a")
-    b = inv.alias("b")
-    out = (a.join(b, (F.col("a._tok") == F.col("b._tok")) &
-                     (F.col("a._id") < F.col("b._id")))
-           .groupBy(F.col("a._id").alias("id_a"),
-                    F.col("b._id").alias("id_b"))
-           .agg(F.count(F.lit(1)).alias("_inter"),
-                F.first(F.col("a._n")).alias("_na"),
-                F.first(F.col("b._n")).alias("_nb")))
-    jac = F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter"))
-    return (out.select("id_a", "id_b", jac.alias("jaccard"))
-               .filter(F.col("jaccard") >= threshold))
+    else:
+        pairs = _inverted_pair_counts(
+            ts, max_token_df, max_postings_per_token, max_candidate_pairs,
+            "ngram_jaccard_pairs(inverted)")
+        ids = ["id_a", "id_b"]
+        inter = F.col("_inter")
+        union = F.col("_na") + F.col("_nb") - F.col("_inter")
+    return (pairs.select(*ids, (inter / union).alias("jaccard"))
+            .filter(F.col("jaccard") >= threshold))
 
 
 def _jaccard_prefix(ts: DataFrame, threshold: float,
@@ -372,39 +404,6 @@ def _jaccard_prefix(ts: DataFrame, threshold: float,
     return (cand.join(a, "id_a").join(b, "id_b")
             .select("id_a", "id_b", jac.alias("jaccard"))
             .filter(F.col("jaccard") >= threshold))
-
-
-def _jaccard_bitmask(ts: DataFrame, id_col: str,
-                     threshold: float) -> DataFrame:
-    """Small-vocabulary fast path: exact token-id dictionary (collected —
-    <= 63 entries so every bit literal stays inside a signed 64-bit long;
-    bit 63 would overflow Java long), token set -> packed bigint,
-    pairwise bit_count."""
-    vocab = sorted(r["t"] for r in
-                   ts.select(F.explode("_toks").alias("t"))
-                     .distinct().collect())
-    if len(vocab) > 63:
-        raise ValueError("vocabulary exceeds 63 tokens; use inverted")
-    tok_bit = F.create_map(*[x for t, i in
-                             ((t, i) for i, t in enumerate(vocab))
-                             for x in (F.lit(t), F.lit(1 << i))])
-    mask = F.aggregate(
-        F.transform(F.col("_toks"), lambda t: tok_bit[t]),
-        F.lit(0).cast("long"), lambda acc, b: acc.bitwiseOR(b))
-    m = ts.select(F.col("_id"), mask.alias("_m"))
-    # spread the STREAMED side: a small corpus often arrives as one
-    # parquet partition, which would run the whole O(n^2) loop join in
-    # a single task — repartitioning the probe side makes the broadcast
-    # nested-loop N-way parallel (measured 13s -> ~2s at sf0.1)
-    spread = m.sparkSession.sparkContext.defaultParallelism
-    a, b = m.repartition(spread).alias("a"), m.alias("b")
-    inter = F.bit_count(F.col("a._m").bitwiseAND(F.col("b._m")))
-    union = F.bit_count(F.col("a._m").bitwiseOR(F.col("b._m")))
-    jac = inter.cast("double") / union
-    return (a.join(F.broadcast(b), F.col("a._id") < F.col("b._id"))
-             .select(F.col("a._id").alias("id_a"),
-                     F.col("b._id").alias("id_b"), jac.alias("jaccard"))
-             .filter(F.col("jaccard") >= threshold))
 
 
 def minhash_consts(num_hashes: int) -> list[int]:
@@ -1522,8 +1521,6 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id",
                       threshold: float = 0.9,
                       max_token_df: int | None = None,
-                      strategy: str = "auto",
-                      max_bitmask_rows: int | None = 100_000,
                       max_postings_per_token: int | None = None,
                       max_candidate_pairs: int | None = 100_000_000,
                       ) -> DataFrame:
@@ -1531,25 +1528,26 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     |A ∩ B| / |A| over distinct-token sets — the signal Jaccard misses
     when a short document is wholly embedded in a longer one (quoted
     articles, boilerplate-wrapped reposts: Jaccard is tiny because the
-    union is large, containment is ~1).
-
-    Same inverted-index shape as ``ngram_jaccard_pairs``: explode
-    distinct tokens, equality-join on the token, count intersections
-    per pair, divide by EACH side's size. ``max_token_df`` is the same
-    mandatory-at-scale stop-token guard. Emits one row per unordered
+    union is large, containment is ~1). Emits one row per unordered
     pair with both directions:
     (id_a, id_b, containment_a_in_b, containment_b_in_a), filtered to
     max(direction) >= threshold.
 
-    Same adaptive bitmask fast path as ``ngram_jaccard_pairs``: on a
-    <= 58-token vocabulary the inverted index degenerates (every token
-    is a stop token — the join fans out to ~|vocab| x n²/2 rows,
-    measured 30x slower at sf0.1), so token sets pack into one bigint
-    and containment is bit_count(a&b)/bit_count(a) over a broadcast
-    self-join, guarded by ``max_bitmask_rows`` exactly like Jaccard.
+    The plan is picked from the input and the caps, as in
+    ``ngram_jaccard_pairs``:
 
-    ``max_candidate_pairs`` (default 100M): loud pre-join cap on the
-    inverted path's candidate volume — see ``ngram_jaccard_pairs``.
+    - ``bitmask`` when no cap is set and the corpus is small in both
+      vocabulary and documents (see ``_bitmask_self_join``):
+      containment is bit_count(a&b)/bit_count(a). At threshold >= 1.0
+      the join predicate is the subset test a&b == a (or == b) and the
+      two columns are exact subset INDICATORS (1.0 / 0.0).
+    - ``inverted`` otherwise: explode distinct tokens, equality-join on
+      the token, count intersections per pair, divide by EACH side's
+      size (see ``_inverted_pair_counts``).
+
+    ``max_token_df`` is the same mandatory-at-scale stop-token guard,
+    and ``max_candidate_pairs`` (default 100M) the same loud pre-join
+    cap on the candidate volume, as in ``ngram_jaccard_pairs``.
     ``max_postings_per_token``: deterministically keep only the K
     smallest doc ids per posting list. Containment counts intersections
     FROM the postings, so with a cap the scores are a deterministic
@@ -1558,116 +1556,37 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     the bounded form that stays feasible where exact containment is
     definitionally quadratic (boilerplate cliques).
     """
-    if strategy not in ("auto", "bitmask", "inverted"):
-        raise ValueError(f"unknown strategy {strategy!r}; expected "
-                         f"'auto', 'bitmask' or 'inverted'")
     ts = _token_sets(df, text_col, id_col)
-    if strategy == "bitmask":
-        # honor the explicit request, with the same O(n²) row-cap guard
-        # as ngram_jaccard_pairs (loud failure beats silent quadratic)
-        if max_bitmask_rows is not None:
-            n = ts.limit(max_bitmask_rows + 1).count()
-            if n > max_bitmask_rows:
-                raise ValueError(
-                    f"bitmask strategy is O(n²) and the corpus exceeds "
-                    f"max_bitmask_rows={max_bitmask_rows}; use "
-                    f"strategy='inverted' (with max_token_df), or pass "
-                    f"max_bitmask_rows=None to force")
-        return _containment_bitmask(ts, threshold)
-    if strategy == "auto" and max_token_df is None:
-        stats = (ts.select("_id", F.explode("_toks").alias("t"))
-                 .agg(F.approx_count_distinct("t").alias("n"),
-                      F.approx_count_distinct("_id").alias("docs"))
-                 .collect()[0])
-        if (stats["n"] <= 58
-                and (max_bitmask_rows is None
-                     or stats["docs"] <= max_bitmask_rows)):
-            try:
-                return _containment_bitmask(ts, threshold)
-            except ValueError:
-                pass                       # true vocab > 63: fall through
-    # same sizes-ride-the-postings fusion as the jaccard inverted path:
-    # one scan+tokenize instead of two, no pair-stream size joins
-    inv = ts.select("_id", F.size("_toks").alias("_n"),
-                    F.explode("_toks").alias("_tok"))
-    if max_token_df is not None:
-        df_counts = (inv.groupBy("_tok")
-                     .agg(F.count(F.lit(1)).alias("_df"))
-                     .filter(F.col("_df") <= max_token_df))
-        inv = inv.join(F.broadcast(df_counts.select("_tok")), "_tok")
-    if max_postings_per_token is not None:
-        inv = _smallest_k_per_key(inv, ["_tok"], "_id",
-                                  max_postings_per_token)
-    inv = _cap_candidate_pairs(
-        inv, ["_tok"], max_candidate_pairs,
-        "containment_pairs(inverted)",
-        materialize=max_postings_per_token is not None)
-    a, b = inv.alias("a"), inv.alias("b")
-    out = (a.join(b, (F.col("a._tok") == F.col("b._tok")) &
-                     (F.col("a._id") < F.col("b._id")))
-           .groupBy(F.col("a._id").alias("id_a"),
-                    F.col("b._id").alias("id_b"))
-           .agg(F.count(F.lit(1)).alias("_inter"),
-                F.first(F.col("a._n")).alias("_na"),
-                F.first(F.col("b._n")).alias("_nb")))
-    ca = F.round(F.col("_inter") / F.col("_na"), 6)
-    cb = F.round(F.col("_inter") / F.col("_nb"), 6)
-    return (out.select("id_a", "id_b",
-                       ca.alias("containment_a_in_b"),
-                       cb.alias("containment_b_in_a"))
-            .filter(F.greatest(F.col("containment_a_in_b"),
-                               F.col("containment_b_in_a"))
-                    >= threshold))
-
-
-def _containment_bitmask(ts: DataFrame, threshold: float) -> DataFrame:
-    """Bitmask fast path for containment (vocab <= 63; see
-    ``_jaccard_bitmask`` for the packing contract)."""
-    vocab = sorted(r["t"] for r in
-                   ts.select(F.explode("_toks").alias("t"))
-                     .distinct().collect())
-    if len(vocab) > 63:
-        raise ValueError("vocabulary exceeds 63 tokens; use inverted")
-    tok_bit = F.create_map(*[x for t, i in
-                             ((t, i) for i, t in enumerate(vocab))
-                             for x in (F.lit(t), F.lit(1 << i))])
-    mask = F.aggregate(
-        F.transform(F.col("_toks"), lambda t: tok_bit[t]),
-        F.lit(0).cast("long"), lambda acc, b: acc.bitwiseOR(b))
-    m = ts.select(F.col("_id"), mask.alias("_m"))
-    spread = m.sparkSession.sparkContext.defaultParallelism
-    a, b = m.repartition(spread).alias("a"), m.alias("b")
-    if threshold >= 1.0:
-        # strict containment is a SUBSET test: A ⊆ B  ⟺  a&b == a.
-        # Pure 64-bit ops in the join predicate — no bit_count, no
-        # division per pair (~3x the pair throughput of the scored
-        # form; this O(n²) loop is the whole cost at 50k+ docs).
-        # Contract note: in this mode the two containment columns are
-        # exact subset INDICATORS (1.0 / 0.0), not fractional scores —
-        # every returned pair has at least one direction == 1.0.
+    bm = _bitmask_self_join(ts, max_token_df is not None
+                            or max_postings_per_token is not None)
+    if bm is None:
+        pairs = _inverted_pair_counts(
+            ts, max_token_df, max_postings_per_token, max_candidate_pairs,
+            "containment_pairs(inverted)")
+        ids = ["id_a", "id_b"]
+        inter, na, nb = F.col("_inter"), F.col("_na"), F.col("_nb")
+    else:
+        a, b = bm
+        ids = [F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")]
         ab = F.col("a._m").bitwiseAND(F.col("b._m"))
-        a_in_b = (ab == F.col("a._m")).cast("double")
-        b_in_a = (ab == F.col("b._m")).cast("double")
-        return (a.join(F.broadcast(b),
-                       (F.col("a._id") < F.col("b._id")) &
-                       ((F.col("a._m").bitwiseAND(F.col("b._m"))
-                         == F.col("a._m")) |
-                        (F.col("a._m").bitwiseAND(F.col("b._m"))
-                         == F.col("b._m"))))
-                .select(F.col("a._id").alias("id_a"),
-                        F.col("b._id").alias("id_b"),
-                        a_in_b.alias("containment_a_in_b"),
-                        b_in_a.alias("containment_b_in_a")))
-    inter = F.bit_count(F.col("a._m").bitwiseAND(F.col("b._m")))
-    ca = F.round(inter.cast("double")
-                 / F.bit_count(F.col("a._m")), 6)
-    cb = F.round(inter.cast("double")
-                 / F.bit_count(F.col("b._m")), 6)
-    return (a.join(F.broadcast(b), F.col("a._id") < F.col("b._id"))
-            .select(F.col("a._id").alias("id_a"),
-                    F.col("b._id").alias("id_b"),
-                    ca.alias("containment_a_in_b"),
-                    cb.alias("containment_b_in_a"))
+        a_in_b, b_in_a = ab == F.col("a._m"), ab == F.col("b._m")
+        if threshold >= 1.0:
+            # strict containment is a SUBSET test: A ⊆ B  ⟺  a&b == a.
+            # Pure 64-bit ops in the join predicate — no bit_count, no
+            # division per pair (~3x the pair throughput of the scored
+            # form; this O(n²) loop is the whole cost at 50k+ docs)
+            return (a.join(b, (F.col("a._id") < F.col("b._id")) &
+                           (a_in_b | b_in_a))
+                    .select(*ids, a_in_b.cast("double")
+                            .alias("containment_a_in_b"),
+                            b_in_a.cast("double")
+                            .alias("containment_b_in_a")))
+        pairs = a.join(b, F.col("a._id") < F.col("b._id"))
+        inter = F.bit_count(ab).cast("double")
+        na, nb = F.bit_count(F.col("a._m")), F.bit_count(F.col("b._m"))
+    return (pairs.select(*ids,
+                         F.round(inter / na, 6).alias("containment_a_in_b"),
+                         F.round(inter / nb, 6).alias("containment_b_in_a"))
             .filter(F.greatest(F.col("containment_a_in_b"),
                                F.col("containment_b_in_a"))
                     >= threshold))

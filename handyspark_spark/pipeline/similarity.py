@@ -215,8 +215,8 @@ def _cap_query_rows(queries: DataFrame, max_query_rows: int | None,
     collects the query frame to build driver-side LUTs and ``ivf_topk``
     broadcasts it — both are bounded by |queries|, and a caller passing
     a corpus-sized frame would melt the driver/executors silently.
-    Limit-probed (reads at most cap+1 rows, same pattern as
-    ``max_bitmask_rows``); pass ``max_query_rows=None`` to opt out."""
+    Limit-probed (reads at most cap+1 rows); pass
+    ``max_query_rows=None`` to opt out."""
     if max_query_rows is None:
         return
     n = queries.limit(max_query_rows + 1).count()

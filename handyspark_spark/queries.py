@@ -989,7 +989,7 @@ def q_jaccard_pairs_capped(spark, sf_dir):
     enumeration exhausts disk."""
     from .pipeline.dedup import ngram_jaccard_pairs
     df = _t(spark, sf_dir, "documents")
-    out = ngram_jaccard_pairs(df, threshold=0.95, strategy="prefix",
+    out = ngram_jaccard_pairs(df, threshold=0.95,
                               max_postings_per_token=64)
     return out.select("id_a", "id_b",
                       F.round("jaccard", 6).alias("jaccard"))
@@ -4996,7 +4996,7 @@ def q_containment_counts_capped(spark, sf_dir):
     both survive every shared posting, by construction of the cap."""
     from .pipeline.dedup import containment_pairs
     df = _t(spark, sf_dir, "documents")
-    pairs = containment_pairs(df, threshold=1.0, strategy="inverted",
+    pairs = containment_pairs(df, threshold=1.0,
                               max_postings_per_token=64)
     contained = pairs.select(F.explode(F.array(
         F.when(F.col("containment_a_in_b") == 1.0, F.col("id_a")),

@@ -49,23 +49,26 @@ def test_minhash_lsh_recall(docs):
     assert recall >= 0.9, f"LSH recall {recall:.2f} too low"
 
 
-def test_jaccard_prefix_equals_inverted(docs):
-    """The prefix-filtered strategy (Bayardo WWW'07) must return the
-    EXACT pair set + scores of the naive inverted-index join, with and
-    without the max_token_df guard."""
-    from handyspark_spark.pipeline.dedup import ngram_jaccard_pairs
+def test_jaccard_prefix_equals_inverted(docs, monkeypatch):
+    """The prefix-filtered plan (Bayardo WWW'07) must return the EXACT
+    pair set + scores of the naive inverted-index join, with and
+    without the max_token_df guard. A zero row cap turns the bitmask
+    plan off; a prefix threshold above 1 forces the inverted join."""
+    from handyspark_spark.pipeline import dedup
+    monkeypatch.setattr(dedup, "_BITMASK_MAX_ROWS", 0)
 
     def pairs(**kw):
         return {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-                ngram_jaccard_pairs(docs, **kw).collect()}
+                dedup.ngram_jaccard_pairs(docs, **kw).collect()}
 
     for kw in ({"threshold": 0.9}, {"threshold": 0.6},
                {"threshold": 0.6, "max_token_df": 80}):
-        a = pairs(strategy="prefix", **kw)
-        b = pairs(strategy="inverted", **kw)
+        a = pairs(**kw)
+        with monkeypatch.context() as mp:
+            mp.setattr(dedup, "_PREFIX_MIN_THRESHOLD", 2.0)
+            b = pairs(**kw)
         assert a == b, f"prefix != inverted under {kw}"
-    assert pairs(strategy="prefix", threshold=0.9), \
-        "fixture should contain near-dup pairs"
+    assert pairs(threshold=0.9), "fixture should contain near-dup pairs"
 
 
 def test_simhash_separates_similar_from_dissimilar(docs):
@@ -215,29 +218,192 @@ def test_jaccard_bitmask_63_token_guard(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(4), "text": texts}))
     from handyspark_spark.pipeline.dedup import ngram_jaccard_pairs
-    pairs = ngram_jaccard_pairs(df, threshold=0.99,
-                                strategy="auto").collect()
+    pairs = ngram_jaccard_pairs(df, threshold=0.99).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(0, 1), (0, 2), (1, 2)}
 
 
-def test_bitmask_guard_refuses_quadratic_above_row_cap(spark):
-    """Explicit bitmask above max_bitmask_rows must raise, not silently
-    run the O(n²) broadcast self-join; auto falls back to inverted."""
+def _pair_branch(out):
+    """Which pair plan built ``out``: the bitmask self-join explodes no
+    tokens; the prefix plan verifies candidates with array_intersect."""
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    if "explode(" not in plan:
+        return "bitmask"
+    return "prefix" if "array_intersect" in plan else "inverted"
+
+
+def test_bitmask_guard_refuses_quadratic_above_row_cap(spark, monkeypatch):
+    """Above ``_BITMASK_MAX_ROWS`` documents the O(n²) broadcast
+    self-join is refused and the call runs the prefix token-join plan
+    with the same pairs; at or under the cap the bitmask plan runs."""
     import pandas as pd
-    from handyspark_spark.pipeline.dedup import ngram_jaccard_pairs
+    from handyspark_spark.pipeline import dedup
     df = spark.createDataFrame(pd.DataFrame(
         {"doc_id": range(50), "text": ["a b c"] * 50}))
-    with pytest.raises(ValueError, match="max_bitmask_rows"):
-        ngram_jaccard_pairs(df, strategy="bitmask",
-                            max_bitmask_rows=10).collect()
-    # auto silently degrades to the linear inverted-index path
-    out = ngram_jaccard_pairs(df, threshold=0.99, strategy="auto",
-                              max_bitmask_rows=10)
+    monkeypatch.setattr(dedup, "_BITMASK_MAX_ROWS", 10)
+    out = dedup.ngram_jaccard_pairs(df, threshold=0.99)
+    assert _pair_branch(out) == "prefix"
     assert out.count() == 50 * 49 // 2
-    # explicit opt-out still allowed
-    got = ngram_jaccard_pairs(df.limit(3), strategy="bitmask",
-                              max_bitmask_rows=None)
-    assert got.count() == 3
+    small = dedup.ngram_jaccard_pairs(df.limit(3), threshold=0.99)
+    assert _pair_branch(small) == "bitmask"
+    assert small.count() == 3
+
+
+# 40 docs over a 20-token vocabulary (bitmask-sized): five templates,
+# each doc drops up to two template tokens and may add one, so the
+# corpus has near-duplicates, subsets and df > 5 postings per token
+def _small_vocab_texts():
+    import random
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(20)]
+    templates = [rng.sample(vocab, rng.randint(6, 10)) for _ in range(5)]
+    texts = []
+    for i in range(40):
+        toks = list(templates[i % 5])
+        for _ in range(rng.randint(0, 2)):
+            toks.remove(rng.choice(toks))
+        if rng.random() < 0.3:
+            toks.append(rng.choice(vocab))
+        texts.append(" ".join(toks))
+    return texts
+
+
+@pytest.fixture(scope="module")
+def small_vocab(spark):
+    import pandas as pd
+    texts = _small_vocab_texts()
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}))
+    return df, {i: set(t.split(" ")) for i, t in enumerate(texts)}
+
+
+def _ref_inter(sets, k=None):
+    """|A∩B| per pair (a < b), counted over each token's postings cut to
+    its ``k`` smallest ids (all ids when ``k`` is None)."""
+    from collections import Counter
+    from itertools import combinations
+    inter = Counter()
+    for tok in set().union(*sets.values()):
+        ids = sorted(i for i, s in sets.items() if tok in s)[:k]
+        inter.update(combinations(ids, 2))
+    return inter
+
+
+def _ref_prefix_candidates(sets, t, k):
+    """Capped prefix candidates: tokens ordered (df, token), each doc
+    indexes its first |A| - floor(t·|A|) + 1, postings cut to ``k``."""
+    import math
+    from collections import Counter, defaultdict
+    from itertools import combinations
+    df = Counter(tok for s in sets.values() for tok in s)
+    post = defaultdict(list)
+    for i in sorted(sets):
+        toks = sorted(sets[i], key=lambda w: (df[w], w))
+        n = len(toks)
+        post_toks = toks[:max(n - math.floor(t * n) + 1, 0)]
+        for w in post_toks:
+            post[w].append(i)
+    return {p for ids in post.values() for p in combinations(ids[:k], 2)}
+
+
+def _ref_jaccard(sets, t, k=None, prefix=False):
+    """Pure-Python Jaccard pairs: exact scores over prefix candidates
+    when ``prefix``, else intersections over capped postings."""
+    if prefix:
+        inter = {(a, b): len(sets[a] & sets[b])
+                 for a, b in _ref_prefix_candidates(sets, t, k)}
+    else:
+        inter = _ref_inter(sets, k)
+    out = {}
+    for (a, b), i in inter.items():
+        j = i / (len(sets[a]) + len(sets[b]) - i)
+        if j >= t:
+            out[a, b] = round(j, 9)
+    return out
+
+
+def _ref_containment(sets, t, k=None):
+    out = {}
+    for (a, b), i in _ref_inter(sets, k).items():
+        ca, cb = round(i / len(sets[a]), 6), round(i / len(sets[b]), 6)
+        if max(ca, cb) >= t:
+            out[a, b] = (ca, cb)
+    return out
+
+
+@pytest.mark.parametrize("branch,threshold,consts,cap", [
+    ("bitmask", 0.6, {}, None),
+    ("prefix", 0.6, {"_BITMASK_MAX_ROWS": 0}, None),
+    ("prefix_capped", 0.8, {}, 6),
+    ("inverted", 0.6, {"_BITMASK_MAX_ROWS": 0,
+                       "_PREFIX_MIN_THRESHOLD": 2.0}, None),
+    ("inverted_capped", 0.3, {}, 6),
+], ids=["bitmask", "prefix", "prefix_capped", "inverted",
+        "inverted_capped"])
+def test_jaccard_branches_match_set_reference(small_vocab, monkeypatch,
+                                              branch, threshold, consts,
+                                              cap):
+    """Each Jaccard plan, forced through its module constant or a cap,
+    equals a pure-Python reference of its semantics: exact Jaccard
+    uncapped; exact scores over the capped prefix candidates; capped
+    intersections over full sizes on the inverted join. A cap selects
+    its capped plan on this bitmask-sized vocabulary too, and binds:
+    the uncapped bitmask answer would differ."""
+    from handyspark_spark.pipeline import dedup
+    df, sets = small_vocab
+    for name, value in consts.items():
+        monkeypatch.setattr(dedup, name, value)
+    out = dedup.ngram_jaccard_pairs(df, threshold=threshold,
+                                    max_postings_per_token=cap)
+    assert _pair_branch(out) == branch.split("_")[0]
+    got = {(r.id_a, r.id_b): round(r.jaccard, 9) for r in out.collect()}
+    exp = _ref_jaccard(sets, threshold, cap, prefix=branch == "prefix_capped")
+    assert got == exp and exp
+    assert cap is None or exp != _ref_jaccard(sets, threshold)
+
+
+@pytest.mark.parametrize("branch,threshold,consts,cap", [
+    ("bitmask_subset", 1.0, {}, None),
+    ("bitmask", 0.6, {}, None),
+    ("inverted", 0.6, {"_BITMASK_MAX_ROWS": 0}, None),
+    ("inverted_capped", 1.0, {}, 8),
+], ids=["bitmask_subset", "bitmask", "inverted", "inverted_capped"])
+def test_containment_branches_match_set_reference(small_vocab, monkeypatch,
+                                                  branch, threshold,
+                                                  consts, cap):
+    """Each containment plan equals a pure-Python reference: on the
+    bitmask subset form (threshold 1.0) the two columns are subset
+    indicators, elsewhere rounded ratios over (capped) postings. A cap
+    selects the capped inverted count on this bitmask-sized vocabulary
+    too, and binds."""
+    from handyspark_spark.pipeline import dedup
+    df, sets = small_vocab
+    for name, value in consts.items():
+        monkeypatch.setattr(dedup, name, value)
+    out = dedup.containment_pairs(df, threshold=threshold,
+                                  max_postings_per_token=cap)
+    assert _pair_branch(out) == branch.split("_")[0]
+    got = {(r.id_a, r.id_b): (r.containment_a_in_b, r.containment_b_in_a)
+           for r in out.collect()}
+    exp = _ref_containment(sets, threshold, cap)
+    if branch == "bitmask_subset":
+        exp = {p: (float(ca == 1.0), float(cb == 1.0))
+               for p, (ca, cb) in exp.items()}
+    assert got == exp and exp
+    assert cap is None or exp != _ref_containment(sets, threshold)
+
+
+@pytest.mark.parametrize("op", ["jaccard", "containment"])
+@pytest.mark.parametrize("n_rows", [0, 1], ids=["empty", "one_row"])
+def test_pairs_on_degenerate_corpus_are_empty(spark, op, n_rows):
+    """An empty corpus has no vocabulary, so no bitmask plan: the call
+    falls through to a token-join plan and returns no pairs (as DuckDB
+    does), and one document has no pair to emit."""
+    from handyspark_spark.pipeline import dedup
+    df = spark.createDataFrame([(1, "a b c")][:n_rows],
+                               "doc_id int, text string")
+    fn = (dedup.ngram_jaccard_pairs if op == "jaccard"
+          else dedup.containment_pairs)
+    assert fn(df).collect() == []
 
 
 def test_blas_blocked_matches_exact_self_join(emb):
@@ -1821,31 +1987,6 @@ def test_snap_sum6_exact_integer_division_at_scale(spark):
     assert got == 5130933103.096309, got
 
 
-def test_pairs_strategy_validation(spark):
-    """Unknown strategies raise; an explicit 'bitmask' is HONORED (not
-    silently rerouted) and still guarded by the O(n²) row cap."""
-    from handyspark_spark.pipeline.dedup import (containment_pairs,
-                                                 ngram_jaccard_pairs)
-    df = spark.createDataFrame(
-        [(1, "a b c d"), (2, "a b c d e"), (3, "x y z")],
-        "doc_id int, text string")
-    with pytest.raises(ValueError, match="unknown strategy"):
-        ngram_jaccard_pairs(df, strategy="bitmsk").collect()
-    with pytest.raises(ValueError, match="unknown strategy"):
-        containment_pairs(df, strategy="bitmask_typo").collect()
-    # explicit bitmask == auto (tiny vocab routes auto to bitmask too)
-    auto = {(r.id_a, r.id_b): (r.containment_a_in_b, r.containment_b_in_a)
-            for r in containment_pairs(df, threshold=0.9).collect()}
-    forced = {(r.id_a, r.id_b): (r.containment_a_in_b,
-                                 r.containment_b_in_a)
-              for r in containment_pairs(df, threshold=0.9,
-                                         strategy="bitmask").collect()}
-    assert auto == forced and (1, 2) in forced
-    # explicit bitmask above the row cap fails LOUDLY
-    with pytest.raises(ValueError, match="max_bitmask_rows"):
-        containment_pairs(df, strategy="bitmask", max_bitmask_rows=2)
-
-
 def test_star_edges_recovery_query_matches_uncapped(tables, spark):
     """The driver query's configuration (cap=8 + recovery) equals the
     uncapped star-edge set — the identity the SQL oracle relies on."""
@@ -1972,14 +2113,11 @@ def test_pair_enumeration_caps_raise_loudly(spark):
         {"doc_id": range(200),
          "text": [f"{base} u{i}" for i in range(200)]}))
     with pytest.raises(ValueError, match="minhash_lsh_groups"):
-        ngram_jaccard_pairs(df, threshold=0.8, strategy="prefix",
-                            max_candidate_pairs=1000)
+        ngram_jaccard_pairs(df, threshold=0.8, max_candidate_pairs=1000)
     with pytest.raises(ValueError, match="minhash_lsh_groups"):
-        ngram_jaccard_pairs(df, threshold=0.3, strategy="inverted",
-                            max_candidate_pairs=1000)
+        ngram_jaccard_pairs(df, threshold=0.3, max_candidate_pairs=1000)
     with pytest.raises(ValueError, match="connected_components"):
-        containment_pairs(df, strategy="inverted",
-                          max_candidate_pairs=1000)
+        containment_pairs(df, max_candidate_pairs=1000)
     with pytest.raises(ValueError, match="minhash_lsh_groups"):
         simhash_neardup_pairs(df, max_candidate_pairs=1000)
 
@@ -1995,7 +2133,7 @@ def test_postings_cap_bounds_candidates_with_exact_scores(spark):
     df = spark.createDataFrame(pd.DataFrame(
         {"doc_id": range(200),
          "text": [f"{base} u{i}" for i in range(200)]}))
-    out = ngram_jaccard_pairs(df, threshold=0.8, strategy="prefix",
+    out = ngram_jaccard_pairs(df, threshold=0.8,
                               max_postings_per_token=8,
                               max_candidate_pairs=1000).collect()
     got = {(r.id_a, r.id_b): round(r.jaccard, 9) for r in out}
@@ -2006,7 +2144,7 @@ def test_postings_cap_bounds_candidates_with_exact_scores(spark):
     assert all(abs(v - 0.8) < 1e-12 for v in got.values())
     # determinism of the salted two-phase truncation
     again = {(r.id_a, r.id_b): round(r.jaccard, 9) for r in
-             ngram_jaccard_pairs(df, threshold=0.8, strategy="prefix",
+             ngram_jaccard_pairs(df, threshold=0.8,
                                  max_postings_per_token=8,
                                  max_candidate_pairs=1000).collect()}
     assert again == got

@@ -83,17 +83,26 @@ def test_cumsum_last_equals_sum(spark, values):
     min_size=2, max_size=20))
 @settings(**SETTINGS)
 def test_jaccard_strategies_agree(spark, texts):
-    """bitmask and inverted-index Jaccard must produce identical pairs."""
-    from handyspark_spark.pipeline.dedup import ngram_jaccard_pairs
+    """The bitmask, prefix and inverted-index Jaccard plans must produce
+    identical pairs. The plan follows the input, so the module
+    constants force each one: a zero row cap turns the bitmask off,
+    leaving the inverted join at threshold 0.3 or, with a zero prefix
+    threshold, the prefix plan."""
+    from handyspark_spark.pipeline import dedup
     pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     df = spark.createDataFrame(pdf)
-    a = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-         ngram_jaccard_pairs(df, threshold=0.3,
-                             strategy="bitmask").collect()}
-    b = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-         ngram_jaccard_pairs(df, threshold=0.3,
-                             strategy="inverted").collect()}
-    assert a == b
+
+    def pairs(**consts):
+        with pytest.MonkeyPatch.context() as mp:
+            for name, value in consts.items():
+                mp.setattr(dedup, name, value)
+            return {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
+                    dedup.ngram_jaccard_pairs(df, threshold=0.3).collect()}
+
+    bitmask = pairs()
+    inverted = pairs(_BITMASK_MAX_ROWS=0)
+    prefix = pairs(_BITMASK_MAX_ROWS=0, _PREFIX_MIN_THRESHOLD=0.0)
+    assert bitmask == inverted == prefix
 
 
 @given(budget1=st.integers(min_value=1, max_value=50),

@@ -1,7 +1,7 @@
 """Standalone per-query timer: one Spark session, each named queries()
 entry run R times (full collect, the driver contract), per-run seconds
 plus min/median reported — the targeted-measurement companion to
-bench_median.py for chasing a single query's regression without paying
+bench_minof.py for chasing a single query's regression without paying
 a full-suite run.
 
 Usage:
