@@ -98,18 +98,9 @@ def warm_session(spark, sf_dir: str) -> None:
         tempfile.mkdtemp(prefix="hsq_bench_warm_") + "/warm.parquet")
     # the FIRST ranged_cumsum in a session pays ~4s of one-time cost
     # (RangePartitioner sampling + localCheckpoint + window/broadcast
-    # JIT) — measured as percentiles_exact reading 7.7s in-suite vs
-    # 3.7s warm-standalone at sf0.1. Warm it on a 1k-row frame so the
-    # first distributed-quantile query times its operator, not the JVM
-    from handyspark_spark.operators.agg import percentile_distributed_plan
-    percentile_distributed_plan(
-        spark.range(1000).selectExpr("CAST(id AS DOUBLE) AS v"),
-        "v", [0.5]).collect()
-    # percentile_distributed_plan takes a compact single-window cumsum
-    # below 1M distinct values, so the call above does not exercise the
-    # ranged machinery — warm it directly so the first ranged_cumsum
-    # consumer in suite order (KS/ROC family) still times its operator,
-    # not the one-time JIT
+    # JIT) — warm it on a 1k-row frame so the first ranged_cumsum
+    # consumer in suite order (KS/ROC family) times its operator, not
+    # the JVM
     from handyspark_spark.operators.rank import ranged_cumsum
     ranged_cumsum(
         spark.range(1000).selectExpr("CAST(id AS DOUBLE) AS v",
@@ -186,6 +177,13 @@ def main():
 
     host_steal: dict[str, float] = {}
 
+    # a failing query has no timing: it is recorded by name with the
+    # first line of its message, and the run exits 1
+    errors: dict[str, str] = {}
+
+    def first_line(e: Exception) -> str:
+        return (str(e).strip().splitlines() or [type(e).__name__])[0]
+
     timings: dict[str, float] = {}
     total = 0.0
     for name, fn in qs.items():
@@ -193,9 +191,9 @@ def main():
         s0 = proc_stat()
         try:
             dt = run_one(fn, sink)
-        except Exception as e:  # pragma: no cover
-            print(f"bench error {name}: {e}", file=sys.stderr)
-            dt = float("nan")
+        except Exception as e:
+            errors[name] = first_line(e)
+            continue
         s1 = proc_stat()
         steal = _steal_pct(s0, s1)
         if steal is not None and steal >= 2.0:
@@ -205,7 +203,7 @@ def main():
             cache_state[name] = ("cold" if any(not e["hit"] for e in evs)
                                  else "warm")
         timings[name] = round(dt, 3)
-        total += dt if dt == dt else 0.0
+        total += dt
 
     noop_timings: dict[str, float] = {}
     if sink == "collect":
@@ -216,15 +214,14 @@ def main():
         # timings are recorded; SPARK_GRAFT_BENCH_NOOP_TOP=N restores
         # the bounded form for very large SFs.
         top = os.environ.get("SPARK_GRAFT_BENCH_NOOP_TOP", "")
-        ordered = sorted((n for n, v in timings.items() if v == v),
-                         key=lambda n: -timings[n])
+        ordered = sorted(timings, key=lambda n: -timings[n])
         if top:
             ordered = ordered[:int(top)]
         for name in ordered:
             try:
                 noop_timings[name] = round(run_one(qs[name], "noop"), 3)
-            except Exception as e:  # pragma: no cover
-                print(f"bench noop error {name}: {e}", file=sys.stderr)
+            except Exception as e:
+                errors[name] = "noop: " + first_line(e)
 
     payload = {
         "metric": "operator_suite_wall_clock",
@@ -245,6 +242,8 @@ def main():
         payload["sink"] = sink
     if skip:
         payload["skipped"] = sorted(skip)
+    if errors:
+        payload["errors"] = errors
     # The driver captures only a bounded tail of stdout and json-parses the
     # final line; a line longer than that buffer is truncated at the FRONT
     # and becomes unparseable (this bit round 2: 90 queries -> ~3.1k chars >
@@ -282,7 +281,7 @@ def main():
     while len(line) > line_budget and payload["queries"]:
         # drop the fastest remaining query; keep the expensive ones visible
         slowest = dict(sorted(payload["queries"].items(),
-                              key=lambda kv: -(kv[1] if kv[1] == kv[1] else 1e9)))
+                              key=lambda kv: -kv[1]))
         slowest.popitem()
         payload["queries"] = slowest
         payload["queries_shown"] = len(slowest)
@@ -290,6 +289,8 @@ def main():
         line = json.dumps(payload, separators=(",", ":"))
     print(line)
     spark.stop()
+    if errors:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

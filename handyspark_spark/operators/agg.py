@@ -26,7 +26,7 @@ from ..core.util import HandyException
 __all__ = [
     "summary_plan", "value_counts_plan", "mode_plan", "nunique_plan",
     "isnull_plan", "entropy_plan", "mutual_info_plan", "corr_plan",
-    "percentile_expr", "profile_plan", "percentile_distributed_plan",
+    "percentile_expr", "profile_plan", "exact_quantiles_plan",
     "exact_quantiles_distributed",
 ]
 
@@ -471,96 +471,6 @@ def profile_plan(df: DataFrame, colnames: list[str] | None = None,
         "column", "n", "n_null", "n_distinct", "min", "max", "mean", "std"))
 
 
-def percentile_distributed_plan(df: DataFrame, colname: str,
-                                qs: list[float]) -> DataFrame:
-    """EXACT type-7 (linear-interpolation) percentiles computed fully
-    distributed — no single-reducer value buffer.
-
-    Spark's native ``percentile`` aggregate (our fused ``exact=`` path)
-    collects every (value, count) pair into ONE final aggregation buffer:
-    exact, but memory-bounded by |distinct values| on a single reducer.
-    This plan is the selection-by-rank alternative that survives
-    |distinct| ~ |rows| at 100 TB:
-
-    1. value counts — one shuffle, map-side combine;
-    2. distributed cumulative counts over the sorted values
-       (``rank.ranged_cumsum`` on the narrow (v, c) frame);
-    3. the fractional target rank r(q) = 1 + (n-1)·q needs the values at
-       positions ⌊r⌋/⌈r⌉: a broadcast join of the (tiny) target table
-       against the cum frame on ``cum ≥ k AND cum − c < k`` picks each
-       bracketing value, and one |q|-row aggregation interpolates.
-
-    Returns (q, value) with one row per requested quantile.
-
-    Round-12 restructure (guide §2.4 — remove a duplicated pass): the
-    (value, count) table is materialized ONCE with an eager
-    ``localCheckpoint`` before the cumsum. The previous lazy form fed it
-    straight into ``ranged_cumsum``, whose ``repartitionByRange``
-    sampling pass re-executed the whole upstream aggregation — every
-    call paid the corpus-sized agg twice. The materialized row count
-    (|distinct|, a cached-partition count, no data pass) then picks the
-    cumsum strategy: at or below ``COMPACT_CUMSUM_MAX_DISTINCT`` a
-    single-partition running-sum window over the tiny table (no range
-    exchange, no second checkpoint, no totals branch — the global-window
-    anti-pattern does not apply because the input was just MEASURED
-    small, and it is the aggregated distinct-value table, never raw
-    rows); above it, the ranged machinery as before, now over pinned
-    input. Measured sf1 warm, steal<1% windows: l_extendedprice (923k
-    distinct, 4 qs) 2.24 -> 1.71s, l_quantity (50 distinct) 1.45 ->
-    0.98s; values bit-identical (shared bracket/interpolation code)."""
-    from pyspark.sql import Window
-    from .rank import ranged_cumsum
-    counts = (df.select(F.col(colname).cast("double").alias("v"))
-              .dropna()
-              .groupBy("v").agg(F.count(F.lit(1)).alias("c")))
-    counts = counts.localCheckpoint(eager=True)
-    n_distinct = counts.count()
-    if n_distinct <= COMPACT_CUMSUM_MAX_DISTINCT:
-        w = (Window.orderBy("v")
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        cum = counts.select("v", "c", F.sum("c").over(w).alias("_cum_c"))
-    else:
-        cum = ranged_cumsum(counts, ["v"], ["c"])
-    tot = counts.agg(F.sum("c").alias("_n"))
-    spark = df.sparkSession
-    targets = spark.createDataFrame([(float(q),) for q in qs], "q double")
-    # fractional 1-based rank of each target under type-7
-    t = (targets.crossJoin(F.broadcast(tot))
-         .select("q", "_n",
-                 (F.lit(1.0) + (F.col("_n") - 1) * F.col("q"))
-                 .alias("_r")))
-    lo = F.floor(F.col("_r")).cast("long")
-    hi = F.ceil(F.col("_r")).cast("long")
-    hit = (cum.join(F.broadcast(t),
-                    ((F.col("_cum_c") >= lo) &
-                     (F.col("_cum_c") - F.col("c") < lo)) |
-                    ((F.col("_cum_c") >= hi) &
-                     (F.col("_cum_c") - F.col("c") < hi))))
-    # a single value row can bracket both positions (lo == hi or both
-    # inside one tie run); min/max within the target group recover the
-    # two bracket values either way
-    vlo = F.min(F.when((F.col("_cum_c") >= lo) &
-                       (F.col("_cum_c") - F.col("c") < lo), F.col("v")))
-    vhi = F.max(F.when((F.col("_cum_c") >= hi) &
-                       (F.col("_cum_c") - F.col("c") < hi), F.col("v")))
-    frac = F.col("_r") - F.floor(F.col("_r"))
-    return (hit.groupBy("q", "_r")
-            .agg(vlo.alias("_vlo"), vhi.alias("_vhi"))
-            .select("q", (F.col("_vlo") + frac *
-                          (F.col("_vhi") - F.col("_vlo"))).alias("value")))
-
-
-# Cumsum strategy gate for ``percentile_distributed_plan``: at or below
-# this many DISTINCT values the (value, count) table is cumsum'd with a
-# single-partition window (a ~1M-row narrow sort on one core is cheaper
-# than the ranged machinery's fixed cost: range exchange + second
-# localCheckpoint + totals branch + broadcast-join); above it, the
-# scale-safe ranged plan. The gate reads the MEASURED materialized row
-# count, so a 100 TB column whose |distinct| ~ |rows| always takes the
-# ranged path.
-COMPACT_CUMSUM_MAX_DISTINCT = 1_000_000
-
-
 # Expand-vs-split gate for ``profile_plan(exact=True)``: at or above
 # this much ESTIMATED input (the optimizer's sizeInBytes statistic —
 # on-disk bytes for a file scan, no data pass) the multi-column exact
@@ -583,64 +493,87 @@ def _plan_size_bytes(df: DataFrame) -> int:
                .stats().sizeInBytes())
 
 
-# Below this many rows the native fused ``percentile`` aggregate beats
-# the distributed plan: its single merge buffer (|distinct| entries) is
-# cheap, while the distributed plan's range exchange + localCheckpoint
-# is a fixed ~1.5-2s regardless of size. Measured crossover (583k
-# distinct values): 600k rows native 2.3s vs distributed 3.7-4.1s; 6M
-# rows native 4.3-4.7s vs distributed 2.5-3.1s; 60M rows native 13.7s
-# vs distributed 3.3-5.3s. Same shape as the spearman broadcast-dim
-# gate: pick the plan from a metadata-cheap row count.
-EXACT_QUANTILE_DISTRIBUTED_MIN_ROWS = 2_000_000
+def _quantile_row(df: DataFrame, col: str, qs: list[float]) -> DataFrame:
+    """Exact type-7 (linear-interpolation) quantiles ``qs`` of ``col`` as
+    ONE lazy row holding one ``array<double>`` column named ``col``
+    (entries NULL when the column has no values). Selection by rank:
+
+    1. value counts: cast to double, drop NULL and NaN (NaN sorts above
+       every double), one count ``c`` per value — one shuffle with
+       map-side combine;
+    2. one window ordered by ``v`` carries the running count ``_cum``
+       and the total ``_n`` (both frames share the one Window node);
+    3. one global aggregate picks, per q with r = 1 + (n-1)·q, the
+       value whose tie run ``(_cum - c, _cum]`` holds ⌊r⌋ (min) and
+       ⌈r⌉ (max); the select interpolates ``lo + (r - ⌊r⌋)·(hi - lo)``.
+
+    The window has no partition key, so it runs in one task. That is
+    allowed here because it sorts the |distinct|-row aggregated table,
+    never raw rows: a synthetic 20M-distinct column took 30 s on a
+    4-core host against 58 s for the range-partitioned cumsum (the one
+    task spills, and stays ahead)."""
+    from pyspark.sql import Window
+    v = F.col(col).cast("double")
+    counts = (df.select(v.alias("v"))
+              .where(F.col("v").isNotNull() & ~F.isnan("v"))
+              .groupBy("v").agg(F.count(F.lit(1)).alias("c")))
+    w = Window.orderBy("v")
+    cum = counts.select(
+        "v", "c",
+        F.sum("c").over(w.rowsBetween(Window.unboundedPreceding,
+                                      Window.currentRow)).alias("_cum"),
+        F.sum("c").over(w.rowsBetween(Window.unboundedPreceding,
+                                      Window.unboundedFollowing))
+        .alias("_n"))
+
+    def at(k):   # the value whose tie run holds 1-based position k
+        return F.when((F.col("_cum") >= k) &
+                      (F.col("_cum") - F.col("c") < k), F.col("v"))
+
+    # r reads ``_n`` both inside the aggregate and after it: ``_n`` is
+    # the same on every row, so its max carries it through
+    rank = [F.lit(1.0) + (F.col("_n") - 1) * float(q) for q in qs]
+    ends = cum.agg(F.max("_n").alias("_n"), *[
+        e for i, r in enumerate(rank)
+        for e in (F.min(at(F.floor(r))).alias(f"_lo{i}"),
+                  F.max(at(F.ceil(r))).alias(f"_hi{i}"))])
+    out = []
+    for i, r in enumerate(rank):
+        lo, hi = F.col(f"_lo{i}"), F.col(f"_hi{i}")
+        out.append(lo + (r - F.floor(r)) * (hi - lo))
+    return ends.select(F.array(*out).alias(col))
+
+
+def exact_quantiles_plan(df: DataFrame,
+                         cols: dict[str, list[float]]) -> DataFrame:
+    """Exact type-7 quantiles of several columns as ONE lazy row with one
+    ``array<double>`` column per input column (the shape of the fused
+    ``percentile_expr(exact=True)`` aggregate). Each column is its own
+    ``_quantile_row`` branch over ``df.select(c)``, so each scan reads
+    only its own column; the one-row branches are cross-joined and run
+    under one action. Per-column branches beat one stacked
+    ``(col, v)`` pipeline at every SF measured (sf10: 8.5 s vs 15.7 s
+    for two lineitem columns — the explode doubles the sorted rows)."""
+    from functools import reduce
+    return reduce(DataFrame.crossJoin, [_quantile_row(df.select(c), c, qs)
+                                        for c, qs in cols.items()])
 
 
 def exact_quantiles_distributed(
-        df: DataFrame, cols: dict[str, list[float]],
-        n_rows: int | None = None
+        df: DataFrame, cols: dict[str, list[float]]
 ) -> dict[str, dict[float, float]]:
-    """Exact type-7 quantiles for several columns, collected to the
-    driver as ``{col: {q: value}}`` — the scalar-fitting companion to
-    ``percentile_distributed_plan`` for operators that need fence/cut
-    CONSTANTS (Tukey fences, exact percentile summaries).
-
-    Strategy is row-count-gated (``n_rows`` skips the count job when
-    the caller already knows it): below
-    ``EXACT_QUANTILE_DISTRIBUTED_MIN_ROWS`` the native fused
-    ``percentile`` aggregate runs in one pass per column set; above it,
-    one ``percentile_distributed_plan`` per column, unioned and
-    collected in ONE job — each branch's parquet scan reads ONLY its
-    own column, which measured FASTER at every SF than a fused
-    unpivot-and-grouped-cumsum single-scan variant (the explode doubles
-    the scanned rows; sf10 8.0s fused vs 5.3s per-column — A/B'd and
-    dropped, SCALE.md round-10). The native aggregate merges every
-    (value, count) pair into a single final buffer — at sf10 that
-    single-reducer merge cost ~13.7s per query where selection-by-rank
-    runs 3-5s. NaN is masked to NULL first on both paths (NaN sorts
-    above every double). A column with no non-null values has no
-    quantiles: ``HandyException`` naming it, on both paths."""
-    if n_rows is None:
-        n_rows = df.count()   # parquet count pushdown: metadata-cheap
-    if n_rows < EXACT_QUANTILE_DISTRIBUTED_MIN_ROWS:
-        exprs = [percentile_expr(c, qs, exact=True).alias(c)
-                 for c, qs in cols.items()]
-        row = summary_plan(nan_to_null(df, list(cols)), exprs).collect()[0]
-        res = {c: dict(zip(cols[c], row[c] or [])) for c in cols}
-    else:
-        parts = []
-        for c, qs in cols.items():
-            p = percentile_distributed_plan(
-                nan_to_null(df.select(c), [c]), c, qs)
-            parts.append(p.select(F.lit(c).alias("_col"), "q", "value"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        res = {c: {} for c in cols}
-        for r in out.collect():
-            res[r["_col"]][r["q"]] = r["value"]
-    for c in cols:
-        if not res[c]:
+    """``exact_quantiles_plan`` collected to the driver as
+    ``{col: {q: value}}`` — for operators that need fence/cut CONSTANTS
+    (Tukey fences, exact percentile summaries). A column with no
+    non-null, non-NaN values has no quantiles: ``HandyException``
+    naming it."""
+    row = exact_quantiles_plan(df, cols).collect()[0]
+    res = {}
+    for c, qs in cols.items():
+        if None in row[c]:
             raise HandyException(f"exact quantiles of column {c!r} are "
                                  "undefined: it has no non-null values")
+        res[c] = dict(zip(qs, row[c]))
     return res
 
 

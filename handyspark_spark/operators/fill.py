@@ -138,13 +138,12 @@ def fit_fence_values(df: DataFrame, colnames: list[str], k: float = 1.5,
                      precision: float = 0.01, exact: bool = False):
     """Tukey fences per column in ONE wide agg (q1, q3 for every column at
     once — ref ``_calc_fences`` dataframe.py:332-351). The unstratified
-    exact path routes through ``exact_quantiles_distributed`` — a
-    row-count-gated strategy: the native ``percentile`` aggregate at
-    small row counts, the distributed selection-by-rank plan above the
-    crossover (same type-7 values; the native single-reducer
-    (value, count) merge made every exact-fence query ~13s at sf10 —
-    SCALE.md round-10). A column (or stratum) with no non-null values
-    has no fences: ``HandyException`` naming it."""
+    exact path routes through ``exact_quantiles_distributed``: one lazy
+    selection-by-rank branch per column under one action (the native
+    ``percentile`` aggregate's single-reducer (value, count) merge made
+    every exact-fence query ~13s at sf10 — SCALE.md round-10). A column
+    (or stratum) with no non-null values has no fences:
+    ``HandyException`` naming it."""
     if exact and not strata:
         qmap = A.exact_quantiles_distributed(
             df, {c: [0.25, 0.75] for c in colnames})

@@ -325,10 +325,10 @@ def broadcast_dim_ranks(df: DataFrame, cols: list[str],
 
 #: Joint-table row count at or below which ``joint_spearman`` ranks
 #: with range-frame windows directly on the joint rows instead of the
-#: ranged form (melted dims + grouped ``ranged_cumsum``) — the same
-#: measured-row-count gate pattern as ``COMPACT_CUMSUM_MAX_DISTINCT``
-#: in the exact-quantile family: the input is the aggregated joint
-#: table, never raw rows.
+#: ranged form (melted dims + grouped ``ranged_cumsum``). A
+#: single-partition window is allowed here, as in the exact-quantile
+#: family's ``agg._quantile_row``, because its input is the aggregated
+#: joint table, never raw rows.
 COMPACT_SPEARMAN_MAX_JOINT = 1_000_000
 
 #: Joint cardinality above which ``joint_spearman`` declines: both

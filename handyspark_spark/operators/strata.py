@@ -27,6 +27,14 @@ from pyspark.sql import functions as F
 
 from ..core.columns import HandyColumns
 from ..core.frame import HandyFrame
+from ..core.util import HandyException
+from . import agg as A
+
+
+def _non_missing(df, colname):
+    """The one column an edge fit reads, NaN masked to NULL (NaN sorts
+    above every double: it would become the max / the upper edges)."""
+    return A.nan_to_null(df.select(colname), [colname])
 
 
 class Bucket:
@@ -42,10 +50,18 @@ class Bucket:
         return f"Bucket_{self.colname}_{self.bins}"
 
     def _fit(self, df):
-        row = df.agg(F.min(self.colname).alias("mn"),
-                     F.max(self.colname).alias("mx")).collect()[0]
+        row = _non_missing(df, self.colname).agg(
+            F.min(self.colname).alias("mn"),
+            F.max(self.colname).alias("mx")).collect()[0]
+        self._check(row.mn)
         self.edges = np.linspace(row.mn, row.mx, self.bins + 1)
         return self
+
+    def _check(self, first_edge):
+        if first_edge is None:
+            raise HandyException(
+                f"{type(self).__name__} edges of column {self.colname!r} "
+                "are undefined: it has no non-null values")
 
     def _col(self):
         lo, hi = float(self.edges[0]), float(self.edges[-1])
@@ -92,13 +108,14 @@ class Quantile(Bucket):
 
     def _fit(self, df):
         probs = list(np.linspace(0, 1, self.bins + 1))
+        df = _non_missing(df, self.colname)
         if self.exact:
-            from . import agg as A
             edges = df.agg(A.percentile_expr(self.colname, probs,
                                              exact=True)).collect()[0][0]
         else:
             edges = df.approxQuantile(self.colname, probs,
                                       self.relative_error)
+        self._check(edges[0] if edges else None)
         self.edges = np.array(edges)
         return self
 
@@ -284,7 +301,6 @@ class StrataColumns(HandyColumns):
         """Stratified correlation — one grouped job over all strata (the
         reference looped filtered children, dataframe.py:1926-1929)."""
         cols = self._cols()
-        from . import agg as A
         long = A.corr_plan(self._df, cols, method,
                            self._strata).toPandas()
         return self._strata_obj._relabel(

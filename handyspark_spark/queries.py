@@ -117,42 +117,18 @@ SELECT ROUND(quantile_cont(l_extendedprice, 0.25), 4) AS q1_price,
 FROM lineitem
 """)
 def q_percentiles_exact(spark, sf_dir):
-    """Exact type-7 quantiles, row-count-gated strategy (the spearman
-    broadcast-dim pattern): the native fused ``percentile`` aggregate
-    below EXACT_QUANTILE_DISTRIBUTED_MIN_ROWS (its one merge buffer is
-    cheap at small row counts and has no fixed exchange cost), the
-    DISTRIBUTED selection-by-rank plan above (one branch per column,
-    each scanning only its own parquet column — the single-reducer
-    (value, count) merge cost 13.7s at sf10 where this runs ~5s; a
-    fused unpivot single-scan variant was A/B'd and dropped, SCALE.md
-    round-10). Values identical by construction on both paths."""
+    """Exact type-7 quantiles of two columns in one lazy plan
+    (``exact_quantiles_plan``): one selection-by-rank branch per
+    column, each scanning only its own parquet column, cross-joined
+    into one row of arrays."""
     df = _t(spark, sf_dir, "lineitem")
-    if df.count() < A.EXACT_QUANTILE_DISTRIBUTED_MIN_ROWS:
-        qq = A.percentile_expr("l_extendedprice", [0.25, 0.50, 0.75],
-                               exact=True)
-        wide = A.summary_plan(df, [
-            qq.alias("_qq"),
-            A.percentile_expr("l_quantity", 0.50, exact=True)
-             .alias("_mq")])
-        return wide.select(
-            F.round(F.col("_qq")[0], 4).alias("q1_price"),
-            F.round(F.col("_qq")[1], 4).alias("med_price"),
-            F.round(F.col("_qq")[2], 4).alias("q3_price"),
-            F.round(F.col("_mq"), 4).alias("med_qty"))
-    pp = A.percentile_distributed_plan(df.select("l_extendedprice"),
-                                       "l_extendedprice",
-                                       [0.25, 0.50, 0.75])
-    pq = A.percentile_distributed_plan(df.select("l_quantity"),
-                                       "l_quantity", [0.50])
-    wide_p = pp.agg(
-        F.round(F.max(F.when(F.col("q") == 0.25, F.col("value"))), 4)
-         .alias("q1_price"),
-        F.round(F.max(F.when(F.col("q") == 0.50, F.col("value"))), 4)
-         .alias("med_price"),
-        F.round(F.max(F.when(F.col("q") == 0.75, F.col("value"))), 4)
-         .alias("q3_price"))
-    wide_q = pq.agg(F.round(F.max("value"), 4).alias("med_qty"))
-    return wide_p.crossJoin(wide_q)
+    p = A.exact_quantiles_plan(df, {"l_extendedprice": [0.25, 0.50, 0.75],
+                                    "l_quantity": [0.50]})
+    return p.select(
+        F.round(F.col("l_extendedprice")[0], 4).alias("q1_price"),
+        F.round(F.col("l_extendedprice")[1], 4).alias("med_price"),
+        F.round(F.col("l_extendedprice")[2], 4).alias("q3_price"),
+        F.round(F.col("l_quantity")[0], 4).alias("med_qty"))
 
 
 @query("nunique_exact", """
@@ -2106,13 +2082,17 @@ FROM lineitem, (SELECT unnest([0.25, 0.50, 0.75, 0.99]) AS q)
 GROUP BY q
 """)
 def q_percentiles_distributed(spark, sf_dir):
-    """Exact type-7 percentiles via distributed selection-by-rank (no
+    """Exact type-7 percentiles as (q, value) rows: the one-row
+    ``exact_quantiles_plan`` array exploded next to its q grid (no
     single-reducer value buffer — the 100 TB exact path; the fused
     native-``percentile`` form stays for one-pass multi-stat aggs)."""
+    qs = [0.25, 0.50, 0.75, 0.99]
     df = _t(spark, sf_dir, "lineitem")
-    out = A.percentile_distributed_plan(df, "l_extendedprice",
-                                        [0.25, 0.50, 0.75, 0.99])
-    return out.select("q", F.round("value", 4).alias("value"))
+    out = A.exact_quantiles_plan(df, {"l_extendedprice": qs}).select(
+        F.array(*[F.lit(q) for q in qs]).alias("q"),
+        F.col("l_extendedprice").alias("value"))
+    return (out.select(F.inline(F.arrays_zip("q", "value")))
+            .select("q", F.round("value", 4).alias("value")))
 
 
 _PROFILE_NUM = ["l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",

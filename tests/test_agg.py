@@ -222,18 +222,18 @@ def test_profile_exact_split_branch_identical(tables, monkeypatch):
     assert "Expand" in plan_e
 
 
-def test_percentile_distributed_matches_numpy(tables, pdf_tables):
-    """Distributed selection-by-rank percentiles == numpy type-7,
-    including endpoints and a heavy-ties column."""
-    from handyspark_spark.operators.agg import percentile_distributed_plan
-    li = tables["lineitem"]
+def test_exact_quantiles_match_numpy(tables, pdf_tables):
+    """The one lazy selection-by-rank plan == numpy type-7 on both
+    lineitem columns in one call, including the endpoints and a
+    heavy-ties column."""
+    from handyspark_spark.operators.agg import exact_quantiles_distributed
     pdf = pdf_tables["lineitem"]
-    for col in ["l_extendedprice", "l_quantity"]:       # continuous + ties
-        qs = [0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0]
-        got = {r.q: r.value for r in
-               percentile_distributed_plan(li, col, qs).collect()}
+    qs = [0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0]
+    cols = {"l_extendedprice": qs, "l_quantity": qs}   # continuous + ties
+    got = exact_quantiles_distributed(tables["lineitem"], cols)
+    for col in cols:
         for q in qs:
-            assert got[q] == pytest.approx(
+            assert got[col][q] == pytest.approx(
                 float(np.quantile(pdf[col].to_numpy(), q)), abs=1e-9)
 
 
@@ -440,50 +440,18 @@ def test_spearman_broadcast_dim_fast_path_equals_melted(spark, monkeypatch):
         assert abs(g - exp[full["x"] == xv].iloc[0]) < 1e-9
 
 
-def test_exact_quantile_gate_paths_identical(tables):
-    """The row-count gate picks a STRATEGY, never a value: the native
-    fused percentile aggregate and the distributed selection-by-rank
-    plan must return the same type-7 quantiles on the same data
-    (n_rows= forces each branch regardless of actual size), and both
-    refuse a column with no values the same way."""
-    from handyspark_spark.operators import agg as A
-    df = tables["lineitem"]
-    cols = {"l_extendedprice": [0.25, 0.5, 0.75], "l_quantity": [0.5]}
-    native = A.exact_quantiles_distributed(df, cols, n_rows=0)
-    dist = A.exact_quantiles_distributed(df, cols, n_rows=10**12)
-    for c in cols:
-        for q in cols[c]:
-            assert dist[c][q] == pytest.approx(native[c][q], rel=1e-12)
-    # no non-null values: a named error on both branches, and from the
-    # fence fit's approximate path, never a raw TypeError / KeyError
+def test_exact_quantiles_no_values_named_error(tables):
+    """A column with no values has no quantiles: exact quantiles and the
+    fence fit's exact and approximate paths raise a named error, never
+    a raw TypeError / KeyError."""
     from handyspark_spark.core.util import HandyException
-    from handyspark_spark.operators.fill import fit_fence_values
-    spark = df.sparkSession
-    for rows in ([(None,), (None,)], []):
-        v = spark.createDataFrame(rows, "v double")
-        for n_rows in (0, 10**12):
-            with pytest.raises(HandyException, match="column 'v'"):
-                A.exact_quantiles_distributed(v, {"v": [.25, .75]},
-                                              n_rows=n_rows)
-        with pytest.raises(HandyException, match="column 'v'"):
-            fit_fence_values(v, ["v"])
-
-
-def test_percentile_cumsum_gate_paths_identical(tables, monkeypatch):
-    """The r12 compact-vs-ranged cumsum gate inside
-    percentile_distributed_plan picks a STRATEGY, never a value: the
-    single-window compact path (|distinct| <= gate) and the ranged
-    path (gate forced to -1) must return identical type-7 quantiles,
-    including endpoints and the heavy-ties column."""
     from handyspark_spark.operators import agg as A
-    li = tables["lineitem"]
-    qs = [0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0]
-    for col in ["l_extendedprice", "l_quantity"]:
-        compact = {r.q: r.value for r in
-                   A.percentile_distributed_plan(li, col, qs).collect()}
-        monkeypatch.setattr(A, "COMPACT_CUMSUM_MAX_DISTINCT", -1)
-        ranged = {r.q: r.value for r in
-                  A.percentile_distributed_plan(li, col, qs).collect()}
-        monkeypatch.undo()
-        for q in qs:
-            assert ranged[q] == compact[q], (col, q)
+    from handyspark_spark.operators.fill import fit_fence_values
+    spark = tables["lineitem"].sparkSession
+    for rows in ([(None,), (None,)], [(float("nan"),)], []):
+        v = spark.createDataFrame(rows, "v double")
+        with pytest.raises(HandyException, match="column 'v'"):
+            A.exact_quantiles_distributed(v, {"v": [.25, .75]})
+        for exact in (True, False):
+            with pytest.raises(HandyException, match="column 'v'"):
+                fit_fence_values(v, ["v"], exact=exact)

@@ -546,3 +546,27 @@ def test_lsh_pairs_emit_once_equals_distinct_fuzz(spark, data):
            _minhash_lsh_pairs_distinct(df, "text", "doc_id", num_hashes,
                                        bands, cap).collect()}
     assert got == exp
+
+
+@given(values=st.lists(st.one_of(
+    st.floats(min_value=-1e6, max_value=1e6, allow_nan=False),
+    st.sampled_from([0.0, 1.0, 2.5]),                 # heavy ties
+    st.none(), st.just(float("nan"))), max_size=60))
+@settings(**SETTINGS)
+def test_exact_quantiles_match_numpy_with_missing(spark, values):
+    """Exact quantiles skip NULL and NaN and match numpy type-7 on the
+    remaining values, endpoints included; with none left the named
+    error is raised."""
+    from handyspark_spark.core.util import HandyException
+    from handyspark_spark.operators.agg import exact_quantiles_distributed
+    qs = [0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0]
+    df = spark.createDataFrame([(v,) for v in values], "v double")
+    kept = [v for v in values if v is not None and v == v]
+    if not kept:
+        with pytest.raises(HandyException, match="column 'v'"):
+            exact_quantiles_distributed(df, {"v": qs})
+        return
+    got = exact_quantiles_distributed(df, {"v": qs})["v"]
+    for q in qs:
+        assert got[q] == pytest.approx(float(np.quantile(kept, q)),
+                                       rel=1e-9, abs=1e-9)

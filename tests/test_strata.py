@@ -302,3 +302,34 @@ def test_bucket_constant_column_degenerate_range(spark):
     # quantile flavor must not crash either and must keep all rows
     qcnt = toHandy(sdf).stratify([Quantile("b", 3)]).cols["v"].count()
     assert int(qcnt.sum()) == 6
+
+
+_EDGE_FITS = {"Bucket": lambda: Bucket("v", 4),
+              "Quantile exact": lambda: Quantile("v", 4, exact=True),
+              "Quantile approx": lambda: Quantile("v", 4)}
+
+
+@pytest.mark.parametrize("fit", list(_EDGE_FITS))
+@pytest.mark.parametrize("values", [[], [None, None],
+                                    [1.0, 3.0] + [float("nan")] * 3],
+                         ids=["empty", "all-null", "nan-mixed"])
+def test_edge_fits_on_degenerate_columns(spark, fit, values):
+    """Edge fits mask NaN (it sorts above every double) and refuse a
+    column with no values left with a named error, never a raw
+    TypeError from linspace or an IndexError on 0-d edges."""
+    import numpy as np
+    from handyspark_spark.core.util import HandyException
+    sdf = spark.createDataFrame([(v,) for v in values], "v double")
+    spec = _EDGE_FITS[fit]()
+    if not [v for v in values if v is not None and v == v]:
+        with pytest.raises(HandyException, match="column 'v'"):
+            spec._fit(sdf)
+        return
+    spec._fit(sdf)
+    if fit == "Quantile approx":     # GK edges: values of the column
+        assert set(spec.edges) <= {1.0, 3.0}
+        assert (spec.edges[0], spec.edges[-1]) == (1.0, 3.0)
+    else:
+        exp = (np.linspace(1.0, 3.0, 5) if fit == "Bucket"
+               else np.quantile([1.0, 3.0], np.linspace(0, 1, 5)))
+        npt.assert_array_almost_equal(spec.edges, exp)

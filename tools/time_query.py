@@ -11,7 +11,9 @@ Usage:
 ``--sink noop`` terminates each query with the noop datasource write
 instead of a driver collect — isolates executor-side compute for
 queries whose output is grid/pair fan-out (the bench suite's
-"queries_noop" convention; time_noop.py is a shim for this mode).
+"queries_noop" convention). For large SFs size the driver too:
+``SPARK_GRAFT_DRIVER_MEM=40g python tools/time_query.py SF_DIR query
+--sink noop --runs 2``.
 
 Refuses on an unsettled machine (load1 >= 1.0) unless --force, same as
 the bench protocol. $SPARK_GRAFT_CPUS / $SPARK_GRAFT_DRIVER_MEM size
