@@ -83,6 +83,27 @@ def settle_gate(threshold=1.0, window=5.0, max_wait=600.0):
               f"({waited:.0f}/{max_wait:.0f}s)", file=sys.stderr)
 
 
+def bench_session(app: str = "handyspark_spark-bench"):
+    """The one benchmark session of ``bench.py`` and the timing tools:
+    local[$SPARK_GRAFT_CPUS] (default 32) with as many shuffle
+    partitions, AQE and Arrow on, UI off, driver memory
+    $SPARK_GRAFT_DRIVER_MEM (default 16g)."""
+    from pyspark.sql import SparkSession
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = (SparkSession.builder
+             .master(f"local[{cpus}]")
+             .appName(app)
+             .config("spark.sql.shuffle.partitions", cpus)
+             .config("spark.sql.adaptive.enabled", "true")
+             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+             .config("spark.driver.memory",
+                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+             .config("spark.ui.enabled", "false")
+             .getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 def warm_session(spark, sf_dir: str) -> None:
     """Pay a session's one-time costs before anything is timed: file
     listing, JIT and python-worker spin-up, so per-query timings reflect
@@ -110,25 +131,13 @@ def warm_session(spark, sf_dir: str) -> None:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
     settle_secs = float(os.environ.get("SPARK_GRAFT_SETTLE_SECS", "600"))
     settle = (settle_gate(max_wait=settle_secs) if settle_secs > 0
               else None)
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder
-             .master(f"local[{cpus}]")
-             .appName("handyspark_spark-bench")
-             .config("spark.sql.shuffle.partitions", str(cpus))
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session()
 
     import __spark_entry__ as E
     qs = E.queries()

@@ -63,10 +63,16 @@ class Bucket:
                 f"{type(self).__name__} edges of column {self.colname!r} "
                 "are undefined: it has no non-null values")
 
+    def _value(self):
+        """The stratum column as double, NaN masked to NULL: a NaN row
+        gets no bucket, like a NULL one (the fits drop both)."""
+        c = F.col(self.colname).cast("double")
+        return F.when(~F.isnan(c), c)
+
     def _col(self):
         lo, hi = float(self.edges[0]), float(self.edges[-1])
         w = (hi - lo) / self.bins
-        c = F.col(self.colname).cast("double")
+        c = self._value()
         if w == 0.0:
             # Degenerate range (constant column): every non-null row belongs
             # in bucket 0; nulls stay null, matching the general formula's
@@ -121,7 +127,7 @@ class Quantile(Bucket):
 
     def _col(self):
         # searchsorted over interior edges: id = sum(x >= e_i)
-        c = F.col(self.colname).cast("double")
+        c = self._value()
         expr = F.lit(0)
         for e in self.edges[1:-1]:
             expr = expr + (c >= F.lit(float(e))).cast("int")

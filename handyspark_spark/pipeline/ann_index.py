@@ -125,8 +125,9 @@ class IVFIndex:
         matmul projection) — use to write the corpus partitioned by
         cell once, so probes prune at the file level."""
         b_C = df.sparkSession.sparkContext.broadcast(self.centroids)
-        return df.withColumn(cell_col, _nearest_cell_udf(b_C)(
-            F.col(self.vec_col).cast("array<double>")))
+        cell = _nearest_cell_udf(b_C, self.vec_col)
+        return df.withColumn(
+            cell_col, cell(F.col(self.vec_col).cast("array<double>")))
 
     def search(self, df: DataFrame, queries: DataFrame, k: int = 5,
                nprobe: int = 4) -> DataFrame:

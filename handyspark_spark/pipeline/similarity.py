@@ -15,13 +15,21 @@
   ``pq_topk`` (flat PQ) is the same scan over one all-zero cell.
 - ``semdedup_pairs`` / ``semdedup_drops``: SemDeDup cluster-then-prune.
 
-The IVF/PQ/IVF-PQ family reads vectors through one boundary,
-``_unit_rows`` (list -> float64 matrix of unit rows).
+Vectors cross the Arrow boundary at one reader and one writer:
+``_unit_rows`` (a pyarrow list array -> float64 matrix of unit rows, by
+one reshape of the flat values over ``_list_rows``) and ``_list_array``
+(an int matrix -> list array from offsets and values). The nearest-cell
+projection, the probe lists and the IVF-PQ encoder are ``F.arrow_udf``s,
+the ADC scan is a ``mapInArrow``, the fit sample and the query matrix
+are read with ``DataFrame.toArrow()``, and ``neardup_pairs_blas`` /
+``semdedup_pairs`` are ``applyInArrow`` groups over one cosine-pair
+kernel, ``_cosine_pairs``.
 """
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -94,13 +102,14 @@ def neardup_pairs_blas(df: DataFrame, vec_col: str = "embedding",
     """Exact cosine-over-threshold pairs, vectorized and fully distributed.
 
     Blocked all-pairs: rows hash into ``blocks`` buckets by id; each of
-    the B(B+1)/2 unordered block pairs is one ``applyInPandas`` group,
+    the B(B+1)/2 unordered block pairs is one ``applyInArrow`` group,
     each row is shuffled to the B groups it participates in, and each
-    group runs ONE numpy/BLAS matmul between its two blocks. Task memory
-    is bounded by 2·|corpus|/blocks rows — nothing is ever materialized
-    on the driver. (The previous design collected the whole corpus
-    driver-side and broadcast the dense matrix; at 10M × 768-d that is
-    ~30 GB on one machine.)
+    group runs the cosine-pair kernel (``_cosine_pairs``: chunked
+    numpy/BLAS matmuls) between its two blocks. Task memory is bounded
+    by 2·|corpus|/blocks rows — nothing is ever materialized on the
+    driver. (The previous design collected the whole corpus driver-side
+    and broadcast the dense matrix; at 10M × 768-d that is ~30 GB on one
+    machine.) A zero vector scores cosine 0 against every row.
 
     Compute is inherently O(n²/2) dot products — that IS the exact
     contract. At 100 TB, run ``lsh_neardup_pairs`` to get candidates (or
@@ -108,9 +117,6 @@ def neardup_pairs_blas(df: DataFrame, vec_col: str = "embedding",
     corpus_bytes / per-task memory budget so two blocks fit in one task.
     Shuffle volume is blocks× the corpus — B stays small (8-64); the
     win is bounded memory and B(B+1)/2-way parallel BLAS."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     v = df.select(F.col(id_col).cast("long").alias("_id"),
                   F.col(vec_col).cast("array<double>").alias("_v"))
     v = v.withColumn(
@@ -123,42 +129,14 @@ def neardup_pairs_blas(df: DataFrame, vec_col: str = "embedding",
                       F.greatest("_b", "_j").alias("_gj"),
                       "_id", "_v", "_b"))
 
-    out_schema = T.StructType([
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-        T.StructField("cosine", T.DoubleType())])
+    def block_pairs(key, tbl):
+        gi, gj = (k.as_py() for k in key)
+        # intra-block: one set; cross-block: pairs across the two blocks
+        side = None if gi == gj else tbl["_b"].to_numpy() == gi
+        return _cosine_pairs(tbl, vec_col, threshold, round_to, side)
 
-    def _norm_rows(sub: "pd.DataFrame"):
-        ids = sub["_id"].to_numpy()
-        M = np.array(sub["_v"].tolist(), dtype=np.float64)
-        n = np.linalg.norm(M, axis=1, keepdims=True)
-        n[n == 0] = 1.0              # zero vectors: cosine treated as 0
-        return ids, M / n
-
-    def block_pairs(key, pdf):
-        gi, gj = key
-        if gi == gj:                 # intra-block: upper triangle once
-            ids, M = _norm_rows(pdf)
-            cos = np.round(M @ M.T, round_to)
-            ii, jj = np.where(cos >= threshold)
-            keep = ids[ii] < ids[jj]
-            return pd.DataFrame({"id_a": ids[ii][keep],
-                                 "id_b": ids[jj][keep],
-                                 "cosine": cos[ii, jj][keep]})
-        # cross-block: each unordered pair exists in exactly this group
-        in_i = pdf["_b"].to_numpy() == gi
-        if in_i.all() or not in_i.any():     # one side empty: no pairs
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        ids_a, A = _norm_rows(pdf[in_i])
-        ids_b, B = _norm_rows(pdf[~in_i])
-        cos = np.round(A @ B.T, round_to)
-        ii, jj = np.where(cos >= threshold)
-        ia, ib = ids_a[ii], ids_b[jj]
-        return pd.DataFrame({"id_a": np.minimum(ia, ib),
-                             "id_b": np.maximum(ia, ib),
-                             "cosine": cos[ii, jj]})
-
-    return keyed.groupBy("_gi", "_gj").applyInPandas(block_pairs, out_schema)
+    return keyed.groupBy("_gi", "_gj").applyInArrow(
+        block_pairs, "id_a long, id_b long, cosine double")
 
 
 def _hyperplanes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
@@ -229,42 +207,123 @@ def _cap_query_rows(queries: DataFrame, max_query_rows: int | None,
             f"search, or pass max_query_rows=None to force")
 
 
-def _unit_rows(vs, dim: int | None = None) -> np.ndarray:
-    """The IVF/PQ vector boundary: a sequence of vectors (an Arrow-batch
-    pandas Series or collected lists) -> float64 (n, dim) matrix of
-    L2-unit rows. The norm is floored at 1e-12, so a zero vector stays
-    a zero row instead of turning into NaN. ``dim`` shapes an empty
-    input."""
-    X = np.array(list(vs), dtype=np.float64)
-    if dim is not None:
-        X = X.reshape(len(X), dim)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    return X
+def _list_rows(arr, col: str, dim: int | None = None) -> np.ndarray:
+    """A pyarrow list array (or chunked array) -> (n, dim) matrix of its
+    values: one reshape of the flat values, no per-row Python. ``dim``
+    (default: the first row's length) shapes an empty input. A NULL or
+    wrong-length list is a ``HandyException`` naming ``col``."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if arr.null_count:
+        raise HandyException(f"column {col!r} has a NULL vector")
+    lens = np.diff(arr.offsets.to_numpy())
+    if dim is None:
+        dim = int(lens[0]) if len(lens) else 0
+    bad = lens != dim
+    if bad.any():
+        raise HandyException(f"column {col!r} has a vector of length "
+                             f"{lens[bad][0]}, expected {dim}")
+    return arr.flatten().to_numpy(zero_copy_only=False).reshape(len(arr),
+                                                                dim)
+
+
+def _unit(X: np.ndarray) -> np.ndarray:
+    """L2-unit rows; the norm is floored at 1e-12, so a zero vector
+    stays a zero row instead of turning into NaN."""
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+
+
+def _unit_rows(arr, col: str, dim: int | None = None) -> np.ndarray:
+    """The one vector reader of the family: a pyarrow list array of
+    ``col`` vectors -> float64 (n, dim) matrix of unit rows."""
+    return _unit(_list_rows(arr, col, dim))
+
+
+def _list_array(M: np.ndarray) -> pa.ListArray:
+    """The one vector writer: an (n, m) int matrix -> ``array<int>``
+    list array built from offsets and the flat values."""
+    n, m = M.shape
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, n * m + 1, m, dtype=np.int32)),
+        pa.array(M.astype(np.int32).ravel()))
+
+
+def _cosine_pairs(tbl: pa.Table, col: str, threshold: float,
+                  round_to: int, side: np.ndarray | None = None) -> pa.Table:
+    """The one cosine-pair kernel of ``neardup_pairs_blas`` and
+    ``semdedup_pairs``, over one Arrow group (``_id``, ``_v``): unit rows
+    scored in 1024-row chunks (a step holds at most 1024 x |group|
+    cosines), rounded to ``round_to`` digits and kept at ``>=
+    threshold``. Without ``side`` the group is one set and each pair is
+    emitted once, id_a < id_b. A boolean ``side`` splits the group into
+    two disjoint blocks; only pairs across them are scored, emitted as
+    (min, max) id. Returns (id_a, id_b, cosine), ids of ``_id``'s type."""
+    X, ids = _unit_rows(tbl["_v"], col), tbl["_id"].to_numpy()
+    A, ia, B, ib = ((X, ids, X, ids) if side is None
+                    else (X[side], ids[side], X[~side], ids[~side]))
+    parts = [(ia[:0], ib[:0], np.empty(0))]
+    for lo in range(0, len(A), 1024):
+        cos = np.round(A[lo:lo + 1024] @ B.T, round_to)
+        ii, jj = np.nonzero(cos >= threshold)
+        a, b, c = ia[lo + ii], ib[jj], cos[ii, jj]
+        if side is None:
+            keep = a < b
+            a, b, c = a[keep], b[keep], c[keep]
+        parts.append((np.minimum(a, b), np.maximum(a, b), c))
+    a, b, c = (np.concatenate(p) for p in zip(*parts))
+    t = tbl.schema.field("_id").type
+    return pa.table({"id_a": pa.array(a, t), "id_b": pa.array(b, t),
+                     "cosine": pa.array(c, pa.float64())})
 
 
 def _sample_unit_rows(df: DataFrame, vec_col: str, id_col: str, n: int,
                       fit: str) -> np.ndarray:
     """Bounded deterministic fit sample: the first ``n`` vectors in
     md5(id) order, as unit rows. An empty corpus is a named error."""
-    rows = (df.orderBy(F.md5(F.col(id_col).cast("string")))
-            .limit(n)
-            .select(F.col(vec_col).cast("array<double>").alias("_v"))
-            .collect())
-    if not rows:
+    tbl = (df.orderBy(F.md5(F.col(id_col).cast("string")))
+           .limit(n)
+           .select(F.col(vec_col).cast("array<double>").alias("_v"))
+           .toArrow())
+    if not tbl.num_rows:
         raise HandyException(
             f"{fit} needs a sample to fit on: the corpus has no vectors")
-    return _unit_rows([r["_v"] for r in rows])
+    return _unit_rows(tbl["_v"], vec_col)
 
 
-def _nearest_cell_udf(b_C):
-    """pandas_udf: id of the nearest (max inner product) broadcast
-    centroid per vector, one BLAS matmul per Arrow batch — a literal
-    centroid expression tree (n_centroids × dim constants) blows past
-    codegen limits and is ~10× slower."""
+def _nearest_cell_udf(b_C, col: str):
+    """Arrow UDF: id of the nearest (max inner product) broadcast
+    centroid per ``col`` vector, one BLAS matmul per Arrow batch — a
+    literal centroid expression tree (n_centroids × dim constants)
+    blows past codegen limits and is ~10× slower."""
     def _cell(vs):
-        return pd.Series(
-            np.argmax(_unit_rows(vs) @ b_C.value.T, axis=1).astype("int32"))
-    return F.pandas_udf(_cell, "int")
+        C = b_C.value
+        return pa.array(np.argmax(_unit_rows(vs, col, C.shape[1]) @ C.T,
+                                  axis=1).astype(np.int32))
+    return F.arrow_udf(_cell, "int")
+
+
+def _refine_centroids(df: DataFrame, C: np.ndarray, vec_col: str,
+                      kmeans_iters: int) -> np.ndarray:
+    """``kmeans_iters`` distributed spherical-Lloyd rounds from the seed
+    centroids ``C``: assign via the BLAS matmul, recompute cell means via
+    posexplode + one grouped avg, renormalize; an empty cell keeps its
+    previous centroid."""
+    sc = df.sparkSession.sparkContext
+    for _ in range(kmeans_iters):
+        b_it = sc.broadcast(C)
+        a = (df.select(F.col(vec_col).cast("array<double>").alias("_v"))
+             .withColumn("_cell", _nearest_cell_udf(b_it, vec_col)(
+                 F.col("_v")))
+             .select("_cell", F.posexplode("_v").alias("pos", "val")))
+        M = np.zeros_like(C)
+        for r in (a.groupBy("_cell", "pos").agg(F.avg("val").alias("m"))
+                  .collect()):
+            M[r["_cell"], r["pos"]] = r["m"]
+        U = _unit(M)
+        # an empty cell (zero row) keeps its previous centroid
+        C = np.where(U.any(axis=1, keepdims=True), U, C)
+        b_it.destroy()
+    return C
 
 
 def ivf_fit_centroids(df: DataFrame, n_centroids: int = 16,
@@ -272,29 +331,14 @@ def ivf_fit_centroids(df: DataFrame, n_centroids: int = 16,
                       kmeans_iters: int = 0) -> np.ndarray:
     """Fit the IVF coarse quantizer: deterministic hash-ordered sample of
     ``n_centroids`` corpus vectors, L2-normalized, optionally refined
-    with ``kmeans_iters`` distributed spherical-Lloyd rounds (assign via
-    the BLAS matmul, recompute cell means via posexplode + one grouped
-    avg, renormalize; empty cells keep their previous centroid). The
-    returned (n_centroids × dim) matrix is driver-tiny. At 100 TB this
-    runs ONCE — persist it with ``pipeline.ann_index.IVFIndex`` instead
-    of refitting per query batch."""
+    with ``kmeans_iters`` distributed spherical-Lloyd rounds
+    (``_refine_centroids``). The returned (n_centroids × dim) matrix is
+    driver-tiny. At 100 TB this runs ONCE — persist it with
+    ``pipeline.ann_index.IVFIndex`` instead of refitting per query
+    batch."""
     C = _sample_unit_rows(df, vec_col, id_col, n_centroids,
                           "ivf_fit_centroids")
-    sc = df.sparkSession.sparkContext
-    for _ in range(kmeans_iters):
-        b_it = sc.broadcast(C)
-        a = (df.select(F.col(vec_col).cast("array<double>").alias("_v"))
-             .withColumn("_cell", _nearest_cell_udf(b_it)(F.col("_v")))
-             .select("_cell", F.posexplode("_v").alias("pos", "val")))
-        M = np.zeros_like(C)
-        for r in (a.groupBy("_cell", "pos").agg(F.avg("val").alias("m"))
-                  .collect()):
-            M[r["_cell"], r["pos"]] = r["m"]
-        U = _unit_rows(M)
-        # an empty cell (zero row) keeps its previous centroid
-        C = np.where(U.any(axis=1, keepdims=True), U, C)
-        b_it.destroy()
-    return C
+    return _refine_centroids(df, C, vec_col, kmeans_iters)
 
 
 def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
@@ -320,22 +364,22 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     b_C = df.sparkSession.sparkContext.broadcast(C)
 
     def _cells_fn(vs):
-        order = np.argsort(-(_unit_rows(vs) @ b_C.value.T),
-                           axis=1)[:, :nprobe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
-    _cells = F.pandas_udf(_cells_fn, "array<int>")
+        Cv = b_C.value
+        return _list_array(np.argsort(
+            -(_unit_rows(vs, vec_col, Cv.shape[1]) @ Cv.T),
+            axis=1)[:, :nprobe])
 
     c = with_norm(
         df.select(F.col(id_col).alias("neighbor_id"),
                   F.col(vec_col).cast("array<double>").alias("_c0")),
         F.col("_c0"), "_cv", "_cn").drop("_c0")
-    c = c.withColumn("_cell", _nearest_cell_udf(b_C)(F.col("_cv")))
+    c = c.withColumn("_cell", _nearest_cell_udf(b_C, vec_col)(F.col("_cv")))
     q = with_norm(
         queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).cast("array<double>").alias("_q0")),
         F.col("_q0"), "_qv", "_qn").drop("_q0")
-    q = q.withColumn("_cells", _cells(F.col("_qv")))
+    q = q.withColumn("_cells",
+                     F.arrow_udf(_cells_fn, "array<int>")(F.col("_qv")))
     joined = (c.join(F.broadcast(q),
                      F.array_contains(F.col("_cells"), F.col("_cell")))
                .filter(F.col("query_id") != F.col("neighbor_id")))
@@ -555,8 +599,12 @@ def ivfpq_fit(df: DataFrame, n_centroids: int = 16, m: int = 8,
     code budget quantizes much finer. Returns (centroids, books) — both
     driver-tiny; persist with ``pipeline.ann_index.IVFPQIndex`` at scale
     (train ONCE, probe for months)."""
-    X = _sample_unit_rows(df, vec_col, id_col, sample_n, "ivfpq_fit")
-    C = ivf_fit_centroids(df, n_centroids, vec_col, id_col, kmeans_iters)
+    # one md5-ordered sample seeds the centroids (its first n_centroids
+    # rows, as ivf_fit_centroids samples) and trains the books
+    S = _sample_unit_rows(df, vec_col, id_col, max(sample_n, n_centroids),
+                          "ivfpq_fit")
+    C = _refine_centroids(df, S[:n_centroids], vec_col, kmeans_iters)
+    X = S[:sample_n]
     cells = np.argmax(X @ C.T, axis=1)
     books = _fit_subspace_books(X - C[cells], m, nbits, iters, seed)
     return C, books
@@ -566,9 +614,10 @@ def ivfpq_encode(df: DataFrame, centroids: np.ndarray, books: np.ndarray,
                  vec_col: str = "embedding", id_col: str = "vec_id",
                  cell_col: str = "cell",
                  code_col: str = "pq_code") -> DataFrame:
-    """Encode the corpus for IVF-PQ: ONE Arrow-batched projection adds
+    """Encode the corpus for IVF-PQ: ONE Arrow UDF projection adds
     (cell id, residual PQ code) — one normalization, one centroid
-    matmul, one residual encode per batch. All input columns are kept,
+    matmul, one residual encode per Arrow batch, the codes written back
+    as one list array. All input columns are kept,
     so the encoded corpus can be written out once
     ``.write.partitionBy(cell_col)`` — the layout where a probe reads
     nprobe/n_centroids of the files and searches scan CODES
@@ -580,10 +629,9 @@ def ivfpq_encode(df: DataFrame, centroids: np.ndarray, books: np.ndarray,
     sc = df.sparkSession.sparkContext
     b_C, b_books = sc.broadcast(C), sc.broadcast(B)
 
-    @F.pandas_udf(f"{cell_col} int, {code_col} array<int>")
-    def _enc(vs: pd.Series) -> pd.DataFrame:
+    def _enc(vs):
         Cv, Bv = b_C.value, b_books.value
-        X = _unit_rows(vs)
+        X = _unit_rows(vs, vec_col, Cv.shape[1])
         cells = np.argmax(X @ Cv.T, axis=1)
         R = X - Cv[cells]
         codes = np.empty((len(X), mm), dtype=np.int64)
@@ -591,11 +639,12 @@ def ivfpq_encode(df: DataFrame, centroids: np.ndarray, books: np.ndarray,
             S = R[:, j * dsub:(j + 1) * dsub]
             d2 = ((S[:, None, :] - Bv[j][None, :, :]) ** 2).sum(axis=2)
             codes[:, j] = d2.argmin(axis=1)
-        return pd.DataFrame({cell_col: cells.astype("int32"),
-                             code_col: [c.tolist() for c in codes]})
+        return pa.StructArray.from_arrays(
+            [pa.array(cells.astype(np.int32)), _list_array(codes)],
+            names=[cell_col, code_col])
 
-    return (df.withColumn("_e", _enc(F.col(vec_col)
-                                     .cast("array<double>")))
+    enc = F.arrow_udf(_enc, f"{cell_col} int, {code_col} array<int>")
+    return (df.withColumn("_e", enc(F.col(vec_col).cast("array<double>")))
             .withColumn(cell_col, F.col(f"_e.{cell_col}"))
             .withColumn(code_col, F.col(f"_e.{code_col}"))
             .drop("_e"))
@@ -675,7 +724,11 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
 
     if encoded is None:
         encoded = ivfpq_encode(df, C, books, vec_col, id_col)
-    enc = encoded.select(F.col(id_col).alias("neighbor_id"),
+    # id fields keep the input id column's type (string/int/long ids all
+    # round-trip; a hardcoded long would corrupt non-long ids): both
+    # sides are cast to it, and the scan gathers ids with pc.take
+    _idt = df.schema[id_col].dataType
+    enc = encoded.select(F.col(id_col).cast(_idt).alias("neighbor_id"),
                          "cell", "pq_code")
     # The ADC scan's parallelism must come from the CLUSTER, not from
     # however many files the compact codes table happens to occupy: a
@@ -689,13 +742,13 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     if enc.rdd.getNumPartitions() < sc.defaultParallelism:
         enc = enc.repartition(sc.defaultParallelism)
 
-    qrows = (queries.select(F.col(id_col).alias("query_id"),
-                            F.col(vec_col).cast("array<double>")
-                            .alias("_q")).collect())
-    if not qrows:                 # no queries: same schema, no rows
+    qt = (queries.select(F.col(id_col).cast(_idt).alias("query_id"),
+                         F.col(vec_col).cast("array<double>").alias("_q"))
+          .toArrow())
+    if not qt.num_rows:           # no queries: same schema, no rows
         enc = enc.limit(0)
-    qids = np.array([r["query_id"] for r in qrows])
-    Q = _unit_rows([r["_q"] for r in qrows], dim)
+    qids = qt["query_id"].combine_chunks()
+    Q = _unit_rows(qt["_q"], vec_col, dim)
     cent_term = Q @ C.T                                   # (nq, ncent)
     # probe mask: True where query q probes cell c — selected in fp64
     # so probe choice never shifts with the scan dtype; probing every
@@ -713,22 +766,21 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     b_lut, b_qids = sc.broadcast(lut), sc.broadcast(qids)
     b_cent, b_probe = sc.broadcast(cent_term.astype(_dt)), sc.broadcast(probe)
 
-    # id fields keep the input id column's type (string/int/long ids all
-    # round-trip; a hardcoded long would corrupt non-long ids)
-    _idt = df.schema[id_col].dataType
     out_schema = T.StructType([
         T.StructField("query_id", _idt),
         T.StructField("neighbor_id", _idt),
         T.StructField("score", T.DoubleType())])
 
-    def _batch_topk(it):
-        L, ids = b_lut.value, b_qids.value
+    def _batch_topk(batches):
+        L, qa = b_lut.value, b_qids.value
         CT, P = b_cent.value, b_probe.value
+        ids = qa.to_numpy(zero_copy_only=False)
         take = max(k, rerank or 0)
-        for pdf in it:
-            codes = np.array(pdf["pq_code"].tolist(), dtype=np.int64)
-            cells = np.asarray(pdf["cell"], dtype=np.int64)
-            nb = np.asarray(pdf["neighbor_id"])
+        for batch in batches:
+            codes = _list_rows(batch.column("pq_code"), "pq_code", mm)
+            cells = batch.column("cell").to_numpy()
+            nbr = batch.column("neighbor_id")
+            nb = nbr.to_numpy(zero_copy_only=False)
             s = CT[:, cells]                 # (nq, rows), a fresh copy
             for j in range(mm):
                 s += L[:, j, codes[:, j]]
@@ -762,14 +814,16 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
                 keep = eqi[np.argsort(nb[eqi], kind="stable")[:need]]
                 top[qi] = np.concatenate([gti, keep])
             sv = np.take_along_axis(s, top, axis=1).ravel()
-            res = pd.DataFrame({"query_id": np.repeat(ids, kk_local),
-                                "neighbor_id": nb[top.ravel()],
-                                "score": sv})
             # masked (non-probed / self) rows that slipped into a small
             # batch's top-take are dropped here, not emitted as -inf
-            yield res[np.isfinite(sv)]
+            keep = np.isfinite(sv)
+            yield pa.RecordBatch.from_arrays(
+                [pc.take(qa, np.repeat(np.arange(len(ids)), kk_local)[keep]),
+                 pc.take(nbr, top.ravel()[keep]),
+                 pa.array(sv[keep].astype(np.float64))],
+                names=["query_id", "neighbor_id", "score"])
 
-    cand = enc.mapInPandas(_batch_topk, out_schema)
+    cand = enc.mapInArrow(_batch_topk, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                F.asc("neighbor_id"))
     if rerank is None:
@@ -806,8 +860,7 @@ def sign_cell_expr(vec: Column, sign_bits: int = 6) -> Column:
 
 def semdedup_pairs(df: DataFrame, vec_col: str = "embedding",
                    id_col: str = "vec_id", threshold: float = 0.93,
-                   sign_bits: int = 6,
-                   strategy: str = "blas") -> DataFrame:
+                   sign_bits: int = 6) -> DataFrame:
     """SemDeDup candidate pairs: embeddings are bucketed into 2^sign_bits
     sign-cells, and cosine similarity is computed ONLY within a cell —
     the cluster-then-prune shape of SemDeDup (Abbas et al. 2023), with
@@ -819,69 +872,31 @@ def semdedup_pairs(df: DataFrame, vec_col: str = "embedding",
     |cell|², bounded by the cell granularity you pick — at 100 TB you
     raise ``sign_bits`` so cells stay ~1e3-1e4 rows, keeping every
     task's work bounded while total work stays |corpus| x |cell| not
-    |corpus|². Two physical strategies:
-
-    - ``'blas'`` (default): one ``applyInPandas`` group per cell running
-      a row-chunked numpy/BLAS matmul (chunks bound the similarity
-      matrix to ~1024 x |cell| doubles per step). Measured ~15x the
-      expression path at sf1 (200k x 64-d: 55s -> BLAS task-bound).
-    - ``'expr'``: self-join + native zip_with cosine — whole-stage
-      codegen, zero Python; right when cells are tiny or Arrow is off.
+    |corpus|². Each cell is one ``applyInArrow`` group running the
+    cosine-pair kernel (``_cosine_pairs``: 1024-row chunks bound the
+    similarity matrix to ~1024 x |cell| doubles per step); measured ~15x
+    a self-join with a native ``zip_with`` cosine at sf1 (200k x 64-d:
+    55s -> BLAS task-bound). ``dedup.embedding_neardup_pairs`` with
+    ``block_col`` set to the cell is that expression reference. A zero
+    vector scores cosine 0 against every row.
 
     Returns (id_a, id_b, cell, cosine >= threshold), id_a < id_b.
     """
     e = F.col(vec_col).cast("array<double>")
-    cells = df.select(
-        F.col(id_col), e.alias("_e"),
-        sign_cell_expr(e, sign_bits).alias("cell"))
-    if strategy == "expr":
-        a = cells.select(F.col(id_col).alias("id_a"),
-                         F.col("_e").alias("_ea"), "cell")
-        b = cells.select(F.col(id_col).alias("id_b"),
-                         F.col("_e").alias("_eb"), "cell")
-        cos = F.round(cosine_expr(F.col("_ea"), F.col("_eb")), 6)
-        return (a.join(b, "cell")
-                .filter(F.col("id_a") < F.col("id_b"))
-                .withColumn("cosine", cos)
-                .filter(F.col("cosine") >= threshold)
-                .select("id_a", "id_b", "cell", "cosine"))
-    if strategy != "blas":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    keyed = df.select(F.col(id_col).alias("_id"), e.alias("_v"),
+                      sign_cell_expr(e, sign_bits).alias("cell"))
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType([
         T.StructField("id_a", id_type), T.StructField("id_b", id_type),
         T.StructField("cell", T.IntegerType()),
         T.StructField("cosine", T.DoubleType())])
 
-    def cell_pairs(key, pdf):
-        ids = pdf["_pid"].to_numpy()
-        M = np.array(pdf["_e"].tolist(), dtype=np.float64)
-        nrm = np.linalg.norm(M, axis=1, keepdims=True)
-        nrm[nrm == 0] = 1.0
-        M = M / nrm
-        out_a, out_b, out_c = [], [], []
-        for lo in range(0, len(ids), 1024):
-            hi = min(lo + 1024, len(ids))
-            cos = np.round(M[lo:hi] @ M.T, 6)
-            ii, jj = np.where(cos >= threshold)
-            ii = ii + lo
-            keep = ids[ii] < ids[jj]
-            out_a.append(ids[ii][keep])
-            out_b.append(ids[jj][keep])
-            out_c.append(cos[ii - lo, jj][keep])
-        a = np.concatenate(out_a) if out_a else np.array([], dtype=ids.dtype)
-        return pd.DataFrame({
-            "id_a": a,
-            "id_b": np.concatenate(out_b) if out_b else a,
-            "cell": np.full(len(a), key[0], dtype=np.int64),
-            "cosine": np.concatenate(out_c) if out_c else
-            np.array([], dtype=np.float64)})
+    def cell_pairs(key, tbl):
+        pairs = _cosine_pairs(tbl, vec_col, threshold, 6)
+        return pairs.add_column(2, "cell", pa.array(
+            np.full(pairs.num_rows, key[0].as_py(), dtype=np.int32)))
 
-    keyed = cells.select(F.col(id_col).alias("_pid"), "_e", "cell")
-    return keyed.groupBy("cell").applyInPandas(cell_pairs, out_schema)
+    return keyed.groupBy("cell").applyInArrow(cell_pairs, out_schema)
 
 
 def semdedup_drops(df: DataFrame, vec_col: str = "embedding",

@@ -406,20 +406,67 @@ def test_pairs_on_degenerate_corpus_are_empty(spark, op, n_rows):
     assert fn(df).collect() == []
 
 
-def test_blas_blocked_matches_exact_self_join(emb):
+def _chunk_crossing_corpus(spark):
+    """1,200 8-d vectors in one sign cell (sign_bits=2: the first two
+    dims are >= 0), so one group crosses the pair kernel's 1024-row
+    chunk. Every 100th row is a zero vector, rows 1100.. duplicate rows
+    0.., and ids are shuffled against row order."""
+    import pandas as pd
+    rng = np.random.RandomState(7)
+    X = rng.randn(1200, 8)
+    X[:, :2] = np.abs(X[:, :2])
+    X[1100:] = X[:100]
+    X[::100] = 0.0
+    return spark.createDataFrame(pd.DataFrame(
+        {"vec_id": rng.permutation(1200).astype("int64") + 1,
+         "embedding": [r.tolist() for r in X]}))
+
+
+def _nonzero(df):
+    """The expression reference divides by the norm, so a zero vector
+    raises DIVIDE_BY_ZERO there; the kernel scores it 0 (no pairs)."""
+    return df.filter(F.exists("embedding", lambda v: v != 0))
+
+
+def test_blas_blocked_matches_exact_self_join(spark, emb):
     """The blocked distributed BLAS path must emit exactly the same pair
     set + cosines as the expression-based exact self-join, for any block
-    count (including blocks > distinct ids and blocks=1)."""
+    count (including blocks > distinct ids and blocks=1). The second
+    corpus puts > 1024 rows in one group (blocks=1), with zero vectors
+    and exact duplicates."""
     from handyspark_spark.pipeline.dedup import embedding_neardup_pairs
     from handyspark_spark.pipeline.similarity import neardup_pairs_blas
-    sub = emb.limit(300)
-    exact = {(r.id_a, r.id_b): round(r.cosine, 6) for r in
-             embedding_neardup_pairs(sub, threshold=0.4).collect()}
-    for blocks in (1, 5):
-        got = {(r.id_a, r.id_b): round(r.cosine, 6) for r in
-               neardup_pairs_blas(sub, threshold=0.4,
-                                  blocks=blocks).collect()}
-        assert got == exact, f"blocks={blocks}"
+    for sub, thr in ((emb.limit(300), 0.4),
+                     (_chunk_crossing_corpus(spark), 0.9)):
+        exact = {(r.id_a, r.id_b): round(r.cosine, 6) for r in
+                 embedding_neardup_pairs(_nonzero(sub),
+                                         threshold=thr).collect()}
+        assert exact
+        for blocks in (1, 5):
+            got = {(r.id_a, r.id_b): round(r.cosine, 6) for r in
+                   neardup_pairs_blas(sub, threshold=thr,
+                                      blocks=blocks).collect()}
+            assert got == exact, f"blocks={blocks}"
+
+
+def test_semdedup_chunked_cell_matches_expression_reference(spark):
+    """A cell of 1,200 rows crosses the pair kernel's 1024-row chunk:
+    semdedup_pairs equals the expression self-join blocked on the same
+    cell, exact duplicates included (cosine 1.0) and zero vectors
+    paired with nothing."""
+    from handyspark_spark.pipeline.dedup import embedding_neardup_pairs
+    from handyspark_spark.pipeline.similarity import (semdedup_pairs,
+                                                      sign_cell_expr)
+    df = _chunk_crossing_corpus(spark)
+    cells = _nonzero(df).withColumn(
+        "cell", sign_cell_expr(F.col("embedding"), 2))
+    exact = {(r.id_a, r.id_b): r.cosine for r in
+             embedding_neardup_pairs(cells, threshold=0.9,
+                                     block_col="cell").collect()}
+    got = semdedup_pairs(df, threshold=0.9, sign_bits=2).collect()
+    assert {r.cell for r in got} == {3}
+    assert {(r.id_a, r.id_b): r.cosine for r in got} == exact
+    assert sum(c == 1.0 for c in exact.values()) >= 99
 
 
 def test_blas_path_never_materializes_on_driver():
@@ -2277,6 +2324,43 @@ def test_ann_empty_inputs(emb, case):
     got = getattr(S, name)(emb, qs.limit(0), k=3, **kw)
     assert got.schema == want.schema
     assert got.count() == 0 and want.count() > 0
+
+
+@pytest.mark.parametrize("case", [
+    "fit_null", "query_ragged", "encode_null", "blas_ragged"])
+def test_ann_bad_vectors_named_error(spark, case):
+    """A NULL or wrong-length vector is a named error naming the
+    column, read at the one Arrow boundary: on the driver (fit sample,
+    query matrix) a HandyException, inside a task the Python worker
+    error that carries it."""
+    import pandas as pd
+    from pyspark.errors import PythonException
+
+    from handyspark_spark.core.util import HandyException
+    from handyspark_spark.pipeline import similarity as S
+    X = np.random.RandomState(5).randn(20, 8)
+    vecs = [r.tolist() for r in X]
+    if case.endswith("null"):
+        vecs[7], msg = None, "column 'embedding' has a NULL vector"
+    else:
+        vecs[7] = vecs[7][:3]
+        msg = r"column 'embedding' has a vector of length \d, expected \d"
+    bad = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(20, dtype="int64"),
+                      "embedding": vecs}),
+        "vec_id long, embedding array<double>")
+    good = bad.filter(F.col("vec_id") != 7)
+    C = np.eye(8)[:4]
+    run = {"fit_null": lambda: S.ivf_fit_centroids(bad, n_centroids=32),
+           "query_ragged": lambda: S.ivfpq_topk(
+               good, bad, k=3, nprobe=2, m=2, nbits=2, sample_n=20),
+           "encode_null": lambda: S.ivfpq_encode(
+               bad, C, np.zeros((2, 4, 4))).collect(),
+           "blas_ragged": lambda: S.neardup_pairs_blas(bad).collect()}
+    on_driver = case in ("fit_null", "query_ragged")
+    with pytest.raises(HandyException if on_driver else PythonException,
+                       match=msg):
+        run[case]()
 
 
 def test_ivf_zero_vector_gives_no_nan_centroid(spark):

@@ -333,3 +333,19 @@ def test_edge_fits_on_degenerate_columns(spark, fit, values):
         exp = (np.linspace(1.0, 3.0, 5) if fit == "Bucket"
                else np.quantile([1.0, 3.0], np.linspace(0, 1, 5)))
         npt.assert_array_almost_equal(spec.edges, exp)
+
+
+@pytest.mark.parametrize("fit", ["Bucket", "Quantile exact"])
+@pytest.mark.parametrize("missing", [float("nan"), None],
+                         ids=["nan", "null"])
+def test_nan_stratum_row_gets_no_bucket(spark, fit, missing):
+    """A NaN stratum value is missing, like NULL: it gets no bucket.
+    Bucket used to floor it into bucket 0 and Quantile to count it
+    above every edge, into the last bucket."""
+    sdf = spark.createDataFrame(
+        [(b, 1.0) for b in [1.0, 2.0, 3.0, 4.0, missing]],
+        "b double, v double")
+    spec = (Bucket("b", 2) if fit == "Bucket"
+            else Quantile("b", 2, exact=True))
+    cnt = toHandy(sdf).stratify([spec]).cols["v"].count()
+    assert list(cnt.astype(int)) == [2, 2]

@@ -3,8 +3,9 @@ nodes, join strategies, scan pushdown. Writes PLAN_AUDIT.md.
 
 Red flags it hunts:
 - BatchEvalPython  -> row-at-a-time python UDF in the plan (never OK);
-- ArrowEvalPython / mapInPandas nodes are listed (expected only where
-  pandas semantics or BLAS genuinely require python);
+- ArrowEvalPython / MapIn{Pandas,Arrow} / FlatMapGroupsIn{Pandas,Arrow}
+  nodes are listed (expected only where pandas semantics or BLAS
+  genuinely require python);
 - CartesianProduct without an intentional broadcast;
 - exchange counts per query (shuffle budget visibility).
 
@@ -78,7 +79,8 @@ def main():
             notes.append("ROW-AT-A-TIME-PYTHON")
             flagged.append(name)
         py_nodes = sorted(set(re.findall(
-            r"(ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas)", plan)))
+            r"(ArrowEvalPython|MapIn(?:Pandas|Arrow)|"
+            r"FlatMapGroupsIn(?:Pandas|Arrow))", plan)))
         if py_nodes:
             notes.append("+".join(py_nodes))
         joins = sorted(set(re.findall(

@@ -29,19 +29,8 @@ def main():
     else:
         sf_dir, names = "/root/testdata/sf0.1", args
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder
-             .master(f"local[{cpus}]")
-             .appName("profile-fixed-floor")
-             .config("spark.sql.shuffle.partitions", str(cpus))
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    from bench import bench_session, warm_session
+    spark = bench_session("profile-fixed-floor")
 
     import __spark_entry__ as E
     qs = E.queries()
@@ -52,7 +41,6 @@ def main():
                      f"(registry has {len(qs)})")
         qs = {n: qs[n] for n in names}
 
-    from bench import warm_session
     from handyspark_spark.sources.loader import TABLES, load_table
     warm_session(spark, sf_dir)
 

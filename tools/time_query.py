@@ -69,14 +69,9 @@ def main():
         sys.exit(f"machine not settled (load1={load1:.2f}); wait or "
                  f"pass --force")
 
-    from pyspark.sql import SparkSession
+    from bench import bench_session
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.driver.memory", mem)
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    spark = bench_session("time-query")
     import __spark_entry__ as E
     qs = E.queries()
     missing = [n for n in names if n not in qs]
