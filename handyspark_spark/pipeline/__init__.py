@@ -118,7 +118,7 @@ def pretrain_funnel(df, text_col="text", id_col="doc_id",
     exact = base.filter(F.col("_e")).select(id_col, text_col)
 
     # sigs=: a precomputed full-corpus minhash_signature_arrays table
-    # (same (num_hashes, hash_fn) contract as every other sigs= seam).
+    # (same num_hashes contract as every other sigs= seam).
     # The LSH subtree then SUBSETS it to the exact-dedup survivors with
     # a semi-join against the persisted base flags instead of re-signing
     # the filtered text. Round-11 A/B at sf10 (alternating in one

@@ -418,26 +418,17 @@ def minhash_consts(num_hashes: int) -> list[int]:
                            "big") for s in range(num_hashes)]
 
 
-def _token_hash(tok_col, hash_fn: str = "md5"):
-    """Base token hash for minhash. ``'md5'``: engine-reproducible 32-bit
-    hash — first 8 hex chars of md5(token) as a bigint (DuckDB:
-    ('0x' || substr(md5(tok),1,8))::BIGINT) — the cross-engine oracle
-    contract. ``'xxhash64'``: native 64-bit xxhash — ~3× cheaper (no hex
-    string materialization), for consumers that never leave Spark
-    (star-edge components, groups); XOR by a constant is a bijection on
-    either width, so minhash validity is unchanged."""
-    if hash_fn == "xxhash64":
-        # mask to 32 bits: the per-seed XOR constants are 32-bit, so a
-        # 64-bit base hash would leave the high bits un-permuted and the
-        # min identical across every seed (no independence at all)
-        return F.xxhash64(tok_col).bitwiseAND(F.lit(0xFFFFFFFF))
+def _token_hash(tok_col):
+    """Base token hash for minhash: the first 8 hex chars of md5(token)
+    as a bigint (DuckDB: ('0x' || substr(md5(tok),1,8))::BIGINT) — the
+    cross-engine oracle contract. Every LSH consumer signs with it, so a
+    signature table built once serves the whole family."""
     return F.conv(F.substring(F.md5(tok_col), 1, 8), 16, 10).cast("bigint")
 
 
 def minhash_signature_arrays(df: DataFrame, text_col: str = "text",
                              id_col: str = "doc_id",
-                             num_hashes: int = 16,
-                             hash_fn: str = "md5") -> DataFrame:
+                             num_hashes: int = 16) -> DataFrame:
     """(id, sig: array<bigint>) — the whole signature built inside ONE
     map-only projection: per-token base hashes once (``_token_hash``),
     then sig[i] = min over tokens of (base XOR const_i). ZERO shuffles,
@@ -445,7 +436,7 @@ def minhash_signature_arrays(df: DataFrame, text_col: str = "text",
     consumer composes from."""
     from .text import let_bound
     ts = _token_sets(df, text_col, id_col)
-    th = F.transform(F.col("_toks"), lambda t: _token_hash(t, hash_fn))
+    th = F.transform(F.col("_toks"), _token_hash)
 
     # let_bound the per-token hash array: a withColumn intermediate gets
     # inlined back by ProjectCollapse, so every one of the num_hashes
@@ -469,7 +460,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
                        sigs: DataFrame | None = None) -> DataFrame:
     """(id, seed, minhash) long form — a posexplode of the array form;
     still map-only (the reference point for the DuckDB oracle).
-    ``sigs``: precomputed array-form table (see ``_banded``)."""
+    ``sigs``: precomputed array-form table (see ``_banded_arrays``)."""
     arr = (sigs if sigs is not None else
            minhash_signature_arrays(df, text_col, id_col, num_hashes))
     return arr.select(
@@ -477,13 +468,12 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
         F.posexplode("sig").alias("seed", "minhash"))
 
 
-def _banded(df: DataFrame, text_col: str, id_col: str, num_hashes: int,
-            bands: int, hash_fn: str = "md5",
-            sigs: DataFrame | None = None) -> DataFrame:
-    """(id, band, band_hash) via array slicing of the one-projection
-    signature — map-only (the reference formulation needed an explode +
-    groupBy shuffle to reassemble bands). ``band_hash`` is a single
-    xxhash64 bigint over (band, slice) — an 8-byte join key instead of a
+def _banded_arrays(df: DataFrame, text_col: str, id_col: str,
+                   num_hashes: int, bands: int,
+                   sigs: DataFrame | None = None) -> DataFrame:
+    """(id, _bhs: array of ALL band hashes) via array slicing of the
+    one-projection signature — map-only. Band ``i``'s hash is a single
+    xxhash64 bigint over (i, slice) — an 8-byte join key instead of a
     32-char md5 string (string-compare joins were the LSH hot spot).
 
     ``sigs``: a precomputed ``minhash_signature_arrays`` table
@@ -491,80 +481,54 @@ def _banded(df: DataFrame, text_col: str, id_col: str, num_hashes: int,
     signature projection (md5 per token x num_hashes min-folds) is the
     dominant shared cost of pairs/groups/star-edges/components, and a
     real pipeline signs the corpus once. The caller owns the contract
-    that ``sigs`` was built with the SAME (num_hashes, hash_fn); the
-    content-addressed cache in queries.py fingerprints both."""
+    that ``sigs`` was built with the SAME ``num_hashes``; the
+    content-addressed cache in queries.py fingerprints it."""
     rows_per_band = num_hashes // bands
     if sigs is None:
-        sigs = minhash_signature_arrays(df, text_col, id_col, num_hashes,
-                                        hash_fn)
-    band_ids = F.array(*[F.lit(i) for i in range(bands)])
-    return (sigs.select(
-        id_col, F.explode(band_ids).alias("band"), F.col("sig"))
-        .withColumn("band_hash", F.xxhash64(
-            F.col("band"),
-            F.concat_ws(",", F.slice(
-                F.col("sig"), F.col("band") * rows_per_band + 1,
-                rows_per_band))))
-        .drop("sig"))
+        sigs = minhash_signature_arrays(df, text_col, id_col, num_hashes)
+    bhs = F.array(*[
+        F.xxhash64(F.lit(i), F.concat_ws(",", F.slice(
+            F.col("sig"), i * rows_per_band + 1, rows_per_band)))
+        for i in range(bands)])
+    return sigs.select(F.col(id_col), bhs.alias("_bhs"))
 
 
-def _lsh_buckets(df: DataFrame, text_col: str, id_col: str,
-                 num_hashes: int, bands: int,
-                 max_bucket_size: int | None,
-                 hash_fn: str = "md5",
-                 sigs: DataFrame | None = None) -> DataFrame:
-    """(band, band_hash, _ids: sorted array of member ids) — ONE shuffle:
-    group each bucket to an id array (a self-join formulation would
-    shuffle AND recompute the md5-heavy signatures once per join side).
-    ``array_distinct`` because duplicate input ids would otherwise emit
-    (x, x) self-pairs downstream; oversized buckets (near-dup CLUSTERS)
-    are dropped when ``max_bucket_size`` is set — enumerate them linearly
-    with ``minhash_lsh_groups``, not quadratically."""
-    banded = _banded(df, text_col, id_col, num_hashes, bands, hash_fn,
-                     sigs=sigs)
-    return _group_banded_buckets(banded, id_col, max_bucket_size)
+def _banded(df: DataFrame, text_col: str, id_col: str, num_hashes: int,
+            bands: int, sigs: DataFrame | None = None) -> DataFrame:
+    """(id, band, band_hash): one row per band per doc, a posexplode of
+    ``_banded_arrays`` — still map-only, and the band hash has one
+    definition (the persisted ``lsh_bucket_state`` rows are these)."""
+    return (_banded_arrays(df, text_col, id_col, num_hashes, bands, sigs)
+            .select(id_col, F.posexplode("_bhs").alias("band", "band_hash")))
 
 
-def _group_banded_buckets(banded: DataFrame, id_col: str,
-                          max_bucket_size: int | None) -> DataFrame:
-    """The grouping stage of ``_lsh_buckets`` on an already-banded frame
-    (callers that persist the banded rows — e.g. the hot-bucket recovery
-    path — reuse them instead of recomputing the md5-heavy signatures)."""
-    buckets = (banded.groupBy("band", "band_hash")
-               .agg(F.array_sort(F.array_distinct(
-                   F.collect_list(id_col))).alias("_ids")))
+def _bucket_mins(banded: DataFrame, id_col: str,
+                 max_bucket_size: int | None) -> DataFrame:
+    """(id, _min) per banded row: ``_min`` is the smallest id in the
+    row's (band, band_hash) bucket — or the row's own id when the bucket
+    holds more than ``max_bucket_size`` DISTINCT ids (duplicate input
+    ids count once, so the cap agrees with ``minhash_lsh_pairs``'s).
+
+    The one plan of the cluster family: one exchange on the bucket key
+    and one window over it. No task builds a bucket as an array — the
+    window streams a hot bucket through Spark's spillable row buffer —
+    so a 100M-doc boilerplate bucket costs rows, not one 100M-element
+    list in one task, with or without a cap."""
+    w = Window.partitionBy("band", "band_hash")
+    mn = F.min(id_col).over(w)
     if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("_ids") <= max_bucket_size)
-    return buckets
-
-
-def _hot_bucket_star_edges(banded: DataFrame, id_col: str,
-                           max_bucket_size: int) -> DataFrame:
-    """Star edges (bucket_min, member) for buckets ABOVE the cap,
-    built join-wise — groupBy (count, min) then join back to the member
-    rows — so no task ever materializes a hot bucket as one array. A
-    100M-doc boilerplate bucket costs 100M ROWS spread across the
-    cluster, not one 100M-element ``collect_list`` in a single task
-    (the reason the array path needs the cap at all). Output is linear:
-    k-1 edges for a k-doc bucket, same closure as the clique."""
-    stats = (banded.groupBy("band", "band_hash")
-             .agg(F.count_distinct(F.col(id_col)).alias("_k"),
-                  F.min(id_col).alias("_min"))
-             .filter(F.col("_k") > max_bucket_size)
-             .drop("_k"))
-    return (banded.join(stats, ["band", "band_hash"])
-            .filter(F.col(id_col) != F.col("_min"))
-            .select(F.col("_min").alias("id_a"),
-                    F.col(id_col).alias("id_b"))
-            .distinct())
+        # window functions do not nest: rank first, then its bucket max
+        banded = banded.withColumn(
+            "_r", F.dense_rank().over(w.orderBy(id_col)))
+        mn = F.when(F.max("_r").over(w) <= max_bucket_size,
+                    mn).otherwise(F.col(id_col))
+    return banded.select(id_col, mn.alias("_min"))
 
 
 def minhash_lsh_star_edges(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", num_hashes: int = 16,
                            bands: int = 4,
                            max_bucket_size: int | None = None,
-                           hash_fn: str = "md5",
-                           recover_hot_buckets: bool = False,
                            sigs: DataFrame | None = None) -> DataFrame:
     """Linear-size connectivity SKELETON of the LSH candidate graph: per
     bucket, the star (bucket_min, member) instead of the full clique. A
@@ -573,51 +537,14 @@ def minhash_lsh_star_edges(df: DataFrame, text_col: str = "text",
     of ``minhash_lsh_pairs`` (same cap ⇒ same edge universe) — with
     O(|bucket|) edges instead of O(|bucket|²). At 100 TB this is the
     input you feed the components loop: a duplicate cluster of k docs
-    costs k-1 edges, not k(k-1)/2. Pinned equal-closure in
-    tests/test_pipeline.py.
-
-    ``recover_hot_buckets=True`` (needs ``max_bucket_size``): buckets
-    ABOVE the cap — exactly the boilerplate near-dup clusters you most
-    want deduped — are re-included via a join-wise star enumeration
-    (``_hot_bucket_star_edges``) that never builds the bucket as one
-    array. The union reaches the UNCAPPED transitive closure while
-    keeping every task's memory bounded."""
-    buckets = _lsh_buckets(df, text_col, id_col, num_hashes, bands,
-                           max_bucket_size, hash_fn, sigs=sigs)
-    ids = F.col("_ids")
-    n = F.size(ids)
-    star = F.transform(
-        F.slice(ids, 2, F.greatest(n - 1, F.lit(0))),
-        lambda y: F.struct(F.element_at(ids, 1).alias("id_a"),
-                           y.alias("id_b")))
-    edges = (buckets.filter(n >= 2)
-             .select(F.explode(star).alias("_p"))
-             .select(F.col("_p.id_a"), F.col("_p.id_b"))
-             .distinct())
-    if recover_hot_buckets and max_bucket_size is not None:
-        banded = _banded(df, text_col, id_col, num_hashes, bands, hash_fn,
-                         sigs=sigs)
-        edges = edges.unionByName(
-            _hot_bucket_star_edges(banded, id_col, max_bucket_size)
-        ).distinct()
-    return edges
-
-
-def _banded_arrays(df: DataFrame, text_col: str, id_col: str,
-                   num_hashes: int, bands: int, hash_fn: str = "md5",
-                   sigs: DataFrame | None = None) -> DataFrame:
-    """(id, _bhs: array of ALL band hashes) — the map-only array form of
-    ``_banded`` (identical per-band values: the same ``xxhash64(band,
-    joined-slice)`` with the same int band literal)."""
-    rows_per_band = num_hashes // bands
-    if sigs is None:
-        sigs = minhash_signature_arrays(df, text_col, id_col, num_hashes,
-                                        hash_fn)
-    bhs = F.array(*[
-        F.xxhash64(F.lit(i), F.concat_ws(",", F.slice(
-            F.col("sig"), i * rows_per_band + 1, rows_per_band)))
-        for i in range(bands)])
-    return sigs.select(F.col(id_col), bhs.alias("_bhs"))
+    costs k-1 edges, not k(k-1)/2. Without a cap every bucket, however
+    hot, contributes its star (``_bucket_mins`` keeps task memory
+    bounded either way). Pinned equal-closure in tests/test_pipeline.py."""
+    mins = _bucket_mins(_banded(df, text_col, id_col, num_hashes, bands,
+                                sigs), id_col, max_bucket_size)
+    return (mins.filter(F.col("_min") != F.col(id_col))
+            .select(F.col("_min").alias("id_a"), F.col(id_col).alias("id_b"))
+            .distinct())
 
 
 def _canonical_sigs(df: DataFrame, text_col: str, id_col: str,
@@ -768,8 +695,12 @@ def _minhash_lsh_pairs_distinct(df: DataFrame, text_col: str,
     oversized-key fallback path) and skips re-canonicalizing."""
     if not sigs_canonical:
         sigs = _canonical_sigs(df, text_col, id_col, num_hashes, sigs)
-    buckets = _lsh_buckets(df, text_col, id_col, num_hashes, bands,
-                           max_bucket_size, sigs=sigs)
+    # one row per id after _canonical_sigs: bucket arrays hold no repeats
+    buckets = (_banded(df, text_col, id_col, num_hashes, bands, sigs)
+               .groupBy("band", "band_hash")
+               .agg(F.array_sort(F.collect_list(id_col)).alias("_ids")))
+    if max_bucket_size is not None:
+        buckets = buckets.filter(F.size("_ids") <= max_bucket_size)
     ids = F.col("_ids")
     n = F.size(ids)
     pair_arrays = F.flatten(F.transform(
@@ -788,107 +719,49 @@ def minhash_lsh_groups(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", num_hashes: int = 16,
                        bands: int = 4,
                        max_bucket_size: int | None = None,
-                       hash_fn: str = "md5",
                        sigs: DataFrame | None = None) -> DataFrame:
     """Scale-path LSH dedup output: (doc_id, cluster_id) with cluster_id =
     the smallest doc id sharing any LSH bucket — LINEAR output size,
     unlike the pair list which is quadratic inside each duplicate group.
     (One min-propagation round: exact for transitive-via-shared-bucket
     clusters, which covers identical and near-identical documents; chains
-    longer than one hop need iterating.)"""
-    banded = _banded(df, text_col, id_col, num_hashes, bands, hash_fn,
-                     sigs=sigs)
-    all_ids = banded.select(id_col).distinct()
-    if max_bucket_size is not None:
-        # same bucket universe as capped minhash_lsh_pairs — REQUIRED when
-        # these groups seed connected_components over the capped pairs
-        # (an uncapped bucket-min could label a node with an id it has no
-        # edge to). Size measured in DISTINCT ids, exactly like the pairs
-        # cap (array_distinct there), so the two caps agree under
-        # duplicate input ids.
-        sizes = (banded.groupBy("band", "band_hash")
-                 .agg(F.count_distinct(F.col(id_col)).alias("_k"))
-                 .filter(F.col("_k") > max_bucket_size).drop("_k"))
-        banded = banded.join(F.broadcast(sizes), ["band", "band_hash"],
-                             "left_anti")
-    bucket_min = (banded.groupBy("band", "band_hash")
-                  .agg(F.min(id_col).alias("_bucket_min")))
-    clustered = (banded.join(bucket_min, ["band", "band_hash"])
-                 .groupBy(id_col)
-                 .agg(F.min("_bucket_min").alias("cluster_id")))
-    # docs whose EVERY bucket is over-cap still appear — as their own
-    # singleton cluster (the complete doc->cluster map contract)
-    return (all_ids.join(clustered, id_col, "left")
-            .select(id_col,
-                    F.coalesce("cluster_id", F.col(id_col))
-                    .alias("cluster_id")))
+    longer than one hop need iterating.)
+
+    Every doc appears once: a doc whose every bucket is over the cap
+    keeps its own id (a singleton cluster). The cap is the bucket
+    universe of capped ``minhash_lsh_pairs`` — REQUIRED when these
+    groups seed ``connected_components`` over the capped pairs (an
+    uncapped bucket-min could label a node with an id it has no edge
+    to)."""
+    mins = _bucket_mins(_banded(df, text_col, id_col, num_hashes, bands,
+                                sigs), id_col, max_bucket_size)
+    return mins.groupBy(id_col).agg(F.min("_min").alias("cluster_id"))
 
 
 def minhash_lsh_components(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", num_hashes: int = 16,
                            bands: int = 4,
                            max_bucket_size: int | None = None,
-                           hash_fn: str = "md5",
                            max_iterations: int = 20,
-                           recover_hot_buckets: bool = False,
                            sigs: DataFrame | None = None) -> DataFrame:
-    """Exact LSH duplicate clusters end-to-end: ONE materialized bucket
-    table feeds both the star-edge skeleton AND the seed labels
-    (node -> min bucket-min), then ``connected_components`` finishes the
-    (rare) cross-bucket chains. Seeding from the same persisted buckets
-    costs one extra groupBy but puts the labels within ~1 hop of the
-    fixpoint, so the iterative loop almost always runs a single
+    """Exact LSH duplicate clusters end-to-end: the star-edge skeleton
+    (``minhash_lsh_star_edges``) into ``connected_components``, seeded
+    with the groups' labels (node -> min bucket-min,
+    ``minhash_lsh_groups``). Both come from the same bucket-min window,
+    so every seed has a star edge and the union-find fast path — which
+    never reads the seed — stays exact. The distributed loop starts
+    within ~1 hop of the fixpoint, so it almost always runs a single
     convergence round — versus ~log(diameter) rounds unseeded, each a
-    multi-join job. At 100 TB the bucket table is the only heavy shuffle;
-    everything after is linear in |docs| + |edges|.
-
-    ``recover_hot_buckets=True``: over-cap buckets contribute join-wise
-    star edges and seeds too (``_hot_bucket_star_edges`` — no task-local
-    arrays), so the result is the UNCAPPED closure with capped memory.
-    Seeding with a SUBSET universe's labels stays sound here because the
-    recovered edge set is a superset — every seeded label remains
-    reachable."""
-    recover = recover_hot_buckets and max_bucket_size is not None
-    banded = (_banded(df, text_col, id_col, num_hashes, bands, hash_fn,
-                      sigs=sigs)
-              .persist() if recover else None)
-    src = banded if recover else df
-    buckets = (_group_banded_buckets(banded, id_col, max_bucket_size)
-               if recover else
-               _lsh_buckets(df, text_col, id_col, num_hashes, bands,
-                            max_bucket_size, hash_fn, sigs=sigs)).persist()
-    try:
-        ids = F.col("_ids")
-        n = F.size(ids)
-        star = F.transform(
-            F.slice(ids, 2, F.greatest(n - 1, F.lit(0))),
-            lambda y: F.struct(F.element_at(ids, 1).alias("id_a"),
-                               y.alias("id_b")))
-        edges = (buckets.filter(n >= 2)
-                 .select(F.explode(star).alias("_p"))
-                 .select(F.col("_p.id_a"), F.col("_p.id_b"))
-                 .distinct())
-        seed = (buckets.filter(n >= 2)
-                .select(F.element_at(ids, 1).alias("_min"),
-                        F.explode(ids).alias("node")))
-        if recover:
-            hot = _hot_bucket_star_edges(banded, id_col, max_bucket_size)
-            edges = edges.unionByName(hot).distinct()
-            seed = seed.unionByName(
-                hot.select(F.col("id_a").alias("_min"),
-                           F.col("id_b").alias("node")))
-        seed = seed.groupBy("node").agg(F.min("_min").alias("component"))
-        # seeds are bucket minima — every (node, min) has a star edge,
-        # so the union-find fast path stays exact (seeds_from_edges)
-        return connected_components(edges, initial=seed,
-                                    max_iterations=max_iterations,
-                                    seeds_from_edges=True)
-    finally:
-        # lazy unpersist is safe: connected_components localCheckpoints
-        # the labels, so the returned plan no longer reads the buckets
-        buckets.unpersist()
-        if banded is not None:
-            banded.unpersist()
+    multi-join job. At 100 TB the bucket window is the only heavy
+    shuffle; everything after is linear in |docs| + |edges|."""
+    kw = dict(text_col=text_col, id_col=id_col, num_hashes=num_hashes,
+              bands=bands, max_bucket_size=max_bucket_size, sigs=sigs)
+    seed = minhash_lsh_groups(df, **kw).select(
+        F.col(id_col).alias("node"), F.col("cluster_id").alias("component"))
+    return connected_components(minhash_lsh_star_edges(df, **kw),
+                                initial=seed,
+                                max_iterations=max_iterations,
+                                seeds_from_edges=True)
 
 
 def simhash_fingerprints(df: DataFrame, text_col: str = "text",
@@ -1062,7 +935,8 @@ def embedding_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
                             block_col: str | None = None) -> DataFrame:
     """Cosine >= threshold pairs. Exact self-join (optionally blocked on
     ``block_col`` to cut the pair space); the approximate scale path is
-    ``similarity.lsh_neardup_pairs``."""
+    ``similarity.lsh_neardup_pairs``. A pair with a zero vector scores
+    cosine 0, as the BLAS kernel's floored unit rows do."""
     from .similarity import dot_expr, with_norm
     v = with_norm(
         df.select(F.col(id_col).alias("_id"),
@@ -1073,8 +947,9 @@ def embedding_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
     cond = F.col("a._id") < F.col("b._id")
     if block_col:
         cond = cond & (F.col("a._blk") == F.col("b._blk"))
-    cos = dot_expr(F.col("a._v"), F.col("b._v")) / (F.col("a._n") *
-                                                    F.col("b._n"))
+    den = F.col("a._n") * F.col("b._n")
+    cos = F.when(den == 0, F.lit(0.0)).otherwise(
+        dot_expr(F.col("a._v"), F.col("b._v")) / den)
     return (a.join(F.broadcast(b), cond)
              .select(F.col("a._id").alias("id_a"),
                      F.col("b._id").alias("id_b"),
@@ -1285,7 +1160,6 @@ def dedup_keep_best(df: DataFrame, quality: Column | str | None = None,
                     id_col: str = "doc_id", text_col: str = "text",
                     num_hashes: int = 16, bands: int = 2,
                     max_bucket_size: int | None = 500,
-                    hash_fn: str = "md5",
                     sigs: DataFrame | None = None) -> DataFrame:
     """Near-dup dedup that KEEPS the best document of every duplicate
     cluster (instead of an arbitrary one): LSH groups -> per-cluster
@@ -1303,7 +1177,7 @@ def dedup_keep_best(df: DataFrame, quality: Column | str | None = None,
     groups = minhash_lsh_groups(df, id_col=id_col, text_col=text_col,
                                 num_hashes=num_hashes, bands=bands,
                                 max_bucket_size=max_bucket_size,
-                                hash_fn=hash_fn, sigs=sigs)
+                                sigs=sigs)
     lab = (df.join(groups, id_col, "left")
            .withColumn("cluster_id",
                        F.coalesce(F.col("cluster_id"), F.col(id_col)))
@@ -1348,7 +1222,6 @@ def decontaminate_bloom(df: DataFrame, benchmark: DataFrame,
 def lsh_bucket_state(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", num_hashes: int = 16,
                      bands: int = 2,
-                     hash_fn: str = "md5",
                      sigs: DataFrame | None = None) -> DataFrame:
     """The persistable LSH state for a growing corpus: one (id, band,
     band_hash) row per band per doc. Store it next to the corpus
@@ -1356,15 +1229,13 @@ def lsh_bucket_state(df: DataFrame, text_col: str = "text",
     batch only ever computes ITS OWN signatures. ``sigs``: precomputed
     signature arrays (the shared md5-minhash cache) to band instead of
     re-signing."""
-    return _banded(df, text_col, id_col, num_hashes, bands, hash_fn,
-                   sigs=sigs)
+    return _banded(df, text_col, id_col, num_hashes, bands, sigs)
 
 
 def lsh_incremental_matches(state: DataFrame, new_docs: DataFrame,
                             text_col: str = "text",
                             id_col: str = "doc_id",
                             num_hashes: int = 16, bands: int = 2,
-                            hash_fn: str = "md5",
                             max_bucket_size: int | None = None
                             ) -> DataFrame:
     """Incremental near-dup dedup — the daily-crawl pattern: band the
@@ -1390,8 +1261,7 @@ def lsh_incremental_matches(state: DataFrame, new_docs: DataFrame,
     Returns distinct (new id, existing id) collision pairs; a new doc
     absent from the output has no bucket collision with the old corpus.
     """
-    new_banded = _banded(new_docs, text_col, id_col, num_hashes, bands,
-                         hash_fn)
+    new_banded = _banded(new_docs, text_col, id_col, num_hashes, bands)
     old = state.select(F.col(id_col).alias("_old_id"), "band",
                        "band_hash")
     if max_bucket_size is None:

@@ -270,29 +270,28 @@ def fingerprint(col) -> Column:
     return F.md5(F.concat_ws(" ", toks))
 
 
-def rolling_hashes(col, k: int = 5, hash_fn: str = "xxhash64") -> Column:
+def rolling_hashes(col, k: int = 5) -> Column:
     """k-token shingle hashes (rolling window over the token array) —
     the shingle key used by the n-gram decontamination/contamination
     family. Array expression, no explode; the token array is let_bound
     (split once per row, not per shingle).
 
-    ``hash_fn``: every consumer uses the hashes only as EQUALITY keys
-    (anti-joins, membership flags) — the values never surface — so the
-    default is native ``xxhash64`` (a long; measured 1.4-1.6x faster
-    end-to-end at sf10 than md5, whose 32-char hex strings also bloat
-    the broadcast probe tables 4x). Collision envelope at 64 bits:
+    Every consumer uses the hashes only as EQUALITY keys (anti-joins,
+    membership flags) — the values never surface — so they are native
+    ``xxhash64`` longs (measured 1.4-1.6x faster end-to-end at sf10 than
+    md5, whose 32-char hex strings also bloat the broadcast probe tables
+    4x). Collision envelope at 64 bits:
     E[false matches] = corpus_grams x bench_grams / 2^64 — at a 100 TB
     corpus (~1e12 grams) against a 1e9-gram benchmark that is ~50
     spurious gram matches total, i.e. a ~1e-10 shift in a contamination
     fraction or ~dozens of over-dropped docs among billions; the
     tested-SF oracles (which join RAW gram strings) bound it at zero in
-    practice. Pass ``'md5'`` for the 128-bit hex form when exact
-    cross-engine hash reproducibility matters more than speed.
+    practice.
 
-    r13 (guide §1.2 per-task work): the xxhash64 form hashes each TOKEN
-    once and combines k fixed-width token-hash longs per gram —
-    replacing the per-gram ``concat_ws`` string build + variable-length
-    hash (each token's bytes were copied and hashed k times). Gram
+    Each TOKEN is hashed once and k fixed-width token-hash longs are
+    combined per gram — replacing the per-gram ``concat_ws`` string
+    build + variable-length hash (each token's bytes were copied and
+    hashed k times). Gram
     equality is preserved: tokens are single-space-split so they contain
     no spaces, making gram-string <-> token-sequence a bijection, and
     the sub-k tail gram's null-skip (``F.get`` past the end -> NULL,
@@ -304,14 +303,11 @@ def rolling_hashes(col, k: int = 5, hash_fn: str = "xxhash64") -> Column:
     def body(tk):
         n = F.size(tk)
         idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-        if hash_fn == "xxhash64":
-            return let_bound(
-                F.transform(tk, lambda t: F.xxhash64(t)),
-                lambda h: F.transform(
-                    idx, lambda i: F.xxhash64(
-                        *[F.get(h, i + j) for j in range(k)])))
-        return F.transform(
-            idx, lambda i: F.md5(gram_at(tk, i + 1, k)))
+        return let_bound(
+            F.transform(tk, lambda t: F.xxhash64(t)),
+            lambda h: F.transform(
+                idx, lambda i: F.xxhash64(
+                    *[F.get(h, i + j) for j in range(k)])))
     return let_bound(tokens(col), body)
 
 

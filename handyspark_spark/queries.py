@@ -1809,19 +1809,15 @@ SELECT DISTINCT bucket_min AS id_a, doc_id AS id_b
 FROM bm WHERE doc_id <> bucket_min
 """)
 def q_lsh_star_edges_recovered(spark, sf_dir):
-    """Hot-bucket recovery under oracle: star edges with an aggressive
-    cap (max_bucket_size=8 — at this SF many duplicate-clique buckets
-    exceed it) PLUS ``recover_hot_buckets=True``. Capped edges union
-    the join-wise hot-bucket star enumeration == the UNCAPPED star-edge
-    set, which the SQL oracle computes directly (per-bucket
-    (min, member) over every bucket, no cap). This is the 100 TB-
-    realistic configuration — bounded task memory with full closure —
-    value-checked end-to-end, not only equivalence-tested in pytest."""
+    """Uncapped star edges under oracle: (bucket_min, member) over EVERY
+    bucket, the hot duplicate-clique buckets included — the full-closure
+    skeleton, which the SQL oracle computes directly. The bucket-min
+    window streams each bucket through a spillable row buffer, so no cap
+    is needed to bound task memory; this is the 100 TB-realistic
+    configuration, value-checked end-to-end."""
     from .pipeline.dedup import minhash_lsh_star_edges
     df = _t(spark, sf_dir, "documents")
     return minhash_lsh_star_edges(df, num_hashes=16, bands=2,
-                                  max_bucket_size=8,
-                                  recover_hot_buckets=True,
                                   sigs=_sig_table(spark, sf_dir))
 
 @query("running_user_stats", """
@@ -2720,14 +2716,13 @@ def q_dedup_components(spark, sf_dir):
     min-label form exists for the corpus-scale path)."""
     from .pipeline.dedup import minhash_lsh_components
     df = _t(spark, sf_dir, "documents")
-    # fused path: ONE persisted bucket table feeds star edges (same
-    # transitive closure as the clique pairs, O(|bucket|) edges) AND the
-    # bucket-min seed labels, so the iterative loop usually needs a
-    # single convergence round; md5 signatures so DuckDB reproduces the
-    # exact bucketing (same basis as the lsh_star_edges oracle)
+    # one bucket-min window feeds the star edges (same transitive
+    # closure as the clique pairs, O(|bucket|) edges) AND the bucket-min
+    # seed labels, so the iterative loop usually needs a single
+    # convergence round; the md5 signature cache lets DuckDB reproduce
+    # the exact bucketing (same basis as the lsh_star_edges oracle)
     return minhash_lsh_components(df, num_hashes=16, bands=2,
                                   max_bucket_size=500,
-                                  hash_fn="md5",
                                   sigs=_sig_table(spark, sf_dir))
 
 
@@ -4620,15 +4615,16 @@ def q_shuffle_order(spark, sf_dir):
 # keep-best/leakage-split all rebuild the same md5-per-token signatures
 # of the same corpus). Sign once, content-addressed exactly like the ANN
 # indexes and the span/DSIR tables; every consumer passes sigs= and pays
-# a parquet read. (num_hashes, hash_fn) are value-changing, so they are
-# part of the fingerprint; DuckDB oracles recompute signatures from raw
-# text, so a stale cache fails the value gate loudly, cold AND warm.
+# a parquet read. num_hashes is value-changing, so it is part of the
+# fingerprint (``x md5`` names the token hash, kept so existing caches
+# still hit); DuckDB oracles recompute signatures from raw text, so a
+# stale cache fails the value gate loudly, cold AND warm.
 _SIG_TABLE_META: dict = {}
 
 
-def _sig_table(spark, sf_dir, num_hashes=16, hash_fn="md5"):
+def _sig_table(spark, sf_dir, num_hashes=16):
     from .pipeline.index_cache import IndexCache
-    key = (id(spark), sf_dir, num_hashes, hash_fn)
+    key = (id(spark), sf_dir, num_hashes)
     got = _SIG_TABLE_META.get(key)
     if got is None:
         from .pipeline.dedup import minhash_signature_arrays
@@ -4636,11 +4632,10 @@ def _sig_table(spark, sf_dir, num_hashes=16, hash_fn="md5"):
         rows = df.count()
         cache = IndexCache("hsq_minhash_idx")
         fp = (f"{_dataset_fingerprint(sf_dir, 'documents')}"
-              f"-{num_hashes}x{hash_fn}")
+              f"-{num_hashes}xmd5")
         path = f"{cache.dir_for(rows, fp)}/sigs.parquet"
         if not cache.is_committed(rows, fp):
-            (minhash_signature_arrays(df, num_hashes=num_hashes,
-                                      hash_fn=hash_fn)
+            (minhash_signature_arrays(df, num_hashes=num_hashes)
              .write.mode("overwrite").parquet(path))
             cache.commit(rows, fp)
         else:

@@ -124,7 +124,6 @@ def maintain_lsh_state(stream: DataFrame, state_path: str,
                        checkpoint_path: str,
                        text_col: str = "text", id_col: str = "doc_id",
                        num_hashes: int = 16, bands: int = 2,
-                       hash_fn: str = "md5",
                        trigger_available_now: bool = True,
                        committer: DirCommitter | None = None):
     """Streaming MinHash-LSH dedup gate — the text-corpus sibling of
@@ -163,8 +162,7 @@ def maintain_lsh_state(stream: DataFrame, state_path: str,
             return                      # replayed batch: already appended
         spark = batch.sparkSession
         banded = lsh_bucket_state(batch, text_col, id_col,
-                                  num_hashes=num_hashes, bands=bands,
-                                  hash_fn=hash_fn)
+                                  num_hashes=num_hashes, bands=bands)
         accepted = _accepted_batch_paths(state_path, committer)
         if accepted:
             state = (spark.read.option("basePath", state_path)

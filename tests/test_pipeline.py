@@ -422,12 +422,6 @@ def _chunk_crossing_corpus(spark):
          "embedding": [r.tolist() for r in X]}))
 
 
-def _nonzero(df):
-    """The expression reference divides by the norm, so a zero vector
-    raises DIVIDE_BY_ZERO there; the kernel scores it 0 (no pairs)."""
-    return df.filter(F.exists("embedding", lambda v: v != 0))
-
-
 def test_blas_blocked_matches_exact_self_join(spark, emb):
     """The blocked distributed BLAS path must emit exactly the same pair
     set + cosines as the expression-based exact self-join, for any block
@@ -439,8 +433,7 @@ def test_blas_blocked_matches_exact_self_join(spark, emb):
     for sub, thr in ((emb.limit(300), 0.4),
                      (_chunk_crossing_corpus(spark), 0.9)):
         exact = {(r.id_a, r.id_b): round(r.cosine, 6) for r in
-                 embedding_neardup_pairs(_nonzero(sub),
-                                         threshold=thr).collect()}
+                 embedding_neardup_pairs(sub, threshold=thr).collect()}
         assert exact
         for blocks in (1, 5):
             got = {(r.id_a, r.id_b): round(r.cosine, 6) for r in
@@ -458,7 +451,7 @@ def test_semdedup_chunked_cell_matches_expression_reference(spark):
     from handyspark_spark.pipeline.similarity import (semdedup_pairs,
                                                       sign_cell_expr)
     df = _chunk_crossing_corpus(spark)
-    cells = _nonzero(df).withColumn(
+    cells = df.withColumn(
         "cell", sign_cell_expr(F.col("embedding"), 2))
     exact = {(r.id_a, r.id_b): r.cosine for r in
              embedding_neardup_pairs(cells, threshold=0.9,
@@ -958,19 +951,6 @@ def test_star_edges_same_closure_as_clique_pairs(docs):
     b = {(r.node, r.component)
          for r in connected_components(star).collect()}
     assert a == b
-
-
-def test_star_edges_xxhash_path_valid_minhash(docs):
-    """The xxhash64 fast path must produce a working minhash (32-bit
-    masked base so the XOR permutations differ per seed) — clusters are
-    hash-family-dependent but coverage must be comparable to md5's."""
-    from handyspark_spark.pipeline.dedup import minhash_lsh_star_edges
-    kw = dict(num_hashes=16, bands=2, max_bucket_size=500)
-    md5_nodes = (minhash_lsh_star_edges(docs, hash_fn="md5", **kw)
-                 .select("id_b").distinct().count())
-    xx_nodes = (minhash_lsh_star_edges(docs, hash_fn="xxhash64", **kw)
-                .select("id_b").distinct().count())
-    assert xx_nodes > 0.8 * md5_nodes
 
 
 def test_pack_sequences_invariants(docs):
@@ -1734,8 +1714,8 @@ def test_adc_fp32_matches_fp64_topk(spark, tables):
 
 def test_hot_bucket_recovery_reaches_uncapped_closure(spark):
     """A bucket larger than max_bucket_size is dropped by the capped
-    path; with recover_hot_buckets=True its members are reconnected via
-    join-wise star edges and the components equal the UNCAPPED run."""
+    path; the uncapped star edges keep it, and the components of each
+    equal the closure of its own star edges."""
     from handyspark_spark.pipeline.dedup import (connected_components,
                                                  minhash_lsh_components,
                                                  minhash_lsh_star_edges)
@@ -1753,24 +1733,82 @@ def test_hot_bucket_recovery_reaches_uncapped_closure(spark):
     uncapped = minhash_lsh_star_edges(docs, **kw)
     assert capped.count() < uncapped.count()
 
-    recovered = minhash_lsh_star_edges(docs, max_bucket_size=cap,
-                                       recover_hot_buckets=True, **kw)
-
     def comps(pairs):
         return {r.node: r.component for r in
                 connected_components(pairs).collect()}
 
-    assert comps(recovered) == comps(uncapped)
-
-    # end-to-end: seeded components with recovery == uncapped closure
+    # end-to-end: seeded components == the closure of the same edges
     a = {r.node: r.component for r in
-         minhash_lsh_components(docs, max_bucket_size=cap,
-                                recover_hot_buckets=True, **kw).collect()}
-    b = {r.node: r.component for r in
          minhash_lsh_components(docs, **kw).collect()}
-    assert a == b
+    assert a == comps(uncapped)
+    assert {r.node: r.component for r in
+            minhash_lsh_components(docs, max_bucket_size=cap,
+                                   **kw).collect()} == comps(capped)
     # and the boilerplate cluster is actually one component
     assert len({a[i] for i in range(30) if i in a}) <= 3
+
+
+@pytest.fixture(scope="module")
+def hot_docs(spark, docs):
+    """The fixture corpus plus one hot bucket (40 identical docs) and a
+    5-doc cluster whose first id repeats on two identical rows: 6 rows
+    but 5 distinct ids, so a cap of 5 keeps it only if it counts ids."""
+    hot = "terms of service apply to all users of this site"
+    five = "shared boilerplate footer copyright all rights reserved"
+    extra = ([(10_000 + i, hot) for i in range(40)]
+             + [(20_000 + i, five) for i in range(5)] + [(20_000, five)])
+    return docs.select("doc_id", "text").unionByName(
+        spark.createDataFrame(extra, "doc_id long, text string"))
+
+
+@pytest.mark.parametrize("cap", [None, 5, 500])
+def test_lsh_cluster_family_matches_bucket_reference(hot_docs, cap):
+    """Star edges, groups and components all derive from one bucket-min
+    plan; each equals a pure-Python reference built from the
+    ``lsh_bucket_state`` rows, the cap counted in distinct ids. The
+    components are checked on both physical paths (driver union-find
+    and the seeded distributed loop)."""
+    from handyspark_spark.pipeline.dedup import (
+        connected_components, lsh_bucket_state, minhash_lsh_components,
+        minhash_lsh_groups, minhash_lsh_star_edges)
+    kw = dict(num_hashes=16, bands=2, max_bucket_size=cap)
+    buckets: dict = {}
+    for r in lsh_bucket_state(hot_docs, num_hashes=16, bands=2).collect():
+        buckets.setdefault((r.band, r.band_hash), set()).add(r.doc_id)
+    kept = [b for b in buckets.values() if cap is None or len(b) <= cap]
+    assert any(len(b) == 40 for b in kept) == (cap != 5)
+    assert any(len(b) == 5 for b in kept)
+    want_star = {(min(b), x) for b in kept for x in b if x != min(b)}
+    want_groups = {i: i for b in buckets.values() for i in b}
+    for b in kept:
+        for i in b:
+            want_groups[i] = min(want_groups[i], min(b))
+    # closure by min-label propagation to a fixpoint over the star edges
+    want_comp = {x: x for e in want_star for x in e}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in want_star:
+            m = min(want_comp[a], want_comp[b])
+            if (want_comp[a], want_comp[b]) != (m, m):
+                want_comp[a] = want_comp[b] = m
+                changed = True
+
+    star = minhash_lsh_star_edges(hot_docs, **kw)
+    assert {(r.id_a, r.id_b) for r in star.collect()} == want_star
+    groups = minhash_lsh_groups(hot_docs, **kw)
+    got_groups = groups.collect()
+    assert len(got_groups) == len(want_groups)
+    assert {r.doc_id: r.cluster_id for r in got_groups} == want_groups
+    assert {r.node: r.component for r in
+            minhash_lsh_components(hot_docs, **kw).collect()} == want_comp
+    seed = groups.select(F.col("doc_id").alias("node"),
+                         F.col("cluster_id").alias("component"))
+    assert {r.node: r.component for r in
+            connected_components(star, initial=seed,
+                                 small_graph_threshold=0,
+                                 seeds_from_edges=True).collect()} == \
+        want_comp
 
 
 # ---------------------------------------------------------------------------
@@ -2035,18 +2073,18 @@ def test_snap_sum6_exact_integer_division_at_scale(spark):
 
 
 def test_star_edges_recovery_query_matches_uncapped(tables, spark):
-    """The driver query's configuration (cap=8 + recovery) equals the
-    uncapped star-edge set — the identity the SQL oracle relies on."""
+    """The registry query runs uncapped: at this SF a cap of 8 drops hot
+    duplicate-clique buckets, so the capped star edges are a strict
+    subset of the uncapped set the SQL oracle computes."""
     from handyspark_spark.pipeline.dedup import minhash_lsh_star_edges
     docs = tables["documents"]
-    rec = {(r.id_a, r.id_b) for r in
+    cap = {(r.id_a, r.id_b) for r in
            minhash_lsh_star_edges(docs, num_hashes=16, bands=2,
-                                  max_bucket_size=8,
-                                  recover_hot_buckets=True).collect()}
+                                  max_bucket_size=8).collect()}
     unc = {(r.id_a, r.id_b) for r in
            minhash_lsh_star_edges(docs, num_hashes=16,
                                   bands=2).collect()}
-    assert rec == unc and len(unc) > 0
+    assert cap < unc and len(cap) > 0
 
 
 def test_ann_query_row_cap_raises(emb):
@@ -2763,13 +2801,12 @@ def test_lsh_family_precomputed_sigs_identical(spark, docs):
     assert rows(minhash_lsh_groups(docs, num_hashes=16, bands=2,
                                    sigs=sigs)) == \
         rows(minhash_lsh_groups(docs, num_hashes=16, bands=2))
-    assert rows(minhash_lsh_star_edges(docs, num_hashes=16, bands=2,
-                                       max_bucket_size=8,
-                                       recover_hot_buckets=True,
-                                       sigs=sigs)) == \
-        rows(minhash_lsh_star_edges(docs, num_hashes=16, bands=2,
-                                    max_bucket_size=8,
-                                    recover_hot_buckets=True))
+    for cap in (8, None):
+        assert rows(minhash_lsh_star_edges(docs, num_hashes=16, bands=2,
+                                           max_bucket_size=cap,
+                                           sigs=sigs)) == \
+            rows(minhash_lsh_star_edges(docs, num_hashes=16, bands=2,
+                                        max_bucket_size=cap))
     assert rows(dedup_keep_best(docs, num_hashes=16, bands=2,
                                 max_bucket_size=None, sigs=sigs)
                 .select("doc_id", "cluster_id", "quality")) == \

@@ -56,8 +56,7 @@ def main():
 
     df = load_table(spark, sf_dir, "documents")
     labels = minhash_lsh_components(df, num_hashes=16, bands=2,
-                                    max_bucket_size=500,
-                                    hash_fn="md5").persist()
+                                    max_bucket_size=500).persist()
     edges = minhash_lsh_star_edges(df, num_hashes=16, bands=2,
                                    max_bucket_size=500)
 
