@@ -358,21 +358,3 @@ def toHandy(df: DataFrame) -> HandyFrame:
     """Enter the wrapper (ref dataframe.py:25-30)."""
     return HandyFrame(df)
 
-
-def install() -> None:
-    """Monkey-patch ``DataFrame.toHandy``/``notHandy`` like the reference
-    (dataframe.py:25-34). Called from package __init__."""
-    def _toHandy(self):
-        return HandyFrame(self)
-
-    def _notHandy(self):
-        return self
-
-    DataFrame.toHandy = _toHandy
-    DataFrame.notHandy = _notHandy
-    try:  # classic concrete class on PySpark 4.x
-        from pyspark.sql.classic.dataframe import DataFrame as CDataFrame
-        CDataFrame.toHandy = _toHandy
-        CDataFrame.notHandy = _notHandy
-    except ImportError:
-        pass

@@ -17,6 +17,10 @@ single-partition window even when scores are fully continuous
 (|distinct| ~ |rows|). ``score_bins`` additionally pre-bins scores to a
 fixed precision when a smaller curve is wanted.
 
+The rates divide by the class totals P and N with ``try_divide``: when
+one class is absent (a one-class or one-row input) its rate is NULL, as
+in DuckDB, instead of an ANSI ``DIVIDE_BY_ZERO``.
+
 ``areaUnderROC`` is NOT a projection of the curve: it has its own
 single-branch plan (``operators.rank.ranged_partition_aggs``: grouped
 scores -> range exchange -> running tp inside each range partition ->
@@ -118,8 +122,8 @@ class BinaryClassificationMetrics:
     def roc(self) -> DataFrame:
         """(fpr, tpr) with (0,0) prepended and (1,1) appended."""
         c = self._curve().select(
-            (F.col("fp") / F.col("N")).alias("fpr"),
-            (F.col("tp") / F.col("P")).alias("tpr"),
+            F.try_divide("fp", "N").alias("fpr"),
+            F.try_divide("tp", "P").alias("tpr"),
             "score")
         spark = c.sparkSession
         ends = _const_rows(spark, ["fpr", "tpr", "score"],
@@ -131,7 +135,7 @@ class BinaryClassificationMetrics:
     def pr(self) -> DataFrame:
         """(recall, precision) with (0, p@lowest-recall) prepended."""
         c = self._curve().select(
-            (F.col("tp") / F.col("P")).alias("recall"),
+            F.try_divide("tp", "P").alias("recall"),
             (F.col("tp") / (F.col("tp") + F.col("fp"))).alias("precision"),
             "score")
         first = c.orderBy(F.desc("score")).first()
@@ -149,12 +153,12 @@ class BinaryClassificationMetrics:
     def recallByThreshold(self) -> DataFrame:
         return self._curve().select(
             F.col("score").alias("threshold"),
-            (F.col("tp") / F.col("P")).alias("recall"))
+            F.try_divide("tp", "P").alias("recall"))
 
     def fMeasureByThreshold(self, beta: float = 1.0) -> DataFrame:
         b2 = beta * beta
         p = F.col("tp") / (F.col("tp") + F.col("fp"))
-        r = F.col("tp") / F.col("P")
+        r = F.try_divide("tp", "P")
         # mllib convention: F = 0 when precision + recall == 0 (tp == 0)
         fm = F.when(b2 * p + r > 0,
                     (1 + b2) * p * r / (b2 * p + r)).otherwise(F.lit(0.0))
@@ -166,8 +170,8 @@ class BinaryClassificationMetrics:
         trailing (0., 1., 1., 0.) row (ref evaluation.py:60-75)."""
         c = self._curve().select(
             F.col("score").alias("threshold"),
-            (F.col("fp") / F.col("N")).alias("fpr"),
-            (F.col("tp") / F.col("P")).alias("recall"),
+            F.try_divide("fp", "N").alias("fpr"),
+            F.try_divide("tp", "P").alias("recall"),
             (F.col("tp") / (F.col("tp") + F.col("fp"))).alias("precision"))
         spark = c.sparkSession
         tail = _const_rows(spark, ["threshold", "fpr", "recall",

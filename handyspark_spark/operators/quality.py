@@ -13,6 +13,7 @@ passed) — joinable, storable, diffable across runs.
 """
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -122,8 +123,11 @@ def constraint_report(df: DataFrame, check: Check,
     for p in parts[1:]:
         metrics = metrics.unionByName(p)
 
+    i_, k_, col_, t_, d_ = zip(*rows)
     meta = spark.createDataFrame(
-        [(str(i), k, col, float(t), d) for i, k, col, t, d in rows],
+        pa.table({"_i": [str(i) for i in i_], "constraint": k_,
+                  "column": col_, "threshold": [float(t) for t in t_],
+                  "_dir": d_}),
         "_i string, constraint string, column string, threshold double, "
         "_dir string")
     out = metrics.join(F.broadcast(meta), "_i")

@@ -22,6 +22,14 @@ Long-form (one row per vector component) keeps the schema fixed across
 dim/m/nbits and trivially reassembles into the numpy matrices the
 search kernels broadcast.
 
+Both directions stay off the Python worker pool. ``save`` builds each
+long-form table on the driver as a ``pyarrow.Table`` (``np.indices``
+plus ``ravel``), which Spark takes as a local relation — no pickled
+``parallelize`` RDD and no Python worker — and writes it as one file
+through ``coalesce(1)``, without a shuffle. ``load`` reads each file with
+``toArrow()`` and scatters the values into the matrix in one numpy
+assignment.
+
 Reference parity note: the reference (dvgodoy/handyspark) has no ANN at
 all — this module is part of the beyond-reference training-data
 pipeline surface; the save/load contract mirrors ml/base.py's
@@ -32,6 +40,7 @@ from __future__ import annotations
 import json
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,9 +52,9 @@ __all__ = ["IVFIndex", "PQIndex", "IVFPQIndex"]
 
 
 def _write_meta(spark: SparkSession, path: str, kind: str, params: dict):
-    (spark.createDataFrame([(kind, json.dumps(params))],
-                           "kind string, params string")
-     .repartition(1).write.mode("overwrite").parquet(f"{path}/meta.parquet"))
+    tbl = pa.table({"kind": [kind], "params": [json.dumps(params)]})
+    (spark.createDataFrame(tbl, "kind string, params string")
+     .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta.parquet"))
 
 
 def _read_meta(spark: SparkSession, path: str, expect_kind: str) -> dict:
@@ -64,17 +73,17 @@ _BOOKS = ("subspace", "code", "pos")     # codebooks (subspace, code, pos, val)
 
 def _write_long(spark: SparkSession, path: str, M: np.ndarray, axes):
     """One (axes..., val) row per matrix entry, one parquet file."""
-    rows = [tuple(int(i) for i in ix) + (float(v),)
-            for ix, v in np.ndenumerate(M)]
+    ix = np.indices(M.shape, dtype=np.int32).reshape(M.ndim, -1)
+    tbl = pa.table({**dict(zip(axes, ix)), "val": M.ravel()})
     schema = ", ".join(f"{a} int" for a in axes) + ", val double"
-    (spark.createDataFrame(rows, schema)
-     .repartition(1).write.mode("overwrite").parquet(path))
+    (spark.createDataFrame(tbl, schema)
+     .coalesce(1).write.mode("overwrite").parquet(path))
 
 
 def _read_long(spark: SparkSession, path: str, shape, axes) -> np.ndarray:
+    tbl = spark.read.parquet(path).toArrow()
     M = np.zeros(shape, dtype=np.float64)
-    for r in spark.read.parquet(path).collect():
-        M[tuple(r[a] for a in axes)] = r["val"]
+    M[tuple(tbl[a].to_numpy() for a in axes)] = tbl["val"].to_numpy()
     return M
 
 

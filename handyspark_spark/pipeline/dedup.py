@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -1081,16 +1082,19 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         # ran (seeds_from_edges callers assert same-universe seeds).
         probe = edges.limit(small_graph_threshold + 1).count()
         if probe <= small_graph_threshold:
-            rows = edges.collect()
+            et = edges.toArrow()
             comp = _components_unionfind(
-                (r["src"], r["dst"]) for r in rows)
+                zip(et["src"].to_pylist(), et["dst"].to_pylist()))
             edges.unpersist()
-            spark = pairs.sparkSession
-            out = spark.createDataFrame(
-                list(comp.items()),
-                schema=pairs.select(F.col(id_a).alias("node"),
-                                    F.col(id_a).alias("component")).schema)
-            return out
+            # an Arrow table enters Spark as a local relation: no
+            # pickled RDD, no Python worker
+            out = pa.table({"node": pa.array(list(comp), et["src"].type),
+                            "component": pa.array(list(comp.values()),
+                                                  et["src"].type)})
+            return pairs.sparkSession.createDataFrame(
+                out, schema=pairs.select(
+                    F.col(id_a).alias("node"),
+                    F.col(id_a).alias("component")).schema)
     nodes = edges.select(F.col("src").alias("node")).distinct()
     if initial is not None:
         labels = (nodes.join(initial.select(

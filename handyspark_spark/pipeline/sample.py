@@ -318,8 +318,9 @@ def dsir_weights(df: DataFrame, target: DataFrame | None,
     # the ratio table is <= ``buckets`` (8k) rows: materialize it as a
     # local frame so p/q can be UNPERSISTED here instead of squatting in
     # the cache for the session (the returned plan no longer references
-    # them), and the broadcast ships a literal relation, not a plan
-    ratio = df.sparkSession.createDataFrame(ratio.collect(),
+    # them), and the broadcast ships a literal relation, not a plan.
+    # It travels as an Arrow table both ways, so no Python worker runs.
+    ratio = df.sparkSession.createDataFrame(ratio.toArrow(),
                                             schema=ratio.schema)
     p.unpersist()
     q.unpersist()

@@ -187,24 +187,28 @@ def lsh_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
                  .filter(F.col("cosine") >= threshold))
 
 
+def _query_cap_error(op: str, max_query_rows: int) -> ValueError:
+    return ValueError(
+        f"{op} holds the query frame driver/broadcast-side (contract: "
+        f"queries are small) and it exceeds "
+        f"max_query_rows={max_query_rows}; batch the query side, use "
+        f"brute_force_topk / neardup_pairs_blas for frame-vs-frame "
+        f"search, or pass max_query_rows=None to force")
+
+
 def _cap_query_rows(queries: DataFrame, max_query_rows: int | None,
                     op: str) -> None:
-    """Loud guard for the "queries are small" contract: ``ivfpq_topk``
-    collects the query frame to build driver-side LUTs and ``ivf_topk``
-    broadcasts it — both are bounded by |queries|, and a caller passing
-    a corpus-sized frame would melt the driver/executors silently.
-    Limit-probed (reads at most cap+1 rows); pass
-    ``max_query_rows=None`` to opt out."""
+    """Loud guard for the "queries are small" contract of ``ivf_topk``,
+    which broadcasts the query frame: a caller passing a corpus-sized
+    frame would melt the executors silently. Limit-probed (reads at
+    most cap+1 rows); pass ``max_query_rows=None`` to opt out.
+    ``ivfpq_topk`` collects the queries anyway and checks the same cap
+    on the collected table instead."""
     if max_query_rows is None:
         return
     n = queries.limit(max_query_rows + 1).count()
     if n > max_query_rows:
-        raise ValueError(
-            f"{op} holds the query frame driver/broadcast-side (contract: "
-            f"queries are small) and it exceeds "
-            f"max_query_rows={max_query_rows}; batch the query side, use "
-            f"brute_force_topk / neardup_pairs_blas for frame-vs-frame "
-            f"search, or pass max_query_rows=None to force")
+        raise _query_cap_error(op, max_query_rows)
 
 
 def _list_rows(arr, col: str, dim: int | None = None) -> np.ndarray:
@@ -520,12 +524,11 @@ def pq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
             dtype: str = "float32",
             max_query_rows: int | None = 100_000) -> DataFrame:
     """Flat PQ/ADC approximate top-k: ``ivfpq_topk`` over one all-zero
-    cell, so the scan, tie, ``rerank`` and ``dtype`` contracts are
-    ``ivfpq_topk``'s. Without ``books`` the codebooks are fitted inline
-    by ``pq_codebooks``; ``encoded`` is a ``pq_encode`` output carrying
-    (``id_col``, pq_code) and requires the ``books`` it was encoded
-    with."""
-    _cap_query_rows(queries, max_query_rows, "pq_topk")
+    cell, so the scan, tie, ``rerank``, ``dtype`` and ``max_query_rows``
+    contracts are ``ivfpq_topk``'s. Without ``books`` the codebooks are
+    fitted inline by ``pq_codebooks``; ``encoded`` is a ``pq_encode``
+    output carrying (``id_col``, pq_code) and requires the ``books`` it
+    was encoded with."""
     if encoded is not None and books is None:
         raise ValueError(
             "pq_topk(encoded=...) requires the frozen books= the codes "
@@ -539,7 +542,8 @@ def pq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     return ivfpq_topk(df, queries, k=k, nprobe=1, vec_col=vec_col,
                       id_col=id_col, rerank=rerank,
                       centroids=_zero_cell(books), books=books,
-                      encoded=encoded, dtype=dtype, max_query_rows=None)
+                      encoded=encoded, dtype=dtype,
+                      max_query_rows=max_query_rows)
 
 
 def _exact_rerank(df: DataFrame, queries: DataFrame, shortlist: DataFrame,
@@ -704,13 +708,24 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     3.44s -> 2.30s, IVF-PQ 2.53s -> 1.89s median, identical top-k);
     quantization error already dwarfs fp32 rounding and the rerank
     rescores in exact fp64 cosine. Pass 'float64' for the bit-stable
-    shortlist the exported-codebook DuckDB oracles pin."""
-    _cap_query_rows(queries, max_query_rows, "ivfpq_topk")
+    shortlist the exported-codebook DuckDB oracles pin.
+
+    The queries are read ONCE, as one Arrow table of at most
+    ``max_query_rows + 1`` rows; more rows than the cap raise a
+    ``ValueError`` (``max_query_rows=None`` lifts the cap)."""
     if encoded is not None and (centroids is None or books is None):
         raise ValueError(
             "ivfpq_topk(encoded=...) requires the frozen centroids= and "
             "books= the codes were encoded with — refitting here would "
             "silently mismatch the stored codes")
+    _idt = df.schema[id_col].dataType
+    q = queries.select(F.col(id_col).cast(_idt).alias("query_id"),
+                       F.col(vec_col).cast("array<double>").alias("_q"))
+    if max_query_rows is not None:
+        q = q.limit(max_query_rows + 1)
+    qt = q.toArrow()
+    if max_query_rows is not None and qt.num_rows > max_query_rows:
+        raise _query_cap_error("ivfpq_topk", max_query_rows)
     if centroids is None or books is None:
         centroids, books = ivfpq_fit(
             df, n_centroids, m, nbits, sample_n,
@@ -727,7 +742,6 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     # id fields keep the input id column's type (string/int/long ids all
     # round-trip; a hardcoded long would corrupt non-long ids): both
     # sides are cast to it, and the scan gathers ids with pc.take
-    _idt = df.schema[id_col].dataType
     enc = encoded.select(F.col(id_col).cast(_idt).alias("neighbor_id"),
                          "cell", "pq_code")
     # The ADC scan's parallelism must come from the CLUSTER, not from
@@ -742,9 +756,6 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     if enc.rdd.getNumPartitions() < sc.defaultParallelism:
         enc = enc.repartition(sc.defaultParallelism)
 
-    qt = (queries.select(F.col(id_col).cast(_idt).alias("query_id"),
-                         F.col(vec_col).cast("array<double>").alias("_q"))
-          .toArrow())
     if not qt.num_rows:           # no queries: same schema, no rows
         enc = enc.limit(0)
     qids = qt["query_id"].combine_chunks()

@@ -12,6 +12,7 @@ Conventions (driver contract, see __spark_entry__.py):
 """
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,6 +64,12 @@ def _t(spark, sf_dir, name) -> DataFrame:
     if df is None:
         memo[(sf_dir, name)] = df = load_table(spark, sf_dir, name)
     return df
+
+
+def _local(spark, schema: str, **cols) -> DataFrame:
+    """Driver-computed result columns as a frame. An Arrow table enters
+    Spark as a local relation: no pickled RDD, no Python worker."""
+    return spark.createDataFrame(pa.table(cols), schema)
 
 
 def _t_invalidate(spark) -> None:
@@ -1309,7 +1316,8 @@ def q_auc_roc(spark, sf_dir):
     curve = m.roc().select(F.round("fpr", 6).alias("fpr"),
                            F.round("tpr", 6).alias("tpr"))
     from pyspark.sql import Window
-    w = Window.orderBy("fpr", "tpr")
+    # NULLs (a rate of an absent class) sort last, as DuckDB orders them
+    w = Window.orderBy(F.asc_nulls_last("fpr"), F.asc_nulls_last("tpr"))
     lagged = curve.select(
         "fpr", "tpr",
         F.lag("fpr").over(w).alias("pfpr"),
@@ -1357,8 +1365,8 @@ def q_ttest_welch(spark, sf_dir):
     df = _t(spark, sf_dir, "customer")
     pdf = ttest(df, "c_acctbal", "c_mktsegment")
     pdf = pdf.assign(t_stat=pdf.t_stat.round(6), dof=pdf.dof.round(4))
-    return spark.createDataFrame(
-        pdf[["group_1", "group_2", "t_stat", "dof"]])
+    return spark.createDataFrame(pa.Table.from_pandas(
+        pdf[["group_1", "group_2", "t_stat", "dof"]], preserve_index=False))
 
 
 @query("ks_uniform", """
@@ -1377,8 +1385,8 @@ def q_ks_uniform(spark, sf_dir):
     from .operators.stats import ks_test
     df = _t(spark, sf_dir, "events")
     res = ks_test(df, "value", dist="uniform")
-    return spark.createDataFrame([(round(res["statistic"], 6),)],
-                                 "ks_stat double")
+    return _local(spark, "ks_stat double",
+                  ks_stat=[round(res["statistic"], 6)])
 
 
 @query("ks_two_sample", """
@@ -1400,8 +1408,7 @@ def q_ks_two_sample(spark, sf_dir):
     df = _t(spark, sf_dir, "events").withColumn(
         "_coh", (F.col("user_id") % 2 == 0))
     res = ks_2samp(df, "value", "_coh", True, False)
-    return spark.createDataFrame([(round(res["statistic"], 6),)],
-                                 "ks2 double")
+    return _local(spark, "ks2 double", ks2=[round(res["statistic"], 6)])
 
 
 @query("chi2_independence", """
@@ -1424,8 +1431,8 @@ def q_chi2_independence(spark, sf_dir):
     from .operators.stats import chi2_independence
     df = _t(spark, sf_dir, "orders")
     res = chi2_independence(df, "o_orderstatus", "o_orderpriority")
-    return spark.createDataFrame(
-        [(round(res["statistic"], 4), res["dof"])], "chi2 double, dof long")
+    return _local(spark, "chi2 double, dof long",
+                  chi2=[round(res["statistic"], 4)], dof=[res["dof"]])
 
 
 # ---------------------------------------------------------------------------
@@ -2335,8 +2342,8 @@ def q_ks_exponential(spark, sf_dir):
     from .operators.stats import ks_test
     df = _t(spark, sf_dir, "lineitem")
     res = ks_test(df, "l_quantity", dist="exponential", params=(25.0,))
-    return spark.createDataFrame([(round(res["statistic"], 6),)],
-                                 "ks_stat double")
+    return _local(spark, "ks_stat double",
+                  ks_stat=[round(res["statistic"], 6)])
 
 
 @query("simhash_pairs", """

@@ -140,6 +140,43 @@ def test_auc_undefined_raises_named_error(spark, rows):
         _auc(df)
 
 
+@pytest.mark.parametrize("rows", [
+    [(0.3, 1.0), (0.9, 1.0), (0.1, 1.0)],        # positives only
+    [(0.3, 0.0), (0.9, 0.0)],                    # negatives only
+    [(0.5, 1.0)],                                # one row
+])
+def test_one_class_curves_have_null_rates(spark, rows):
+    """With one class absent, the rate over that class is NULL (DuckDB's
+    ``x / 0.0``), not an ANSI DIVIDE_BY_ZERO, in every curve frame."""
+    import duckdb
+    from handyspark_spark.ml.evaluation import BinaryClassificationMetrics
+    con = duckdb.connect()
+    con.execute("CREATE TABLE s(score DOUBLE, label DOUBLE)")
+    con.executemany("INSERT INTO s VALUES (?, ?)", rows)
+    exp = con.execute("""
+        WITH g AS (SELECT score, SUM(label) pos, SUM(1 - label) neg
+                   FROM s GROUP BY score),
+        c AS (SELECT score, SUM(pos) OVER (ORDER BY score DESC) tp,
+                     SUM(neg) OVER (ORDER BY score DESC) fp FROM g),
+        t AS (SELECT SUM(label) P, SUM(1 - label) N FROM s)
+        SELECT score, fp / N, tp / P, tp / (tp + fp) FROM c, t
+        ORDER BY score DESC""").fetchall()
+    df = spark.createDataFrame(rows, "score double, label double")
+    m = BinaryClassificationMetrics(df, "score", "label")
+    got = [tuple(r) for r in m.getMetricsByThreshold().collect()]
+    assert got[-1] == (0.0, 1.0, 1.0, 0.0)
+    assert sorted(got[:-1], key=lambda r: -r[0]) == exp
+    roc = [tuple(r) for r in m.roc().collect()]
+    assert roc == [(0.0, 0.0)] + [(e[1], e[2]) for e in exp] + [(1.0, 1.0)]
+    rec = {r.threshold: r.recall for r in m.recallByThreshold().collect()}
+    assert rec == {e[0]: e[2] for e in exp}
+    assert len(m.pr().collect()) == len(exp) + 1
+    # F is 0 where recall is NULL (the mllib tp == 0 convention)
+    fm = {r.threshold: r.f_measure
+          for r in m.fMeasureByThreshold().collect()}
+    assert all(fm[e[0]] == 0.0 for e in exp if e[2] is None)
+
+
 def test_auc_all_scores_tied_is_half(spark):
     rows = [(0.4, float(i % 3 == 0)) for i in range(30)]
     assert _trapz_auc(*zip(*rows)) == 0.5

@@ -1627,6 +1627,64 @@ def test_ivfpq_index_save_load_roundtrip(spark, tables, tmp_path):
         PQIndex.load(spark, str(tmp_path / "ivfpq"))
 
 
+def _sql_plans(spark, fn):
+    """Physical-plan descriptions of the SQL executions ``fn`` starts,
+    read from the SQL status store (execution ids are dense)."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus.waitUntilEmpty()
+    ex = store.executionsList()
+    hw = ex.last().executionId() if ex.nonEmpty() else -1
+    fn()
+    bus.waitUntilEmpty()
+    plans, i = [], hw + 1
+    while store.execution(i).isDefined():
+        plans.append(store.execution(i).get().physicalPlanDescription())
+        i += 1
+    return plans
+
+
+def test_ann_artifacts_keep_schemas_and_roundtrip_bit_identical(
+        spark, tables, tmp_path):
+    """The artifact parquet schemas the DuckDB ANN oracles read stay
+    fixed, load returns the saved matrices bit for bit, and the save
+    runs no Python-RDD scan: its frames enter Spark as Arrow tables."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+    from handyspark_spark.pipeline.ann_index import IVFPQIndex, PQIndex
+    df = tables["embeddings"]
+    idx = IVFPQIndex.fit(df, n_centroids=8, m=8, nbits=4, sample_n=256)
+    path = str(tmp_path / "ivfpq")
+    plans = _sql_plans(spark, lambda: idx.save(path, spark))
+    assert plans and not any("ExistingRDD" in p for p in plans)
+    assert all("LocalTableScan" in p for p in plans)
+    pq_idx = PQIndex(idx.books)
+    pq_idx.save(str(tmp_path / "pq"), spark)
+
+    def names_types(p):
+        sch = pq.read_table(p).schema
+        return [(f.name, str(f.type)) for f in sch]
+    books = [("subspace", "int32"), ("code", "int32"), ("pos", "int32"),
+             ("val", "double")]
+    assert names_types(f"{path}/meta.parquet") == [("kind", "string"),
+                                                   ("params", "string")]
+    assert names_types(f"{path}/cells.parquet") == [
+        ("cell", "int32"), ("pos", "int32"), ("val", "double")]
+    assert names_types(f"{path}/books.parquet") == books
+    assert names_types(str(tmp_path / "pq" / "cells.parquet")) == books
+    # coalesce(1): one data file per matrix
+    assert len([f for f in os.listdir(f"{path}/cells.parquet")
+                if f.endswith(".parquet")]) == 1
+
+    back = IVFPQIndex.load(spark, path)
+    assert back.centroids.tobytes() == idx.centroids.tobytes()
+    assert back.books.tobytes() == idx.books.tobytes()
+    assert (PQIndex.load(spark, str(tmp_path / "pq")).books.tobytes()
+            == idx.books.tobytes())
+
+
 def test_ivfpq_encoded_corpus_search_matches_direct(spark, tables,
                                                     tmp_path):
     """The production shape: encode ONCE with the frozen index, write

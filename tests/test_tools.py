@@ -57,3 +57,25 @@ def test_diff_bench_gate_codes(tmp_path):
     coldok = {"value": 10.0, "queries": {"a": 5.0, "b": 5.0},
               "cache_state": {"a": ["cold", "cold"]}}
     assert _run_diff(tmp_path, base, coldok).returncode == 0
+
+
+def test_audit_plans_splice_replaces_only_named_rows():
+    """A filtered audit run rewrites its own rows and the flag line and
+    leaves every other row as it was; a query the file lacks is
+    appended to the table."""
+    sys.path.insert(0, os.path.join(HERE, "tools"))
+    from audit_plans import _splice
+    old = "\n".join([
+        "# PLAN_AUDIT", "", "sf_dir: /d. Exchanges ...", "",
+        "| query | exchanges | joins | python/flags |", "|---|---|---|---|",
+        "| a | 1 | - | - |", "| b | 2+5c | - | ERROR x |",
+        "| c | 0 | - | - |", "", "**Flags: ['b', 'c']**", "", "## notes"])
+    got = _splice(old, "/d", [("b", "2+3c", "-", "-"),
+                              ("z", 0, "-", "-")], ["b", "z"], [])
+    lines = got.splitlines()
+    assert lines[6:10] == ["| a | 1 | - | - |", "| b | 2+3c | - | - |",
+                           "| c | 0 | - | - |", "| z | 0 | - | - |"]
+    assert "**Flags: ['c']**" in lines and lines[-1] == "## notes"
+    import pytest
+    with pytest.raises(SystemExit):
+        _splice(old, "/other", [], ["a"], [])

@@ -9,10 +9,18 @@ Red flags it hunts:
 - CartesianProduct without an intentional broadcast;
 - exchange counts per query (shuffle budget visibility).
 
-Usage: python tools/audit_plans.py [sf_dir]
+Usage: python tools/audit_plans.py [--out PATH] sf_dir [query ...]
+
+``--out`` names the audit file (default PLAN_AUDIT.md at the repo root).
+Naming queries audits only those: their rows in the existing file are
+replaced (a query the file lacks is appended to the table), the flag
+line is refreshed for them, and every other row stays as it was. The
+file must have been written for the same sf_dir.
 """
 from __future__ import annotations
 
+import argparse
+import ast
 import os
 import re
 import sys
@@ -49,8 +57,49 @@ def _exchange_split(plan: str) -> tuple[int, int]:
     return live, cached
 
 
+_ROW = re.compile(r"\| (\S+) \|")
+_FLAGS = "**Flags: "
+
+
+def _row_line(row) -> str:
+    return "| {} | {} | {} | {} |".format(*row)
+
+
+def _flag_line(flagged) -> str:
+    return f"{_FLAGS}{sorted(set(flagged)) or 'none'}**"
+
+
+def _splice(old: str, sf_dir: str, rows, names, flagged) -> str:
+    """``old`` audit text with the rows of ``names`` replaced by ``rows``
+    and the flag line refreshed for them."""
+    if f"sf_dir: {sf_dir}." not in old:
+        raise SystemExit(f"the audit file was not written for {sf_dir}; "
+                         f"rerun without a query filter")
+    new = {r[0]: _row_line(r) for r in rows}
+    lines, last_row = [], None
+    for line in old.splitlines():
+        m = _ROW.match(line)
+        if m and m.group(1) in new:
+            line = new.pop(m.group(1))
+        if line.startswith(_FLAGS):
+            body = line[len(_FLAGS):-2]
+            kept = set() if body == "none" else set(ast.literal_eval(body))
+            line = _flag_line((kept - set(names)) | set(flagged))
+        lines.append(line)
+        if line.startswith("| ") and not line.startswith("| query |"):
+            last_row = len(lines)
+    lines[last_row:last_row] = list(new.values())
+    return "\n".join(lines) + "\n"
+
+
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--out", default=os.path.join(os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))), "PLAN_AUDIT.md"))
+    ap.add_argument("sf_dir")
+    ap.add_argument("names", nargs="*", metavar="query")
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
     from pyspark.sql import SparkSession
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.sql.shuffle.partitions", "8")
@@ -61,6 +110,11 @@ def main():
 
     import __spark_entry__ as E
     qs = E.queries()
+    unknown = sorted(set(args.names) - set(qs))
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    if args.names:
+        qs = {n: qs[n] for n in args.names}
 
     rows = []
     flagged = []
@@ -104,10 +158,9 @@ def main():
              "",
              "| query | exchanges | joins | python/flags |",
              "|---|---|---|---|"]
-    for name, n_ex, joins, notes in rows:
-        lines.append(f"| {name} | {n_ex} | {joins} | {notes} |")
+    lines += [_row_line(r) for r in rows]
     lines.append("")
-    lines.append(f"**Flags: {sorted(set(flagged)) or 'none'}**")
+    lines.append(_flag_line(flagged))
     lines += [
         "",
         "## Composite-report exchange budgets (round-9 justification)",
@@ -126,8 +179,10 @@ def main():
         "  curve cost is the scan + that one agg.",
     ]
     out = "\n".join(lines) + "\n"
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLAN_AUDIT.md"), "w") as f:
+    if args.names:
+        with open(args.out) as f:
+            out = _splice(f.read(), sf_dir, rows, args.names, flagged)
+    with open(args.out, "w") as f:
         f.write(out)
     print(out)
     spark.stop()
