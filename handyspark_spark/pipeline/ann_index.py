@@ -26,9 +26,10 @@ Both directions stay off the Python worker pool. ``save`` builds each
 long-form table on the driver as a ``pyarrow.Table`` (``np.indices``
 plus ``ravel``), which Spark takes as a local relation — no pickled
 ``parallelize`` RDD and no Python worker — and writes it as one file
-through ``coalesce(1)``, without a shuffle. ``load`` reads each file with
-``toArrow()`` and scatters the values into the matrix in one numpy
-assignment.
+through ``coalesce(1)``, without a shuffle. ``load`` reads each file
+with its fixed schema, so Spark infers none (one job per file instead
+of two), through ``toArrow()``, and scatters the values into the matrix
+in one numpy assignment.
 
 Reference parity note: the reference (dvgodoy/handyspark) has no ANN at
 all — this module is part of the beyond-reference training-data
@@ -51,14 +52,18 @@ from .similarity import (_nearest_cell_udf, ivf_fit_centroids, ivf_topk,
 __all__ = ["IVFIndex", "PQIndex", "IVFPQIndex"]
 
 
+_META = "kind string, params string"
+
+
 def _write_meta(spark: SparkSession, path: str, kind: str, params: dict):
     tbl = pa.table({"kind": [kind], "params": [json.dumps(params)]})
-    (spark.createDataFrame(tbl, "kind string, params string")
+    (spark.createDataFrame(tbl, _META)
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta.parquet"))
 
 
 def _read_meta(spark: SparkSession, path: str, expect_kind: str) -> dict:
-    row = spark.read.parquet(f"{path}/meta.parquet").collect()[0]
+    row = (spark.read.schema(_META).parquet(f"{path}/meta.parquet")
+           .collect()[0])
     if row["kind"] != expect_kind:
         raise ValueError(f"index at {path} is a {row['kind']!r} artifact, "
                          f"not {expect_kind!r}")
@@ -71,17 +76,20 @@ _CELLS = ("cell", "pos")                 # centroids (cell, pos, val)
 _BOOKS = ("subspace", "code", "pos")     # codebooks (subspace, code, pos, val)
 
 
+def _long_schema(axes) -> str:
+    return ", ".join(f"{a} int" for a in axes) + ", val double"
+
+
 def _write_long(spark: SparkSession, path: str, M: np.ndarray, axes):
     """One (axes..., val) row per matrix entry, one parquet file."""
     ix = np.indices(M.shape, dtype=np.int32).reshape(M.ndim, -1)
     tbl = pa.table({**dict(zip(axes, ix)), "val": M.ravel()})
-    schema = ", ".join(f"{a} int" for a in axes) + ", val double"
-    (spark.createDataFrame(tbl, schema)
+    (spark.createDataFrame(tbl, _long_schema(axes))
      .coalesce(1).write.mode("overwrite").parquet(path))
 
 
 def _read_long(spark: SparkSession, path: str, shape, axes) -> np.ndarray:
-    tbl = spark.read.parquet(path).toArrow()
+    tbl = spark.read.schema(_long_schema(axes)).parquet(path).toArrow()
     M = np.zeros(shape, dtype=np.float64)
     M[tuple(tbl[a].to_numpy() for a in axes)] = tbl["val"].to_numpy()
     return M

@@ -70,8 +70,8 @@ def _cap_candidate_pairs(keyed: DataFrame, key_cols: list[str],
     spill; the failure mode was disk exhaustion hours in, not an error.
     This computes the exact candidate count with ONE linear aggregation
     (map-side partial counts; shuffled bytes = |distinct keys|) and
-    raises naming the linear-scale alternatives. Mirrors
-    ``similarity._cap_query_rows``; pass ``max_candidate_pairs=None``
+    raises naming the linear-scale alternatives. Mirrors the query-row
+    cap of ``similarity._query_table``; pass ``max_candidate_pairs=None``
     to opt out.
 
     The guard is an eager job, so without caching the keyed frame's

@@ -1,29 +1,32 @@
 """Similarity search over embedding columns (``array<float>``).
 
-- ``brute_force_topk``: exact cosine top-k via a broadcast join of the
-  (small) query set against the corpus — the correctness baseline. The
-  dot product is a native ``F.zip_with`` + ``F.aggregate`` expression
-  (JVM-side, no Python). Per-query top-k via window ``row_number``.
+- ``brute_force_topk`` / ``ivf_topk``: exact cosine top-k over raw
+  vectors. IVF-flat fits coarse centroids (sampled deterministically),
+  and each query scores only rows whose nearest centroid is among its
+  ``nprobe`` nearest; brute force is the same search over one cell.
+- ``ivfpq_topk`` / ``pq_topk``: IVF-PQ — coarse cells plus
+  product-quantized residual codes, scored by asymmetric distance
+  (ADC); flat PQ is the same search over one all-zero cell.
 - ``neardup_pairs_blas`` / ``lsh_neardup_pairs``: exact blocked-BLAS and
   random-hyperplane (signed random projection) LSH near-duplicate
   pairs.
-- ``ivf_topk``: IVF-flat — coarse centroids (sampled deterministically),
-  vectors assigned to the nearest centroid, queries probe their
-  ``nprobe`` nearest cells with exact cosine.
-- ``ivfpq_topk``: IVF-PQ — coarse cells plus product-quantized
-  residual codes, scored by one asymmetric-distance (ADC) scan.
-  ``pq_topk`` (flat PQ) is the same scan over one all-zero cell.
 - ``semdedup_pairs`` / ``semdedup_drops``: SemDeDup cluster-then-prune.
+
+All four top-k searches run one scan, ``_topk_scan``: a ``mapInArrow``
+that decodes each Arrow batch of corpus rows to a (rows x dim) matrix
+(unit vectors, or the codebook reconstruction of PQ codes), scores it
+against the query matrix with one BLAS product, and emits each query's
+local top rows; one window takes the global top-k.
 
 Vectors cross the Arrow boundary at one reader and one writer:
 ``_unit_rows`` (a pyarrow list array -> float64 matrix of unit rows, by
 one reshape of the flat values over ``_list_rows``) and ``_list_array``
-(an int matrix -> list array from offsets and values). The nearest-cell
-projection, the probe lists and the IVF-PQ encoder are ``F.arrow_udf``s,
-the ADC scan is a ``mapInArrow``, the fit sample and the query matrix
-are read with ``DataFrame.toArrow()``, and ``neardup_pairs_blas`` /
-``semdedup_pairs`` are ``applyInArrow`` groups over one cosine-pair
-kernel, ``_cosine_pairs``.
+(an int matrix -> list array from offsets and values). The
+nearest-cell projection and the IVF-PQ encoder are ``F.arrow_udf``s,
+the fit sample and the query matrix are read with
+``DataFrame.toArrow()``, and ``neardup_pairs_blas`` / ``semdedup_pairs``
+are ``applyInArrow`` groups over one cosine-pair kernel,
+``_cosine_pairs``.
 """
 from __future__ import annotations
 
@@ -50,16 +53,6 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
-def normalized_expr(a: Column) -> Column:
-    """Unit-normalize inside one expression. AVOID in hot paths: Catalyst's
-    CollapseProject inlines the norm aggregate into the transform lambda
-    and re-evaluates it per element — O(dim²)/row. Hot paths instead carry
-    the scalar norm alongside the raw vector (``with_norm``) and divide
-    once per PAIR: cosine = dot(a,b)/(na*nb)."""
-    n = norm_expr(a)
-    return F.transform(a, lambda x: x / n)
-
-
 def with_norm(df: DataFrame, src: Column, vec_name: str,
               norm_name: str) -> DataFrame:
     """Project the raw vector plus its scalar L2 norm — O(dim) once per
@@ -72,28 +65,12 @@ def with_norm(df: DataFrame, src: Column, vec_name: str,
 def brute_force_topk(df: DataFrame, queries: DataFrame, k: int = 5,
                      vec_col: str = "embedding", id_col: str = "vec_id") \
         -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
-    queries: DataFrame with (id_col, vec_col). Broadcast the query side —
-    the corpus is scanned once, no shuffle of the corpus itself; the only
-    shuffle is the per-query top-k (rows = |queries| × |corpus| reduced by
-    the window to |queries| × k)."""
-    q = with_norm(
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("_q0")),
-        F.col("_q0"), "_qv", "_qn").drop("_q0")
-    c = with_norm(
-        df.select(F.col(id_col).alias("neighbor_id"),
-                  F.col(vec_col).cast("array<double>").alias("_c0")),
-        F.col("_c0"), "_cv", "_cn").drop("_c0")
-    cos = dot_expr(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    scored = (c.crossJoin(F.broadcast(q))
-               .filter(F.col("query_id") != F.col("neighbor_id"))
-               .select("query_id", "neighbor_id",
-                       F.round(cos, 6).alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+    """Exact top-k cosine neighbors for each query vector: ``ivf_topk``
+    over one cell, which holds every row and which every query probes.
+    queries: DataFrame with (id_col, vec_col), read once to the driver
+    under ``ivf_topk``'s default ``max_query_rows``."""
+    return ivf_topk(df, queries, k=k, n_centroids=1, nprobe=1,
+                    vec_col=vec_col, id_col=id_col)
 
 
 def neardup_pairs_blas(df: DataFrame, vec_col: str = "embedding",
@@ -187,28 +164,30 @@ def lsh_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
                  .filter(F.col("cosine") >= threshold))
 
 
-def _query_cap_error(op: str, max_query_rows: int) -> ValueError:
-    return ValueError(
-        f"{op} holds the query frame driver/broadcast-side (contract: "
-        f"queries are small) and it exceeds "
-        f"max_query_rows={max_query_rows}; batch the query side, use "
-        f"brute_force_topk / neardup_pairs_blas for frame-vs-frame "
-        f"search, or pass max_query_rows=None to force")
-
-
-def _cap_query_rows(queries: DataFrame, max_query_rows: int | None,
-                    op: str) -> None:
-    """Loud guard for the "queries are small" contract of ``ivf_topk``,
-    which broadcasts the query frame: a caller passing a corpus-sized
-    frame would melt the executors silently. Limit-probed (reads at
-    most cap+1 rows); pass ``max_query_rows=None`` to opt out.
-    ``ivfpq_topk`` collects the queries anyway and checks the same cap
-    on the collected table instead."""
-    if max_query_rows is None:
-        return
-    n = queries.limit(max_query_rows + 1).count()
-    if n > max_query_rows:
-        raise _query_cap_error(op, max_query_rows)
+def _query_table(df: DataFrame, queries: DataFrame, vec_col: str,
+                 id_col: str, max_query_rows: int | None,
+                 op: str) -> pa.Table:
+    """The query side of a top-k search, read ONCE: one Arrow table of
+    (query_id, _q) with at most ``max_query_rows + 1`` rows, the ids
+    cast to the corpus id type (string/int/long ids all round-trip).
+    The scan holds the queries driver-side and broadcasts them, so a
+    corpus-sized query frame would melt the executors silently: more
+    rows than the cap raise a ``ValueError``; ``max_query_rows=None``
+    lifts the cap."""
+    q = queries.select(
+        F.col(id_col).cast(df.schema[id_col].dataType).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("_q"))
+    if max_query_rows is not None:
+        q = q.limit(max_query_rows + 1)
+    qt = q.toArrow()
+    if max_query_rows is not None and qt.num_rows > max_query_rows:
+        raise ValueError(
+            f"{op} holds the query frame driver/broadcast-side (contract: "
+            f"queries are small) and it exceeds "
+            f"max_query_rows={max_query_rows}; batch the query side, use "
+            f"neardup_pairs_blas for frame-vs-frame search, or pass "
+            f"max_query_rows=None to force")
+    return qt
 
 
 def _list_rows(arr, col: str, dim: int | None = None) -> np.ndarray:
@@ -280,6 +259,104 @@ def _cosine_pairs(tbl: pa.Table, col: str, threshold: float,
                      "cosine": pa.array(c, pa.float64())})
 
 
+def _topk_scan(rows: DataFrame, qt: pa.Table, C: np.ndarray, nprobe: int,
+               take: int, vec_col: str, books: np.ndarray | None = None,
+               dtype=np.float64) -> DataFrame:
+    """The one scorer of the ANN top-k family: a ``mapInArrow`` over the
+    corpus ``rows`` against the ``_query_table`` ``qt``, emitting
+    (query_id, neighbor_id, score) candidates for one window to rank.
+
+    ``rows`` carries ``neighbor_id`` plus either the raw vector ``_v``
+    (exact rows, ``books`` None) or ``cell`` and ``pq_code`` (PQ
+    residual codes of ``books``). Each Arrow batch decodes to cells and
+    a (rows x dim) matrix R: exact rows are their unit vectors, in the
+    nearest of the centroids ``C``; PQ rows are the codebook
+    reconstruction of their code, one fancy index into ``books``. One
+    BLAS product scores the batch, Q @ R.T, plus <q, C[cell]> for PQ
+    residuals; exact scores are rounded to 6 digits, as
+    ``_cosine_pairs`` rounds. A zero vector scores 0 (``_unit``'s norm
+    floor). Rows outside a query's ``nprobe`` nearest cells (selected in
+    fp64, so the probe never shifts with ``dtype``) and rows whose id is
+    the query's own are masked before the cut, as the file pruning of a
+    cell-partitioned layout would skip them. Each batch then emits, per
+    query, every row scoring at least its ``take``-th best: ties at the
+    cut are all kept (at most one batch of rows per query), and the
+    window's (score desc, neighbor_id asc) order picks among them.
+
+    ``dtype`` float32 runs the PQ scan at half width: Q, the centroid
+    term and the books are cast once, here."""
+    sc = rows.sparkSession.sparkContext
+    n_cells, dim = C.shape
+    Q = _unit_rows(qt["_q"], vec_col, dim)
+    CT = Q @ C.T
+    probe = None                    # probing every cell needs no mask
+    if nprobe < n_cells:
+        probe = np.zeros(CT.shape, dtype=bool)
+        np.put_along_axis(probe, np.argsort(-CT, axis=1)[:, :nprobe],
+                          True, axis=1)
+    if books is not None:
+        Q, CT, books = Q.astype(dtype), CT.astype(dtype), books.astype(dtype)
+    b_scan = sc.broadcast((qt["query_id"].combine_chunks(), Q, CT, probe,
+                           C, books))
+    # The scan's parallelism must come from the CLUSTER, not from however
+    # many files the corpus happens to occupy: a 200k-row codes.parquet
+    # reads as ~3 input splits, serializing a |queries| x |codes| numpy
+    # scan into 3 tasks (measured 98s at 2000 x 200k where 32 tasks do it
+    # in ~8s). A cell filter the caller pushed into the rows sits BELOW
+    # this shuffle, so parquet cell pruning still happens at the read.
+    if rows.rdd.getNumPartitions() < sc.defaultParallelism:
+        rows = rows.repartition(sc.defaultParallelism)
+    if not qt.num_rows:             # no queries: same schema, no rows
+        rows = rows.limit(0)
+
+    def _scan(batches):
+        qa, Qv, CTv, P, Cv, B = b_scan.value
+        ids = qa.to_numpy(zero_copy_only=False)
+        for batch in batches:
+            nbr = batch.column("neighbor_id")
+            if B is None:
+                R = _unit_rows(batch.column("_v"), vec_col, dim)
+                cells = np.argmax(R @ Cv.T, axis=1)
+                s = np.round(Qv @ R.T, 6)
+            else:
+                codes = _list_rows(batch.column("pq_code"), "pq_code",
+                                   len(B))
+                cells = batch.column("cell").to_numpy()
+                R = B[np.arange(len(B)), codes].reshape(len(codes), dim)
+                s = CTv[:, cells] + Qv @ R.T
+            if P is not None:
+                s[~P[:, cells]] = -np.inf
+            # ids are not assumed unique: every row equal to a query id
+            # is masked, comparing only the rows that hold some query id
+            hit = np.nonzero(pc.is_in(nbr, value_set=qa)
+                             .to_numpy(zero_copy_only=False))[0]
+            qi, hj = np.nonzero(
+                ids[:, None] == nbr.take(hit).to_numpy(
+                    zero_copy_only=False)[None, :])
+            s[qi, hit[hj]] = -np.inf
+            kk = min(take, len(R))
+            cut = np.partition(s, len(R) - kk, axis=1)[:, len(R) - kk]
+            qi, rj = np.nonzero((s >= cut[:, None]) & (s > -np.inf))
+            yield pa.RecordBatch.from_arrays(
+                [pc.take(qa, qi), pc.take(nbr, rj),
+                 pa.array(s[qi, rj].astype(np.float64))],
+                names=["query_id", "neighbor_id", "score"])
+
+    idt = rows.schema["neighbor_id"].dataType
+    return rows.mapInArrow(_scan, T.StructType([
+        T.StructField("query_id", idt), T.StructField("neighbor_id", idt),
+        T.StructField("score", T.DoubleType())]))
+
+
+def _top_rows(cand: DataFrame, score: str, n: int) -> DataFrame:
+    """Each query's first ``n`` rows by (``score`` desc, neighbor_id
+    asc), numbered in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score),
+                                               F.asc("neighbor_id"))
+    return (cand.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= n))
+
+
 def _sample_unit_rows(df: DataFrame, vec_col: str, id_col: str, n: int,
                       fit: str) -> np.ndarray:
     """Bounded deterministic fit sample: the first ``n`` vectors in
@@ -348,52 +425,36 @@ def ivf_fit_centroids(df: DataFrame, n_centroids: int = 16,
 def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
              n_centroids: int = 16, nprobe: int = 4,
              vec_col: str = "embedding", id_col: str = "vec_id",
-             seed: int = 42, kmeans_iters: int = 0,
+             kmeans_iters: int = 0,
              centroids: np.ndarray | None = None,
              max_query_rows: int | None = 100_000) -> DataFrame:
-    """IVF-flat ANN: coarse-quantizer centroids -> assign corpus rows
-    to nearest centroid (one projection) -> each query probes its
-    ``nprobe`` nearest centroids -> exact cosine within probed cells.
-    At 100 TB the cell assignment is written once (partitioned by cell) and
-    queries touch nprobe/n_centroids of the data.
+    """IVF-flat ANN: coarse-quantizer centroids; each corpus row falls in
+    its nearest centroid's cell, each query probes its ``nprobe``
+    nearest cells, and the probed rows are ranked by exact cosine,
+    rounded to 6 digits, ties to the lower neighbor id. Returns
+    (query_id, neighbor_id, cosine, rank). At 100 TB the cell assignment
+    is written once (partitioned by cell) and queries touch
+    nprobe/n_centroids of the data.
 
     ``centroids``: a pre-fitted quantizer (e.g. loaded via
     ``pipeline.ann_index.IVFIndex.load``) — skips the fit entirely, the
     train-once/probe-many production shape. Without it the quantizer is
-    fitted inline by ``ivf_fit_centroids`` (see it for ``kmeans_iters``)."""
-    _cap_query_rows(queries, max_query_rows, "ivf_topk")
+    fitted inline by ``ivf_fit_centroids`` (see it for ``kmeans_iters``);
+    one cell holds every row whatever its centroid, so ``n_centroids=1``
+    fits nothing and is exact (``brute_force_topk``). The queries are
+    read once (see ``_query_table`` for ``max_query_rows``)."""
+    qt = _query_table(df, queries, vec_col, id_col, max_query_rows,
+                      "ivf_topk")
+    if centroids is None and n_centroids == 1:
+        centroids = np.zeros((1, _list_rows(qt["_q"], vec_col).shape[1]))
     C = centroids if centroids is not None else ivf_fit_centroids(
         df, n_centroids, vec_col, id_col, kmeans_iters)
-    nprobe = min(nprobe, len(C))
-    b_C = df.sparkSession.sparkContext.broadcast(C)
-
-    def _cells_fn(vs):
-        Cv = b_C.value
-        return _list_array(np.argsort(
-            -(_unit_rows(vs, vec_col, Cv.shape[1]) @ Cv.T),
-            axis=1)[:, :nprobe])
-
-    c = with_norm(
-        df.select(F.col(id_col).alias("neighbor_id"),
-                  F.col(vec_col).cast("array<double>").alias("_c0")),
-        F.col("_c0"), "_cv", "_cn").drop("_c0")
-    c = c.withColumn("_cell", _nearest_cell_udf(b_C, vec_col)(F.col("_cv")))
-    q = with_norm(
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("_q0")),
-        F.col("_q0"), "_qv", "_qn").drop("_q0")
-    q = q.withColumn("_cells",
-                     F.arrow_udf(_cells_fn, "array<int>")(F.col("_qv")))
-    joined = (c.join(F.broadcast(q),
-                     F.array_contains(F.col("_cells"), F.col("_cell")))
-               .filter(F.col("query_id") != F.col("neighbor_id")))
-    cos = dot_expr(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (joined.select("query_id", "neighbor_id",
-                          F.round(cos, 6).alias("cosine"))
-                  .withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+    rows = df.select(
+        F.col(id_col).cast(df.schema[id_col].dataType).alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("_v"))
+    cand = _topk_scan(rows, qt, np.asarray(C, dtype=np.float64), nprobe, k,
+                      vec_col)
+    return _top_rows(cand.withColumnRenamed("score", "cosine"), "cosine", k)
 
 
 def label_centroids(df: DataFrame, vec_col: str = "embedding",
@@ -562,7 +623,8 @@ def _exact_rerank(df: DataFrame, queries: DataFrame, shortlist: DataFrame,
     measured 4x SLOWER than SMJ at sf10 (8 x 200k shortlist: rerank
     stage 8.2s broadcast vs 2.0s merge) and is a driver-memory hazard
     at scale. Small production shortlists (rerank ~ 50) keep AQE's
-    broadcast conversion."""
+    broadcast conversion. A zero vector scores cosine 0, as it does in
+    ``_topk_scan``, so the exact switch equals ``brute_force_topk``."""
     c = with_norm(
         df.select(F.col(id_col).alias("neighbor_id"),
                   F.col(vec_col).cast("array<double>").alias("_c0")),
@@ -575,14 +637,12 @@ def _exact_rerank(df: DataFrame, queries: DataFrame, shortlist: DataFrame,
         c = c.hint("merge")
     scored = (shortlist.join(c, "neighbor_id")
               .join(F.broadcast(q), "query_id"))
-    cos = dot_expr(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                                F.asc("neighbor_id"))
-    return (scored.select("query_id", "neighbor_id",
-                          F.round(cos, 6).alias("cosine"))
-            .withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .withColumnRenamed("cosine", "score"))
+    den = F.col("_qn") * F.col("_cn")
+    cos = F.when(den == 0, F.lit(0.0)).otherwise(
+        dot_expr(F.col("_qv"), F.col("_cv")) / den)
+    return _top_rows(scored.select("query_id", "neighbor_id",
+                                   F.round(cos, 6).alias("score")),
+                     "score", k)
 
 
 # ---------------------------------------------------------------------------
@@ -668,13 +728,13 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     ONE Arrow-batched projection; each query probes its ``nprobe``
     nearest cells and ADC-scores only rows in probed cells:
 
-        score(q, x) ≈ <q, centroid[cell(x)]> + Σ_j LUT[q, j, code_j(x)]
+        score(q, x) ≈ <q, centroid[cell(x)]> + <q, recon(code(x))>
 
-    where the LUT holds residual-codebook inner products (asymmetric
-    distance computation). Per Arrow batch the probe test is a boolean
-    gather and the score a vectorized LUT sum; each batch emits only
-    its local top-take per query (NEVER the full cross product), then
-    one window takes the global top-k by (score desc, neighbor_id asc).
+    where recon is the residual codebook reconstruction (asymmetric
+    distance computation). ``_topk_scan`` computes it per Arrow batch
+    as one GEMM against the batch's reconstructions and emits only its
+    local top-take per query (NEVER the full cross product), then one
+    window takes the global top-k by (score desc, neighbor_id asc).
     At 100 TB the encoded corpus is written once PARTITIONED BY CELL,
     so a probe reads nprobe/n_centroids of the files — the scan here
     filters the same fraction row-wise. ``pq_topk`` is this scan over
@@ -702,151 +762,46 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     with). The raw ``df`` is still consulted by the ``rerank`` path,
     which joins true vectors back for ONLY the shortlisted rows.
 
-    ``dtype='float32'`` is the production default: the scan
-    (centroid term + LUT gather) is memory-bound and fp32 halves its
-    traffic (round-8 sf1 A/B, 200k vectors, 2000 queries: flat PQ
-    3.44s -> 2.30s, IVF-PQ 2.53s -> 1.89s median, identical top-k);
-    quantization error already dwarfs fp32 rounding and the rerank
-    rescores in exact fp64 cosine. Pass 'float64' for the bit-stable
-    shortlist the exported-codebook DuckDB oracles pin.
+    ``dtype='float32'`` is the production default: the scan is
+    memory-bound and fp32 halves its traffic (round-8 sf1 A/B, 200k
+    vectors, 2000 queries: flat PQ 3.44s -> 2.30s, IVF-PQ 2.53s ->
+    1.89s median, identical top-k); quantization error already dwarfs
+    fp32 rounding and the rerank rescores in exact fp64 cosine. Pass
+    'float64' for the bit-stable shortlist the exported-codebook DuckDB
+    oracles pin.
 
-    The queries are read ONCE, as one Arrow table of at most
-    ``max_query_rows + 1`` rows; more rows than the cap raise a
-    ``ValueError`` (``max_query_rows=None`` lifts the cap)."""
+    The queries are read once (see ``_query_table`` for
+    ``max_query_rows``)."""
     if encoded is not None and (centroids is None or books is None):
         raise ValueError(
             "ivfpq_topk(encoded=...) requires the frozen centroids= and "
             "books= the codes were encoded with — refitting here would "
             "silently mismatch the stored codes")
-    _idt = df.schema[id_col].dataType
-    q = queries.select(F.col(id_col).cast(_idt).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("_q"))
-    if max_query_rows is not None:
-        q = q.limit(max_query_rows + 1)
-    qt = q.toArrow()
-    if max_query_rows is not None and qt.num_rows > max_query_rows:
-        raise _query_cap_error("ivfpq_topk", max_query_rows)
+    qt = _query_table(df, queries, vec_col, id_col, max_query_rows,
+                      "ivfpq_topk")
     if centroids is None or books is None:
         centroids, books = ivfpq_fit(
             df, n_centroids, m, nbits, sample_n,
             vec_col=vec_col, id_col=id_col, seed=seed)
     C = np.asarray(centroids, dtype=np.float64)
     books = np.asarray(books, dtype=np.float64)
-    n_centroids, dim = C.shape
-    nprobe = min(nprobe, n_centroids)
-    mm, _, dsub = books.shape
-    sc = df.sparkSession.sparkContext
-
     if encoded is None:
         encoded = ivfpq_encode(df, C, books, vec_col, id_col)
-    # id fields keep the input id column's type (string/int/long ids all
-    # round-trip; a hardcoded long would corrupt non-long ids): both
-    # sides are cast to it, and the scan gathers ids with pc.take
-    enc = encoded.select(F.col(id_col).cast(_idt).alias("neighbor_id"),
-                         "cell", "pq_code")
-    # The ADC scan's parallelism must come from the CLUSTER, not from
-    # however many files the compact codes table happens to occupy: a
-    # 200k-row codes.parquet reads as ~3 input splits, serializing a
-    # |queries| x |codes| numpy scan into 3 tasks (measured 98s at
-    # 2000 x 200k where 32 tasks do it in ~8s). The codes are a few
-    # bytes per row, so the round-robin shuffle is trivial next to one
-    # serialized scan. Any cell filter the caller pushed into `encoded`
-    # sits BELOW this shuffle, so parquet cell pruning still happens at
-    # the scan; only the surviving (pruned) rows are spread.
-    if enc.rdd.getNumPartitions() < sc.defaultParallelism:
-        enc = enc.repartition(sc.defaultParallelism)
-
-    if not qt.num_rows:           # no queries: same schema, no rows
-        enc = enc.limit(0)
-    qids = qt["query_id"].combine_chunks()
-    Q = _unit_rows(qt["_q"], vec_col, dim)
-    cent_term = Q @ C.T                                   # (nq, ncent)
-    # probe mask: True where query q probes cell c — selected in fp64
-    # so probe choice never shifts with the scan dtype; probing every
-    # cell needs no mask
-    probe = None
-    if nprobe < n_centroids:
-        order = np.argsort(-cent_term, axis=1)[:, :nprobe]
-        probe = np.zeros((len(Q), n_centroids), dtype=bool)
-        np.put_along_axis(probe, order, True, axis=1)
-    # LUT[q, j, c] = <q_subj, books[j, c]> — built in fp64, downcast
-    # once here so fp32 runs gather/accumulate half-width end to end
-    _dt = np.float32 if dtype in ("float32", "fp32") else np.float64
-    lut = np.einsum("qjd,jcd->qjc", Q.reshape(len(Q), mm, dsub),
-                    books).astype(_dt)
-    b_lut, b_qids = sc.broadcast(lut), sc.broadcast(qids)
-    b_cent, b_probe = sc.broadcast(cent_term.astype(_dt)), sc.broadcast(probe)
-
-    out_schema = T.StructType([
-        T.StructField("query_id", _idt),
-        T.StructField("neighbor_id", _idt),
-        T.StructField("score", T.DoubleType())])
-
-    def _batch_topk(batches):
-        L, qa = b_lut.value, b_qids.value
-        CT, P = b_cent.value, b_probe.value
-        ids = qa.to_numpy(zero_copy_only=False)
-        take = max(k, rerank or 0)
-        for batch in batches:
-            codes = _list_rows(batch.column("pq_code"), "pq_code", mm)
-            cells = batch.column("cell").to_numpy()
-            nbr = batch.column("neighbor_id")
-            nb = nbr.to_numpy(zero_copy_only=False)
-            s = CT[:, cells]                 # (nq, rows), a fresh copy
-            for j in range(mm):
-                s += L[:, j, codes[:, j]]
-            # rows outside a query's probed cells never compete —
-            # masked BEFORE the local top-take, exactly mirroring the
-            # file-level pruning of a cell-partitioned layout
-            if P is not None:
-                s[~P[:, cells]] = -np.inf
-            # self-matches are masked BEFORE the local top-take too: the
-            # query's own corpus row would otherwise consume a slot in
-            # its batch, silently shrinking the effective shortlist by
-            # one vs the (top-`take` excluding self) contract
-            s[ids[:, None] == nb[None, :]] = -np.inf
-            kk_local = min(take, len(codes))
-            top = np.argpartition(-s, kk_local - 1, axis=1)[:, :kk_local]
-            # deterministic (score desc, neighbor_id asc) selection at
-            # the cut: argpartition breaks score ties arbitrarily, so a
-            # tied candidate with the SMALLER id could be dropped here
-            # while the global window would have kept it. Repair only
-            # the queries whose finite ties straddle the boundary
-            # (near-dup corpora hit this constantly — equal codes =>
-            # equal ADC).
-            v = np.take_along_axis(s, top, axis=1).min(axis=1)
-            n_gt = (s > v[:, None]).sum(axis=1)
-            n_eq = (s == v[:, None]).sum(axis=1)
-            for qi in np.nonzero((n_gt + n_eq > kk_local)
-                                 & (v > -np.inf))[0]:
-                gti = np.nonzero(s[qi] > v[qi])[0]
-                eqi = np.nonzero(s[qi] == v[qi])[0]
-                need = kk_local - len(gti)
-                keep = eqi[np.argsort(nb[eqi], kind="stable")[:need]]
-                top[qi] = np.concatenate([gti, keep])
-            sv = np.take_along_axis(s, top, axis=1).ravel()
-            # masked (non-probed / self) rows that slipped into a small
-            # batch's top-take are dropped here, not emitted as -inf
-            keep = np.isfinite(sv)
-            yield pa.RecordBatch.from_arrays(
-                [pc.take(qa, np.repeat(np.arange(len(ids)), kk_local)[keep]),
-                 pc.take(nbr, top.ravel()[keep]),
-                 pa.array(sv[keep].astype(np.float64))],
-                names=["query_id", "neighbor_id", "score"])
-
-    cand = enc.mapInArrow(_batch_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("neighbor_id"))
+    rows = encoded.select(
+        F.col(id_col).cast(df.schema[id_col].dataType).alias("neighbor_id"),
+        "cell", "pq_code")
+    cand = _topk_scan(rows, qt, C, nprobe, max(k, rerank or 0), vec_col,
+                      books,
+                      np.float32 if dtype in ("float32", "fp32")
+                      else np.float64)
     if rerank is None:
-        return (cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
+        return (_top_rows(cand, "score", k)
                 .select("query_id", "neighbor_id",
                         F.round("score", 6).alias("score"), "rank"))
-    shortlist = (cand.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= rerank)
-                 .select("query_id", "neighbor_id"))
+    shortlist = _top_rows(cand, "score", rerank).select("query_id",
+                                                        "neighbor_id")
     return _exact_rerank(df, queries, shortlist, k, vec_col, id_col,
-                         shortlist_rows=len(qids) * rerank)
+                         shortlist_rows=qt.num_rows * rerank)
 
 
 # ---------------------------------------------------------------------------

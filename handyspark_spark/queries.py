@@ -4052,15 +4052,16 @@ def q_ann_pq(spark, sf_dir):
     once per session, load->search per call). Fully value-checked: the
     k-means TRAINING is iterative (not SQL), but the trained codebooks
     are exported as parquet cells, and everything downstream — encode
-    (argmin per subspace), the ADC LUT-gather scan (= dot with the PQ
+    (argmin per subspace), the ADC scan (one GEMM against the PQ
     reconstruction), the top-50 shortlist, the exact-cosine rerank —
     is reproduced by the DuckDB oracle from those cells, closing the
     one remaining no-oracle query of rounds 1-5. The query set is every
     50th id CAPPED at 2000 queries — SF-independent bound so the
-    driver-side LUT stays fixed-size at any corpus scale. Round 7: the
-    ADC scan reads the PERSISTED codes (encode-once at index build —
-    see ``_pq_index``) instead of re-encoding the raw corpus per
-    search; raw vectors are touched only by the bounded rerank join."""
+    driver-side query matrix stays fixed-size at any corpus scale.
+    Round 7: the ADC scan reads the PERSISTED codes (encode-once at
+    index build — see ``_pq_index``) instead of re-encoding the raw
+    corpus per search; raw vectors are touched only by the bounded
+    rerank join."""
     idx, _, codes = _pq_index(spark, sf_dir)
     df = _t(spark, sf_dir, "embeddings")
     queries_df = df.filter((F.col("vec_id") % 50 == 0)
@@ -4074,7 +4075,7 @@ def q_ann_pq(spark, sf_dir):
 @query("ann_pq_exact", _ANN_EXACT_SQL)
 def q_ann_pq_exact(spark, sf_dir):
     """PQ/ADC exercised through its EXACT switch: ``rerank`` >= corpus
-    size keeps every ADC candidate, so the encode->LUT->ADC->rerank
+    size keeps every ADC candidate, so the encode->ADC->rerank
     machinery all runs and the exact-cosine rescue pass makes the
     result equal brute force — value-checked against the same oracle
     as ann_topk/ann_ivf. The corpus count comes from the session-cached
@@ -4124,8 +4125,8 @@ def _ivfpq_index(spark, sf_dir):
 # IVF-PQ ADC reproduced in SQL from the exported index: coarse cell by
 # max inner product (ties to the LOWEST cell — numpy argmax contract),
 # per-subspace residual code by min distance (ties to the lowest code),
-# ADC score = <q, centroid + residual_reconstruction> (the LUT-sum
-# identity), top-50 shortlist, exact-cosine rerank — the same
+# ADC score = <q, centroid + residual_reconstruction> (the product the
+# scan computes), top-50 shortlist, exact-cosine rerank — the same
 # verify-the-approximate-math convention as _ANN_PQ_SQL, extended by
 # the cell-assignment and residual steps.
 _ANN_IVFPQ_SQL = _with_cache_root("""
@@ -4229,7 +4230,7 @@ def q_ann_ivfpq(spark, sf_dir):
     Fully value-checked INCLUDING the approximate math: the trained
     centroids + residual codebooks are exported as parquet cells and
     the DuckDB oracle reproduces cell assignment, residual encode, the
-    ADC LUT-sum (= inner product with centroid + reconstruction), the
+    ADC score (= inner product with centroid + reconstruction), the
     top-50 shortlist, and the exact-cosine rerank. Full probe
     (nprobe = n_centroids) keeps probe selection out of the float-tie
     domain; the partial-probe (nprobe=4) recall is pinned in

@@ -17,6 +17,30 @@ def emb(tables):
     return tables["embeddings"]
 
 
+def _np_topk(df, qs, k, centroids=None, nprobe=None):
+    """Independent exact top-k reference for the ANN family, in numpy:
+    [(query_id, neighbor_id, cosine, rank)] by (cosine rounded to 6
+    digits desc, neighbor_id asc), every row with the query's id
+    excluded, a zero vector scoring 0. With ``centroids`` a query only
+    sees rows whose nearest centroid is among its ``nprobe`` nearest."""
+    def unit(p):
+        X = np.array(p["embedding"].tolist(), dtype=np.float64)
+        n = np.linalg.norm(X, axis=1, keepdims=True)
+        return X / np.where(n == 0, 1.0, n), p["vec_id"].to_numpy()
+    U, ids = unit(df.select("vec_id", "embedding").toPandas())
+    QU, qids = unit(qs.select("vec_id", "embedding").toPandas())
+    out = []
+    for qid, uq in zip(qids, QU):
+        cos, keep = np.round(U @ uq, 6), ids != qid
+        if centroids is not None:
+            probed = np.argsort(-(centroids @ uq))[:nprobe]
+            keep &= np.isin(np.argmax(U @ centroids.T, axis=1), probed)
+        c, i = cos[keep], ids[keep]
+        out += [(qid, i[j], c[j], r + 1)
+                for r, j in enumerate(np.lexsort((i, -c))[:k])]
+    return out
+
+
 def test_token_count_matches_python(docs, pdf_tables):
     from handyspark_spark.pipeline import text as TX
     got = (docs.select("doc_id", TX.token_count("text").alias("n"))
@@ -93,12 +117,10 @@ def test_simhash_separates_similar_from_dissimilar(docs):
 
 
 def test_ivf_recall_vs_brute_force(emb):
-    from handyspark_spark.pipeline.similarity import (brute_force_topk,
-                                                      ivf_topk)
+    from handyspark_spark.pipeline.similarity import ivf_topk
     q = emb.filter(F.col("vec_id") < 16)
-    exact = brute_force_topk(emb, q, k=5).collect()
     approx = ivf_topk(emb, q, k=5, n_centroids=8, nprobe=4).collect()
-    truth = {(r.query_id, r.neighbor_id) for r in exact}
+    truth = {(r[0], r[1]) for r in _np_topk(emb, q, 5)}
     got = {(r.query_id, r.neighbor_id) for r in approx}
     recall = len(truth & got) / len(truth)
     assert recall >= 0.5, f"IVF recall {recall:.2f} too low for nprobe=half"
@@ -828,11 +850,9 @@ def test_ivf_kmeans_refinement_recall(emb):
     """Lloyd-refined coarse quantizer: recall at equal nprobe must stay
     >= the floor, and refinement must actually move the assignment (the
     iteration executes)."""
-    from handyspark_spark.pipeline.similarity import (brute_force_topk,
-                                                      ivf_topk)
+    from handyspark_spark.pipeline.similarity import ivf_topk
     q = emb.filter(F.col("vec_id") < 16)
-    truth = {(r.query_id, r.neighbor_id) for r in
-             brute_force_topk(emb, q, k=5).collect()}
+    truth = {(r[0], r[1]) for r in _np_topk(emb, q, 5)}
     refined = {(r.query_id, r.neighbor_id) for r in
                ivf_topk(emb, q, k=5, n_centroids=8, nprobe=4,
                         kmeans_iters=2).collect()}
@@ -1161,14 +1181,12 @@ def test_normalize_and_redact_match_python_re(spark, tables):
 
 def test_pq_topk_recall_vs_brute_force(spark, tables):
     from pyspark.sql import functions as F
-    from handyspark_spark.pipeline.similarity import (brute_force_topk,
-                                                      pq_topk)
+    from handyspark_spark.pipeline.similarity import pq_topk
     df = tables["embeddings"]
     qs = df.filter(F.col("vec_id") % 25 == 0)
-    exact = brute_force_topk(df, qs, k=5)
     e = {}
-    for r in exact.collect():
-        e.setdefault(r["query_id"], set()).add(r["neighbor_id"])
+    for r in _np_topk(df, qs, 5):
+        e.setdefault(r[0], set()).add(r[1])
     # pure ADC: bounded by quantization error (synthetic unclustered
     # vectors are PQ's worst case — this pin is deliberately loose)
     adc = pq_topk(df, qs, k=5, m=16, nbits=4)
@@ -1571,13 +1589,11 @@ def test_ivfpq_exact_switch_equals_brute_force(spark, tables):
     """nprobe = n_centroids + rerank >= |corpus| is the exact switch:
     every cell probed, every ADC candidate exact-rescored — output must
     EQUAL brute force (same convention as ivf_topk/pq_topk)."""
-    from handyspark_spark.pipeline.similarity import (brute_force_topk,
-                                                      ivfpq_topk)
+    from handyspark_spark.pipeline.similarity import ivfpq_topk
     df = tables["embeddings"]
     qs = df.filter(F.col("vec_id") % 40 == 0)
     n = df.count()
-    exact = {(r.query_id, r.neighbor_id, r.rank)
-             for r in brute_force_topk(df, qs, k=5).collect()}
+    exact = {(r[0], r[1], r[3]) for r in _np_topk(df, qs, 5)}
     got = {(r.query_id, r.neighbor_id, r.rank)
            for r in ivfpq_topk(df, qs, k=5, n_centroids=8, nprobe=8,
                                m=16, nbits=4, rerank=n).collect()}
@@ -1588,13 +1604,12 @@ def test_ivfpq_recall_vs_brute_force(spark, tables):
     """Approximate IVF-PQ (partial probe + residual ADC + rerank):
     residual quantization should make the reranked recall strong even
     on synthetic unclustered vectors."""
-    from handyspark_spark.pipeline.similarity import (brute_force_topk,
-                                                      ivfpq_topk)
+    from handyspark_spark.pipeline.similarity import ivfpq_topk
     df = tables["embeddings"]
     qs = df.filter(F.col("vec_id") % 25 == 0)
     e = {}
-    for r in brute_force_topk(df, qs, k=5).collect():
-        e.setdefault(r["query_id"], set()).add(r["neighbor_id"])
+    for r in _np_topk(df, qs, 5):
+        e.setdefault(r[0], set()).add(r[1])
     total = sum(len(v) for v in e.values())
     # half-probe + rerank: cell pruning costs recall only via probe
     # misses; the exact re-rank repairs ADC error inside probed cells
@@ -1614,7 +1629,15 @@ def test_ivfpq_index_save_load_roundtrip(spark, tables, tmp_path):
     qs = df.filter(F.col("vec_id") % 40 == 0)
     idx = IVFPQIndex.fit(df, n_centroids=8, m=8, nbits=4, sample_n=256)
     idx.save(str(tmp_path / "ivfpq"), spark)
-    idx2 = IVFPQIndex.load(spark, str(tmp_path / "ivfpq"))
+    # meta, cells and books are read with their fixed schemas: one job
+    # per file (an inferred schema costs a second job each)
+    sc = spark.sparkContext
+    sc.setJobGroup("ivfpq-load", "IVFPQIndex.load")
+    try:
+        idx2 = IVFPQIndex.load(spark, str(tmp_path / "ivfpq"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("ivfpq-load")) == 3
     np.testing.assert_allclose(idx2.centroids, idx.centroids)
     np.testing.assert_allclose(idx2.books, idx.books)
     a = {(r.query_id, r.neighbor_id)
@@ -2145,15 +2168,23 @@ def test_star_edges_recovery_query_matches_uncapped(tables, spark):
     assert cap < unc and len(cap) > 0
 
 
-def test_ann_query_row_cap_raises(emb):
-    """pq_topk/ivf_topk hold the query frame driver/broadcast-side —
-    an oversized query frame must fail LOUDLY, not melt the driver."""
-    from handyspark_spark.pipeline.similarity import ivf_topk, pq_topk
+def test_ann_query_row_cap_raises(spark, emb):
+    """pq_topk/ivf_topk/brute_force_topk hold the query frame
+    driver/broadcast-side — an oversized query frame must fail LOUDLY,
+    not melt the driver."""
+    from handyspark_spark.pipeline.similarity import (brute_force_topk,
+                                                      ivf_topk, pq_topk)
     big_q = emb                                   # whole corpus as queries
     with pytest.raises(ValueError, match="max_query_rows"):
         ivf_topk(emb, big_q, k=3, max_query_rows=10)
     with pytest.raises(ValueError, match="max_query_rows"):
         pq_topk(emb, big_q, k=3, max_query_rows=10)
+    # brute force has no cap parameter: the family default, 100,000 rows
+    over = spark.range(100_001).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.lit(1.0), F.lit(0.0)).alias("embedding"))
+    with pytest.raises(ValueError, match="max_query_rows=100000"):
+        brute_force_topk(emb, over, k=3)
 
 
 def test_ann_ivf_index_query_matches_inline(spark):
@@ -2327,14 +2358,17 @@ def test_simhash_bucket_cap_bounds_candidates_exact_hamming(spark):
 
 
 def test_pq_topk_deterministic_under_ties_and_batching(spark):
-    """ADC shortlists must follow the (score desc, neighbor_id asc)
+    """Top-k lists must follow the (score desc, neighbor_id asc)
     contract even when scores TIE inside an Arrow batch (duplicate
-    vectors => identical codes => equal ADC scores) and the batch cut
-    lands inside a tie group — the argpartition repair path. Expected
-    result computed independently in numpy from the same codebooks."""
+    vectors => identical codes => equal ADC scores, and equal exact
+    cosines) and the batch cut lands inside a tie group, for both scan
+    inputs: PQ codes and exact rows. Expected results computed
+    independently in numpy from the same codebooks and centroids."""
     import numpy as np
     import pandas as pd
-    from handyspark_spark.pipeline.similarity import ivfpq_topk, pq_topk
+    from handyspark_spark.pipeline.similarity import (brute_force_topk,
+                                                      ivf_topk, ivfpq_topk,
+                                                      pq_topk)
     rng = np.random.RandomState(9)
     base = rng.randn(6, 8)
     # 50 copies of each of 6 distinct vectors, interleaved ids
@@ -2349,6 +2383,8 @@ def test_pq_topk_deterministic_under_ties_and_batching(spark):
                          None)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "37")
     qs = df.filter(F.col("vec_id") < 3)
+    # two cells of the exact scan, one per half of the distinct vectors
+    C2 = base[[0, 3]] / np.linalg.norm(base[[0, 3]], axis=1, keepdims=True)
     try:
         # fp64 pinned: the independent expectation below computes the
         # ADC scores in float64 numpy (library default is now fp32).
@@ -2360,6 +2396,13 @@ def test_pq_topk_deterministic_under_ties_and_batching(spark):
             "ivfpq_topk_masked": ivfpq_topk(
                 df, qs, k=5, centroids=np.zeros((2, 8)), nprobe=1,
                 books=books, dtype="float64").collect()}
+        exact = {"brute_force_topk": (brute_force_topk(df, qs, k=5),
+                                      _np_topk(df, qs, 5)),
+                 "ivf_topk": (ivf_topk(df, qs, k=5, centroids=C2,
+                                       nprobe=1),
+                              _np_topk(df, qs, 5, C2, 1))}
+        exact = {name: (sorted(tuple(r) for r in got.collect()),
+                        sorted(want)) for name, (got, want) in exact.items()}
     finally:
         if old is not None:
             spark.conf.set(
@@ -2387,10 +2430,12 @@ def test_pq_topk_deterministic_under_ties_and_batching(spark):
                 [w[0] for w in want], (name, q)
             for r, w in zip(got_q, want):
                 assert abs(r.score - round(w[1], 6)) < 1e-9, name
+    for name, (got, want) in exact.items():
+        assert got == want and len(got) == 15, name
 
 
 @pytest.mark.parametrize("case", [
-    "ivf_fit_centroids", "pq_codebooks", "ivfpq_fit",
+    "ivf_fit_centroids", "pq_codebooks", "ivfpq_fit", "brute_force_topk",
     "ivf_topk", "pq_topk", "pq_topk_rerank", "ivfpq_topk",
     "ivfpq_topk_rerank"])
 def test_ann_empty_inputs(emb, case):
@@ -2409,7 +2454,8 @@ def test_ann_empty_inputs(emb, case):
             getattr(S, case)(emb.limit(0), **fits[case])
         return
     name = case.replace("_rerank", "")
-    kw = {"ivf_topk": dict(n_centroids=8, nprobe=2),
+    kw = {"brute_force_topk": {},
+          "ivf_topk": dict(n_centroids=8, nprobe=2),
           "pq_topk": dict(m=8, nbits=4, sample_n=256),
           "ivfpq_topk": dict(n_centroids=8, nprobe=2, m=8, nbits=4,
                              sample_n=256)}[name]
@@ -2423,7 +2469,7 @@ def test_ann_empty_inputs(emb, case):
 
 
 @pytest.mark.parametrize("case", [
-    "fit_null", "query_ragged", "encode_null", "blas_ragged"])
+    "fit_null", "query_ragged", "encode_null", "blas_ragged", "scan_null"])
 def test_ann_bad_vectors_named_error(spark, case):
     """A NULL or wrong-length vector is a named error naming the
     column, read at the one Arrow boundary: on the driver (fit sample,
@@ -2452,11 +2498,49 @@ def test_ann_bad_vectors_named_error(spark, case):
                good, bad, k=3, nprobe=2, m=2, nbits=2, sample_n=20),
            "encode_null": lambda: S.ivfpq_encode(
                bad, C, np.zeros((2, 4, 4))).collect(),
-           "blas_ragged": lambda: S.neardup_pairs_blas(bad).collect()}
+           "blas_ragged": lambda: S.neardup_pairs_blas(bad).collect(),
+           "scan_null": lambda: S.brute_force_topk(
+               bad, good.limit(3), k=3).collect()}
     on_driver = case in ("fit_null", "query_ragged")
     with pytest.raises(HandyException if on_driver else PythonException,
                        match=msg):
         run[case]()
+
+
+@pytest.mark.parametrize("case", [
+    "brute_force_topk", "ivf_topk", "pq_topk", "pq_topk_rerank",
+    "ivfpq_topk", "ivfpq_topk_rerank"])
+def test_ann_zero_vector_scores_zero(spark, case):
+    """A zero vector, as corpus row and as query, scores cosine 0 in
+    every search (the scan's unit-row norm floor, the rerank's zero
+    guard) instead of raising DIVIDE_BY_ZERO: the exact searches and
+    the exact switch equal the numpy reference, and pure ADC ranks every
+    row of a zero query at 0, ties to the lower id."""
+    import pandas as pd
+    from handyspark_spark.pipeline import similarity as S
+    X = np.random.RandomState(11).randn(60, 8)
+    X[5] = 0.0
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(60, dtype="int64"),
+                      "embedding": [r.tolist() for r in X]}),
+        "vec_id long, embedding array<double>")
+    qs = df.filter(F.col("vec_id") < 8)
+    name = case.replace("_rerank", "")
+    kw = {"brute_force_topk": {},
+          "ivf_topk": dict(n_centroids=4, nprobe=4),
+          "pq_topk": dict(m=4, nbits=2, sample_n=60),
+          "ivfpq_topk": dict(n_centroids=4, nprobe=4, m=4, nbits=2,
+                             sample_n=60)}[name]
+    if case.endswith("_rerank"):
+        kw["rerank"] = 60
+    got = sorted(tuple(r) for r in getattr(S, name)(df, qs, k=3, **kw)
+                 .collect())
+    if name in ("pq_topk", "ivfpq_topk") and "rerank" not in kw:
+        assert [r[1:] for r in got if r[0] == 5] == \
+            [(0, 0.0, 1), (1, 0.0, 2), (2, 0.0, 3)]
+        assert len(got) == 24 and not np.isnan([r[2] for r in got]).any()
+    else:
+        assert got == sorted(_np_topk(df, qs, 3))
 
 
 def test_ivf_zero_vector_gives_no_nan_centroid(spark):
@@ -2561,14 +2645,12 @@ def test_index_cache_rejects_same_n_different_data(spark, tmp_path):
         assert codes_b_rows != codes_a_rows      # fresh ENCODE, not stale
 
         # (c) rebuilt index is correct on dataset B: exact == brute
-        from handyspark_spark.pipeline.similarity import brute_force_topk
         df_b = spark.read.parquet(str(dir_b / "embeddings.parquet"))
         qs = df_b.filter(F.col("vec_id") < 3)
         got = {(r.query_id, r.neighbor_id)
                for r in idx_b.search(df_b, qs, k=3, rerank=n_b,
                                      encoded=codes_b).collect()}
-        want = {(r.query_id, r.neighbor_id)
-                for r in brute_force_topk(df_b, qs, k=3).collect()}
+        want = {(r[0], r[1]) for r in _np_topk(df_b, qs, 3)}
         assert got == want and len(got) > 0
     finally:
         # always remove the whole n= parent: a stale committed dir at
