@@ -242,21 +242,27 @@ class HandyFrame:
     def describe(self, colnames=None, exact: bool = False,
                  precision: float = 0.01) -> pd.DataFrame:
         """pandas-style describe (count/mean/std/min/25%/50%/75%/max) for
-        numeric columns — ONE wide aggregation over all columns at once,
-        quartiles fused into a single percentile pass per column."""
+        numeric columns — one action over two 1-row aggregations of all
+        columns, cross-joined: the moments in a codegen'd hash
+        aggregate, the quartiles (one fused percentile pass per column)
+        in their own. Sharing one aggregate with the percentile sketches
+        would force an ``ObjectHashAggregate`` and run every moment
+        interpreted."""
         from ..operators import agg as A
         cols = colnames or self._types.numerical
-        exprs = []
+        moments, quartiles = [], []
         for c in cols:
             d = F.col(c).cast("double")
-            exprs += [F.count(d).alias(f"count__{c}"),
-                      F.mean(d).alias(f"mean__{c}"),
-                      F.stddev(d).alias(f"std__{c}"),
-                      F.min(d).alias(f"min__{c}"),
-                      A.percentile_expr(c, [0.25, 0.5, 0.75], precision,
-                                        exact).alias(f"q__{c}"),
-                      F.max(d).alias(f"max__{c}")]
-        row = A.summary_plan(self._df, exprs).collect()[0]
+            moments += [F.count(d).alias(f"count__{c}"),
+                        F.mean(d).alias(f"mean__{c}"),
+                        F.stddev(d).alias(f"std__{c}"),
+                        F.min(d).alias(f"min__{c}"),
+                        F.max(d).alias(f"max__{c}")]
+            quartiles.append(A.percentile_expr(
+                c, [0.25, 0.5, 0.75], precision, exact).alias(f"q__{c}"))
+        row = (A.summary_plan(self._df, moments)
+               .crossJoin(A.summary_plan(self._df, quartiles))
+               .collect()[0])
         out = {}
         nan = float("nan")
         for c in cols:

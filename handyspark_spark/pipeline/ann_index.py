@@ -45,9 +45,10 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .similarity import (_nearest_cell_udf, ivf_fit_centroids, ivf_topk,
-                         ivfpq_encode, ivfpq_fit, ivfpq_topk, pq_codebooks,
-                         pq_encode, pq_topk)
+from .similarity import (_arrow_sized, _nearest_cell_udf,
+                         ivf_fit_centroids, ivf_topk, ivfpq_encode,
+                         ivfpq_fit, ivfpq_topk, pq_codebooks, pq_encode,
+                         pq_topk)
 
 __all__ = ["IVFIndex", "PQIndex", "IVFPQIndex"]
 
@@ -139,11 +140,12 @@ class IVFIndex:
 
     def assign(self, df: DataFrame, cell_col: str = "_cell") -> DataFrame:
         """Nearest-centroid cell id per row (one Arrow-batched BLAS
-        matmul projection) — use to write the corpus partitioned by
-        cell once, so probes prune at the file level."""
+        matmul projection, tasks sized by ``_arrow_sized``) — use to
+        write the corpus partitioned by cell once, so probes prune at
+        the file level."""
         b_C = df.sparkSession.sparkContext.broadcast(self.centroids)
         cell = _nearest_cell_udf(b_C, self.vec_col)
-        return df.withColumn(
+        return _arrow_sized(df).withColumn(
             cell_col, cell(F.col(self.vec_col).cast("array<double>")))
 
     def search(self, df: DataFrame, queries: DataFrame, k: int = 5,

@@ -976,7 +976,7 @@ def decontaminate(df: DataFrame, benchmark: DataFrame,
     are thousands of rows, so Spark/AQE broadcasts it), then ONE
     ``left_anti`` join. No pair enumeration, no driver collect; at 100 TB
     the cost is the corpus scan plus a broadcast-hash anti-join."""
-    from .text import fingerprint, rolling_hashes
+    from .text import fingerprint, shingle_rows
     bcol = bench_text_col or text_col
     if method == "exact":
         keyed = df.withColumn("_k", F.md5(F.col(text_col)))
@@ -988,12 +988,8 @@ def decontaminate(df: DataFrame, benchmark: DataFrame,
                  .distinct())
         return keyed.join(F.broadcast(bkeys), "_k", "left_anti").drop("_k")
     if method == "ngram":
-        k = 13
-        keyed = df.withColumn("_ks", rolling_hashes(text_col, k))
-        bkeys = (benchmark
-                 .select(F.explode(rolling_hashes(bcol, k)).alias("_k"))
-                 .distinct())
-        hit = (keyed.select(id_col, F.explode("_ks").alias("_k"))
+        bkeys = shingle_rows(benchmark, bcol, 13).distinct()
+        hit = (shingle_rows(df, text_col, 13, [id_col])
                .join(F.broadcast(bkeys), "_k", "left_semi")
                .select(id_col).distinct())
         return df.join(hit, id_col, "left_anti")
@@ -1371,12 +1367,10 @@ def ngram_contamination(df: DataFrame, benchmark: DataFrame,
     Returns (id_col, n_grams, n_matched, contamination) with
     contamination = n_matched / n_grams rounded to 6 places.
     """
-    from .text import rolling_hashes
+    from .text import rolling_hashes, shingle_rows
 
     bcol = bench_text_col or text_col
-    bkeys = (benchmark
-             .select(F.explode(rolling_hashes(bcol, n)).alias("_k"))
-             .distinct()
+    bkeys = (shingle_rows(benchmark, bcol, n).distinct()
              .withColumn("_hit", F.lit(1)))
     grams = (df.select(F.col(id_col),
                        F.explode(F.array_distinct(

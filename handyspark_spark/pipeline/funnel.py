@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from ..core.cache import managed_persist
 from .dedup import minhash_lsh_groups
-from .text import gopher_rules, rolling_hashes
+from .text import gopher_rules, shingle_rows
 
 __all__ = ["pretrain_funnel"]
 
@@ -91,11 +91,8 @@ def pretrain_funnel(df, text_col="text", id_col="doc_id",
     # contamination hits computed over the exact branch (a superset of
     # the near-dup keepers — the flag is only consulted where _nd holds,
     # so the result is identical to decontaminating the keepers)
-    bkeys = (bench.select(F.explode(rolling_hashes(text_col, 13))
-                          .alias("_k")).distinct())
-    hits = (exact.select(id_col,
-                         F.explode(rolling_hashes(text_col, 13))
-                         .alias("_k"))
+    bkeys = shingle_rows(bench, text_col, 13).distinct()
+    hits = (shingle_rows(exact, text_col, 13, [id_col])
             .join(F.broadcast(bkeys), "_k", "left_semi")
             .select(id_col).distinct()
             .select(id_col, F.lit(True).alias("_hit")))

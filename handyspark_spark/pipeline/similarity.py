@@ -27,6 +27,11 @@ the fit sample and the query matrix are read with
 ``DataFrame.toArrow()``, and ``neardup_pairs_blas`` / ``semdedup_pairs``
 are ``applyInArrow`` groups over one cosine-pair kernel,
 ``_cosine_pairs``.
+
+The map-side Arrow stages (the scan, the encoder, the nearest-cell
+projection) take their task count from one rule, ``_arrow_sized``: an
+input whose plan states a row count that fits one Arrow batch runs as
+one Python task; the grouped kernels keep the tasks AQE coalesces.
 """
 from __future__ import annotations
 
@@ -259,6 +264,48 @@ def _cosine_pairs(tbl: pa.Table, col: str, threshold: float,
                      "cosine": pa.array(c, pa.float64())})
 
 
+# plan nodes that keep their child's row count; ``_arrow_sized`` reads
+# the count below them (a Project's statistics carry none)
+_ROW_PRESERVING = ("Project", "Repartition", "ArrowEvalPython")
+
+
+def _arrow_sized(frame: DataFrame, spread: bool = False) -> DataFrame:
+    """The one task-count rule of the family's map-side Arrow stages:
+    ``_topk_scan``'s ``mapInArrow``, the ``ivfpq_encode`` Arrow UDF and
+    the ``_nearest_cell_udf`` projections. A Python task has a fixed
+    start-up cost far above what a kernel spends on one batch (pyspark
+    4.1 under CPython 3.11: 0.1-0.2 s of worker CPU, most of it in
+    ``importlib.invalidate_caches``), so the task count follows the
+    input's rows, not its files or the cluster's cores:
+
+    - when the optimized plan states ``frame``'s row count (read below
+      its projections, which drop it: a materialized cache or a local
+      relation states one, a file scan does not) and the count fits one
+      Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``),
+      the stage is one task, on ``coalesce(1)``: narrow, no shuffle;
+    - otherwise ``spread`` (the scan) repartitions a frame with fewer
+      partitions than ``defaultParallelism`` up to it, so a corpus in
+      a few large files does not serialize a |queries| x |corpus| scan
+      into a few tasks. A cell filter pushed into the rows sits below
+      that shuffle, so parquet cell pruning still happens at the read.
+
+    Neither changes a result: the kernels work per row or per batch,
+    and the scan's per-batch top rows meet in one global window."""
+    spark = frame.sparkSession
+    # a fresh plan: the frame's own may predate the cache it reads
+    plan = frame.select("*")._jdf.queryExecution().optimizedPlan()
+    while plan.nodeName() in _ROW_PRESERVING:
+        plan = plan.child()
+    count = plan.stats().rowCount()
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    if count.isDefined() and int(count.get()) <= batch:
+        return frame.coalesce(1)
+    n = spark.sparkContext.defaultParallelism
+    if spread and frame._jdf.queryExecution().toRdd().getNumPartitions() < n:
+        return frame.repartition(n)
+    return frame
+
+
 def _topk_scan(rows: DataFrame, qt: pa.Table, C: np.ndarray, nprobe: int,
                take: int, vec_col: str, books: np.ndarray | None = None,
                dtype=np.float64) -> DataFrame:
@@ -298,14 +345,7 @@ def _topk_scan(rows: DataFrame, qt: pa.Table, C: np.ndarray, nprobe: int,
         Q, CT, books = Q.astype(dtype), CT.astype(dtype), books.astype(dtype)
     b_scan = sc.broadcast((qt["query_id"].combine_chunks(), Q, CT, probe,
                            C, books))
-    # The scan's parallelism must come from the CLUSTER, not from however
-    # many files the corpus happens to occupy: a 200k-row codes.parquet
-    # reads as ~3 input splits, serializing a |queries| x |codes| numpy
-    # scan into 3 tasks (measured 98s at 2000 x 200k where 32 tasks do it
-    # in ~8s). A cell filter the caller pushed into the rows sits BELOW
-    # this shuffle, so parquet cell pruning still happens at the read.
-    if rows.rdd.getNumPartitions() < sc.defaultParallelism:
-        rows = rows.repartition(sc.defaultParallelism)
+    rows = _arrow_sized(rows, spread=True)
     if not qt.num_rows:             # no queries: same schema, no rows
         rows = rows.limit(0)
 
@@ -392,7 +432,8 @@ def _refine_centroids(df: DataFrame, C: np.ndarray, vec_col: str,
     sc = df.sparkSession.sparkContext
     for _ in range(kmeans_iters):
         b_it = sc.broadcast(C)
-        a = (df.select(F.col(vec_col).cast("array<double>").alias("_v"))
+        a = (_arrow_sized(
+                df.select(F.col(vec_col).cast("array<double>").alias("_v")))
              .withColumn("_cell", _nearest_cell_udf(b_it, vec_col)(
                  F.col("_v")))
              .select("_cell", F.posexplode("_v").alias("pos", "val")))
@@ -708,7 +749,8 @@ def ivfpq_encode(df: DataFrame, centroids: np.ndarray, books: np.ndarray,
             names=[cell_col, code_col])
 
     enc = F.arrow_udf(_enc, f"{cell_col} int, {code_col} array<int>")
-    return (df.withColumn("_e", enc(F.col(vec_col).cast("array<double>")))
+    return (_arrow_sized(df)
+            .withColumn("_e", enc(F.col(vec_col).cast("array<double>")))
             .withColumn(cell_col, F.col(f"_e.{cell_col}"))
             .withColumn(code_col, F.col(f"_e.{code_col}"))
             .drop("_e"))

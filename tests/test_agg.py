@@ -455,3 +455,89 @@ def test_exact_quantiles_no_values_named_error(tables):
         for exact in (True, False):
             with pytest.raises(HandyException, match="column 'v'"):
                 fit_fence_values(v, ["v"], exact=exact)
+
+
+def _describe_one_aggregate(h, cols, exact=False, precision=0.01):
+    """The single-aggregate describe (moments and quartiles in one
+    aggregation), the reference the split plan must equal."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from handyspark_spark.operators import agg as A
+    exprs = []
+    for c in cols:
+        d = F.col(c).cast("double")
+        exprs += [F.count(d).alias(f"count__{c}"),
+                  F.mean(d).alias(f"mean__{c}"),
+                  F.stddev(d).alias(f"std__{c}"),
+                  F.min(d).alias(f"min__{c}"),
+                  A.percentile_expr(c, [0.25, 0.5, 0.75], precision,
+                                    exact).alias(f"q__{c}"),
+                  F.max(d).alias(f"max__{c}")]
+    row = A.summary_plan(h._df, exprs).collect()[0]
+    nan = float("nan")
+    out = {}
+    for c in cols:
+        q = row[f"q__{c}"] or [nan, nan, nan]
+        out[c] = [row[f"count__{c}"], row[f"mean__{c}"], row[f"std__{c}"],
+                  row[f"min__{c}"], q[0], q[1], q[2], row[f"max__{c}"]]
+    return pd.DataFrame(out, index=["count", "mean", "std", "min", "25%",
+                                    "50%", "75%", "max"])
+
+
+@pytest.fixture(scope="module")
+def passengers(spark):
+    """FIXTURES.md F1-shaped frame: nulls, right skew, outliers, an
+    all-NULL column, over 4 partitions."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    rng = np.random.default_rng(11)
+    n = 891
+    pclass = rng.choice([1, 2, 3], n, p=[0.24, 0.21, 0.55])
+    age = np.clip(rng.normal(30, 14, n), 0.4, 80).round(1)
+    pdf = pd.DataFrame({
+        "passenger_id": np.arange(1, n + 1, dtype=np.int32),
+        "survived": (rng.random(n) < 0.38).astype(np.int32),
+        "pclass": pclass.astype(np.int32),
+        "age": np.where(rng.random(n) < 0.2, np.nan, age),
+        "sibsp": np.minimum(rng.poisson(0.5, n), 8).astype(np.int32),
+        "fare": (rng.lognormal(2.4, 0.9, n) * (4 - pclass)).round(4)})
+    df = spark.createDataFrame(pdf).repartition(4)
+    return df.withColumn("age", F.when(~F.isnan("age"), F.col("age"))) \
+             .withColumn("void", F.lit(None).cast("double"))
+
+
+@pytest.mark.parametrize("exact", [False, True])
+def test_describe_equals_one_aggregate(passengers, exact):
+    """The split plan (moments and quartiles in two aggregations, one
+    action) returns exactly the single-aggregate values, on the F1
+    shape with its all-NULL column and on an empty frame."""
+    import pandas as pd
+    cols = ["passenger_id", "survived", "pclass", "age", "sibsp", "fare",
+            "void"]
+    for df in (passengers, passengers.limit(0)):
+        h = toHandy(df)
+        pd.testing.assert_frame_equal(
+            h.describe(cols, exact=exact),
+            _describe_one_aggregate(h, cols, exact=exact),
+            check_exact=True)
+
+
+def test_describe_moments_run_codegen(passengers, monkeypatch):
+    """No ``ObjectHashAggregate`` computes the moments: they run in a
+    ``HashAggregate``, the quartile sketches in their own aggregate."""
+    from handyspark_spark.operators import agg as A
+    plans = []
+    summary_plan = A.summary_plan
+
+    def spy(df, exprs, strata=None):
+        out = summary_plan(df, exprs, strata)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(A, "summary_plan", spy)
+    toHandy(passengers).describe(["age", "fare"])
+    moments, quartiles = plans
+    assert "ObjectHashAggregate" not in moments
+    assert "HashAggregate" in moments and "count(" in moments
+    assert "ObjectHashAggregate" in quartiles
+    assert "count(" not in quartiles

@@ -2379,8 +2379,8 @@ def test_pq_topk_deterministic_under_ties_and_batching(spark):
                         "embedding": [r.tolist() for r in X]})
     books = rng.randn(2, 4, 4)          # m=2, k=4, dsub=4
     df = spark.createDataFrame(pdf).repartition(5)
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch",
-                         None)
+    # the effective value (the default included), restored below
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "37")
     qs = df.filter(F.col("vec_id") < 3)
     # two cells of the exact scan, one per half of the distinct vectors
@@ -2404,9 +2404,7 @@ def test_pq_topk_deterministic_under_ties_and_batching(spark):
         exact = {name: (sorted(tuple(r) for r in got.collect()),
                         sorted(want)) for name, (got, want) in exact.items()}
     finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.execution.arrow.maxRecordsPerBatch", old)
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     # independent expectation
     Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
     codes = np.empty((300, 2), dtype=int)
@@ -3026,3 +3024,167 @@ def test_snapshot_diff_fingerprint_separator_distinguishes_shifts(spark):
     st = snapshot_diff(a, b, "id",
                        fingerprint_cols=["u", "v"]).collect()[0]["status"]
     assert st == "changed"
+
+
+def _stage_tasks(spark, group, fn):
+    """Task count of every stage that ran in the jobs ``fn`` starts,
+    under a fresh job group (a skipped stage, e.g. the lineage of a
+    cache, completes no task and is left out)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = [st.getStageInfo(s)
+              for j in sorted(st.getJobIdsForGroup(group))
+              for s in st.getJobInfo(j).stageIds]
+    return [s.numTasks for s in stages if s.numCompletedTasks]
+
+
+def _ann_corpus(spark, n, seed=3, dim=8):
+    import pandas as pd
+    X = np.random.RandomState(seed).randn(n, dim)
+    return spark.createDataFrame(pd.DataFrame(
+        {"vec_id": np.arange(n, dtype="int64"),
+         "embedding": [r.tolist() for r in X]}))
+
+
+def test_arrow_stages_one_task_per_batch(spark):
+    """A cached frame whose rows fit one Arrow batch runs the map-side
+    Arrow stages (the IVF-PQ encode, the nearest-cell assign and the
+    top-k scan) as one task each, whatever its partition count."""
+    from handyspark_spark.pipeline import similarity as S
+    from handyspark_spark.pipeline.ann_index import IVFIndex
+    df = _ann_corpus(spark, 6000).repartition(4).cache()
+    try:
+        df.count()
+        C, books = S.ivfpq_fit(df, n_centroids=4, m=2, nbits=2,
+                               sample_n=256)
+        enc = S.ivfpq_encode(df, C, books)
+        assert set(_stage_tasks(spark, "one-encode", enc.collect)) == {1}
+        enc = enc.cache()
+        enc.count()
+        assign = IVFIndex(C).assign(df)
+        assert set(_stage_tasks(spark, "one-assign", assign.collect)) == {1}
+        qt = S._query_table(df, df.limit(32), "embedding", "vec_id", 100,
+                            "t")
+        rows = enc.select(F.col("vec_id").alias("neighbor_id"), "cell",
+                          "pq_code")
+        pq = S._topk_scan(rows, qt, C, 2, 10, "embedding", books)
+        assert set(_stage_tasks(spark, "one-scan-pq", pq.collect)) == {1}
+        exact = S._topk_scan(
+            df.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").alias("_v")), qt, C, 2, 10,
+            "embedding")
+        assert set(_stage_tasks(spark, "one-scan", exact.collect)) == {1}
+        enc.unpersist()
+    finally:
+        df.unpersist()
+
+
+def test_arrow_scan_spreads_above_one_batch(spark, tmp_path):
+    """Above one Arrow batch (a cached frame over
+    ``maxRecordsPerBatch``), and on a file scan whose plan states no
+    row count, the top-k scan still spreads over ``defaultParallelism``
+    tasks."""
+    from handyspark_spark.pipeline import similarity as S
+    n = spark.sparkContext.defaultParallelism
+    C = np.zeros((1, 8))
+
+    def scan_tasks(src, group):
+        qt = S._query_table(src, src.limit(4), "embedding", "vec_id", 10,
+                            "t")
+        rows = src.select(F.col("vec_id").alias("neighbor_id"),
+                          F.col("embedding").alias("_v"))
+        return _stage_tasks(spark, group, S._topk_scan(
+            rows, qt, C, 1, 5, "embedding").collect)
+
+    _ann_corpus(spark, 300).coalesce(1).write.parquet(str(tmp_path / "c"))
+    files = spark.read.parquet(str(tmp_path / "c"))
+    assert max(scan_tasks(files, "spread-parquet")) >= n
+    cached = _ann_corpus(spark, 300).coalesce(1).cache()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        cached.count()
+        assert max(scan_tasks(cached, "spread-one-batch")) == 1
+        spark.conf.set(key, "100")
+        assert max(scan_tasks(cached, "spread-cached")) >= n
+    finally:
+        spark.conf.set(key, old)
+        cached.unpersist()
+
+
+def test_arrow_one_task_path_equals_spread_path(spark):
+    """The ANN searches return the same rows on the one-task path as on
+    a forced many-partition path (``maxRecordsPerBatch=37`` turns the
+    rule off and cuts 37-row batches), on the duplicate-row corpus
+    whose ties straddle the batch cuts."""
+    import pandas as pd
+    from handyspark_spark.pipeline import similarity as S
+    rng = np.random.RandomState(9)
+    base = rng.randn(6, 8)
+    X = np.repeat(base, 50, axis=0)
+    ids = np.arange(300)
+    rng.shuffle(ids)
+    df = spark.createDataFrame(pd.DataFrame(
+        {"vec_id": ids.astype("int64"),
+         "embedding": [r.tolist() for r in X]})).repartition(5)
+    qs = df.filter(F.col("vec_id") < 3)
+    books = rng.randn(2, 4, 4)
+    C2 = base[[0, 3]] / np.linalg.norm(base[[0, 3]], axis=1, keepdims=True)
+    searches = {
+        "brute_force_topk": lambda: S.brute_force_topk(df, qs, k=5),
+        "ivf_topk": lambda: S.ivf_topk(df, qs, k=5, centroids=C2,
+                                       nprobe=1),
+        "ivfpq_topk": lambda: S.ivfpq_topk(
+            df, qs, k=5, centroids=C2, nprobe=2, books=books,
+            dtype="float64"),
+        "ivfpq_topk_rerank": lambda: S.ivfpq_topk(
+            df, qs, k=5, centroids=C2, nprobe=1, books=books, rerank=20,
+            dtype="float64")}
+
+    def run():
+        return {name: sorted(tuple(r) for r in fn().collect())
+                for name, fn in searches.items()}
+
+    sc = spark.sparkContext
+    assert S._arrow_sized(df, spread=True).rdd.getNumPartitions() == 1
+    one = run()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "37")
+    try:
+        assert (S._arrow_sized(df, spread=True).rdd.getNumPartitions()
+                == sc.defaultParallelism)
+        spread = run()
+    finally:
+        spark.conf.set(key, old)
+    for name in searches:
+        assert one[name] == spread[name] and len(one[name]) == 15, name
+
+
+def test_shingle_rows_equal_exploded_rolling_hashes(spark, docs):
+    """``shingle_rows`` gives the multiset of ``explode(rolling_hashes)``
+    bit for bit, per document, including NULL and empty texts, doubled
+    spaces and documents shorter than k, and its per-gram hash is a
+    codegen'd projection over a codegen'd Generate, no lambda."""
+    from handyspark_spark.pipeline.text import rolling_hashes, shingle_rows
+    edge = spark.createDataFrame(
+        [(10 ** 9, None), (10 ** 9 + 1, ""), (10 ** 9 + 2, "a  b c"),
+         (10 ** 9 + 3, "a b")], "doc_id long, text string")
+    df = docs.select("doc_id", "text").unionByName(edge)
+    for k in (5, 13):
+        got = shingle_rows(df, "text", k, ["doc_id"])
+        want = df.select("doc_id",
+                         F.explode(rolling_hashes("text", k)).alias("_k"))
+        rows = sorted(tuple(r) for r in got.collect())
+        assert rows == sorted(tuple(r) for r in want.collect())
+        assert len(rows) > df.count()
+    top, gen = (line.strip(" +-") for line in got._jdf.queryExecution()
+                .executedPlan().toString().split("\n")[:2])
+    assert top.startswith("*(") and "Project" in top
+    assert "xxhash64" in top and "lambda" not in top
+    assert gen.startswith("*(") and "Generate explode(sequence" in gen
