@@ -29,9 +29,10 @@ are ``applyInArrow`` groups over one cosine-pair kernel,
 ``_cosine_pairs``.
 
 The map-side Arrow stages (the scan, the encoder, the nearest-cell
-projection) take their task count from one rule, ``_arrow_sized``: an
-input whose plan states a row count that fits one Arrow batch runs as
-one Python task; the grouped kernels keep the tasks AQE coalesces.
+projection) take their task count from one rule, ``_arrow_sized``: a
+materialized cache or local relation that fits one Arrow batch (and,
+for a scan, a bounded score matrix) runs as one Python task; the
+grouped kernels keep the tasks AQE coalesces.
 """
 from __future__ import annotations
 
@@ -264,51 +265,92 @@ def _cosine_pairs(tbl: pa.Table, col: str, threshold: float,
                      "cosine": pa.array(c, pa.float64())})
 
 
-# plan nodes that keep their child's row count; ``_arrow_sized`` reads
-# the count below them (a Project's statistics carry none)
-_ROW_PRESERVING = ("Project", "Repartition", "ArrowEvalPython")
+# expression nodes of a plain projection: column picks, renames, casts
+# and constants, as the family's callers put over a corpus; a Project of
+# anything else (a computed column) is work the one-task path would pull
+# into its task
+_PLAIN_EXPRS = ("AttributeReference", "Alias", "Cast", "Literal")
+
+# most |queries| x |rows| scores one scan task holds (32 MB at fp64).
+# Measured on a cached 10k x 64 corpus, 4-core host, one task vs four:
+# at 1.3M scores (128 queries) one task is faster (PQ 0.39 vs 0.48 s,
+# exact 0.34 vs 0.47 s) on half the CPU; at 5M (512 queries) it is
+# within 0.1 s on ~1 s less CPU; at 20M (2000 queries) it takes twice
+# the wall time (PQ 1.53 vs 0.69 s)
+_ONE_TASK_SCORES = 1 << 22
 
 
-def _arrow_sized(frame: DataFrame, spread: bool = False) -> DataFrame:
+def _plain(expr) -> bool:
+    kids = expr.children()
+    return expr.nodeName() in _PLAIN_EXPRS and all(
+        _plain(kids.apply(i)) for i in range(kids.size()))
+
+
+def _stated_rows(frame: DataFrame) -> int | None:
+    """``frame``'s exact row count, when its optimized plan is a
+    materialized cache or a local relation under plain projections and
+    repartitions only; None otherwise (a file scan, a range, a Python
+    UDF or a computed column on the way, an unloaded cache)."""
+    # a fresh plan: the frame's own may predate the cache it reads
+    plan = frame.select("*")._jdf.queryExecution().optimizedPlan()
+    while plan.nodeName() in ("Project", "Repartition"):
+        if plan.nodeName() == "Project":
+            exprs = plan.projectList()
+            if not all(_plain(exprs.apply(i)) for i in range(exprs.size())):
+                return None
+        plan = plan.child()
+    if plan.nodeName() == "LocalRelation":
+        return int(plan.data().size())
+    if (plan.nodeName() == "InMemoryRelation"
+            and plan.cacheBuilder().isCachedColumnBuffersLoaded()):
+        return int(plan.stats().rowCount().get())
+    return None
+
+
+def _arrow_sized(frame: DataFrame, source: DataFrame | None = None,
+                 queries: int | None = None) -> DataFrame:
     """The one task-count rule of the family's map-side Arrow stages:
-    ``_topk_scan``'s ``mapInArrow``, the ``ivfpq_encode`` Arrow UDF and
-    the ``_nearest_cell_udf`` projections. A Python task has a fixed
-    start-up cost far above what a kernel spends on one batch (pyspark
-    4.1 under CPython 3.11: 0.1-0.2 s of worker CPU, most of it in
+    ``_topk_scan``'s ``mapInArrow`` (``queries`` is its query count),
+    the ``ivfpq_encode`` Arrow UDF and the ``_nearest_cell_udf``
+    projections. A Python task has a fixed start-up cost far above what
+    a kernel spends on one small batch (pyspark 4.1 under CPython 3.11:
+    0.1-0.2 s of worker CPU, most of it in
     ``importlib.invalidate_caches``), so the task count follows the
-    input's rows, not its files or the cluster's cores:
+    stage's work, not its input's files or the cluster's cores:
 
-    - when the optimized plan states ``frame``'s row count (read below
-      its projections, which drop it: a materialized cache or a local
-      relation states one, a file scan does not) and the count fits one
-      Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``),
-      the stage is one task, on ``coalesce(1)``: narrow, no shuffle;
-    - otherwise ``spread`` (the scan) repartitions a frame with fewer
-      partitions than ``defaultParallelism`` up to it, so a corpus in
-      a few large files does not serialize a |queries| x |corpus| scan
-      into a few tasks. A cell filter pushed into the rows sits below
-      that shuffle, so parquet cell pruning still happens at the read.
+    - when ``source`` (default ``frame``: the input before the stage's
+      own kernel) states its row count (``_stated_rows``), the count
+      fits one Arrow batch (``spark.sql.execution.arrow.
+      maxRecordsPerBatch``; <= 0 is no limit) and a scan's
+      |queries| x |rows| scores stay within ``_ONE_TASK_SCORES``, the
+      stage is one task, on ``coalesce(1)``: narrow, no shuffle;
+    - otherwise the scan repartitions a frame with fewer partitions
+      than ``defaultParallelism`` up to it, so a corpus in a few large
+      files does not serialize a |queries| x |corpus| scan into a few
+      tasks (measured 98 s at 2000 x 200k rows on the 3 tasks of its
+      input splits, ~8 s on 32). A cell filter pushed into the rows
+      sits below that shuffle, so parquet cell pruning still happens at
+      the read.
 
     Neither changes a result: the kernels work per row or per batch,
     and the scan's per-batch top rows meet in one global window."""
     spark = frame.sparkSession
-    # a fresh plan: the frame's own may predate the cache it reads
-    plan = frame.select("*")._jdf.queryExecution().optimizedPlan()
-    while plan.nodeName() in _ROW_PRESERVING:
-        plan = plan.child()
-    count = plan.stats().rowCount()
+    count = _stated_rows(frame if source is None else source)
     batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    if count.isDefined() and int(count.get()) <= batch:
+    if (count is not None and (batch <= 0 or count <= batch)
+            and count * (queries or 1) <= _ONE_TASK_SCORES):
         return frame.coalesce(1)
     n = spark.sparkContext.defaultParallelism
-    if spread and frame._jdf.queryExecution().toRdd().getNumPartitions() < n:
+    if (queries is not None
+            and frame._jdf.queryExecution().toRdd().getNumPartitions() < n):
         return frame.repartition(n)
     return frame
 
 
 def _topk_scan(rows: DataFrame, qt: pa.Table, C: np.ndarray, nprobe: int,
                take: int, vec_col: str, books: np.ndarray | None = None,
-               dtype=np.float64) -> DataFrame:
+               dtype=np.float64, source: DataFrame | None = None
+               ) -> DataFrame:
     """The one scorer of the ANN top-k family: a ``mapInArrow`` over the
     corpus ``rows`` against the ``_query_table`` ``qt``, emitting
     (query_id, neighbor_id, score) candidates for one window to rank.
@@ -331,7 +373,9 @@ def _topk_scan(rows: DataFrame, qt: pa.Table, C: np.ndarray, nprobe: int,
     window's (score desc, neighbor_id asc) order picks among them.
 
     ``dtype`` float32 runs the PQ scan at half width: Q, the centroid
-    term and the books are cast once, here."""
+    term and the books are cast once, here. ``source`` (default
+    ``rows``) is the frame ``_arrow_sized`` sizes the scan by: the
+    corpus under an encode the caller chained into ``rows``."""
     sc = rows.sparkSession.sparkContext
     n_cells, dim = C.shape
     Q = _unit_rows(qt["_q"], vec_col, dim)
@@ -345,7 +389,7 @@ def _topk_scan(rows: DataFrame, qt: pa.Table, C: np.ndarray, nprobe: int,
         Q, CT, books = Q.astype(dtype), CT.astype(dtype), books.astype(dtype)
     b_scan = sc.broadcast((qt["query_id"].combine_chunks(), Q, CT, probe,
                            C, books))
-    rows = _arrow_sized(rows, spread=True)
+    rows = _arrow_sized(rows, source, qt.num_rows)
     if not qt.num_rows:             # no queries: same schema, no rows
         rows = rows.limit(0)
 
@@ -827,6 +871,7 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
             vec_col=vec_col, id_col=id_col, seed=seed)
     C = np.asarray(centroids, dtype=np.float64)
     books = np.asarray(books, dtype=np.float64)
+    source = df if encoded is None else encoded
     if encoded is None:
         encoded = ivfpq_encode(df, C, books, vec_col, id_col)
     rows = encoded.select(
@@ -835,7 +880,7 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     cand = _topk_scan(rows, qt, C, nprobe, max(k, rerank or 0), vec_col,
                       books,
                       np.float32 if dtype in ("float32", "fp32")
-                      else np.float64)
+                      else np.float64, source)
     if rerank is None:
         return (_top_rows(cand, "score", k)
                 .select("query_id", "neighbor_id",

@@ -3084,11 +3084,13 @@ def test_arrow_stages_one_task_per_batch(spark):
         df.unpersist()
 
 
-def test_arrow_scan_spreads_above_one_batch(spark, tmp_path):
+def test_arrow_scan_spreads_above_one_batch(spark, tmp_path, monkeypatch):
     """Above one Arrow batch (a cached frame over
-    ``maxRecordsPerBatch``), and on a file scan whose plan states no
-    row count, the top-k scan still spreads over ``defaultParallelism``
-    tasks."""
+    ``maxRecordsPerBatch``), above one task's score bound (|queries| x
+    |rows| over ``_ONE_TASK_SCORES``), and on a file scan whose plan
+    states no row count, the top-k scan still spreads over
+    ``defaultParallelism`` tasks; ``maxRecordsPerBatch`` <= 0 is no
+    limit, so a small cached frame stays one task."""
     from handyspark_spark.pipeline import similarity as S
     n = spark.sparkContext.defaultParallelism
     C = np.zeros((1, 8))
@@ -3110,11 +3112,48 @@ def test_arrow_scan_spreads_above_one_batch(spark, tmp_path):
     try:
         cached.count()
         assert max(scan_tasks(cached, "spread-one-batch")) == 1
+        spark.conf.set(key, "0")
+        assert max(scan_tasks(cached, "spread-unbounded-batch")) == 1
         spark.conf.set(key, "100")
         assert max(scan_tasks(cached, "spread-cached")) >= n
+        spark.conf.set(key, old)
+        monkeypatch.setattr(S, "_ONE_TASK_SCORES", 4 * 300 - 1)
+        assert max(scan_tasks(cached, "spread-scores")) >= n
     finally:
         spark.conf.set(key, old)
         cached.unpersist()
+
+
+def test_arrow_sized_keeps_caller_work_spread(spark):
+    """The one-task path takes a materialized cache or a local relation
+    under plain projections only: a caller's Arrow UDF or computed
+    column over a small cached frame, a ``range`` and a cache not yet
+    loaded keep their partitions, and so does the encode over them."""
+    from handyspark_spark.pipeline import similarity as S
+    df = _ann_corpus(spark, 600).repartition(4).cache()
+    try:
+        df.count()
+        C, books = S.ivfpq_fit(df, n_centroids=2, m=2, nbits=2,
+                               sample_n=128)
+        ident = F.arrow_udf(lambda v: v, "array<double>")
+        udf = df.withColumn("embedding", ident("embedding"))
+        computed = df.withColumn("n", F.sqrt(F.col("vec_id")))
+        unloaded = _ann_corpus(spark, 600, seed=5).repartition(4).cache()
+        for name, src in (("udf", udf), ("computed", computed),
+                          ("unloaded", unloaded)):
+            assert S._stated_rows(src) is None, name
+            assert S._arrow_sized(src).rdd.getNumPartitions() == 4, name
+        assert set(_stage_tasks(spark, "keep-udf", S.ivfpq_encode(
+            udf, C, books).collect)) == {4}
+        r = spark.range(0, 600, numPartitions=4)
+        assert S._stated_rows(r) is None
+        assert S._arrow_sized(r).rdd.getNumPartitions() == 4
+        plain = df.select(F.col("vec_id").cast("string").alias("id"),
+                          F.lit(0).alias("cell"))
+        assert S._stated_rows(plain) == 600
+        unloaded.unpersist()
+    finally:
+        df.unpersist()
 
 
 def test_arrow_one_task_path_equals_spread_path(spark):
@@ -3151,13 +3190,13 @@ def test_arrow_one_task_path_equals_spread_path(spark):
                 for name, fn in searches.items()}
 
     sc = spark.sparkContext
-    assert S._arrow_sized(df, spread=True).rdd.getNumPartitions() == 1
+    assert S._arrow_sized(df, queries=3).rdd.getNumPartitions() == 1
     one = run()
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "37")
     try:
-        assert (S._arrow_sized(df, spread=True).rdd.getNumPartitions()
+        assert (S._arrow_sized(df, queries=3).rdd.getNumPartitions()
                 == sc.defaultParallelism)
         spread = run()
     finally:
