@@ -46,6 +46,16 @@ def _steal_pct(s0, s1):
     return 100 * ds[7] / (sum(ds) or 1)
 
 
+def error_line(e: Exception) -> str:
+    """The line a failed query records: a ``HandyException``'s summary
+    (its message starts with colour escapes), else the message's first
+    line."""
+    from handyspark_spark.core.util import HandyException
+    if isinstance(e, HandyException):
+        return e.summary
+    return (str(e).strip().splitlines() or [type(e).__name__])[0]
+
+
 def settle_gate(threshold=1.0, window=5.0, max_wait=600.0):
     """Pre-run host-settle gate: sample CPU steal in `window`-second
     slices and hold the bench until a slice reads below `threshold`%.
@@ -186,12 +196,9 @@ def main():
 
     host_steal: dict[str, float] = {}
 
-    # a failing query has no timing: it is recorded by name with the
-    # first line of its message, and the run exits 1
+    # a failing query has no timing: it is recorded by name with its
+    # error_line, and the run exits 1
     errors: dict[str, str] = {}
-
-    def first_line(e: Exception) -> str:
-        return (str(e).strip().splitlines() or [type(e).__name__])[0]
 
     timings: dict[str, float] = {}
     total = 0.0
@@ -201,7 +208,7 @@ def main():
         try:
             dt = run_one(fn, sink)
         except Exception as e:
-            errors[name] = first_line(e)
+            errors[name] = error_line(e)
             continue
         s1 = proc_stat()
         steal = _steal_pct(s0, s1)
@@ -230,7 +237,7 @@ def main():
             try:
                 noop_timings[name] = round(run_one(qs[name], "noop"), 3)
             except Exception as e:
-                errors[name] = "noop: " + first_line(e)
+                errors[name] = "noop: " + error_line(e)
 
     payload = {
         "metric": "operator_suite_wall_clock",

@@ -100,21 +100,6 @@ class BinaryClassificationMetrics:
                                   "_n__pos": "P", "_n__neg": "N"})
         return self._cum
 
-    def persist(self) -> "BinaryClassificationMetrics":
-        """Materialize the shared curve once so every curve metric
-        (roc/pr/thresholds/fMeasure/getMetricsByThreshold) is a cheap
-        projection of the cached frame instead of a full rebuild. The
-        curve is |distinct scores| rows — small after score_bins/rounding;
-        cache-friendly even at 100 TB input."""
-        self._cum = self._curve().persist()
-        return self
-
-    def unpersist(self) -> "BinaryClassificationMetrics":
-        if self._cum is not None:
-            self._cum.unpersist()
-            self._cum = None
-        return self
-
     def thresholds(self) -> DataFrame:
         return self._curve().select(F.col("score").alias("threshold")) \
                             .orderBy(F.desc("threshold"))
@@ -134,10 +119,12 @@ class BinaryClassificationMetrics:
 
     def pr(self) -> DataFrame:
         """(recall, precision) with (0, p@lowest-recall) prepended."""
+        # the head row's collect and the returned plan both read the
+        # curve: the lazy checkpoint runs its cumulative sums once
         c = self._curve().select(
             F.try_divide("tp", "P").alias("recall"),
             (F.col("tp") / (F.col("tp") + F.col("fp"))).alias("precision"),
-            "score")
+            "score").localCheckpoint(eager=False)
         first = c.orderBy(F.desc("score")).first()
         spark = c.sparkSession
         head = _const_rows(spark, ["recall", "precision", "score"],

@@ -289,14 +289,9 @@ def corr_plan(df: DataFrame, colnames: list[str], method: str = "pearson",
         # in BOTH modes — pandas' corr diagonal is NaN there too, so
         # no lit(1.0) special case belongs here.)
         from functools import reduce as _reduce
-        from ..core.cache import managed_persist
-        # The spine persist intentionally OUTLIVES this function: the
-        # returned plan is lazy and every pair's branch re-reads the
-        # spine at execution, so releasing it here would turn the
-        # cache into P recomputes. The bounded managed registry is the
-        # documented backstop for exactly this lifetime.
-        spine = (managed_persist(df.select(*strata).distinct())
-                 if strata else None)
+        # every pair's branch reads the spine and shares its distinct
+        # exchange (ReusedExchange), so it is computed once
+        spine = df.select(*strata).distinct() if strata else None
         outs = []
         for i, cx in enumerate(colnames):
             for cy in colnames[i:]:

@@ -292,16 +292,14 @@ def broadcast_dim_ranks(df: DataFrame, cols: list[str],
     groups with and joins to NaN) and sorts it after every number, so
     NaN values get the same terminal rank the melted path assigns.
     """
-    from ..core.cache import managed_persist, release
-
     vals = F.array(*[F.col(c).cast("double") for c in cols])
     dims = (df.select(F.posexplode(vals).alias("_cid", "_v"))
             .filter(F.col("_v").isNotNull())
             .groupBy("_cid", "_v")
             .agg(F.count(F.lit(1)).alias("_cnt")))
-    dims = managed_persist(dims)
+    # the gate's count and the broadcast joins read ONE materialization
+    dims = dims.localCheckpoint(eager=False)
     if dims.count() > max_dim_rows:
-        release(dims)
         return None
     # rank(v) = #smaller + (cnt_v + 1)/2 — cumulative window over the
     # |distinct| dim rows only (per column, so a 4M-row worst case)

@@ -89,12 +89,11 @@ def skew_report(df: DataFrame, key, top: int = 10) -> DataFrame:
 
     Returns (key, cnt, share, skew_factor) ordered by cnt desc."""
     k = F.col(key) if isinstance(key, str) else key
-    # persist the per-key counts: both the summary branch and the top-k
-    # branch consume them — without the cache the CORPUS is scanned and
-    # re-grouped twice. |keys| rows, MEMORY_AND_DISK spills if large.
+    # the summary branch and the top-k branch both consume the per-key
+    # counts and share their aggregate exchange (ReusedExchange), so the
+    # corpus is scanned and grouped once
     counts = (df.select(k.cast("string").alias("key"))
-              .groupBy("key").agg(F.count(F.lit(1)).alias("cnt"))
-              .persist())
+              .groupBy("key").agg(F.count(F.lit(1)).alias("cnt")))
     summary = counts.agg(
         F.sum("cnt").cast("double").alias("_total"),
         F.count(F.lit(1)).cast("double").alias("_nkeys"))

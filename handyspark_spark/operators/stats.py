@@ -63,14 +63,16 @@ def welch_t(s1: dict, s2: dict) -> tuple[float, float, float]:
 
 def ttest(df: DataFrame, colname: str, group_col: str) -> pd.DataFrame:
     """Pairwise Welch t-tests between every pair of groups
-    (ref stats.py:22-34). One Spark job total."""
+    (ref stats.py:22-34). One Spark job total. Fewer than two groups
+    give no pair: 0 rows with the same five columns."""
     ssv = StatisticalSummaryValues(df, colname, group_col)
     rows = []
     for g1, g2 in combinations(sorted(ssv.groups), 2):
         t, dof, p = welch_t(ssv.groups[g1], ssv.groups[g2])
         rows.append({"group_1": g1, "group_2": g2, "t_stat": t,
                      "dof": dof, "p_value": p})
-    return pd.DataFrame(rows)
+    return pd.DataFrame(rows, columns=["group_1", "group_2", "t_stat",
+                                       "dof", "p_value"])
 
 
 def _ecdf_plan(df: DataFrame, colname: str) -> DataFrame:

@@ -74,10 +74,10 @@ def _cap_candidate_pairs(keyed: DataFrame, key_cols: list[str],
     cap of ``similarity._query_table``; pass ``max_candidate_pairs=None``
     to opt out.
 
-    The guard is an eager job, so without caching the keyed frame's
-    upstream runs twice — once here, once under the candidate join.
-    ``materialize=True`` persists it (bounded ``core.cache`` registry)
-    so both share one materialization; callers MUST use the RETURNED
+    The guard is an eager job, so without a materialization the keyed
+    frame's upstream runs twice — once here, once under the candidate
+    join. ``materialize=True`` pins it with a lazy local checkpoint so
+    both share one materialization; callers MUST use the RETURNED
     frame. Reserve it for truncated/bounded generators (the
     ``_smallest_k_per_key`` outputs, whose salted two-phase top-k is
     the expensive thing not to run twice); for unbounded generators
@@ -88,17 +88,13 @@ def _cap_candidate_pairs(keyed: DataFrame, key_cols: list[str],
     if max_candidate_pairs is None:
         return keyed
     if materialize:
-        from ..core.cache import managed_persist
-        keyed = managed_persist(keyed)
+        keyed = keyed.localCheckpoint(eager=False)
     row = (keyed.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("_n"))
            .agg(F.sum(F.col("_n") * (F.col("_n") - 1) / 2).alias("_p"),
                 F.max("_n").alias("_mx"))
            .collect()[0])
     npairs = int(row["_p"] or 0)
     if npairs > max_candidate_pairs:
-        if materialize:
-            from ..core.cache import release
-            release(keyed)
         raise ValueError(
             f"{op}: candidate-pair volume {npairs:,} exceeds "
             f"max_candidate_pairs={max_candidate_pairs:,} (hottest join "
@@ -313,15 +309,10 @@ def _jaccard_prefix(ts: DataFrame, threshold: float,
     if max_postings_per_token is not None:
         # the capped form pays two more whole-plan evaluations than the
         # emit-once form (the eager guard job, and verify joins in a
-        # separate action from candidate generation) — persist the two
-        # slim corpus-sized intermediates so tokenize and the docs
-        # groupBy each run ONCE per invocation (bounded core.cache
-        # registry; the funnel's base-persist contract). sf10, cold
-        # persists + warm session: 10.6-11.2s under 5-6% host steal
-        # (r10 committed: 16.2s); see BENCH_SF10_r11 for the settled
-        # in-suite number
-        from ..core.cache import managed_persist
-        ts = managed_persist(ts)
+        # separate action from candidate generation) — pin the two slim
+        # corpus-sized intermediates with lazy local checkpoints so
+        # tokenize and the docs groupBy each run ONCE per invocation
+        ts = ts.localCheckpoint(eager=False)
     inv = ts.select("_id", F.size("_toks").alias("_n"),
                     F.explode("_toks").alias("_tok"))
     dfc = inv.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
@@ -350,10 +341,10 @@ def _jaccard_prefix(ts: DataFrame, threshold: float,
         # capping invalidates (the minimal common token may have been
         # truncated from the index while a later one survived).
         #
-        # see the ts persist above: the guard job, candidate
+        # see the ts checkpoint above: the guard job, candidate
         # generation, and the verify joins each consume docs from a
         # different action, and exchange reuse does not cross actions
-        docs = managed_persist(docs)
+        docs = docs.localCheckpoint(eager=False)
         pref = docs.select("_id", F.explode(F.slice("_kt", 1, p))
                            .alias("_tok"))
         pref = _smallest_k_per_key(pref, ["_tok"], "_id",
@@ -816,7 +807,7 @@ def simhash_neardup_pairs(df: DataFrame, text_col: str = "text",
     block-bucket candidate volume (sum over (block, value) buckets of
     C(n, 2); near-dup CLIQUES make both candidates and true output
     quadratic in clique depth — 346M pairs at sf10). The guard is one
-    linear aggregation over the persisted fingerprints; it raises
+    linear aggregation over the checkpointed fingerprints; it raises
     naming the linear cluster-membership alternatives
     (minhash_lsh_groups / connected_components). ``None`` opts out.
 
@@ -834,12 +825,11 @@ def simhash_neardup_pairs(df: DataFrame, text_col: str = "text",
     construction, so the extra shuffle is capped too)."""
     n_blocks = max_hamming + 1
     width = 64 // n_blocks
-    # persist the fingerprints: |docs| x 16 bytes (tiny at any scale) —
-    # without it the self-join re-runs the expensive SimHash Arrow UDF
-    # once per side; the context cleaner reclaims the cache when the
-    # result plan is garbage-collected
-    from ..core.cache import managed_persist
-    fps = managed_persist(simhash_fingerprints(df, text_col, id_col))
+    # pin the fingerprints: |docs| x 16 bytes (tiny at any scale) —
+    # without it the guard job and each side of the self-join re-run
+    # the expensive SimHash Arrow UDF
+    fps = simhash_fingerprints(df, text_col, id_col).localCheckpoint(
+        eager=False)
     # one posexplode over an array of block slices — the simhash UDF is
     # evaluated ONCE per row (a union of per-block selects would re-run
     # the Arrow UDF in every branch: (k+1)x the python cost)
@@ -852,10 +842,10 @@ def simhash_neardup_pairs(df: DataFrame, text_col: str = "text",
     if max_docs_per_bucket is not None:
         cand = _smallest_k_per_key(cand, ["block", "block_val"],
                                    id_col, max_docs_per_bucket)
-    # guard shares the persisted fingerprints: one cheap keyed count
+    # guard shares the checkpointed fingerprints: one cheap keyed count
     # over |docs| x (k+1) rows, not a recompute of the simhash UDF
     # (post-truncation when capped, so the bounded form passes it);
-    # the capped path also persists the truncated buckets so the
+    # the capped path also checkpoints the truncated buckets so the
     # salted top-k isn't re-run under the self-join
     cand = _cap_candidate_pairs(
         cand, ["block", "block_val"], max_candidate_pairs,
@@ -1038,7 +1028,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     star edges, not cliques) the edge list is often tiny relative to the
     corpus — when it fits ``small_graph_threshold`` rows, an exact
     driver-side union-find replaces the iterative loop: one collect of
-    the (already persisted, already distinct) edges versus
+    the (already checkpointed, already distinct) edges versus
     ~log(diameter) multi-join rounds, each a full Spark job. 2M edges
     ≈ tens of MB on the driver. Pass ``small_graph_threshold=0`` to
     force the distributed loop; results are identical (tests pin it).
@@ -1068,10 +1058,11 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
              .unionByName(pairs.select(F.col(id_b).alias("src"),
                                        F.col(id_a).alias("dst")))
              .distinct()
-             .persist())          # reused every iteration — compute once
+             # reused by the probe and every iteration — compute once
+             .localCheckpoint(eager=False))
     if small_graph_threshold and (initial is None or seeds_from_edges):
-        # limit-probe: costs one job over the persisted edges and never
-        # materializes more than threshold+1 rows on the driver.
+        # limit-probe: costs one job over the checkpointed edges and
+        # never materializes more than threshold+1 rows on the driver.
         # Skipped when FOREIGN seed labels are supplied: the union-find
         # only sees the edge list, so a seed from a different edge
         # universe would yield labels that depend on which physical path
@@ -1081,7 +1072,6 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             et = edges.toArrow()
             comp = _components_unionfind(
                 zip(et["src"].to_pylist(), et["dst"].to_pylist()))
-            edges.unpersist()
             # an Arrow table enters Spark as a local relation: no
             # pickled RDD, no Python worker
             out = pa.table({"node": pa.array(list(comp), et["src"].type),
@@ -1102,58 +1092,51 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     else:
         labels = (nodes.withColumn("component", F.col("node"))
                   .localCheckpoint())  # truncate lineage at the loop entry
-    try:
-        converged = False
-        for _ in range(max_iterations):
-            neighbor_min = (edges.join(labels,
-                                       edges.dst == labels.node)
-                            .groupBy("src")
-                            .agg(F.min("component").alias("_nmin")))
-            stepped = (labels.join(neighbor_min,
-                                   labels.node == neighbor_min.src,
-                                   "left")
-                       .select(F.col("node"),
-                               F.col("component").alias("_prev"),
-                               F.least(F.col("component"),
-                                       F.coalesce(F.col("_nmin"),
-                                                  F.col("component")))
-                               .alias("component")))
-            # pointer jumping: component := label-of-my-label. Plain
-            # min-propagation needs rounds equal to each node's hop
-            # distance from the component minimum; the extra self-join
-            # halves the remaining distance every round -> O(log diameter)
-            lab2 = stepped.select(F.col("node").alias("_n2"),
-                                  F.col("component").alias("_c2"))
-            new_labels = (stepped.join(
-                lab2, stepped.component == lab2._n2, "left")
-                .select(F.col("node"), F.col("_prev"),
-                        F.least(F.col("component"),
-                                F.coalesce(F.col("_c2"),
-                                           F.col("component")))
-                        .alias("component"))
-                # truncate lineage EVERY round — without this each
-                # iteration replays the whole upstream plan (LSH,
-                # signatures, ...) and the job goes exponential. Lazy:
-                # the changed-count agg below materializes it, so the
-                # round is ONE job (convergence probe folded in, not a
-                # separate join+count job as before)
-                .localCheckpoint(eager=False))
-            changed = new_labels.agg(
-                F.sum((F.col("component") != F.col("_prev"))
-                      .cast("long"))).first()[0]
-            labels = new_labels.drop("_prev")
-            if not changed:
-                converged = True
-                break
-        if not converged:
-            # a silently non-converged result is indistinguishable from a
-            # correct one — fail loudly instead
-            raise RuntimeError(
-                f"connected_components did not converge in "
-                f"{max_iterations} iterations; raise max_iterations")
-        return labels
-    finally:
-        edges.unpersist()
+    for _ in range(max_iterations):
+        neighbor_min = (edges.join(labels,
+                                   edges.dst == labels.node)
+                        .groupBy("src")
+                        .agg(F.min("component").alias("_nmin")))
+        stepped = (labels.join(neighbor_min,
+                               labels.node == neighbor_min.src,
+                               "left")
+                   .select(F.col("node"),
+                           F.col("component").alias("_prev"),
+                           F.least(F.col("component"),
+                                   F.coalesce(F.col("_nmin"),
+                                              F.col("component")))
+                           .alias("component")))
+        # pointer jumping: component := label-of-my-label. Plain
+        # min-propagation needs rounds equal to each node's hop
+        # distance from the component minimum; the extra self-join
+        # halves the remaining distance every round -> O(log diameter)
+        lab2 = stepped.select(F.col("node").alias("_n2"),
+                              F.col("component").alias("_c2"))
+        new_labels = (stepped.join(
+            lab2, stepped.component == lab2._n2, "left")
+            .select(F.col("node"), F.col("_prev"),
+                    F.least(F.col("component"),
+                            F.coalesce(F.col("_c2"),
+                                       F.col("component")))
+                    .alias("component"))
+            # truncate lineage EVERY round — without this each
+            # iteration replays the whole upstream plan (LSH,
+            # signatures, ...) and the job goes exponential. Lazy:
+            # the changed-count agg below materializes it, so the
+            # round is ONE job (convergence probe folded in, not a
+            # separate join+count job as before)
+            .localCheckpoint(eager=False))
+        changed = new_labels.agg(
+            F.sum((F.col("component") != F.col("_prev"))
+                  .cast("long"))).first()[0]
+        labels = new_labels.drop("_prev")
+        if not changed:
+            return labels
+    # a silently non-converged result is indistinguishable from a
+    # correct one — fail loudly instead
+    raise RuntimeError(
+        f"connected_components did not converge in "
+        f"{max_iterations} iterations; raise max_iterations")
 
 
 def dedup_keep_best(df: DataFrame, quality: Column | str | None = None,

@@ -53,16 +53,12 @@ def slice_histograms(df: DataFrame, slice_col, bucket_col,
     per-slice totals."""
     s = F.col(slice_col) if isinstance(slice_col, str) else slice_col
     b = F.col(bucket_col) if isinstance(bucket_col, str) else bucket_col
-    # persist: the histogram is |slices| x |buckets| rows but every
-    # reference re-runs the corpus-sized groupBy otherwise (Spark has no
-    # automatic CTE materialization across self-join branches — without
-    # this the drift plan scanned the corpus 8 times). The context
-    # cleaner reclaims the cache when the plan is garbage-collected.
+    # the histogram is |slices| x |buckets| rows and every reference
+    # reads it: the branches share its aggregate exchange
+    # (ReusedExchange), so the corpus-sized groupBy map side runs once
     hist = (df.select(s.alias(slice_name), b.alias(bucket_name))
             .groupBy(slice_name, bucket_name)
             .agg(F.count(F.lit(1)).alias("cnt")))
-    from ..core.cache import managed_persist
-    hist = managed_persist(hist)
     totals = hist.groupBy(slice_name).agg(F.sum("cnt").alias("_tot"))
     return (hist.join(F.broadcast(totals), slice_name)
             .select(slice_name, bucket_name, "cnt",
@@ -100,9 +96,12 @@ def drift_report_from_hist(h: DataFrame) -> DataFrame:
              .select("slice", "bucket", "cnt",
                      (F.col("cnt").cast("double") / F.col("_tot"))
                      .alias("p")))
-    # tiny frame, four downstream references (a, b, adjacency, totals)
-    from ..core.cache import managed_persist
-    h = managed_persist(h)
+    # tiny frame, four downstream references (a, b, adjacency, totals):
+    # the adjacency reads only its slice column, so the optimizer prunes
+    # the counts there and its exchanges differ from the other branches'
+    # — a lazy local checkpoint runs h's upstream (the corpus groupBy,
+    # or the state read) once
+    h = h.localCheckpoint(eager=False)
     # adjacency: slice -> next slice, via a tiny distinct + lead window
     from pyspark.sql import Window
     slices = h.select("slice").distinct()

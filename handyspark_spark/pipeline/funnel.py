@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..core.cache import managed_persist
 from .dedup import minhash_lsh_groups
 from .text import gopher_rules, shingle_rows
 
@@ -48,26 +47,26 @@ def pretrain_funnel(df, text_col="text", id_col="doc_id",
     # fused action (the conditional agg, the LSH subtree, the
     # contamination subtree). Spark has no cross-branch common-subplan
     # elimination — only the md5 EXCHANGE gets reused — so without a
-    # persist the scan + quality projection + window evaluate once per
+    # checkpoint the scan + quality projection + window evaluate once per
     # branch (measured at sf10: 12.3 -> 16.0s after the round-9 fusion
-    # dropped the old per-stage persists). Materializing the slim
-    # (id, text, _q, _e) frame restores single evaluation while keeping
-    # the one-pass conditional agg; it is corpus-text-sized, the same
-    # footprint the pre-fusion plan persisted.
-    base = managed_persist(
-        df.select(id_col, text_col)
-          .withColumn("_q", rules["pass"])
-          .withColumn("_qfirst",
-                      F.min(F.when(F.col("_q"), F.col(id_col))).over(w))
-          .withColumn("_e", F.col("_q")
-                      & (F.col("_qfirst") == F.col(id_col)))
-          .select(id_col, text_col, "_q", "_e"))
+    # dropped the old per-stage persists). A lazy local checkpoint of
+    # the slim (id, text, _q, _e) frame restores single evaluation while
+    # keeping the one-pass conditional agg; it is corpus-text-sized, the
+    # same footprint the pre-fusion plan persisted.
+    base = (df.select(id_col, text_col)
+            .withColumn("_q", rules["pass"])
+            .withColumn("_qfirst",
+                        F.min(F.when(F.col("_q"), F.col(id_col))).over(w))
+            .withColumn("_e", F.col("_q")
+                        & (F.col("_qfirst") == F.col(id_col)))
+            .select(id_col, text_col, "_q", "_e")
+            .localCheckpoint(eager=False))
     exact = base.filter(F.col("_e")).select(id_col, text_col)
 
     # sigs=: a precomputed full-corpus minhash_signature_arrays table
     # (same num_hashes contract as every other sigs= seam).
     # The LSH subtree then SUBSETS it to the exact-dedup survivors with
-    # a semi-join against the persisted base flags instead of re-signing
+    # a semi-join against the checkpointed base flags instead of re-signing
     # the filtered text. Round-11 A/B at sf10 (alternating in one
     # session, value-identical): settled tail re-sign 6.4s vs consume
     # 5.8s, and consume is far more robust while the box churns (6.6s

@@ -48,12 +48,13 @@ def tfidf(df: DataFrame, text_col: str = "text",
     Plan: tf table -> df-per-token derived from it (token-keyed shuffle,
     |vocab| rows) -> join back on token -> broadcast 1-row corpus count.
     Returns (id_col, tok, tf, df, tfidf)."""
-    # persist: both the df-per-token branch and the output join consume
-    # the tf table — without the cache the corpus explode+groupBy runs
-    # twice (|distinct (doc, term)| rows; MEMORY_AND_DISK spills)
-    from ..core.cache import managed_persist
-    tf = managed_persist(term_frequencies(df, text_col, id_col))
-    dfc = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    # the df-per-token branch and the output join both consume the tf
+    # table and share its aggregate exchange (ReusedExchange), so the
+    # corpus explode+groupBy map side runs once. df counts the docs with
+    # tf > 0, which reads tf: a count(1) lets the optimizer prune tf's
+    # count from the df branch, and the two exchanges would differ
+    tf = term_frequencies(df, text_col, id_col)
+    dfc = tf.groupBy("tok").agg(F.count_if(F.col("tf") > 0).alias("df"))
     n = df.select(F.count(F.lit(1)).alias("_n"))
     return (tf.join(dfc, "tok")
             .crossJoin(F.broadcast(n))
@@ -83,15 +84,15 @@ def bm25_topk(df: DataFrame, query_terms: list[str],
         F.size(tokens(text_col)).cast("double").alias("dl"),
         F.explode(F.filter(tokens(text_col),
                            lambda t: F.array_contains(qs, t))).alias("tok")))
-    # persist: the df branch and the scoring join both consume tf — the
-    # cache keeps the query-term scan+groupBy to one pass (tiny table:
-    # only docs containing a query term)
-    tf = hits.groupBy(id_col, "tok").agg(
-        F.count(F.lit(1)).cast("double").alias("tf"),
-        F.first("dl").alias("dl"))
-    from ..core.cache import managed_persist
-    tf = managed_persist(tf)
-    dfc = tf.groupBy("tok").agg(F.count(F.lit(1)).cast("double").alias("df"))
+    # the df branch and the scoring join both consume tf and share its
+    # aggregate exchange (ReusedExchange): the query-term scan+groupBy
+    # map side runs once. dl is a function of the doc, so it rides as a
+    # grouping key, and df counts the docs with tf > 0 (as in tfidf):
+    # both keep the two branches' exchanges identical
+    tf = hits.groupBy(id_col, "tok", "dl").agg(
+        F.count(F.lit(1)).cast("double").alias("tf"))
+    dfc = tf.groupBy("tok").agg(
+        F.count_if(F.col("tf") > 0).cast("double").alias("df"))
     stats = df.agg(
         F.count(F.lit(1)).cast("double").alias("_n"),
         F.avg(F.size(tokens(text_col))).alias("_avgdl"))
@@ -162,13 +163,10 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
     in-vocabulary by construction so no smoothing is needed. Returns
     (id_col, n_tokens, avg_logprob)."""
     toks = tokens(text_col)
-    # persist: the totals agg and the scoring join both consume the
-    # |vocab|-row unigram table; uncached, each re-runs the corpus
-    # explode+groupBy
+    # the totals agg and the scoring join both consume the |vocab|-row
+    # unigram table and share its aggregate exchange (ReusedExchange)
     uni = (df.select(F.explode(toks).alias("tok"))
            .groupBy("tok").agg(F.count(F.lit(1)).alias("n")))
-    from ..core.cache import managed_persist
-    uni = managed_persist(uni)
     tot = uni.agg(F.sum("n").cast("double").alias("_t"))
     exploded = df.select(F.col(id_col), F.explode(toks).alias("tok"))
     lp = F.log(F.col("n") / F.col("_t"))

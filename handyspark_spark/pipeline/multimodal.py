@@ -69,7 +69,7 @@ def codec_capabilities() -> dict:
     try:
         from PIL import Image  # noqa: F401
         caps["pil"] = True
-    except Exception:
+    except ImportError:
         pass
     import shutil
     caps["ffmpeg"] = shutil.which("ffmpeg") is not None

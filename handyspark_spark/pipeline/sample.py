@@ -280,29 +280,31 @@ def dsir_weights(df: DataFrame, target: DataFrame | None,
     # ONE corpus gram projection (round 9): the raw-side histogram AND
     # the per-doc features both derive from per-doc bucket counts, so
     # tokenize+md5 every corpus gram once, reduce to (id, bucket, c)
-    # with a map-side-combined groupBy, persist THAT, and read the q
-    # histogram off it (a buckets-row aggregate of an already-cached
-    # frame). The previous shape projected the corpus twice (hist pass
-    # + feats pass) — and the dup_spans round-9 profile showed this
-    # operator family is PROJECTION-bound, not shuffle-bound. Measured
-    # at sf1: 14.4 -> 11.8s cold. The persist intentionally outlives
-    # this function (the returned plan reads it); the bounded managed
-    # registry reclaims it. A caller-supplied doc_buckets (typically a
+    # with a map-side-combined groupBy, pin THAT with a lazy local
+    # checkpoint, and read the q histogram off it (a buckets-row
+    # aggregate of an already-materialized frame). The previous shape
+    # projected the corpus twice (hist pass + feats pass) — and the
+    # dup_spans round-9 profile showed this operator family is
+    # PROJECTION-bound, not shuffle-bound. Measured at sf1: 14.4 ->
+    # 11.8s cold. The checkpoint lives as long as the returned plan
+    # that reads it. A caller-supplied doc_buckets (typically a
     # materialized parquet read) is used as-is — column-pruned scans of
-    # a small source beat squatting in the executor cache.
+    # a small source beat squatting in the executor block store.
     if doc_buckets is None:
-        from ..core.cache import managed_persist
-        docb = managed_persist(
-            dsir_doc_buckets(df, text_col, id_col, n, buckets))
+        docb = dsir_doc_buckets(df, text_col, id_col, n, buckets) \
+            .localCheckpoint(eager=False)
     else:
         docb = doc_buckets
-    q = (docb.groupBy("_b").agg(F.sum("_c").alias("_qc"))).persist()
+    # p and q each feed a total (one collect) and the ratio table
+    # (another): the checkpoints keep each to one evaluation
+    q = (docb.groupBy("_b").agg(F.sum("_c").alias("_qc"))
+         .localCheckpoint(eager=False))
     if target_doc_buckets is not None:
-        p = (target_doc_buckets.groupBy("_b")
-             .agg(F.sum("_c").alias("_pc"))).persist()
+        p = target_doc_buckets.groupBy("_b").agg(F.sum("_c").alias("_pc"))
     else:
         p = (dsir_doc_buckets(target, tcol, None, n, buckets)
-             .withColumnRenamed("_c", "_pc")).persist()
+             .withColumnRenamed("_c", "_pc"))
+    p = p.localCheckpoint(eager=False)
     pt = p.agg(F.sum("_pc")).collect()[0][0] or 0
     qt = q.agg(F.sum("_qc")).collect()[0][0] or 0
     lr = (F.log((F.coalesce(F.col("_pc"), F.lit(0)) + smoothing)
@@ -316,14 +318,12 @@ def dsir_weights(df: DataFrame, target: DataFrame | None,
              .select("_b", F.floor(lr * 1e6 + F.lit(0.5))
                      .cast("bigint").alias("_lr_u")))
     # the ratio table is <= ``buckets`` (8k) rows: materialize it as a
-    # local frame so p/q can be UNPERSISTED here instead of squatting in
-    # the cache for the session (the returned plan no longer references
-    # them), and the broadcast ships a literal relation, not a plan.
-    # It travels as an Arrow table both ways, so no Python worker runs.
+    # local frame so the returned plan no longer references p/q (their
+    # checkpoints die with this call), and the broadcast ships a literal
+    # relation, not a plan. It travels as an Arrow table both ways, so
+    # no Python worker runs.
     ratio = df.sparkSession.createDataFrame(ratio.toArrow(),
                                             schema=ratio.schema)
-    p.unpersist()
-    q.unpersist()
     return (docb.join(F.broadcast(ratio), "_b", "left")
             .groupBy(id_col)
             .agg(F.sum("_c").cast("bigint").alias("n_feats"),

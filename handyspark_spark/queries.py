@@ -1227,32 +1227,12 @@ def q_ann_ivf_index(spark, sf_dir):
 # Classification metrics (ml/evaluation.py) — JVM-free threshold curves
 # ---------------------------------------------------------------------------
 
-# one materialized curve serves all five metric queries (roc/pr/auc/
-# confusion/fmeasure) in a session — without this each query rebuilt the
-# grouped-cumsum plan from the parquet scan up
-_METRICS_CACHE: dict = {}
-
-
 def _metrics(spark, sf_dir):
     from .ml.evaluation import BinaryClassificationMetrics
-    key = (id(spark), sf_dir)
-    m = _METRICS_CACHE.get(key)
-    if m is None:
-        df = _t(spark, sf_dir, "embeddings").select(
-            F.round(F.col("embedding")[0].cast("double"), 6).alias("score"),
-            (F.col("label") >= 5).cast("double").alias("label"))
-        m = BinaryClassificationMetrics(df, "score", "label").persist()
-        # one live entry; evicted curves are UNPERSISTED, not just
-        # dropped — otherwise each (spark, sf_dir) ever queried pins a
-        # cached curve in executor memory for the process lifetime
-        for old in _METRICS_CACHE.values():
-            try:
-                old.unpersist()
-            except Exception:
-                pass                # session of the old entry may be gone
-        _METRICS_CACHE.clear()
-        _METRICS_CACHE[key] = m
-    return m
+    df = _t(spark, sf_dir, "embeddings").select(
+        F.round(F.col("embedding")[0].cast("double"), 6).alias("score"),
+        (F.col("label") >= 5).cast("double").alias("label"))
+    return BinaryClassificationMetrics(df, "score", "label")
 
 
 _METRICS_BASE_SQL = """
@@ -1365,8 +1345,11 @@ def q_ttest_welch(spark, sf_dir):
     df = _t(spark, sf_dir, "customer")
     pdf = ttest(df, "c_acctbal", "c_mktsegment")
     pdf = pdf.assign(t_stat=pdf.t_stat.round(6), dof=pdf.dof.round(4))
+    # typed columns, so fewer than two segments give an empty typed frame
+    schema = pa.schema([("group_1", pa.string()), ("group_2", pa.string()),
+                        ("t_stat", pa.float64()), ("dof", pa.float64())])
     return spark.createDataFrame(pa.Table.from_pandas(
-        pdf[["group_1", "group_2", "t_stat", "dof"]], preserve_index=False))
+        pdf[schema.names], schema=schema, preserve_index=False))
 
 
 @query("ks_uniform", """
@@ -3496,8 +3479,9 @@ ORDER BY s.s_suppkey
 """)
 def q_tpch_q15(spark, sf_dir):
     """TPC-H Q15 top supplier — the revenue view is computed ONCE and
-    cached; its max is a 1-row broadcast, so the view is not rebuilt
-    for the scalar subquery the way a naive SQL translation would."""
+    its max is a window over the view's |supplier| rows, so the view is
+    not rebuilt for the scalar subquery the way a naive SQL translation
+    would."""
     l = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp")) &
         (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp")))
@@ -3509,10 +3493,10 @@ def q_tpch_q15(spark, sf_dir):
                       * (F.lit(1) - F.col("l_discount")
                          .cast("decimal(12,2)")))
                 .alias("total_revenue")))
-    rev = rev.persist()
-    mx = rev.agg(F.max("total_revenue").alias("mx"))
+    from pyspark.sql import Window
+    mx = F.max("total_revenue").over(Window.partitionBy())
     s = _t(spark, sf_dir, "supplier")
-    out = (rev.crossJoin(F.broadcast(mx))
+    out = (rev.withColumn("mx", mx)
            .filter(F.col("total_revenue") == F.col("mx"))
            .join(F.broadcast(s),
                  F.col("supplier_no") == F.col("s_suppkey"))
@@ -3619,44 +3603,29 @@ def q_tpch_q21(spark, sf_dir):
     """TPC-H Q21 suppliers who kept orders waiting (adapted: late =
     shipped >365 days after the order date on a finished order). The
     textbook EXISTS / NOT EXISTS pair of correlated self-joins is
-    rewritten as per-order aggregates: an order qualifies when it has
-    >= 2 suppliers but exactly ONE late supplier — same semantics, and
-    the rewrite replaces two extra passes over lineitem with one
-    grouped job each, all co-partitioned on the order key."""
+    rewritten as ONE per-order aggregate over ``lineitem ⋈ orders(F)``:
+    an order qualifies when its suppliers' min != max (>= 2 suppliers)
+    and its late suppliers' min == max (exactly ONE late supplier);
+    that supplier then waited once per late line of the order."""
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     l = _t(spark, sf_dir, "lineitem")
-    delay = F.datediff(F.col("l_shipdate").cast("date"),
-                       F.col("o_orderdate").cast("date"))
-    late = (l.join(o, l.l_orderkey == o.o_orderkey)
-            .filter(delay > 365)
-            .select("l_orderkey", "l_suppkey"))
-    late = late.persist()
-    # the multi-supplier count is only consulted for orders that HAVE a
-    # late line (the driving join starts from `late`), so the heaviest
-    # aggregate — countDistinct over all of lineitem — is semi-join
-    # pruned to late orders first: the broadcast key set costs |late
-    # orders| longs, the groupBy then runs on the pruned fraction
-    stats = (l.join(F.broadcast(late.select("l_orderkey").distinct()),
-                    "l_orderkey", "left_semi")
-             .groupBy("l_orderkey")
-             # ">= 2 distinct suppliers" is just min != max — a plain
-             # min/max agg instead of countDistinct's double-shuffle
-             # distinct expansion (same trick for "exactly one late
-             # supplier" below)
-             .agg((F.min("l_suppkey") != F.max("l_suppkey"))
-                  .alias("multi_supp")))
-    late_stats = (late.groupBy(F.col("l_orderkey").alias("lo_key"))
-                  .agg((F.min("l_suppkey") == F.max("l_suppkey"))
-                       .alias("one_late"),
-                       F.min("l_suppkey").alias("only_late")))
+    late = F.datediff(F.col("l_shipdate").cast("date"),
+                      F.col("o_orderdate").cast("date")) > 365
+    late_supp = F.when(late, F.col("l_suppkey"))
+    per_order = (l.join(o, l.l_orderkey == o.o_orderkey)
+                 .groupBy("l_orderkey")
+                 .agg(F.min("l_suppkey").alias("_mn"),
+                      F.max("l_suppkey").alias("_mx"),
+                      F.min(late_supp).alias("_late_mn"),
+                      F.max(late_supp).alias("_late_mx"),
+                      F.count(late_supp).alias("_n_late")))
+    waits = per_order.filter((F.col("_mn") != F.col("_mx")) &
+                             (F.col("_late_mn") == F.col("_late_mx")))
     s = _t(spark, sf_dir, "supplier")
-    j = (late.join(stats, "l_orderkey")
-         .join(late_stats, late.l_orderkey == F.col("lo_key"))
-         .filter(F.col("multi_supp") & F.col("one_late") &
-                 (F.col("only_late") == F.col("l_suppkey")))
-         .join(F.broadcast(s), late.l_suppkey == s.s_suppkey))
-    return (j.groupBy("s_name")
-            .agg(F.count(F.lit(1)).alias("numwait"))
+    return (waits.join(F.broadcast(s),
+                       F.col("_late_mn") == F.col("s_suppkey"))
+            .groupBy("s_name")
+            .agg(F.sum("_n_late").alias("numwait"))
             .orderBy(F.desc("numwait"), "s_name").limit(100))
 
 

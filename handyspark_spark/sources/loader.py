@@ -24,6 +24,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 def _nano_ts_columns(path: str) -> list[str]:
     """Column names stored as timestamp[ns] (from the parquet footer only)."""
     try:
+        import pyarrow
         import pyarrow.parquet as pq
     except ImportError:  # pragma: no cover
         return []
@@ -35,7 +36,7 @@ def _nano_ts_columns(path: str) -> list[str]:
         f = parts[0]
     try:
         schema = pq.read_schema(f)
-    except Exception:
+    except (OSError, pyarrow.ArrowInvalid):
         return []
     return [fld.name for fld in schema
             if str(fld.type).startswith("timestamp[ns")]

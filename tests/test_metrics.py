@@ -225,7 +225,9 @@ def test_auc_plan_shape(spark, scored, scored_pd):
 def test_curve_sentinel_rows_built_in_plan(spark, scored, scored_pd):
     """roc/pr/getMetricsByThreshold sentinel rows come from the plan, not
     a Python-side RDD: the only RDD scans left are the curve's own
-    checkpoints. Values and types are the mllib conventions."""
+    checkpoints (pr's one checkpoint of its curve projection, which its
+    head-row collect and its plan share). Values and types are the mllib
+    conventions."""
     from handyspark_spark.ml.evaluation import BinaryClassificationMetrics
     m = BinaryClassificationMetrics(scored, "score", "label")
 
@@ -234,8 +236,9 @@ def test_curve_sentinel_rows_built_in_plan(spark, scored, scored_pd):
             .count("ExistingRDD")
 
     base = rdd_scans(m._curve())
-    for out in (m.roc(), m.pr(), m.getMetricsByThreshold()):
-        assert rdd_scans(out) == base
+    for out, scans in ((m.roc(), base), (m.pr(), 1),
+                       (m.getMetricsByThreshold(), base)):
+        assert rdd_scans(out) == scans
         assert {t for _, t in out.dtypes} == {"double"}
     roc = m.roc().collect()
     assert tuple(roc[0]) == (0.0, 0.0) and tuple(roc[-1]) == (1.0, 1.0)
@@ -257,6 +260,20 @@ def test_welch_ttest_vs_numpy(tables, pdf_tables):
         t = (a.mean() - b.mean()) / np.sqrt(v1 + v2)
         npt.assert_almost_equal(row.t_stat, t, decimal=9)
         assert 0 <= row.p_value <= 1
+
+
+def test_welch_ttest_fewer_than_two_groups_is_empty(tables):
+    """No pair of groups, no row: an empty frame and a one-group frame
+    both give 0 rows with the five columns (DuckDB's pair self-join
+    returns no row either)."""
+    from handyspark_spark.operators.stats import ttest
+    cols = ["group_1", "group_2", "t_stat", "dof", "p_value"]
+    cust = tables["customer"]
+    one = cust.filter(F.col("c_mktsegment")
+                      == cust.first()["c_mktsegment"])
+    for df in (cust.limit(0), one):
+        res = ttest(df, "c_acctbal", "c_mktsegment")
+        assert list(res.columns) == cols and len(res) == 0
 
 
 def test_ttest_pvalue_special_function():

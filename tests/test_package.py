@@ -1,5 +1,6 @@
-"""Package surface: the lazy public names, the ``toHandy`` install, and a
-guard that keeps driver-built frames off the pickled-RDD path."""
+"""Package surface: the lazy public names, the ``toHandy`` install, a
+guard that keeps driver-built frames off the pickled-RDD path, and the
+rule that a call leaves no cached data behind for another call."""
 from __future__ import annotations
 
 import ast
@@ -90,11 +91,9 @@ def _pickled_rows(node) -> bool:
             and node.func.attr == "collect")
 
 
-def test_no_create_data_frame_from_python_rows():
-    """Every library frame built from driver-side data enters Spark as an
-    Arrow table (a local relation): a ``createDataFrame`` over Python
-    rows starts a pickled ``parallelize`` RDD and a Python worker pool."""
-    bad = []
+def _library_calls(attrs: set[str]):
+    """``path:line`` of every library call of a method named in
+    ``attrs``, with the call node."""
     for root, _, files in os.walk(PKG):
         for f in files:
             if not f.endswith(".py"):
@@ -105,11 +104,49 @@ def test_no_create_data_frame_from_python_rows():
             for node in ast.walk(tree):
                 if (isinstance(node, ast.Call)
                         and isinstance(node.func, ast.Attribute)
-                        and node.func.attr == "createDataFrame"
-                        and _pickled_rows(_row_data(node))):
-                    bad.append(f"{os.path.relpath(path, HERE)}:"
-                               f"{node.lineno}")
+                        and node.func.attr in attrs):
+                    yield f"{os.path.relpath(path, HERE)}:{node.lineno}", node
+
+
+def test_no_create_data_frame_from_python_rows():
+    """Every library frame built from driver-side data enters Spark as an
+    Arrow table (a local relation): a ``createDataFrame`` over Python
+    rows starts a pickled ``parallelize`` RDD and a Python worker pool."""
+    bad = [where for where, node in _library_calls({"createDataFrame"})
+           if _pickled_rows(_row_data(node))]
     assert not bad, f"createDataFrame over Python rows: {bad}"
+
+
+def test_library_never_persists():
+    """No library call persists or caches a frame: a CacheManager entry
+    outlives its call, and a later call with the same plan would read
+    it. An intermediate is shared within its call by exchange reuse or
+    a lazy ``localCheckpoint``, which no other plan can match."""
+    bad = [where for where, _ in _library_calls({"persist", "cache"})]
+    assert not bad, f"persist/cache in the library: {bad}"
+
+
+#: registry queries whose plans share an intermediate within the call
+CHANGED_SITE_QUERIES = [
+    "tfidf_vectors", "bm25_topk", "unigram_logprob", "jaccard_pairs_capped",
+    "containment_counts_capped", "simhash_pairs", "simhash_pairs_capped",
+    "dedup_components", "pretrain_funnel", "dsir_weights", "drift_report",
+    "skew_report", "tpch_q15", "tpch_q21", "roc_curve", "pr_curve",
+    "auc_roc", "confusion_matrix", "fmeasure_by_threshold", "ttest_welch"]
+
+
+@pytest.mark.parametrize("name", CHANGED_SITE_QUERIES)
+def test_registry_call_leaves_no_cache_entry(spark, name, tmp_path,
+                                             monkeypatch):
+    """A call leaves Spark's CacheManager as it found it, so the next
+    call of the same query reads its own input again."""
+    from conftest import SF_DIR
+    sys.path.insert(0, HERE)
+    import __spark_entry__ as E
+    monkeypatch.setenv("HSQ_INDEX_CACHE_ROOT", str(tmp_path))
+    spark.catalog.clearCache()
+    E.queries()[name](spark, SF_DIR).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_guard_flags_python_rows():

@@ -375,20 +375,33 @@ def test_round4_operator_exchange_budgets(tables):
     assert "BatchEvalPython" not in explain_str(gated)
 
 
+def _final_plan(df) -> str:
+    """The executed plan's final (post-AQE) part, after one collect:
+    a stage whose output another branch reuses prints as one
+    ``ReusedExchange`` line, without its subtree."""
+    df.collect()
+    return (df._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0])
+
+
 def test_drift_report_histogram_bounded(tables):
     """drift_report: ONE corpus-sized groupBy; everything downstream
     operates on |slices| x |buckets| rows with the adjacency map and
     totals broadcast."""
-    from handyspark_spark.pipeline.drift import drift_report
-    rep = drift_report(tables["events"],
-                       F.date_format("ts", "yyyy-MM-dd"), "event_type")
+    from handyspark_spark.pipeline.drift import (drift_report,
+                                                 slice_histograms)
+    day = F.date_format("ts", "yyyy-MM-dd")
+    rep = drift_report(tables["events"], day, "event_type")
     s = explain_str(rep)
     assert "BatchEvalPython" not in s
     assert "CartesianProduct" not in s
-    # every downstream branch must read the PERSISTED histogram (the
-    # corpus-sized groupBy runs once; explain re-prints the cache's
-    # build plan per reference, so count cache scans, not text scans)
-    assert "InMemoryTableScan" in s
+    # the histogram's totals branch reuses the corpus groupBy's exchange,
+    # so the corpus is scanned once
+    hist = _final_plan(slice_histograms(tables["events"], day,
+                                        "event_type"))
+    assert hist.count("FileScan") == 1 and "ReusedExchange" in hist
+    # every branch of the report reads the histogram, none the corpus
+    assert "FileScan" not in _final_plan(rep)
 
 
 def test_skew_report_shapes_and_values(tables, spark):
@@ -397,10 +410,11 @@ def test_skew_report_shapes_and_values(tables, spark):
     rows = [("hot",)] * 90 + [(f"k{i}",) for i in range(10)]
     df = spark.createDataFrame(rows, ["k"])
     rep = skew_report(df, "k", top=3)
-    # one corpus exchange (cached counts) + the tiny summary/top-k pair;
-    # explain re-prints the cache's build exchange per reference
+    # one corpus exchange + the tiny summary/top-k pair; the summary
+    # branch reuses the corpus exchange, so the input is scanned once
     assert exchange_count(rep) <= 3
-    assert "InMemoryTableScan" in explain_str(rep)
+    s = _final_plan(rep)
+    assert s.count("Scan ExistingRDD") == 1 and "ReusedExchange" in s
     out = rep.collect()
     assert out[0]["key"] == "hot" and out[0]["cnt"] == 90
     assert abs(out[0]["share"] - 0.9) < 1e-9

@@ -24,6 +24,19 @@ def test_steal_pct_handles_missing_steal_column():
     assert abs(_steal_pct(s0, s1) - 10.0) < 1e-9
 
 
+def test_bench_error_line_records_handy_summary():
+    """A HandyException is recorded by its summary, without the colour
+    escapes that start its message; other errors by their first line."""
+    sys.path.insert(0, HERE)
+    from bench import error_line
+    from handyspark_spark.core.util import HandyException
+    e = HandyException(ValueError("ValueError: no rows\ntrace line"))
+    assert str(e).startswith("\x1b[")
+    assert error_line(e) == "ValueError: no rows"
+    assert error_line(ValueError("first\nsecond")) == "first"
+    assert error_line(RuntimeError()) == "RuntimeError"
+
+
 def _run_diff(tmp_path, old, new, *extra):
     op, np_ = tmp_path / "old.json", tmp_path / "new.json"
     op.write_text(json.dumps(old))

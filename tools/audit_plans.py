@@ -28,33 +28,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _exchange_split(plan: str) -> tuple[int, int]:
-    """(live, cached) exchange counts for a printed physical plan.
-
-    Exchanges inside an InMemoryRelation's printed cached subtree
-    execute ONCE at materialization and are replaced by the cache scan
-    on every later reference — counting them per reference misread the
-    round-6 single-materialization fix as a +8-exchange regression
-    (round-8 advice). A cached subtree is every following line printed
-    DEEPER than its InMemoryRelation header (tree-print indentation is
-    monotone in depth)."""
-    live = cached = 0
-    skip_depth = None
-    for line in plan.splitlines():
-        m = re.search(r"[+:]-", line)
-        depth = m.start() if m else len(line) - len(line.lstrip())
-        if skip_depth is not None:
-            if depth > skip_depth:
-                if re.search(r"(?<![A-Za-z])Exchange", line):
-                    cached += 1
-                continue
-            skip_depth = None
-        if "InMemoryRelation" in line:
-            skip_depth = depth
-            continue
-        if re.search(r"(?<![A-Za-z])Exchange", line):
-            live += 1
-    return live, cached
+def _exchanges(plan: str) -> int:
+    """Exchange count of a printed physical plan. A lazily checkpointed
+    subtree prints as one ``ExistingRDD`` scan, so its exchanges are not
+    counted."""
+    return len(re.findall(r"(?<![A-Za-z])Exchange", plan))
 
 
 _ROW = re.compile(r"\| (\S+) \|")
@@ -126,8 +104,7 @@ def main():
             rows.append((name, "-", "-", f"ERROR {str(e)[:80]}"))
             flagged.append(name)        # a broken query fails the gate
             continue
-        live, cached = _exchange_split(plan)
-        n_ex = live if not cached else f"{live}+{cached}c"
+        n_ex = _exchanges(plan)
         notes = []
         if "BatchEvalPython" in plan:
             notes.append("ROW-AT-A-TIME-PYTHON")
@@ -150,9 +127,9 @@ def main():
              "",
              f"sf_dir: {sf_dir}. Exchanges counted on the initial "
              "physical plan (executedPlan before AQE re-optimization); "
-             "`L+Nc` means L live exchanges plus N inside a cached "
-             "(InMemoryRelation) subtree that executes once at "
-             "materialization — not per reference. BatchEvalPython "
+             "a lazily checkpointed subtree prints as one ExistingRDD "
+             "scan: its exchanges and python nodes run once per call "
+             "and are not listed. BatchEvalPython "
              "(row-at-a-time python), unintended CartesianProduct, and "
              "query build errors are hard failures.",
              "",
@@ -170,11 +147,11 @@ def main():
         "  five stage-count jobs (32 -> 12 exchanges, all corpus-sized",
         "  work is one scan + the md5 window + the LSH band subtree).",
         "- **drift_report** — the only corpus-sized job is the single",
-        "  histogram groupBy (cached, the `+Nc` block); the 7 live",
+        "  histogram groupBy (checkpointed, so not counted); the live",
         "  exchanges all operate on |slices| x |buckets| rows (~1e3),",
         "  invariant to corpus scale by construction.",
         "- **auc_roc / pr_curve / roc_curve** — one corpus-sized",
-        "  grouped agg (cached); live exchanges run on |distinct",
+        "  grouped agg (checkpointed); live exchanges run on |distinct",
         "  rounded scores| rows (<= 10^score_bins). At 100 TB the",
         "  curve cost is the scan + that one agg.",
     ]

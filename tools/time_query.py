@@ -1,6 +1,7 @@
 """Standalone per-query timer: one Spark session, each named queries()
 entry run R times (full collect, the driver contract), per-run seconds
-plus min/median reported — the targeted-measurement companion to
+plus min/median (and min over runs 2+, past one-time session warmup)
+reported — the targeted-measurement companion to
 bench_minof.py for chasing a single query's regression without paying
 a full-suite run.
 
@@ -48,16 +49,6 @@ def main():
         i = args.index("--sink")
         sink = args[i + 1]
         del args[i:i + 2]
-    clear_cache = False
-    if "--clear-cache" in args:
-        # drop the library's managed persists + Spark's CacheManager
-        # between runs: queries that materialize shared intermediates
-        # (jaccard capped path, funnel) otherwise read ~5x fast from
-        # run 2 on via cross-invocation plan-cache reuse — the honest
-        # per-invocation estimator is warm-session/cold-persist (run 1
-        # still pays one-time JVM/codegen warmup; min over runs 2+)
-        clear_cache = True
-        args.remove("--clear-cache")
     if sink not in ("collect", "noop"):
         sys.exit(f"unknown --sink {sink!r} (collect|noop)")
     if len(args) < 2:
@@ -82,10 +73,6 @@ def main():
     for name in names:
         secs = []
         for r in range(runs):
-            if clear_cache:
-                from handyspark_spark.core.cache import release_all
-                release_all()
-                spark.catalog.clearCache()
             t0 = time.monotonic()
             df = qs[name](spark, sf_dir)
             if sink == "noop":
@@ -95,9 +82,9 @@ def main():
             secs.append(round(time.monotonic() - t0, 3))
         result[name] = {"runs": secs, "min": min(secs),
                         "median": round(statistics.median(secs), 3)}
-        if clear_cache and len(secs) > 1:
-            # run 1 pays one-time session warmup; with persists cleared
-            # between runs, min over runs 2+ is the per-invocation cost
+        if len(secs) > 1:
+            # run 1 pays one-time session warmup; no call reads another
+            # call's data, so min over runs 2+ is the per-invocation cost
             result[name]["min_warm_session"] = min(secs[1:])
         print(f"{name}: runs={secs} min={min(secs)} "
               f"median={result[name]['median']}", flush=True)
@@ -105,7 +92,7 @@ def main():
     if out_json:
         with open(out_json, "w") as f:
             json.dump({"sf_dir": sf_dir, "cpus": cpus, "runs": runs,
-                       "sink": sink, "clear_cache": clear_cache,
+                       "sink": sink,
                        "queries": result}, f, indent=1)
         print(f"wrote {out_json}")
     spark.stop()
