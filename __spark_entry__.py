@@ -22,18 +22,19 @@ from handyspark_spark import queries as Q  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
-    Side effect, deliberate: the ann_pq / ann_ivfpq ORACLES read the
-    trained index cells from /tmp/hsq_{pq,ivfpq}_idx/n=<count> parquet
-    that the corresponding Spark queries write on first invocation.
-    The driver's correctness gate runs Spark and DuckDB side-by-side
-    with no ordering contract, so the smoke-checked entry() warms both
-    sf0.01 indexes up front (a few seconds, once) — the oracle SQL can
-    then run first on a fresh /tmp without erroring."""
-    try:
-        Q._pq_index(spark, "/root/testdata/sf0.01")
-        Q._ivfpq_index(spark, "/root/testdata/sf0.01")
-    except Exception:
-        pass  # warmup is best-effort; the gate itself still self-heals
+    Side effect, deliberate: DuckDB cannot retrain k-means, so the
+    ann_pq / ann_ivfpq ORACLES read the trained books and centroids
+    from the export under ``$HSQ_INDEX_CACHE_ROOT/hsq_{pq,ivfpq}_idx``
+    (default /tmp) that each of those Spark queries writes when it is
+    absent. The driver's correctness gate runs Spark and DuckDB
+    side-by-side with no ordering contract, so entry() fits and exports
+    both sf0.01 indexes up front (a few seconds): an oracle that runs
+    first on a fresh root then finds its export. A missing sf0.01
+    fixture skips this; any other export error raises."""
+    sf = "/root/testdata/sf0.01"
+    if os.path.exists(os.path.join(sf, "embeddings.parquet")):
+        for family in ("hsq_pq_idx", "hsq_ivfpq_idx"):
+            Q._fit_ann_index(spark, sf, family)
     return Q.QUERIES["tpch_q1"](spark, "/root/testdata/sf0.001")
 
 

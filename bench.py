@@ -125,8 +125,9 @@ def warm_session(spark, sf_dir: str) -> None:
     # JIT — warm it so index-persisting queries (ann_ivf_index, ann_pq)
     # time their actual fit/save/search, not JVM warmup
     import tempfile
-    spark.range(1).coalesce(1).write.mode("overwrite").parquet(
-        tempfile.mkdtemp(prefix="hsq_bench_warm_") + "/warm.parquet")
+    with tempfile.TemporaryDirectory(prefix="hsq_bench_warm_") as d:
+        spark.range(1).coalesce(1).write.mode("overwrite").parquet(
+            d + "/warm.parquet")
     # the FIRST ranged_cumsum in a session pays ~4s of one-time cost
     # (RangePartitioner sampling + localCheckpoint + window/broadcast
     # JIT) — warm it on a 1k-row frame so the first ranged_cumsum
@@ -176,15 +177,6 @@ def main():
             df.collect()
         return time.perf_counter() - t0
 
-    # cache-state attribution: the detect-once layer (ANN indexes, span
-    # tables, DSIR features, MinHash signatures) makes a cold
-    # content-addressed rebuild read up to ~3x its warm steady-state —
-    # record per query whether its timing paid a build ("cold") or rode
-    # committed artifacts ("warm") so the diff gate can tell a phantom
-    # regression (wiped /tmp) from a real one.
-    from handyspark_spark.pipeline.index_cache import drain_cache_events
-    cache_state: dict[str, str] = {}
-
     # host-interference attribution: inside this VM, co-tenant
     # hypervisor preemption (visible as CPU steal) amplifies into
     # lock-holder-preemption kernel spin and stretched GC — bracketed
@@ -203,7 +195,6 @@ def main():
     timings: dict[str, float] = {}
     total = 0.0
     for name, fn in qs.items():
-        drain_cache_events()
         s0 = proc_stat()
         try:
             dt = run_one(fn, sink)
@@ -214,10 +205,6 @@ def main():
         steal = _steal_pct(s0, s1)
         if steal is not None and steal >= 2.0:
             host_steal[name] = round(steal, 2)
-        evs = drain_cache_events()
-        if evs:
-            cache_state[name] = ("cold" if any(not e["hit"] for e in evs)
-                                 else "warm")
         timings[name] = round(dt, 3)
         total += dt
 
@@ -248,8 +235,6 @@ def main():
     }
     if noop_timings:
         payload["queries_noop"] = noop_timings
-    if cache_state:
-        payload["cache_state"] = cache_state
     if host_steal:
         payload["host_steal"] = host_steal
     if settle is not None:
@@ -287,12 +272,6 @@ def main():
         heav = sorted(noop_timings, key=lambda n: -noop_timings[n])[:10]
         payload["queries_noop"] = {k: round(noop_timings[k], 1)
                                    for k in heav}
-        line = json.dumps(payload, separators=(",", ":"))
-    if len(line) > line_budget and cache_state:
-        # printed line keeps only the COLD entries (the signal); the
-        # full warm/cold map stays in bench_full.json
-        payload["cache_state"] = {k: v for k, v in cache_state.items()
-                                  if v == "cold"}
         line = json.dumps(payload, separators=(",", ":"))
     while len(line) > line_budget and payload["queries"]:
         # drop the fastest remaining query; keep the expensive ones visible

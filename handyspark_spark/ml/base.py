@@ -140,15 +140,14 @@ class HandyFencer(Transformer, HasStatsDict, DefaultParamsReadable,
             self.setStatsDict(statsDict)
 
     def _transform(self, df):
+        from ..operators.fill import clamp_expr
         stats = self.getStatsDict()
         nested = any(isinstance(v, dict) for v in stats.values())
         out = df
         if not nested:
             for c, (lf, uf) in stats.items():
                 out = out.withColumn(
-                    c, F.greatest(F.lit(lf),
-                                  F.least(F.lit(uf),
-                                          F.col(c).cast("double"))))
+                    c, clamp_expr(df, c, F.lit(lf), F.lit(uf)))
         else:
             cols = sorted({c for d in stats.values() for c in d})
             for c in cols:
@@ -162,9 +161,7 @@ class HandyFencer(Transformer, HasStatsDict, DefaultParamsReadable,
                              else lexpr.when(cond, F.lit(lf)))
                     uexpr = (F.when(cond, F.lit(uf)) if uexpr is None
                              else uexpr.when(cond, F.lit(uf)))
-                out = out.withColumn(
-                    c, F.greatest(lexpr, F.least(uexpr,
-                                                 F.col(c).cast("double"))))
+                out = out.withColumn(c, clamp_expr(df, c, lexpr, uexpr))
         return out
 
 

@@ -27,6 +27,16 @@ def _is_missing(df: DataFrame, c: str) -> Column:
     return cond
 
 
+def clamp_expr(df: DataFrame, c: str, lo: Column, hi: Column) -> Column:
+    """``greatest(lo, least(hi, c))`` over ``df``'s column ``c``, with
+    NULL and NaN kept missing: Spark's NaN-is-largest ordering would
+    clamp NaN to ``hi``, and ``least`` skips a NULL argument, so NULL
+    would become ``hi``; pandas clip keeps both. ``fence`` and ``ml.base.HandyFencer`` apply fences with
+    it."""
+    clamped = F.greatest(lo, F.least(hi, F.col(c).cast("double")))
+    return F.when(_is_missing(df, c), F.col(c)).otherwise(clamped)
+
+
 def _strata_cond(df: DataFrame, strata: list[str], combo) -> Column:
     cond = F.lit(True)
     for c in strata:
@@ -192,13 +202,7 @@ def fence(hdf, colnames, k: float = 1.5, strata: list[str] | None = None,
         fences = {c: rows[0][c] for c in colnames}
         handy.fenced_values.update(fences)
         for c, (lf, uf) in fences.items():
-            clamped = F.greatest(F.lit(lf),
-                                 F.least(F.lit(uf),
-                                         F.col(c).cast("double")))
-            # missing stays missing (Spark's NaN-is-largest ordering would
-            # clamp NaN to the upper fence; pandas clip keeps NaN)
-            out = out.withColumn(
-                c, F.when(_is_missing(df, c), F.col(c)).otherwise(clamped))
+            out = out.withColumn(c, clamp_expr(df, c, F.lit(lf), F.lit(uf)))
     else:
         for c in colnames:
             lexpr, uexpr = None, None
@@ -212,9 +216,6 @@ def fence(hdf, colnames, k: float = 1.5, strata: list[str] | None = None,
                 clause = labeler(r) if labeler else str(
                     {s: r[s] for s in strata})
                 handy.fenced_values.setdefault(clause, {})[c] = [lf, uf]
-            clamped = F.greatest(lexpr, F.least(uexpr,
-                                                F.col(c).cast("double")))
-            out = out.withColumn(
-                c, F.when(_is_missing(df, c), F.col(c)).otherwise(clamped))
+            out = out.withColumn(c, clamp_expr(df, c, lexpr, uexpr))
         out = out.drop(*[c for c in strata if c.startswith("_bkt_")])
     return HandyFrame(out, handy)

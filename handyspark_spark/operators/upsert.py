@@ -3,7 +3,7 @@
 Without a transactional table format (Delta/Iceberg), MERGE semantics are
 composed from plain DataFrames: union the base with the updates, keep the
 newest row per key. One shuffle on the key; at 100 TB you bucket the base
-table by the key (sources/writer.write_bucketed) so repeated upserts
+table by the key (sources/sinks.write_bucketed) so repeated upserts
 never reshuffle the big side.
 """
 from __future__ import annotations

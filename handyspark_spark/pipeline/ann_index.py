@@ -20,7 +20,8 @@ I/O):
 
 Long-form (one row per vector component) keeps the schema fixed across
 dim/m/nbits and trivially reassembles into the numpy matrices the
-search kernels broadcast.
+search kernels broadcast. ``export_local`` writes the same long-form
+files without ``meta.parquet`` from the driver, for a local reader.
 
 Both directions stay off the Python worker pool. ``save`` builds each
 long-form table on the driver as a ``pyarrow.Table`` (``np.indices``
@@ -39,6 +40,7 @@ imputer/fencer round-trip.
 from __future__ import annotations
 
 import json
+import os
 
 import numpy as np
 import pyarrow as pa
@@ -81,12 +83,28 @@ def _long_schema(axes) -> str:
     return ", ".join(f"{a} int" for a in axes) + ", val double"
 
 
-def _write_long(spark: SparkSession, path: str, M: np.ndarray, axes):
-    """One (axes..., val) row per matrix entry, one parquet file."""
+def _long_table(M: np.ndarray, axes) -> pa.Table:
+    """One (axes..., val) row per matrix entry."""
     ix = np.indices(M.shape, dtype=np.int32).reshape(M.ndim, -1)
-    tbl = pa.table({**dict(zip(axes, ix)), "val": M.ravel()})
-    (spark.createDataFrame(tbl, _long_schema(axes))
+    return pa.table({**dict(zip(axes, ix)), "val": M.ravel()})
+
+
+def _write_long(spark: SparkSession, path: str, M: np.ndarray, axes):
+    """``_long_table`` as one parquet file."""
+    (spark.createDataFrame(_long_table(M, axes), _long_schema(axes))
      .coalesce(1).write.mode("overwrite").parquet(path))
+
+
+def export_local(index, path: str) -> None:
+    """Write ``index``'s long-form files (``save``'s layout, without
+    ``meta.parquet``) under the local directory ``path`` with pyarrow on
+    the driver, so no Spark job runs. For the few-KB artifacts that a
+    local reader such as DuckDB takes; ``load`` needs ``save``."""
+    import pyarrow.parquet as pq
+    for name, (M, axes) in index.parts().items():
+        os.makedirs(f"{path}/{name}", exist_ok=True)
+        pq.write_table(_long_table(M, axes),
+                       f"{path}/{name}/part-0.parquet")
 
 
 def _read_long(spark: SparkSession, path: str, shape, axes) -> np.ndarray:
@@ -178,9 +196,14 @@ class PQIndex:
                              sample_n=sample_n, seed=seed)
         return cls(books, vec_col, id_col)
 
+    def parts(self) -> dict:
+        """The persisted matrices: file name -> (matrix, long axes)."""
+        return {"cells.parquet": (self.books, _BOOKS)}
+
     def save(self, path: str, spark: SparkSession | None = None):
         spark = spark or SparkSession.getActiveSession()
-        _write_long(spark, f"{path}/cells.parquet", self.books, _BOOKS)
+        for name, (M, axes) in self.parts().items():
+            _write_long(spark, f"{path}/{name}", M, axes)
         m, k, dsub = self.books.shape
         _write_meta(spark, path, self.KIND,
                     {"vec_col": self.vec_col, "id_col": self.id_col,
@@ -205,11 +228,10 @@ class PQIndex:
 
     def search(self, df: DataFrame, queries: DataFrame, k: int = 5,
                rerank: int | None = None,
-               encoded: DataFrame | None = None,
-               dtype: str = "float32") -> DataFrame:
+               encoded: DataFrame | None = None) -> DataFrame:
         return pq_topk(df, queries, k=k, vec_col=self.vec_col,
                        id_col=self.id_col, rerank=rerank,
-                       books=self.books, encoded=encoded, dtype=dtype)
+                       books=self.books, encoded=encoded)
 
 
 class IVFPQIndex:
@@ -240,10 +262,15 @@ class IVFPQIndex:
                              kmeans_iters=kmeans_iters)
         return cls(C, books, vec_col, id_col)
 
+    def parts(self) -> dict:
+        """The persisted matrices: file name -> (matrix, long axes)."""
+        return {"cells.parquet": (self.centroids, _CELLS),
+                "books.parquet": (self.books, _BOOKS)}
+
     def save(self, path: str, spark: SparkSession | None = None):
         spark = spark or SparkSession.getActiveSession()
-        _write_long(spark, f"{path}/cells.parquet", self.centroids, _CELLS)
-        _write_long(spark, f"{path}/books.parquet", self.books, _BOOKS)
+        for name, (M, axes) in self.parts().items():
+            _write_long(spark, f"{path}/{name}", M, axes)
         m, k, dsub = self.books.shape
         _write_meta(spark, path, self.KIND,
                     {"vec_col": self.vec_col, "id_col": self.id_col,
@@ -273,9 +300,8 @@ class IVFPQIndex:
 
     def search(self, df: DataFrame, queries: DataFrame, k: int = 5,
                nprobe: int = 4, rerank: int | None = None,
-               encoded: DataFrame | None = None,
-               dtype: str = "float32") -> DataFrame:
+               encoded: DataFrame | None = None) -> DataFrame:
         return ivfpq_topk(df, queries, k=k, nprobe=nprobe,
                           vec_col=self.vec_col, id_col=self.id_col,
                           rerank=rerank, centroids=self.centroids,
-                          books=self.books, encoded=encoded, dtype=dtype)
+                          books=self.books, encoded=encoded)

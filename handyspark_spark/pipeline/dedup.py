@@ -413,8 +413,7 @@ def minhash_consts(num_hashes: int) -> list[int]:
 def _token_hash(tok_col):
     """Base token hash for minhash: the first 8 hex chars of md5(token)
     as a bigint (DuckDB: ('0x' || substr(md5(tok),1,8))::BIGINT) — the
-    cross-engine oracle contract. Every LSH consumer signs with it, so a
-    signature table built once serves the whole family."""
+    cross-engine oracle contract. Every LSH consumer signs with it."""
     return F.conv(F.substring(F.md5(tok_col), 1, 8), 16, 10).cast("bigint")
 
 
@@ -448,13 +447,10 @@ def minhash_signature_arrays(df: DataFrame, text_col: str = "text",
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id",
-                       num_hashes: int = 16,
-                       sigs: DataFrame | None = None) -> DataFrame:
+                       num_hashes: int = 16) -> DataFrame:
     """(id, seed, minhash) long form — a posexplode of the array form;
-    still map-only (the reference point for the DuckDB oracle).
-    ``sigs``: precomputed array-form table (see ``_banded_arrays``)."""
-    arr = (sigs if sigs is not None else
-           minhash_signature_arrays(df, text_col, id_col, num_hashes))
+    still map-only (the reference point for the DuckDB oracle)."""
+    arr = minhash_signature_arrays(df, text_col, id_col, num_hashes)
     return arr.select(
         id_col,
         F.posexplode("sig").alias("seed", "minhash"))
@@ -468,13 +464,10 @@ def _banded_arrays(df: DataFrame, text_col: str, id_col: str,
     xxhash64 bigint over (i, slice) — an 8-byte join key instead of a
     32-char md5 string (string-compare joins were the LSH hot spot).
 
-    ``sigs``: a precomputed ``minhash_signature_arrays`` table
-    (id_col, sig) — the detect-once seam for the whole LSH family: the
-    signature projection (md5 per token x num_hashes min-folds) is the
-    dominant shared cost of pairs/groups/star-edges/components, and a
-    real pipeline signs the corpus once. The caller owns the contract
-    that ``sigs`` was built with the SAME ``num_hashes``; the
-    content-addressed cache in queries.py fingerprints it."""
+    ``sigs``: the (id_col, sig) ``minhash_signature_arrays`` table that
+    the caller built in the same call with the SAME ``num_hashes``
+    (``minhash_lsh_pairs`` passes its canonical one); signed from
+    ``df`` when omitted."""
     rows_per_band = num_hashes // bands
     if sigs is None:
         sigs = minhash_signature_arrays(df, text_col, id_col, num_hashes)
@@ -520,8 +513,8 @@ def _bucket_mins(banded: DataFrame, id_col: str,
 def minhash_lsh_star_edges(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", num_hashes: int = 16,
                            bands: int = 4,
-                           max_bucket_size: int | None = None,
-                           sigs: DataFrame | None = None) -> DataFrame:
+                           max_bucket_size: int | None = None
+                           ) -> DataFrame:
     """Linear-size connectivity SKELETON of the LSH candidate graph: per
     bucket, the star (bucket_min, member) instead of the full clique. A
     bucket's clique and its star have the SAME transitive closure, so
@@ -532,32 +525,29 @@ def minhash_lsh_star_edges(df: DataFrame, text_col: str = "text",
     costs k-1 edges, not k(k-1)/2. Without a cap every bucket, however
     hot, contributes its star (``_bucket_mins`` keeps task memory
     bounded either way). Pinned equal-closure in tests/test_pipeline.py."""
-    mins = _bucket_mins(_banded(df, text_col, id_col, num_hashes, bands,
-                                sigs), id_col, max_bucket_size)
+    mins = _bucket_mins(_banded(df, text_col, id_col, num_hashes, bands),
+                        id_col, max_bucket_size)
     return (mins.filter(F.col("_min") != F.col(id_col))
             .select(F.col("_min").alias("id_a"), F.col(id_col).alias("id_b"))
             .distinct())
 
 
 def _canonical_sigs(df: DataFrame, text_col: str, id_col: str,
-                    num_hashes: int,
-                    sigs: DataFrame | None) -> DataFrame:
+                    num_hashes: int) -> DataFrame:
     """One canonical signature row per id: the lexicographically-min
     ``sig`` array (partial-agg min, one narrow exchange — the exchange
     ``dropDuplicates([id])`` paid anyway, made deterministic). Ids are
     expected to uniquely identify text; when they don't, every job
     derived from this frame (emit-once pre-pass, pair emission, the
     DISTINCT fallback) still agrees on WHICH row represents the id."""
-    if sigs is None:
-        sigs = minhash_signature_arrays(df, text_col, id_col, num_hashes)
-    return sigs.groupBy(id_col).agg(F.min("sig").alias("sig"))
+    return (minhash_signature_arrays(df, text_col, id_col, num_hashes)
+            .groupBy(id_col).agg(F.min("sig").alias("sig")))
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 16,
                       bands: int = 4,
-                      max_bucket_size: int | None = None,
-                      sigs: DataFrame | None = None) -> DataFrame:
+                      max_bucket_size: int | None = None) -> DataFrame:
     """Banded-LSH candidate pairs: signature -> band hashes -> bucket
     self-join on (band, band_hash). Recall/precision tuned by
     (bands, rows-per-band); candidates should be verified with
@@ -600,7 +590,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     builder, or that construct plans on a driver without cluster access,
     should call ``_minhash_lsh_pairs_distinct`` directly (same pair set,
     no pre-pass, pays the DISTINCT exchange at execution instead)."""
-    sigs = _canonical_sigs(df, text_col, id_col, num_hashes, sigs)
+    sigs = _canonical_sigs(df, text_col, id_col, num_hashes)
     arr = _banded_arrays(df, text_col, id_col, num_hashes, bands,
                          sigs=sigs)
     # id-dedup happened at the SIGNATURE level (one narrow exchange in
@@ -634,7 +624,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
             # would land on exactly the large inputs that trigger this
             return _minhash_lsh_pairs_distinct(
                 df, text_col, id_col, num_hashes, bands,
-                max_bucket_size, sigs=sigs, sigs_canonical=True)
+                max_bucket_size, sigs=sigs)
         for r in ov:
             ov_by_band[r["band"]].append(r["band_hash"])
         buckets = buckets.filter(F.size("_m") <= max_bucket_size)
@@ -674,19 +664,18 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
 def _minhash_lsh_pairs_distinct(df: DataFrame, text_col: str,
                                 id_col: str, num_hashes: int, bands: int,
                                 max_bucket_size: int | None,
-                                sigs: DataFrame | None = None,
-                                sigs_canonical: bool = False
+                                sigs: DataFrame | None = None
                                 ) -> DataFrame:
     """The DISTINCT-dedup formulation of ``minhash_lsh_pairs`` — the
     fallback when the oversized-bucket key set is too large to inline as
     plan literals for the emit-once predicate. Pure lazy plan builder
     (no eager pre-pass). Duplicate ids are canonicalized to the same
     min-sig row as the emit-once path so the two formulations stay
-    pair-set-identical on any input. ``sigs_canonical=True`` asserts the
-    passed ``sigs`` already went through ``_canonical_sigs`` (the
-    oversized-key fallback path) and skips re-canonicalizing."""
-    if not sigs_canonical:
-        sigs = _canonical_sigs(df, text_col, id_col, num_hashes, sigs)
+    pair-set-identical on any input. ``sigs``: the ``_canonical_sigs``
+    table that ``minhash_lsh_pairs`` built in the same call (its
+    oversized-key fallback), so it is not canonicalized twice."""
+    if sigs is None:
+        sigs = _canonical_sigs(df, text_col, id_col, num_hashes)
     # one row per id after _canonical_sigs: bucket arrays hold no repeats
     buckets = (_banded(df, text_col, id_col, num_hashes, bands, sigs)
                .groupBy("band", "band_hash")
@@ -710,8 +699,7 @@ def _minhash_lsh_pairs_distinct(df: DataFrame, text_col: str,
 def minhash_lsh_groups(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", num_hashes: int = 16,
                        bands: int = 4,
-                       max_bucket_size: int | None = None,
-                       sigs: DataFrame | None = None) -> DataFrame:
+                       max_bucket_size: int | None = None) -> DataFrame:
     """Scale-path LSH dedup output: (doc_id, cluster_id) with cluster_id =
     the smallest doc id sharing any LSH bucket — LINEAR output size,
     unlike the pair list which is quadratic inside each duplicate group.
@@ -725,8 +713,8 @@ def minhash_lsh_groups(df: DataFrame, text_col: str = "text",
     groups seed ``connected_components`` over the capped pairs (an
     uncapped bucket-min could label a node with an id it has no edge
     to)."""
-    mins = _bucket_mins(_banded(df, text_col, id_col, num_hashes, bands,
-                                sigs), id_col, max_bucket_size)
+    mins = _bucket_mins(_banded(df, text_col, id_col, num_hashes, bands),
+                        id_col, max_bucket_size)
     return mins.groupBy(id_col).agg(F.min("_min").alias("cluster_id"))
 
 
@@ -734,8 +722,7 @@ def minhash_lsh_components(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", num_hashes: int = 16,
                            bands: int = 4,
                            max_bucket_size: int | None = None,
-                           max_iterations: int = 20,
-                           sigs: DataFrame | None = None) -> DataFrame:
+                           max_iterations: int = 20) -> DataFrame:
     """Exact LSH duplicate clusters end-to-end: the star-edge skeleton
     (``minhash_lsh_star_edges``) into ``connected_components``, seeded
     with the groups' labels (node -> min bucket-min,
@@ -747,7 +734,7 @@ def minhash_lsh_components(df: DataFrame, text_col: str = "text",
     multi-join job. At 100 TB the bucket window is the only heavy
     shuffle; everything after is linear in |docs| + |edges|."""
     kw = dict(text_col=text_col, id_col=id_col, num_hashes=num_hashes,
-              bands=bands, max_bucket_size=max_bucket_size, sigs=sigs)
+              bands=bands, max_bucket_size=max_bucket_size)
     seed = minhash_lsh_groups(df, **kw).select(
         F.col(id_col).alias("node"), F.col("cluster_id").alias("component"))
     return connected_components(minhash_lsh_star_edges(df, **kw),
@@ -1142,8 +1129,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 def dedup_keep_best(df: DataFrame, quality: Column | str | None = None,
                     id_col: str = "doc_id", text_col: str = "text",
                     num_hashes: int = 16, bands: int = 2,
-                    max_bucket_size: int | None = 500,
-                    sigs: DataFrame | None = None) -> DataFrame:
+                    max_bucket_size: int | None = 500) -> DataFrame:
     """Near-dup dedup that KEEPS the best document of every duplicate
     cluster (instead of an arbitrary one): LSH groups -> per-cluster
     argmax of ``quality`` (default: text length) with id tie-break.
@@ -1159,8 +1145,7 @@ def dedup_keep_best(df: DataFrame, quality: Column | str | None = None,
          else (F.col(quality) if isinstance(quality, str) else quality))
     groups = minhash_lsh_groups(df, id_col=id_col, text_col=text_col,
                                 num_hashes=num_hashes, bands=bands,
-                                max_bucket_size=max_bucket_size,
-                                sigs=sigs)
+                                max_bucket_size=max_bucket_size)
     lab = (df.join(groups, id_col, "left")
            .withColumn("cluster_id",
                        F.coalesce(F.col("cluster_id"), F.col(id_col)))
@@ -1204,15 +1189,12 @@ def decontaminate_bloom(df: DataFrame, benchmark: DataFrame,
 
 def lsh_bucket_state(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", num_hashes: int = 16,
-                     bands: int = 2,
-                     sigs: DataFrame | None = None) -> DataFrame:
+                     bands: int = 2) -> DataFrame:
     """The persistable LSH state for a growing corpus: one (id, band,
     band_hash) row per band per doc. Store it next to the corpus
     (bucketed by band_hash for exchange-free probe joins); a new crawl
-    batch only ever computes ITS OWN signatures. ``sigs``: precomputed
-    signature arrays (the shared md5-minhash cache) to band instead of
-    re-signing."""
-    return _banded(df, text_col, id_col, num_hashes, bands, sigs)
+    batch only ever computes ITS OWN signatures."""
+    return _banded(df, text_col, id_col, num_hashes, bands)
 
 
 def lsh_incremental_matches(state: DataFrame, new_docs: DataFrame,
@@ -1629,8 +1611,7 @@ def duplicate_ngram_spans(df: DataFrame, text_col: str = "text",
 def strip_duplicate_spans(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", n: int = 16,
                           min_count: int = 2,
-                          strategy: str = "hot",
-                          spans: DataFrame | None = None) -> DataFrame:
+                          strategy: str = "hot") -> DataFrame:
     """Remove every duplicate span found by ``duplicate_ngram_spans``
     and reassemble the surviving text — the apply step of ExactSubstr
     dedup.
@@ -1643,22 +1624,13 @@ def strip_duplicate_spans(df: DataFrame, text_col: str = "text",
     (O(len x spans) per row, no Python). Docs with no duplicate span
     pass through untouched via the left join.
 
-    ``spans``: a precomputed ``duplicate_ngram_spans`` result (same
-    ``n``!) to strip against. The detect pass dominates the whole
-    operation (sf10: ~34s of the ~38s total), so a pipeline that
-    inspects spans and then strips should compute them ONCE and pass
-    them here instead of paying detection twice. When omitted, spans
-    are computed from ``df`` with the given parameters.
-
     Returns (id_col, n_tokens, n_removed, clean_text); ``clean_text``
     is '' when the whole document was duplicated.
     """
     from .text import gram_at, let_bound, tokens as _toks
 
-    if spans is None:
-        spans = duplicate_ngram_spans(df, text_col, id_col, n, min_count,
-                                      strategy=strategy)
-    spans = (spans
+    spans = (duplicate_ngram_spans(df, text_col, id_col, n, min_count,
+                                   strategy=strategy)
              .groupBy(id_col)
              .agg(F.collect_list(F.struct("span_start", "span_end"))
                   .alias("_spans")))

@@ -12,7 +12,7 @@ __all__ = ["pretrain_funnel"]
 
 
 def pretrain_funnel(df, text_col="text", id_col="doc_id",
-                    bench=None, num_hashes=16, bands=4, sigs=None):
+                    bench=None, num_hashes=16, bands=4):
     """End-to-end pretraining data funnel — the composed pipeline a
     training run actually executes, returning per-stage survivor counts:
 
@@ -63,24 +63,8 @@ def pretrain_funnel(df, text_col="text", id_col="doc_id",
             .localCheckpoint(eager=False))
     exact = base.filter(F.col("_e")).select(id_col, text_col)
 
-    # sigs=: a precomputed full-corpus minhash_signature_arrays table
-    # (same num_hashes contract as every other sigs= seam).
-    # The LSH subtree then SUBSETS it to the exact-dedup survivors with
-    # a semi-join against the checkpointed base flags instead of re-signing
-    # the filtered text. Round-11 A/B at sf10 (alternating in one
-    # session, value-identical): settled tail re-sign 6.4s vs consume
-    # 5.8s, and consume is far more robust while the box churns (6.6s
-    # vs 19.0s mid-session) — the semi-join against already-signed rows
-    # beats md5-signing ~340k surviving documents, and the signing is
-    # already paid once per corpus by the LSH query family. This
-    # retires the SCALE.md §10 hypothesis that the semi-join would
-    # cost what it saves.
-    sub = (None if sigs is None else
-           sigs.join(base.filter(F.col("_e")).select(id_col), id_col,
-                     "left_semi"))
     groups = minhash_lsh_groups(exact, text_col=text_col, id_col=id_col,
-                                num_hashes=num_hashes, bands=bands,
-                                sigs=sub)
+                                num_hashes=num_hashes, bands=bands)
     keep = (groups.groupBy("cluster_id")
             .agg(F.min(id_col).alias(id_col))
             .select(id_col, F.lit(True).alias("_nd")))

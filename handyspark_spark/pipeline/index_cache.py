@@ -1,11 +1,11 @@
-"""Content-addressed on-disk cache for trained ANN index artifacts.
+"""Content-addressed on-disk cache for trained ANN index artifacts (the
+registry's ANN oracle exports; perfbench's serve workload).
 
 Layout (round 9 — the fingerprint is IN THE PATH, so two datasets can
 never alias one directory):
 
     {root}/{family}/n={rows}/fp={fingerprint}/   <- immutable once committed
         cells.parquet/ ...                       <- index artifacts
-        codes.parquet/ ...                       <- encoded corpus
         _FINGERPRINT                             <- commit marker, written LAST
     {root}/{family}/n={rows}/_CURRENT            <- atomic pointer: which fp
                                                     was validated most recently
@@ -49,23 +49,6 @@ import os
 from ..streaming.fs import FS, LocalFS
 
 DEFAULT_ROOT = "/tmp"
-
-# Observability: every ``is_committed`` probe appends an event here so a
-# harness (bench.py) can attribute cold-build cost to the query that
-# paid it — a cold content-addressed rebuild can read 3x the warm
-# steady-state and would otherwise pollute round-over-round diffs as a
-# phantom regression (round-10: ann_pq 39.1s cold vs 13.9s warm).
-CACHE_EVENTS: list[dict] = []
-
-
-def drain_cache_events() -> list[dict]:
-    """Return and clear the accumulated cache-probe events:
-    ``{"family", "n", "fp", "hit"}`` — ``hit=False`` means the caller is
-    about to pay a build."""
-    evs = CACHE_EVENTS[:]
-    CACHE_EVENTS.clear()
-    return evs
-
 
 def cache_root() -> str:
     return os.environ.get("HSQ_INDEX_CACHE_ROOT", DEFAULT_ROOT)
@@ -144,15 +127,11 @@ class IndexCache:
         if self.fs.exists(marker):
             try:
                 if self.fs.read_text(marker).strip() == fp:
-                    CACHE_EVENTS.append({"family": self.family, "n": n,
-                                         "fp": fp, "hit": True})
                     return True
             except (OSError, KeyError):
                 pass
         if self.fs.exists(path):
             self.fs.rm_recursive(path)
-        CACHE_EVENTS.append({"family": self.family, "n": n,
-                             "fp": fp, "hit": False})
         return False
 
     def commit(self, n: int, fp: str) -> None:

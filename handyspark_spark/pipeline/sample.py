@@ -287,9 +287,9 @@ def dsir_weights(df: DataFrame, target: DataFrame | None,
     # dup_spans round-9 profile showed this operator family is
     # PROJECTION-bound, not shuffle-bound. Measured at sf1: 14.4 ->
     # 11.8s cold. The checkpoint lives as long as the returned plan
-    # that reads it. A caller-supplied doc_buckets (typically a
-    # materialized parquet read) is used as-is — column-pruned scans of
-    # a small source beat squatting in the executor block store.
+    # that reads it. A caller-supplied doc_buckets is used as-is: the
+    # caller decides how it is shared (the dsir_weights registry query
+    # checkpoints its own, shared with the target slice).
     if doc_buckets is None:
         docb = dsir_doc_buckets(df, text_col, id_col, n, buckets) \
             .localCheckpoint(eager=False)

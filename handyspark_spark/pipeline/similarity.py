@@ -347,10 +347,30 @@ def _arrow_sized(frame: DataFrame, source: DataFrame | None = None,
     return frame
 
 
+#: rows per BLAS product of the top-k scan (see ``_tile_scores``)
+_SCORE_TILE = 256
+
+
+def _tile_scores(Q: np.ndarray, R: np.ndarray) -> np.ndarray:
+    """``Q @ R.T`` as fixed (|Q| x ``_SCORE_TILE``) products, the last
+    tile zero-padded. A BLAS product's rounding depends on its operand
+    shapes: scored in one product per batch, a row gets different last
+    bits in batches of different sizes (fp64 as well as fp32), and the
+    (score desc, neighbor_id asc) order of tied rows would follow the
+    batching. Every tile has one shape, so a row scores the same in
+    any batch."""
+    n = len(R)
+    R = np.concatenate([R, np.zeros((-n % _SCORE_TILE, R.shape[1]))])
+    out = np.empty((len(Q), len(R)))
+    for i in range(0, len(R), _SCORE_TILE):
+        np.matmul(Q, R[i:i + _SCORE_TILE].T,
+                  out=out[:, i:i + _SCORE_TILE])
+    return out[:, :n]
+
+
 def _topk_scan(rows: DataFrame, qt: pa.Table, C: np.ndarray, nprobe: int,
                take: int, vec_col: str, books: np.ndarray | None = None,
-               dtype=np.float64, source: DataFrame | None = None
-               ) -> DataFrame:
+               source: DataFrame | None = None) -> DataFrame:
     """The one scorer of the ANN top-k family: a ``mapInArrow`` over the
     corpus ``rows`` against the ``_query_table`` ``qt``, emitting
     (query_id, neighbor_id, score) candidates for one window to rank.
@@ -362,19 +382,17 @@ def _topk_scan(rows: DataFrame, qt: pa.Table, C: np.ndarray, nprobe: int,
     nearest of the centroids ``C``; PQ rows are the codebook
     reconstruction of their code, one fancy index into ``books``. One
     BLAS product scores the batch, Q @ R.T, plus <q, C[cell]> for PQ
-    residuals; exact scores are rounded to 6 digits, as
+    residuals (``_tile_scores``, so a row's score does not depend on
+    its batch); exact scores are rounded to 6 digits, as
     ``_cosine_pairs`` rounds. A zero vector scores 0 (``_unit``'s norm
-    floor). Rows outside a query's ``nprobe`` nearest cells (selected in
-    fp64, so the probe never shifts with ``dtype``) and rows whose id is
-    the query's own are masked before the cut, as the file pruning of a
+    floor). Rows outside a query's ``nprobe`` nearest cells and rows
+    whose id is the query's own are masked before the cut, as the file pruning of a
     cell-partitioned layout would skip them. Each batch then emits, per
     query, every row scoring at least its ``take``-th best: ties at the
     cut are all kept (at most one batch of rows per query), and the
     window's (score desc, neighbor_id asc) order picks among them.
 
-    ``dtype`` float32 runs the PQ scan at half width: Q, the centroid
-    term and the books are cast once, here. ``source`` (default
-    ``rows``) is the frame ``_arrow_sized`` sizes the scan by: the
+    ``source`` (default ``rows``) is the frame ``_arrow_sized`` sizes the scan by: the
     corpus under an encode the caller chained into ``rows``."""
     sc = rows.sparkSession.sparkContext
     n_cells, dim = C.shape
@@ -385,8 +403,6 @@ def _topk_scan(rows: DataFrame, qt: pa.Table, C: np.ndarray, nprobe: int,
         probe = np.zeros(CT.shape, dtype=bool)
         np.put_along_axis(probe, np.argsort(-CT, axis=1)[:, :nprobe],
                           True, axis=1)
-    if books is not None:
-        Q, CT, books = Q.astype(dtype), CT.astype(dtype), books.astype(dtype)
     b_scan = sc.broadcast((qt["query_id"].combine_chunks(), Q, CT, probe,
                            C, books))
     rows = _arrow_sized(rows, source, qt.num_rows)
@@ -400,14 +416,14 @@ def _topk_scan(rows: DataFrame, qt: pa.Table, C: np.ndarray, nprobe: int,
             nbr = batch.column("neighbor_id")
             if B is None:
                 R = _unit_rows(batch.column("_v"), vec_col, dim)
-                cells = np.argmax(R @ Cv.T, axis=1)
-                s = np.round(Qv @ R.T, 6)
+                cells = np.argmax(_tile_scores(Cv, R), axis=0)
+                s = np.round(_tile_scores(Qv, R), 6)
             else:
                 codes = _list_rows(batch.column("pq_code"), "pq_code",
                                    len(B))
                 cells = batch.column("cell").to_numpy()
                 R = B[np.arange(len(B)), codes].reshape(len(codes), dim)
-                s = CTv[:, cells] + Qv @ R.T
+                s = CTv[:, cells] + _tile_scores(Qv, R)
             if P is not None:
                 s[~P[:, cells]] = -np.inf
             # ids are not assumed unique: every row equal to a query id
@@ -667,10 +683,9 @@ def pq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
             seed: int = 42, rerank: int | None = None,
             books: np.ndarray | None = None,
             encoded: DataFrame | None = None,
-            dtype: str = "float32",
             max_query_rows: int | None = 100_000) -> DataFrame:
     """Flat PQ/ADC approximate top-k: ``ivfpq_topk`` over one all-zero
-    cell, so the scan, tie, ``rerank``, ``dtype`` and ``max_query_rows``
+    cell, so the scan, tie, ``rerank`` and ``max_query_rows``
     contracts are ``ivfpq_topk``'s. Without ``books`` the codebooks are
     fitted inline by ``pq_codebooks``; ``encoded`` is a ``pq_encode``
     output carrying (``id_col``, pq_code) and requires the ``books`` it
@@ -688,8 +703,7 @@ def pq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     return ivfpq_topk(df, queries, k=k, nprobe=1, vec_col=vec_col,
                       id_col=id_col, rerank=rerank,
                       centroids=_zero_cell(books), books=books,
-                      encoded=encoded, dtype=dtype,
-                      max_query_rows=max_query_rows)
+                      encoded=encoded, max_query_rows=max_query_rows)
 
 
 def _exact_rerank(df: DataFrame, queries: DataFrame, shortlist: DataFrame,
@@ -808,7 +822,6 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
                centroids: np.ndarray | None = None,
                books: np.ndarray | None = None,
                encoded: DataFrame | None = None,
-               dtype: str = "float32",
                max_query_rows: int | None = 100_000) -> DataFrame:
     """IVF-PQ ANN top-k: corpus rows carry (cell id, residual PQ code) —
     ONE Arrow-batched projection; each query probes its ``nprobe``
@@ -848,14 +861,6 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     with). The raw ``df`` is still consulted by the ``rerank`` path,
     which joins true vectors back for ONLY the shortlisted rows.
 
-    ``dtype='float32'`` is the production default: the scan is
-    memory-bound and fp32 halves its traffic (round-8 sf1 A/B, 200k
-    vectors, 2000 queries: flat PQ 3.44s -> 2.30s, IVF-PQ 2.53s ->
-    1.89s median, identical top-k); quantization error already dwarfs
-    fp32 rounding and the rerank rescores in exact fp64 cosine. Pass
-    'float64' for the bit-stable shortlist the exported-codebook DuckDB
-    oracles pin.
-
     The queries are read once (see ``_query_table`` for
     ``max_query_rows``)."""
     if encoded is not None and (centroids is None or books is None):
@@ -878,9 +883,7 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
         F.col(id_col).cast(df.schema[id_col].dataType).alias("neighbor_id"),
         "cell", "pq_code")
     cand = _topk_scan(rows, qt, C, nprobe, max(k, rerank or 0), vec_col,
-                      books,
-                      np.float32 if dtype in ("float32", "fp32")
-                      else np.float64, source)
+                      books, source)
     if rerank is None:
         return (_top_rows(cand, "score", k)
                 .select("query_id", "neighbor_id",

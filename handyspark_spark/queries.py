@@ -992,8 +992,7 @@ GROUP BY doc_id, seed
 def q_minhash_signatures(spark, sf_dir):
     from .pipeline.dedup import minhash_signatures
     df = _t(spark, sf_dir, "documents")
-    return minhash_signatures(df, num_hashes=8,
-                              sigs=_sig_table(spark, sf_dir, 8)) \
+    return minhash_signatures(df, num_hashes=8) \
         .withColumn("seed", F.col("seed").cast("int"))
 
 
@@ -1067,8 +1066,7 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     # hot-bucket guard on: giant buckets are enumerated linearly by the
     # minhash_lsh_groups query instead of quadratically here
     return minhash_lsh_pairs(df, num_hashes=16, bands=2,
-                             max_bucket_size=500,
-                             sigs=_sig_table(spark, sf_dir))
+                             max_bucket_size=500)
 
 
 @query("lsh_incremental_dedup", f"""
@@ -1100,17 +1098,12 @@ def q_lsh_incremental_dedup(spark, sf_dir):
     batch (doc_id % 7 == 0) that is signed in isolation and probed
     against the state for bucket collisions. Per-batch cost is
     |batch| signatures + one state join — the accepted corpus is never
-    re-signed, so the cost is independent of corpus age. The base
-    state rides the shared signature cache (the same md5-minhash table
-    every LSH-family query consumes)."""
+    re-signed, so the cost is independent of corpus age."""
     from .pipeline.dedup import (lsh_bucket_state,
                                  lsh_incremental_matches)
     df = _t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 7 == 0
-    sigs = _sig_table(spark, sf_dir)
-    state = lsh_bucket_state(
-        df.filter(~is_new), num_hashes=16, bands=2,
-        sigs=sigs.filter(F.col("doc_id") % 7 != 0))
+    state = lsh_bucket_state(df.filter(~is_new), num_hashes=16, bands=2)
     return lsh_incremental_matches(state, df.filter(is_new),
                                    num_hashes=16, bands=2,
                                    max_bucket_size=500)
@@ -1189,36 +1182,21 @@ def q_ann_ivf(spark, sf_dir):
         .withColumn("rank", F.col("rank").cast("int"))
 
 
-# fit->save ONCE per (session, sf_dir); every ann_ivf_index call after
-# the first only load->searches — the train-once/probe-many production
-# contract exercised end-to-end under the bench, not just in unit tests
-_ANN_INDEX_PATHS: dict = {}
-
-
-def _ivf_index_path(spark, sf_dir) -> str:
+@query("ann_ivf_index", _ANN_EXACT_SQL)
+def q_ann_ivf_index(spark, sf_dir):
+    """IVF search through the persisted index artifact: fit, save, load
+    and search (pipeline/ann_index.py) in one call, the save in a
+    temporary directory that the call removes. Run at full probe width
+    so the load->assign->probe->rank machinery is value-checked against
+    the exact oracle; the approximate nprobe is recall-pinned in
+    tests/test_pipeline.py."""
     import tempfile
 
     from .pipeline.ann_index import IVFIndex
-    key = (id(spark), sf_dir)
-    path = _ANN_INDEX_PATHS.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="hsq_ivf_idx_")
-        df = _t(spark, sf_dir, "embeddings")
-        IVFIndex.fit(df, n_centroids=16).save(path, spark)
-        _ANN_INDEX_PATHS[key] = path
-    return path
-
-
-@query("ann_ivf_index", _ANN_EXACT_SQL)
-def q_ann_ivf_index(spark, sf_dir):
-    """IVF search through the PERSISTED index artifact (fit->save once,
-    load->search per call — pipeline/ann_index.py), exercised at full
-    probe width so the load->assign->probe->rank machinery is
-    value-checked against the exact oracle; the approximate nprobe is
-    recall-pinned in tests/test_pipeline.py."""
-    from .pipeline.ann_index import IVFIndex
-    idx = IVFIndex.load(spark, _ivf_index_path(spark, sf_dir))
     df = _t(spark, sf_dir, "embeddings")
+    with tempfile.TemporaryDirectory(prefix="hsq_ivf_idx_") as path:
+        IVFIndex.fit(df, n_centroids=16).save(path, spark)
+        idx = IVFIndex.load(spark, path)
     queries_df = df.filter(F.col("vec_id") < 8)
     return idx.search(df, queries_df, k=5, nprobe=16) \
         .withColumn("rank", F.col("rank").cast("int"))
@@ -1784,8 +1762,7 @@ def q_minhash_lsh_groups(spark, sf_dir):
     oracle-checked via the same list-equality banding."""
     from .pipeline.dedup import minhash_lsh_groups
     df = _t(spark, sf_dir, "documents")
-    return minhash_lsh_groups(df, num_hashes=16, bands=2,
-                              sigs=_sig_table(spark, sf_dir))
+    return minhash_lsh_groups(df, num_hashes=16, bands=2)
 
 
 @query("lsh_star_edges_recovered", f"""
@@ -1807,8 +1784,7 @@ def q_lsh_star_edges_recovered(spark, sf_dir):
     configuration, value-checked end-to-end."""
     from .pipeline.dedup import minhash_lsh_star_edges
     df = _t(spark, sf_dir, "documents")
-    return minhash_lsh_star_edges(df, num_hashes=16, bands=2,
-                                  sigs=_sig_table(spark, sf_dir))
+    return minhash_lsh_star_edges(df, num_hashes=16, bands=2)
 
 @query("running_user_stats", """
 SELECT user_id,
@@ -2709,11 +2685,9 @@ def q_dedup_components(spark, sf_dir):
     # one bucket-min window feeds the star edges (same transitive
     # closure as the clique pairs, O(|bucket|) edges) AND the bucket-min
     # seed labels, so the iterative loop usually needs a single
-    # convergence round; the md5 signature cache lets DuckDB reproduce
-    # the exact bucketing (same basis as the lsh_star_edges oracle)
+    # convergence round
     return minhash_lsh_components(df, num_hashes=16, bands=2,
-                                  max_bucket_size=500,
-                                  sigs=_sig_table(spark, sf_dir))
+                                  max_bucket_size=500)
 
 
 # ---------------------------------------------------------------------------
@@ -3717,8 +3691,7 @@ def q_dedup_keep_best(spark, sf_dir):
     from .pipeline.dedup import dedup_keep_best
     df = _t(spark, sf_dir, "documents")
     out = dedup_keep_best(df, num_hashes=16, bands=2,
-                          max_bucket_size=None,
-                          sigs=_sig_table(spark, sf_dir))
+                          max_bucket_size=None)
     return out.select("doc_id", "cluster_id",
                       F.col("quality").cast("int").alias("quality"))
 
@@ -3848,8 +3821,7 @@ def q_leakage_safe_split(spark, sf_dir):
     from .pipeline.dedup import minhash_lsh_groups
     from .pipeline.sample import split_assign
     df = _t(spark, sf_dir, "documents")
-    groups = minhash_lsh_groups(df, num_hashes=16, bands=2,
-                                sigs=_sig_table(spark, sf_dir))
+    groups = minhash_lsh_groups(df, num_hashes=16, bands=2)
     lab = (df.join(groups, "doc_id", "left")
            .withColumn("cluster_id",
                        F.coalesce(F.col("cluster_id"), F.col("doc_id"))))
@@ -3858,24 +3830,6 @@ def q_leakage_safe_split(spark, sf_dir):
     return (sp.groupBy("split", "source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.countDistinct("cluster_id").alias("n_clusters")))
-
-
-# PQ index artifacts live at a path the DuckDB oracle can reconstruct
-# WITHOUT session state: {root}/hsq_pq_idx/n={rows}/fp={fingerprint}/ —
-# the oracle globs the hive-partitioned cells, filters n to the
-# registered embeddings view's COUNT(*), and picks the fp named by the
-# atomically-updated n={rows}/_CURRENT pointer (see
-# pipeline/index_cache.py for the full protocol rationale). Trained
-# codebooks are deterministic (hash-ordered sample + seeded k-means),
-# so re-saves are idempotent. fp dirs are IMMUTABLE once committed:
-# two datasets with equal n coexist in sibling dirs instead of
-# rmtree-racing one shared dir (round-8 advice).
-_PQ_INDEX_META: dict = {}
-
-
-def _dataset_fingerprint(sf_dir, table="embeddings"):
-    from .pipeline.index_cache import dataset_fingerprint
-    return dataset_fingerprint(sf_dir, table)
 
 
 def _with_cache_root(sql):
@@ -3891,51 +3845,37 @@ def _with_cache_root(sql):
         else sql
 
 
-def _pq_index(spark, sf_dir):
-    """fit->save ONCE per (session, sf_dir); returns
-    (index, corpus_n, encoded_codes_df). The cached corpus count also
-    serves ann_pq_exact, which needs rerank >= |corpus| without paying
-    a count job per invocation.
-
-    The corpus is ENCODED ONCE with the frozen index and persisted at
-    ``<path>/codes.parquet``; every search then scans |docs| x m small
-    ints instead of re-running the encode projection per query batch —
-    the train-once/encode-once/search-encoded production shape (see
-    ``ivfpq_topk``'s encoded= contract). The DuckDB oracle is
-    unaffected: it reads only ``cells.parquet`` and re-derives the
-    encode itself.
-
-    Cross-process reuse is CONTENT-ADDRESSED: the dataset fingerprint
-    is part of the directory path, the ``_FINGERPRINT`` marker is
-    committed last (presence => cells AND codes are complete and were
-    built from exactly this data, so fit AND encode are both skipped),
-    and the per-n ``_CURRENT`` pointer is re-aimed on every build or
-    cache-hit so the DuckDB oracle reads the same artifacts this
-    session just used (pipeline/index_cache.py)."""
-    from .pipeline.ann_index import PQIndex
-    from .pipeline.index_cache import IndexCache
-    key = (id(spark), sf_dir)
-    meta = _PQ_INDEX_META.get(key)
-    if meta is None:
-        df = _t(spark, sf_dir, "embeddings")
-        n = df.count()
-        cache = IndexCache("hsq_pq_idx")
-        fp = _dataset_fingerprint(sf_dir)
-        path = cache.dir_for(n, fp)
-        codes_path = f"{path}/codes.parquet"
-        if not cache.is_committed(n, fp):
-            PQIndex.fit(df, m=16, nbits=4).save(path, spark)
-            idx = PQIndex.load(spark, path)
-            (idx.encode(df).select("vec_id", "pq_code")
-             .write.mode("overwrite").parquet(codes_path))
-            cache.commit(n, fp)
-        else:
-            idx = PQIndex.load(spark, path)
-            cache.point_current(n, fp)
-        cache.prune_siblings(n, fp)     # age-gated GC of stale same-n dirs
-        meta = (idx, n, spark.read.parquet(codes_path))
-        _PQ_INDEX_META[key] = meta
-    return meta
+# DuckDB cannot retrain k-means, so the ann_pq/ann_ivfpq oracles read
+# the books and centroids from an export at a path they reconstruct
+# without session state: {root}/hsq_{pq,ivfpq}_idx/n={rows}/fp={fp}/.
+# The oracle globs the hive-partitioned cells, filters n to the
+# registered embeddings view's COUNT(*), and picks the fp named by the
+# atomically-updated n={rows}/_CURRENT pointer (pipeline/index_cache.py).
+# The fit is deterministic (hash-ordered sample, seeded k-means), so an
+# export committed by an earlier fit equals the index the call fits and
+# searches (pinned in tests/test_pipeline.py). fp dirs are immutable
+# once committed: two datasets with equal n own sibling dirs.
+def _fit_ann_index(spark, sf_dir, family):
+    """Fit the ``family`` index (``hsq_pq_idx`` or ``hsq_ivfpq_idx``) on
+    the embeddings of ``sf_dir`` and export it for the family's oracle
+    unless this dataset's export is committed; returns (index, rows).
+    The export is a driver-side write, so a call runs the same jobs
+    whether or not it writes one."""
+    from .pipeline.ann_index import IVFPQIndex, PQIndex, export_local
+    from .pipeline.index_cache import IndexCache, dataset_fingerprint
+    df = _t(spark, sf_dir, "embeddings")
+    idx = (PQIndex.fit(df, m=16, nbits=4) if family == "hsq_pq_idx"
+           else IVFPQIndex.fit(df, n_centroids=16, m=16, nbits=4))
+    n = df.count()
+    cache = IndexCache(family)
+    fp = dataset_fingerprint(sf_dir)
+    if not cache.is_committed(n, fp):
+        export_local(idx, cache.dir_for(n, fp))
+        cache.commit(n, fp)
+    else:
+        cache.point_current(n, fp)
+    cache.prune_siblings(n, fp)     # age-gated GC of stale same-n dirs
+    return idx, n
 
 
 _ANN_PQ_SQL = _with_cache_root("""
@@ -4017,28 +3957,22 @@ SELECT * FROM (
 
 @query("ann_pq", _ANN_PQ_SQL)
 def q_ann_pq(spark, sf_dir):
-    """PQ/ADC approximate top-k through the PERSISTED index (fit->save
-    once per session, load->search per call). Fully value-checked: the
-    k-means TRAINING is iterative (not SQL), but the trained codebooks
-    are exported as parquet cells, and everything downstream — encode
-    (argmin per subspace), the ADC scan (one GEMM against the PQ
-    reconstruction), the top-50 shortlist, the exact-cosine rerank —
-    is reproduced by the DuckDB oracle from those cells, closing the
-    one remaining no-oracle query of rounds 1-5. The query set is every
-    50th id CAPPED at 2000 queries — SF-independent bound so the
-    driver-side query matrix stays fixed-size at any corpus scale.
-    Round 7: the ADC scan reads the PERSISTED codes (encode-once at
-    index build — see ``_pq_index``) instead of re-encoding the raw
-    corpus per search; raw vectors are touched only by the bounded
-    rerank join."""
-    idx, _, codes = _pq_index(spark, sf_dir)
+    """PQ/ADC approximate top-k through an index fitted in the call
+    (``_fit_ann_index``). Fully value-checked: the k-means TRAINING is
+    iterative (not SQL), but the trained codebooks are exported as
+    parquet cells, and everything downstream — encode (argmin per
+    subspace), the ADC scan (one GEMM against the PQ reconstruction),
+    the top-50 shortlist, the exact-cosine rerank — is reproduced by
+    the DuckDB oracle from those cells. The query set is every 50th id
+    CAPPED at 2000 queries — SF-independent bound so the driver-side
+    query matrix stays fixed-size at any corpus scale. The plan encodes
+    the corpus; raw vectors are joined back only for the bounded
+    rerank."""
+    idx, _ = _fit_ann_index(spark, sf_dir, "hsq_pq_idx")
     df = _t(spark, sf_dir, "embeddings")
     queries_df = df.filter((F.col("vec_id") % 50 == 0)
                            & (F.col("vec_id") < 100_000))
-    # dtype pinned: the DuckDB oracle reproduces the ADC shortlist in
-    # DOUBLE; the library's production default is fp32 (see pq_topk)
-    return idx.search(df, queries_df, k=5, rerank=50, encoded=codes,
-                      dtype="float64")
+    return idx.search(df, queries_df, k=5, rerank=50)
 
 
 @query("ann_pq_exact", _ANN_EXACT_SQL)
@@ -4047,48 +3981,14 @@ def q_ann_pq_exact(spark, sf_dir):
     size keeps every ADC candidate, so the encode->ADC->rerank
     machinery all runs and the exact-cosine rescue pass makes the
     result equal brute force — value-checked against the same oracle
-    as ann_topk/ann_ivf. The corpus count comes from the session-cached
-    index metadata (no extra count job inside the timed region); the
-    ADC pass scans the persisted codes (see ``_pq_index``)."""
-    idx, n, codes = _pq_index(spark, sf_dir)
+    as ann_topk/ann_ivf. The index is fitted in the call
+    (``_fit_ann_index``), which also counts the corpus."""
+    idx, n = _fit_ann_index(spark, sf_dir, "hsq_pq_idx")
     df = _t(spark, sf_dir, "embeddings")
     queries_df = df.filter(F.col("vec_id") < 8)
-    out = idx.search(df, queries_df, k=5, rerank=n, encoded=codes,
-                     dtype="float64")
+    out = idx.search(df, queries_df, k=5, rerank=n)
     return (out.withColumnRenamed("score", "cosine")
             .withColumn("rank", F.col("rank").cast("int")))
-
-
-# fit->save ONCE per (session, sf_dir) — see _pq_index; the stable
-# /tmp path (keyed by corpus count like _pq_index) lets the DuckDB
-# oracle read the SAME trained centroids + residual codebooks
-_IVFPQ_INDEX_META: dict = {}
-
-
-def _ivfpq_index(spark, sf_dir):
-    """Same content-addressed cross-process cache as ``_pq_index``:
-    fp-in-path immutable dirs, marker-last commit, per-n _CURRENT
-    pointer for the oracle (pipeline/index_cache.py)."""
-    from .pipeline.ann_index import IVFPQIndex
-    from .pipeline.index_cache import IndexCache
-    key = (id(spark), sf_dir)
-    meta = _IVFPQ_INDEX_META.get(key)
-    if meta is None:
-        df = _t(spark, sf_dir, "embeddings")
-        n = df.count()
-        cache = IndexCache("hsq_ivfpq_idx")
-        fp = _dataset_fingerprint(sf_dir)
-        path = cache.dir_for(n, fp)
-        if not cache.is_committed(n, fp):
-            IVFPQIndex.fit(df, n_centroids=16, m=16, nbits=4) \
-                      .save(path, spark)
-            cache.commit(n, fp)
-        else:
-            cache.point_current(n, fp)
-        cache.prune_siblings(n, fp)     # age-gated GC of stale same-n dirs
-        meta = (IVFPQIndex.load(spark, path), n)
-        _IVFPQ_INDEX_META[key] = meta
-    return meta
 
 
 # IVF-PQ ADC reproduced in SQL from the exported index: coarse cell by
@@ -4195,20 +4095,20 @@ SELECT * FROM (
 @query("ann_ivfpq", _ANN_IVFPQ_SQL)
 def q_ann_ivfpq(spark, sf_dir):
     """IVF-PQ (coarse inverted lists + residual product quantization —
-    the standard billion-scale ANN layout) through the PERSISTED index.
-    Fully value-checked INCLUDING the approximate math: the trained
-    centroids + residual codebooks are exported as parquet cells and
+    the standard billion-scale ANN layout) through an index fitted in
+    the call (``_fit_ann_index``). Fully value-checked INCLUDING the
+    approximate math: the trained centroids + residual codebooks are
+    exported as parquet cells and
     the DuckDB oracle reproduces cell assignment, residual encode, the
     ADC score (= inner product with centroid + reconstruction), the
     top-50 shortlist, and the exact-cosine rerank. Full probe
     (nprobe = n_centroids) keeps probe selection out of the float-tie
     domain; the partial-probe (nprobe=4) recall is pinned in
     tests/test_pipeline.py."""
-    idx, n = _ivfpq_index(spark, sf_dir)
+    idx, _ = _fit_ann_index(spark, sf_dir, "hsq_ivfpq_idx")
     df = _t(spark, sf_dir, "embeddings")
     queries_df = df.filter(F.col("vec_id") < 8)
-    out = idx.search(df, queries_df, k=5, nprobe=16, rerank=50,
-                     dtype="float64")
+    out = idx.search(df, queries_df, k=5, nprobe=16, rerank=50)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -4587,71 +4487,6 @@ def q_shuffle_order(spark, sf_dir):
         .select("doc_id").limit(20)
 
 
-# MinHash signature table (id, sig: array<bigint>) — the dominant shared
-# cost of the whole LSH family (pairs/groups/star-edges/components/
-# keep-best/leakage-split all rebuild the same md5-per-token signatures
-# of the same corpus). Sign once, content-addressed exactly like the ANN
-# indexes and the span/DSIR tables; every consumer passes sigs= and pays
-# a parquet read. num_hashes is value-changing, so it is part of the
-# fingerprint (``x md5`` names the token hash, kept so existing caches
-# still hit); DuckDB oracles recompute signatures from raw text, so a
-# stale cache fails the value gate loudly, cold AND warm.
-_SIG_TABLE_META: dict = {}
-
-
-def _sig_table(spark, sf_dir, num_hashes=16):
-    from .pipeline.index_cache import IndexCache
-    key = (id(spark), sf_dir, num_hashes)
-    got = _SIG_TABLE_META.get(key)
-    if got is None:
-        from .pipeline.dedup import minhash_signature_arrays
-        df = _t(spark, sf_dir, "documents")
-        rows = df.count()
-        cache = IndexCache("hsq_minhash_idx")
-        fp = (f"{_dataset_fingerprint(sf_dir, 'documents')}"
-              f"-{num_hashes}xmd5")
-        path = f"{cache.dir_for(rows, fp)}/sigs.parquet"
-        if not cache.is_committed(rows, fp):
-            (minhash_signature_arrays(df, num_hashes=num_hashes)
-             .write.mode("overwrite").parquet(path))
-            cache.commit(rows, fp)
-        else:
-            cache.point_current(rows, fp)
-        cache.prune_siblings(rows, fp)
-        got = spark.read.parquet(path)
-        _SIG_TABLE_META[key] = got
-    return got
-
-
-# DSIR raw-corpus feature table (id, bucket, count) — target-independent,
-# so cached content-addressed exactly like the ANN indexes and the
-# ExactSubstr span table (fp-in-path, marker-last, _CURRENT pointer).
-_DSIR_FEATS_META: dict = {}
-
-
-def _dsir_feats(spark, sf_dir, n=2, buckets=8192):
-    from .pipeline.index_cache import IndexCache
-    key = (id(spark), sf_dir, n, buckets)
-    got = _DSIR_FEATS_META.get(key)
-    if got is None:
-        from .pipeline.sample import dsir_doc_buckets
-        df = _t(spark, sf_dir, "documents")
-        rows = df.count()
-        cache = IndexCache("hsq_dsir_feats")
-        fp = f"{_dataset_fingerprint(sf_dir, 'documents')}-{n}x{buckets}"
-        path = f"{cache.dir_for(rows, fp)}/feats.parquet"
-        if not cache.is_committed(rows, fp):
-            (dsir_doc_buckets(df, n=n, buckets=buckets)
-             .write.mode("overwrite").parquet(path))
-            cache.commit(rows, fp)
-        else:
-            cache.point_current(rows, fp)
-        cache.prune_siblings(rows, fp)
-        got = spark.read.parquet(path)
-        _DSIR_FEATS_META[key] = got
-    return got
-
-
 @query("dsir_weights", """
 WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 g AS (
@@ -4680,16 +4515,15 @@ def q_dsir_weights(spark, sf_dir):
     raw doc against the target slice (doc_id % 37 == 0) — micro-grid
     integer summation makes the score engine/partitioning-exact.
 
-    The corpus gram projection (the dominant cost; SCALE.md round-9:
-    the family is projection-bound) goes through the content-addressed
-    feature-table cache — computed once per corpus snapshot, reused by
-    every target mix. The target here is an id-slice of the corpus, so
-    its feature table is a FILTER of the same cached table: the warm
-    path pays zero tokenize/md5 work, and the DuckDB oracle still
-    recomputes everything from raw text, value-checking the cache."""
-    from .pipeline.sample import dsir_weights
+    The corpus gram projection is the dominant cost (SCALE.md round-9:
+    the family is projection-bound). The target here is an id-slice of
+    the corpus, so the call projects the corpus once into a lazily
+    checkpointed feature table and reads the target's features as a
+    filter of it."""
+    from .pipeline.sample import dsir_doc_buckets, dsir_weights
     df = _t(spark, sf_dir, "documents")
-    docb = _dsir_feats(spark, sf_dir, n=2, buckets=8192)
+    docb = dsir_doc_buckets(df, n=2, buckets=8192) \
+        .localCheckpoint(eager=False)
     return dsir_weights(
         df, None, n=2, buckets=8192, doc_buckets=docb,
         target_doc_buckets=docb.filter(F.col("doc_id") % 37 == 0))
@@ -4839,15 +4673,10 @@ UNION ALL SELECT '5_decontaminated', COUNT(*) FROM clean
 def q_pretrain_funnel(spark, sf_dir):
     """The composed end-to-end pretraining data funnel: quality gate ->
     exact dedup -> LSH near-dup dedup -> n-gram decontamination, with
-    per-stage survivor counts. The LSH subtree consumes the shared
-    content-addressed signature table (the same hsq_minhash_idx build
-    the 7-query LSH family amortizes), semi-joined down to the
-    exact-dedup survivors — see pipeline/__init__.py for the round-11
-    A/B vs re-signing the filtered subset."""
+    per-stage survivor counts."""
     from .pipeline import pretrain_funnel
     df = _t(spark, sf_dir, "documents")
-    return pretrain_funnel(df, bands=2,
-                           sigs=_sig_table(spark, sf_dir))
+    return pretrain_funnel(df, bands=2)
 
 
 @query("skew_report", """
@@ -4980,44 +4809,6 @@ def q_variant_props_stats(spark, sf_dir):
                  F.count("k").alias("n_with_k")))
 
 
-# ExactSubstr span table: detection dominates the whole family (sf10:
-# ~34s detect vs ~4s strip), and BOTH dup_spans and exact_substr_strip
-# need the same (dataset, n, min_count) table — so the detected spans
-# are cached content-addressed with the same fp-in-path protocol as the
-# ANN indexes (pipeline/index_cache.py): immutable
-# {root}/hsq_span_idx/n={rows}/fp={fingerprint}-{n}x{min_count}/ dirs,
-# marker-last commit, per-n _CURRENT pointer, age-gated sibling GC.
-# A real pipeline detects once and strips/audits many times; the cache
-# makes the second family member pay only its own downstream work.
-# Values are still fully oracle-checked: the DuckDB side recomputes the
-# spans from raw text, so a stale/wrong cache would fail the gate loud.
-_SPAN_TABLE_META: dict = {}
-
-
-def _span_table(spark, sf_dir, n=16, min_count=2):
-    from .pipeline.index_cache import IndexCache
-    key = (id(spark), sf_dir, n, min_count)
-    got = _SPAN_TABLE_META.get(key)
-    if got is None:
-        from .pipeline.dedup import duplicate_ngram_spans
-        df = _t(spark, sf_dir, "documents")
-        rows = df.count()
-        cache = IndexCache("hsq_span_idx")
-        # params that change VALUES are part of the fingerprint
-        fp = f"{_dataset_fingerprint(sf_dir, 'documents')}-{n}x{min_count}"
-        path = f"{cache.dir_for(rows, fp)}/spans.parquet"
-        if not cache.is_committed(rows, fp):
-            (duplicate_ngram_spans(df, n=n, min_count=min_count)
-             .write.mode("overwrite").parquet(path))
-            cache.commit(rows, fp)
-        else:
-            cache.point_current(rows, fp)
-        cache.prune_siblings(rows, fp)
-        got = spark.read.parquet(path)
-        _SPAN_TABLE_META[key] = got
-    return got
-
-
 _DUP_SPANS_SQL = """
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
 g AS (
@@ -5058,9 +4849,10 @@ def q_dup_spans(spark, sf_dir):
     window count over 128-bit gram hashes (one exchange) plus a
     gaps-and-islands merge per doc (one exchange). The DuckDB oracle
     groups the RAW gram string, so it also value-checks that the
-    128-bit hash pair introduces no false duplicates — INCLUDING when
-    the spans come from the content-addressed cache (_span_table)."""
-    return _span_table(spark, sf_dir, n=16, min_count=2)
+    128-bit hash pair introduces no false duplicates."""
+    from .pipeline.dedup import duplicate_ngram_spans
+    return duplicate_ngram_spans(_t(spark, sf_dir, "documents"), n=16,
+                                 min_count=2)
 
 
 @query("exact_substr_strip", _DUP_SPANS_SQL + """,
@@ -5092,16 +4884,11 @@ def q_exact_substr_strip(spark, sf_dir):
     """The apply step of ExactSubstr dedup: remove every duplicated
     16-gram span and reassemble the text. Span table (small) is
     grouped to per-doc arrays and left-joined back; the token filter
-    is a native higher-order expression - no Python in the plan.
-    Detection is NOT paid here: the spans come from the shared
-    content-addressed span table (_span_table — detect once, strip
-    and audit against the same table), so this query's cost is the
-    strip itself plus one small parquet read."""
+    is a native higher-order expression - no Python in the plan. The
+    call detects the spans it strips."""
     from .pipeline.dedup import strip_duplicate_spans
     df = _t(spark, sf_dir, "documents")
-    return strip_duplicate_spans(
-        df, n=16, min_count=2,
-        spans=_span_table(spark, sf_dir, n=16, min_count=2))
+    return strip_duplicate_spans(df, n=16, min_count=2)
 
 
 # ---------------------------------------------------------------------------

@@ -1,41 +1,10 @@
-"""Sinks: partitioned and bucketed parquet writers.
+"""Sinks: training shards and ORC.
 
-The reference has no sinks (SURVEY.md §2.1); at 100 TB the layout you
-WRITE determines every downstream shuffle, so the engine makes the two
-standard layouts first-class:
-
-- ``write_partitioned``: hive-style directory partitioning — gives
-  partition PRUNING on the partition key (filters never touch
-  non-matching files).
-- ``write_bucketed``: hash-bucketed table (``bucketBy`` + saveAsTable) —
-  gives co-located, SHUFFLE-FREE joins and aggregations on the bucket
-  key for every subsequent reader. Verified by
-  tests/test_plans.py::test_bucketed_join_has_no_exchange.
+The hive-partitioned and bucketed parquet layouts are in ``sinks``.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
-                      mode: str = "overwrite",
-                      max_records_per_file: int | None = None) -> None:
-    w = df.write.mode(mode).partitionBy(*partition_cols)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.parquet(path)
-
-
-def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
-                   n_buckets: int, sort_cols: list[str] | None = None,
-                   mode: str = "overwrite") -> None:
-    """Persist as a bucketed managed table. Joins/aggs between tables
-    bucketed the same way on the same key skip the shuffle entirely."""
-    w = (df.write.mode(mode)
-         .bucketBy(n_buckets, *bucket_cols))
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)
 
 
 def write_training_shards(df: DataFrame, path: str, n_shards: int,

@@ -149,6 +149,61 @@ def test_registry_call_leaves_no_cache_entry(spark, name, tmp_path,
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+#: registry queries that sign, detect, fit or encode their own inputs
+OWN_INPUT_QUERIES = [
+    "minhash_signatures", "minhash_lsh_pairs", "lsh_incremental_dedup",
+    "minhash_lsh_groups", "lsh_star_edges_recovered", "dedup_components",
+    "dedup_keep_best", "leakage_safe_split", "pretrain_funnel",
+    "dsir_weights", "dup_spans", "exact_substr_strip", "ann_ivf_index",
+    "ann_pq", "ann_pq_exact", "ann_ivfpq"]
+
+
+def _call_jobs(spark, name, group):
+    """Spark jobs that one registry call of ``name`` runs at sf0.001,
+    from the query's construction to its collect."""
+    from conftest import SF_DIR
+    sys.path.insert(0, HERE)
+    import __spark_entry__ as E
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        E.queries()[name](spark, SF_DIR).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def fresh_cache_root(spark, tmp_path, monkeypatch):
+    """A fresh ``HSQ_INDEX_CACHE_ROOT``, with the two tables of these
+    queries loaded before (a table's first load in a session runs a
+    job)."""
+    from conftest import SF_DIR
+
+    from handyspark_spark import queries as Q
+    monkeypatch.setenv("HSQ_INDEX_CACHE_ROOT", str(tmp_path))
+    for t in ("documents", "embeddings"):
+        Q._t(spark, SF_DIR, t)
+
+
+@pytest.mark.parametrize("name", OWN_INPUT_QUERIES)
+def test_registry_call_computes_its_own_inputs(spark, name,
+                                               fresh_cache_root):
+    """A call reads nothing that an earlier call or process computed:
+    on a fresh index-cache root its second call runs as many jobs as
+    its first."""
+    first = _call_jobs(spark, name, f"own-{name}-1")
+    assert _call_jobs(spark, name, f"own-{name}-2") == first
+
+
+def test_ann_pq_exact_jobs_independent_of_ann_pq(spark, fresh_cache_root):
+    """ann_pq_exact runs the same jobs before and after ann_pq, which
+    fits the same index."""
+    before = _call_jobs(spark, "ann_pq_exact", "pq-exact-before")
+    _call_jobs(spark, "ann_pq", "pq-between")
+    assert _call_jobs(spark, "ann_pq_exact", "pq-exact-after") == before
+
+
 def test_guard_flags_python_rows():
     calls = ["s.createDataFrame([(1,)], 'a int')",
              "s.createDataFrame([(i,) for i in x])",

@@ -621,9 +621,9 @@ def test_lsh_pairs_emit_once_equals_distinct(spark):
 
 
 def test_lsh_pairs_distinct_precanonical_sigs(spark):
-    """The oversized-key fallback passes already-canonicalized sigs with
-    ``sigs_canonical=True`` (skipping the redundant second min-sig
-    exchange) — the pair set must be identical to re-canonicalizing,
+    """The oversized-key fallback passes its already-canonicalized sigs
+    (skipping the redundant second min-sig exchange) — the pair set
+    must be identical to re-canonicalizing,
     including on duplicate-id inputs where canonicalization matters."""
     import pandas as pd
 
@@ -634,11 +634,10 @@ def test_lsh_pairs_distinct_precanonical_sigs(spark):
         "text": ["a b c d", "p q r s", "a b c d x",
                  "p q r s y", "zz yy xx ww"]})
     df = spark.createDataFrame(pdf)
-    canon = _canonical_sigs(df, "text", "doc_id", 8, None)
+    canon = _canonical_sigs(df, "text", "doc_id", 8)
     fast = {(r.id_a, r.id_b) for r in
             _minhash_lsh_pairs_distinct(df, "text", "doc_id", 8, 4, None,
-                                        sigs=canon,
-                                        sigs_canonical=True).collect()}
+                                        sigs=canon).collect()}
     ref = {(r.id_a, r.id_b) for r in
            _minhash_lsh_pairs_distinct(df, "text", "doc_id", 8, 4,
                                        None).collect()}
@@ -1770,33 +1769,6 @@ def test_pq_encoded_corpus_search_matches_direct(spark, tables, tmp_path):
         pq_topk(df, qs, k=5, encoded=enc)
 
 
-def test_adc_fp32_matches_fp64_topk(spark, tables):
-    """dtype='float32' halves ADC memory traffic; with the exact-cosine
-    rerank the emitted (query, neighbor, rank, score) must equal the
-    fp64 run — quantization error dwarfs fp32 rounding, and rerank
-    rescores in fp64 regardless. Pure-ADC (no rerank) neighbor sets
-    must agree with scores within fp32 tolerance."""
-    from handyspark_spark.pipeline.similarity import ivfpq_topk, pq_topk
-    df = tables["embeddings"]
-    qs = df.filter(F.col("vec_id") % 40 == 0)
-    for fn, kw in ((pq_topk, dict(m=8, nbits=4, sample_n=256)),
-                   (ivfpq_topk, dict(n_centroids=8, nprobe=4, m=8,
-                                     nbits=4, sample_n=256))):
-        a = {(r.query_id, r.neighbor_id, r.rank, r.score)
-             for r in fn(df, qs, k=5, rerank=30, **kw).collect()}
-        b = {(r.query_id, r.neighbor_id, r.rank, r.score)
-             for r in fn(df, qs, k=5, rerank=30, dtype="float32",
-                         **kw).collect()}
-        assert a == b and len(a) > 0, fn.__name__
-        # pure ADC: same neighbors, scores within fp32 rounding
-        sa = {(r.query_id, r.neighbor_id): r.score
-              for r in fn(df, qs, k=5, **kw).collect()}
-        sb = {(r.query_id, r.neighbor_id): r.score
-              for r in fn(df, qs, k=5, dtype="float32", **kw).collect()}
-        assert set(sa) == set(sb), fn.__name__
-        assert all(abs(sa[p] - sb[p]) < 1e-4 for p in sa), fn.__name__
-
-
 def test_hot_bucket_recovery_reaches_uncapped_closure(spark):
     """A bucket larger than max_bucket_size is dropped by the capped
     path; the uncapped star edges keep it, and the components of each
@@ -2259,14 +2231,6 @@ def test_strip_duplicate_spans_roundtrip(spark):
                == (len(r["clean_text"].split(" "))
                    if r["clean_text"] else 0)
                for r in out.values())
-    # spans= injection (detect-once/strip-once pipeline shape) must be
-    # byte-identical to the recomputing form
-    from handyspark_spark.pipeline.dedup import duplicate_ngram_spans
-    pre = duplicate_ngram_spans(df, n=4, min_count=2)
-    out2 = {r["doc_id"]: r for r in
-            strip_duplicate_spans(df, n=4, spans=pre).collect()}
-    assert {k: tuple(v) for k, v in out.items()} \
-        == {k: tuple(v) for k, v in out2.items()}
 
 
 def test_dup_spans_no_python_in_plan(docs):
@@ -2390,16 +2354,16 @@ def test_pq_topk_deterministic_under_ties_and_batching(spark):
     # two cells of the exact scan, one per half of the distinct vectors
     C2 = base[[0, 3]] / np.linalg.norm(base[[0, 3]], axis=1, keepdims=True)
     try:
-        # fp64 pinned: the independent expectation below computes the
-        # ADC scores in float64 numpy (library default is now fp32).
-        # Two all-zero cells with nprobe=1 run the same ADC through the
-        # probe mask (every row lands in the probed cell 0).
+        # the independent expectation below computes the ADC scores in
+        # float64 numpy, as the scan does. Two all-zero cells with
+        # nprobe=1 run the same ADC through the probe mask (every row
+        # lands in the probed cell 0).
         runs = {
-            "pq_topk": pq_topk(df, qs, k=5, books=books, rerank=None,
-                               dtype="float64").collect(),
+            "pq_topk": pq_topk(df, qs, k=5, books=books,
+                               rerank=None).collect(),
             "ivfpq_topk_masked": ivfpq_topk(
                 df, qs, k=5, centroids=np.zeros((2, 8)), nprobe=1,
-                books=books, dtype="float64").collect()}
+                books=books).collect()}
         exact = {"brute_force_topk": (brute_force_topk(df, qs, k=5),
                                       _np_topk(df, qs, 5)),
                  "ivf_topk": (ivf_topk(df, qs, k=5, centroids=C2,
@@ -2568,98 +2532,61 @@ def test_ivf_zero_vector_gives_no_nan_centroid(spark):
     assert occupied > 1
 
 
-def test_index_cache_rejects_same_n_different_data(spark, tmp_path):
-    """Round-7 advice: /tmp/hsq_pq_idx was keyed by row count alone, so
-    a REGENERATED dataset with the same n could silently reuse stale
-    codes against a freshly fit index. Round-8 advice tightened this
-    further: the fingerprint is now IN THE PATH, so same-n datasets own
-    sibling immutable dirs instead of rmtree-racing one shared dir. The
-    cache must (a) reuse on a byte-identical second process-entry,
-    (b) give same-n-different-content its OWN dir (fresh fit+encode)
-    while LEAVING the first dataset's committed dir untouched,
-    (c) still return correct (brute-force-equal at rerank>=n) results
-    after the rebuild, and (d) keep the per-n _CURRENT pointer aimed at
-    whichever fp the session last validated."""
+def test_index_cache_rejects_same_n_different_data(spark, tmp_path,
+                                                   monkeypatch):
+    """The ANN oracle export protocol (``queries._fit_ann_index``): two
+    datasets with equal n own sibling fp dirs, the per-n ``_CURRENT``
+    pointer follows the last export, the index each call searches is
+    its own fit (the exact switch equals numpy brute force on each
+    dataset), and a fresh fit is bit-equal to the committed export, so
+    the DuckDB oracle reads the index the call searched."""
     import os
-    import shutil
 
     import pandas as pd
-    from pyspark.sql import functions as F
+    import pyarrow.parquet as pq
 
     from handyspark_spark import queries as Q
-    from handyspark_spark.pipeline.index_cache import IndexCache
+    from handyspark_spark.pipeline.ann_index import PQIndex
+    from handyspark_spark.pipeline.index_cache import (IndexCache,
+                                                        dataset_fingerprint)
 
-    src = pd.read_parquet("/root/testdata/sf0.001/embeddings.parquet")
-    sub = src.head(37).copy()          # unique n -> isolated cache dir
+    monkeypatch.setenv("HSQ_INDEX_CACHE_ROOT", str(tmp_path / "cache"))
     cache = IndexCache("hsq_pq_idx")
-    n_parent = cache.n_dir(len(sub))
-    shutil.rmtree(n_parent, ignore_errors=True)
-
-    try:
-        dir_a = tmp_path / "a"
-        dir_a.mkdir()
-        sub.to_parquet(dir_a / "embeddings.parquet")
-        Q._PQ_INDEX_META.clear()
-        idx_a, n_a, codes_a = Q._pq_index(spark, str(dir_a))
-        assert n_a == 37
-        fp_a = Q._dataset_fingerprint(str(dir_a))
-        dir_a_cache = cache.dir_for(37, fp_a)
-        assert open(os.path.join(dir_a_cache, "_FINGERPRINT")).read() == fp_a
-        assert cache.current(37) == fp_a
-        codes_a_rows = {r.vec_id: list(r.pq_code)
-                        for r in codes_a.collect()}
-
-        # (a) same content, new "process" (cleared session cache): fit
-        # is skipped, artifacts untouched, pointer re-aimed
-        Q._PQ_INDEX_META.clear()
-        before_cells_mtime = os.path.getmtime(
-            os.path.join(dir_a_cache, "cells.parquet"))
-        Q._pq_index(spark, str(dir_a))
-        assert os.path.getmtime(
-            os.path.join(dir_a_cache, "cells.parquet")) == before_cells_mtime
-        assert cache.current(37) == fp_a
-
-        # (b) same n, different content -> sibling dir, fresh encode
-        flipped = sub.copy()
-        # shift embeddings one vec_id over (same n, same value SET, but
-        # a different id->vector mapping — codes must change per id)
-        flipped["embedding"] = list(flipped["embedding"].iloc[1:]) + \
-            [flipped["embedding"].iloc[0]]
-        dir_b = tmp_path / "b"
-        dir_b.mkdir()
-        flipped.to_parquet(dir_b / "embeddings.parquet")
-        Q._PQ_INDEX_META.clear()
-        idx_b, n_b, codes_b = Q._pq_index(spark, str(dir_b))
-        assert n_b == 37
-        fp_b = Q._dataset_fingerprint(str(dir_b))
-        assert fp_b != fp_a
-        # (d) pointer follows the most recent validation...
-        assert cache.current(37) == fp_b
-        # ...and dataset A's dir is STILL committed and intact — no
-        # rmtree race, a live session holding A's lazy readers is safe
-        assert open(os.path.join(dir_a_cache, "_FINGERPRINT")).read() == fp_a
-        assert {r.vec_id: list(r.pq_code)
-                for r in spark.read.parquet(
-                    f"{dir_a_cache}/codes.parquet").collect()} \
-            == codes_a_rows
-        codes_b_rows = {r.vec_id: list(r.pq_code)
-                        for r in codes_b.collect()}
-        assert codes_b_rows != codes_a_rows      # fresh ENCODE, not stale
-
-        # (c) rebuilt index is correct on dataset B: exact == brute
-        df_b = spark.read.parquet(str(dir_b / "embeddings.parquet"))
-        qs = df_b.filter(F.col("vec_id") < 3)
+    sub = pd.read_parquet("/root/testdata/sf0.001/embeddings.parquet") \
+        .head(37)
+    # same n and the same vector SET, a different id -> vector mapping
+    flipped = sub.copy()
+    flipped["embedding"] = list(sub["embedding"].iloc[1:]) + \
+        [sub["embedding"].iloc[0]]
+    fps = {}
+    for name, pdf in (("a", sub), ("b", flipped)):
+        (tmp_path / name).mkdir()
+        pdf.to_parquet(tmp_path / name / "embeddings.parquet")
+        sf_dir = str(tmp_path / name)
+        idx, n = Q._fit_ann_index(spark, sf_dir, "hsq_pq_idx")
+        fps[name] = fp = dataset_fingerprint(sf_dir)
+        assert n == 37 and cache.is_committed(n, fp)
+        assert cache.current(n) == fp
+        exported = pq.read_table(f"{cache.dir_for(n, fp)}/cells.parquet")
+        books = np.zeros(idx.books.shape)
+        books[tuple(exported[a].to_numpy()
+                    for a in ("subspace", "code", "pos"))] = \
+            exported["val"].to_numpy()
+        df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        fresh = PQIndex.fit(df, m=16, nbits=4).books
+        assert np.array_equal(fresh, books)
+        assert np.array_equal(idx.books, books)
+        qs = df.filter(F.col("vec_id") < 3)
         got = {(r.query_id, r.neighbor_id)
-               for r in idx_b.search(df_b, qs, k=3, rerank=n_b,
-                                     encoded=codes_b).collect()}
-        want = {(r[0], r[1]) for r in _np_topk(df_b, qs, 3)}
-        assert got == want and len(got) > 0
-    finally:
-        # always remove the whole n= parent: a stale committed dir at
-        # this n would otherwise be unioned into later DuckDB oracle
-        # globs (round-8 advice)
-        Q._PQ_INDEX_META.clear()
-        shutil.rmtree(n_parent, ignore_errors=True)
+               for r in idx.search(df, qs, k=3, rerank=n).collect()}
+        assert got == {(r[0], r[1]) for r in _np_topk(df, qs, 3)} and got
+    assert fps["a"] != fps["b"]
+    assert sorted(os.listdir(cache.n_dir(37))) == \
+        sorted(["_CURRENT", f"fp={fps['a']}", f"fp={fps['b']}"])
+    # exporting dataset a again keeps its committed dir and re-aims the
+    # pointer at it
+    Q._fit_ann_index(spark, str(tmp_path / "a"), "hsq_pq_idx")
+    assert cache.current(37) == fps["a"] and cache.is_committed(37, fps["b"])
 
 
 def test_index_cache_protocol_on_memory_fs():
@@ -2714,27 +2641,6 @@ def test_index_cache_protocol_on_memory_fs():
     fs2.fail_after = None
     assert not cache2.is_committed(5, "cccc")    # wreck -> discarded
     assert cache2.current(5) is None
-
-
-def test_cache_events_record_hit_and_build():
-    """Every is_committed probe appends a drainable event (the bench's
-    cold/warm attribution): miss -> hit=False, committed -> hit=True,
-    and drain clears the log."""
-    from handyspark_spark.pipeline.index_cache import (
-        IndexCache, drain_cache_events)
-    from handyspark_spark.streaming.fs import MemoryFS
-
-    drain_cache_events()
-    fs = MemoryFS()
-    cache = IndexCache("evt", root="mem://cache", fs=fs)
-    assert not cache.is_committed(3, "ffff")        # cold probe
-    fs.store[f"{cache.dir_for(3, 'ffff')}/a.parquet/part-0"] = "x"
-    cache.commit(3, "ffff")
-    assert cache.is_committed(3, "ffff")            # warm probe
-    evs = drain_cache_events()
-    assert [(e["family"], e["hit"]) for e in evs] == [
-        ("evt", False), ("evt", True)]
-    assert drain_cache_events() == []
 
 
 def test_dup_spans_hot_strategy_equals_grouped(docs, spark):
@@ -2918,43 +2824,6 @@ def test_exact_switch_rerank_never_broadcasts_shortlist(spark):
     small = pq_topk(df, qs, k=3, rerank=10, books=books)
     plan_small = small._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan_small
-
-
-def test_lsh_family_precomputed_sigs_identical(spark, docs):
-    """The detect-once seam for the LSH family: every consumer fed a
-    precomputed minhash_signature_arrays table (sigs=) must return
-    EXACTLY the plain path's rows — same buckets, same pairs, same
-    cluster labels (signatures are deterministic md5 folds, so equality
-    is exact)."""
-    from handyspark_spark.pipeline.dedup import (dedup_keep_best,
-                                                 minhash_lsh_groups,
-                                                 minhash_lsh_pairs,
-                                                 minhash_lsh_star_edges,
-                                                 minhash_signature_arrays)
-    sigs = minhash_signature_arrays(docs, num_hashes=16)
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(minhash_lsh_pairs(docs, num_hashes=16, bands=2,
-                                  max_bucket_size=500, sigs=sigs)) == \
-        rows(minhash_lsh_pairs(docs, num_hashes=16, bands=2,
-                               max_bucket_size=500))
-    assert rows(minhash_lsh_groups(docs, num_hashes=16, bands=2,
-                                   sigs=sigs)) == \
-        rows(minhash_lsh_groups(docs, num_hashes=16, bands=2))
-    for cap in (8, None):
-        assert rows(minhash_lsh_star_edges(docs, num_hashes=16, bands=2,
-                                           max_bucket_size=cap,
-                                           sigs=sigs)) == \
-            rows(minhash_lsh_star_edges(docs, num_hashes=16, bands=2,
-                                        max_bucket_size=cap))
-    assert rows(dedup_keep_best(docs, num_hashes=16, bands=2,
-                                max_bucket_size=None, sigs=sigs)
-                .select("doc_id", "cluster_id", "quality")) == \
-        rows(dedup_keep_best(docs, num_hashes=16, bands=2,
-                             max_bucket_size=None)
-             .select("doc_id", "cluster_id", "quality"))
 
 
 def test_lsh_incremental_matches_hot_bucket_guard(spark, tables):
@@ -3163,45 +3032,59 @@ def test_arrow_sized_keeps_caller_work_spread(spark):
 def test_arrow_one_task_path_equals_spread_path(spark):
     """The ANN searches return the same rows on the one-task path as on
     a forced many-partition path (``maxRecordsPerBatch=37`` turns the
-    rule off and cuts 37-row batches), on the duplicate-row corpus
-    whose ties straddle the batch cuts."""
+    rule off and cuts 37-row batches), on duplicate-row corpora whose
+    ties straddle the batch cuts. The 64-dim corpus's rerank cases
+    keep ties at the shortlist cut: a BLAS product per batch gives the
+    tied rows different last bits in batches of different shapes."""
     import pandas as pd
     from handyspark_spark.pipeline import similarity as S
+
+    def tie_corpus(rng, dim):
+        base = rng.randn(6, dim)
+        ids = np.arange(300)
+        rng.shuffle(ids)
+        return base, spark.createDataFrame(pd.DataFrame(
+            {"vec_id": ids.astype("int64"),
+             "embedding": [r.tolist() for r in np.repeat(base, 50, axis=0)]
+             })).repartition(5)
+
     rng = np.random.RandomState(9)
-    base = rng.randn(6, 8)
-    X = np.repeat(base, 50, axis=0)
-    ids = np.arange(300)
-    rng.shuffle(ids)
-    df = spark.createDataFrame(pd.DataFrame(
-        {"vec_id": ids.astype("int64"),
-         "embedding": [r.tolist() for r in X]})).repartition(5)
+    base, df = tie_corpus(rng, 8)
     qs = df.filter(F.col("vec_id") < 3)
     books = rng.randn(2, 4, 4)
     C2 = base[[0, 3]] / np.linalg.norm(base[[0, 3]], axis=1, keepdims=True)
+    rng64 = np.random.RandomState(4)
+    _, wide = tie_corpus(rng64, 64)
+    wide_qs = wide.filter(F.col("vec_id") < 3)
+    wide_books = rng64.randn(16, 4, 4)
     searches = {
         "brute_force_topk": lambda: S.brute_force_topk(df, qs, k=5),
         "ivf_topk": lambda: S.ivf_topk(df, qs, k=5, centroids=C2,
                                        nprobe=1),
         "ivfpq_topk": lambda: S.ivfpq_topk(
-            df, qs, k=5, centroids=C2, nprobe=2, books=books,
-            dtype="float64"),
+            df, qs, k=5, centroids=C2, nprobe=2, books=books),
         "ivfpq_topk_rerank": lambda: S.ivfpq_topk(
-            df, qs, k=5, centroids=C2, nprobe=1, books=books, rerank=20,
-            dtype="float64")}
+            df, qs, k=5, centroids=C2, nprobe=1, books=books, rerank=20),
+        "pq_topk_rerank_wide": lambda: S.pq_topk(
+            wide, wide_qs, k=5, books=wide_books, rerank=20),
+        "pq_topk_rerank_k_wide": lambda: S.pq_topk(
+            wide, wide_qs, k=5, books=wide_books, rerank=5)}
 
     def run():
         return {name: sorted(tuple(r) for r in fn().collect())
                 for name, fn in searches.items()}
 
     sc = spark.sparkContext
-    assert S._arrow_sized(df, queries=3).rdd.getNumPartitions() == 1
+    for frame in (df, wide):
+        assert S._arrow_sized(frame, queries=3).rdd.getNumPartitions() == 1
     one = run()
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "37")
     try:
-        assert (S._arrow_sized(df, queries=3).rdd.getNumPartitions()
-                == sc.defaultParallelism)
+        for frame in (df, wide):
+            assert (S._arrow_sized(frame, queries=3).rdd.getNumPartitions()
+                    == sc.defaultParallelism)
         spread = run()
     finally:
         spark.conf.set(key, old)

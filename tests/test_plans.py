@@ -111,7 +111,7 @@ def test_row_ids_and_loc(tables):
 
 
 def test_partitioned_write_prunes(tables, spark, tmp_path):
-    from handyspark_spark.sources.writer import write_partitioned
+    from handyspark_spark.sources.sinks import write_partitioned
     path = str(tmp_path / "li_part")
     write_partitioned(tables["lineitem"], path, ["l_returnflag"])
     df = spark.read.parquet(path).filter(F.col("l_returnflag") == "A")
@@ -124,13 +124,13 @@ def test_partitioned_write_prunes(tables, spark, tmp_path):
 def test_bucketed_join_has_no_exchange(tables, spark, tmp_path):
     """Co-located bucketed join: ZERO exchanges — the layout-level
     optimization the 100 TB design leans on."""
-    from handyspark_spark.sources.writer import write_bucketed
+    from handyspark_spark.sources.sinks import write_bucketed
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        write_bucketed(tables["lineitem"], "li_b", ["l_orderkey"], 8)
-        write_bucketed(tables["orders"], "ord_b", ["o_orderkey"], 8)
+        write_bucketed(tables["lineitem"], "li_b", "l_orderkey", 8)
+        write_bucketed(tables["orders"], "ord_b", "o_orderkey", 8)
         li, od = spark.table("li_b"), spark.table("ord_b")
         j = li.join(od, li.l_orderkey == od.o_orderkey) \
               .groupBy("l_returnflag") \

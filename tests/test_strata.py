@@ -122,7 +122,7 @@ def test_imputer_transformer_roundtrip(tables, spark, tmp_path):
     assert a == b
 
 
-def test_fencer_transformer_roundtrip(tables, tmp_path):
+def test_fencer_transformer_roundtrip(spark, tables, tmp_path):
     from handyspark_spark.ml.base import HandyFencer
     hdf = toHandy(tables["lineitem"])
     fenced = hdf.fence(["l_extendedprice"], exact=True)
@@ -134,6 +134,25 @@ def test_fencer_transformer_roundtrip(tables, tmp_path):
     a = fenced._df.agg(F.round(F.sum("l_extendedprice"), 4)).collect()[0][0]
     b = out.agg(F.round(F.sum("l_extendedprice"), 4)).collect()[0][0]
     assert a == b
+    # NULL and NaN stay missing in the transformer as in fence, flat and
+    # stratified: row by row, the transformer equals fence
+    nan = float("nan")
+    xs = [1.0, 2.0, 3.0, 4.0, 100.0, None, nan]
+    df = spark.createDataFrame(
+        [(i, g, x) for i, (g, x) in enumerate(
+            [("a", x) for x in xs] + [("b", x) for x in xs])],
+        "id int, g string, x double")
+
+    def rows(d):
+        return [(r.id, "NaN" if r.x != r.x else r.x)
+                for r in d.orderBy("id").collect()]
+
+    for fenced in (toHandy(df).fence(["x"]),
+                   toHandy(df).stratify(["g"]).fence(["x"])):
+        want = rows(fenced._df)
+        assert [x for i, x in want if i % 7 in (5, 6)] == \
+            [None, "NaN", None, "NaN"]
+        assert rows(fenced.transformers.fencer().transform(df)) == want
 
 
 def test_tukey_outliers(hdf, pdf):

@@ -54,22 +54,14 @@ def test_diff_bench_gate_codes(tmp_path):
     # real regression -> 1
     bad = {"value": 20.0, "queries": {"a": 15.0, "b": 5.0}}
     assert _run_diff(tmp_path, base, bad).returncode == 1
-    # regression whose every run was cold -> excluded, but the gate is
-    # NOT clean: exit 2 unless --allow-excluded
-    cold = {"value": 20.0, "queries": {"a": 15.0, "b": 5.0},
-            "cache_state": {"a": ["cold", "cold"]}}
-    r = _run_diff(tmp_path, base, cold)
-    assert r.returncode == 2 and "re-measure" in r.stdout
-    assert _run_diff(tmp_path, base, cold,
-                     "--allow-excluded").returncode == 0
-    # steal-flagged on every run behaves the same
+    # regression whose every run saw host steal -> excluded, but the
+    # gate is NOT clean: exit 2 unless --allow-excluded
     stolen = {"value": 20.0, "queries": {"a": 15.0, "b": 5.0},
               "host_steal": {"a": [3.2, 2.8]}}
-    assert _run_diff(tmp_path, base, stolen).returncode == 2
-    # a cold flag on a NON-regressed query does not dirty the gate
-    coldok = {"value": 10.0, "queries": {"a": 5.0, "b": 5.0},
-              "cache_state": {"a": ["cold", "cold"]}}
-    assert _run_diff(tmp_path, base, coldok).returncode == 0
+    r = _run_diff(tmp_path, base, stolen)
+    assert r.returncode == 2 and "re-measure" in r.stdout
+    assert _run_diff(tmp_path, base, stolen,
+                     "--allow-excluded").returncode == 0
 
 
 def test_audit_plans_splice_replaces_only_named_rows():

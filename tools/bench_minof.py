@@ -40,26 +40,20 @@ def main():
             runs.append(json.load(f))
         os.rename(full, full + f".minof_run{i}")
     queries = {}
-    cache_state = {}
     steal_flags = {}
     for q in runs[0]["queries"]:
-        # prefer the min over CLEAN runs — neither cold (a
-        # content-addressed rebuild reads ~3x steady-state; round-10
-        # ann_pq 39.1s false flag) nor steal-polluted (co-tenant
-        # hypervisor preemption >= 2% CPU steal stretches a run 2-4x on
-        # a byte-identical plan; BRACKET_SF10_r11). Both are
-        # measurement artifacts, not plan costs.
-        states = [r.get("cache_state", {}).get(q) for r in runs]
+        # prefer the min over runs that were not steal-polluted
+        # (co-tenant hypervisor preemption >= 2% CPU steal stretches a
+        # run 2-4x on a byte-identical plan; BRACKET_SF10_r11): a
+        # measurement artifact, not a plan cost
         steals = [r.get("host_steal", {}).get(q) for r in runs]
         vals = [r["queries"].get(q) for r in runs]
-        triples = [(v, s, st) for v, s, st in zip(vals, states, steals)
-                   if v == v and v is not None]
-        clean = [v for v, s, st in triples if s != "cold" and st is None]
+        pairs = [(v, st) for v, st in zip(vals, steals)
+                 if v == v and v is not None]
+        clean = [v for v, st in pairs if st is None]
         queries[q] = (min(clean) if clean else
-                      min(v for v, _, _ in triples) if triples
+                      min(v for v, _ in pairs) if pairs
                       else float("nan"))
-        if any(states):
-            cache_state[q] = [s or "nocache" for s in states]
         if any(st is not None for st in steals):
             steal_flags[q] = steals
     out = {
@@ -71,18 +65,10 @@ def main():
         "sink": os.environ.get("SPARK_GRAFT_BENCH_SINK", "collect"),
         "skipped": sorted(s for s in os.environ.get(
             "SPARK_GRAFT_BENCH_SKIP", "").split(",") if s),
-        "protocol": f"per_query_min_of_{n}_full_runs_warm_preferred",
+        "protocol": f"per_query_min_of_{n}_full_runs_unstolen_preferred",
         "run_totals": [round(r["value"], 3) for r in runs],
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     }
-    if cache_state:
-        # per-run cold/warm per cached query; the recorded min above is
-        # the min over clean (warm, unstolen) runs when one exists
-        out["cache_state"] = cache_state
-        all_cold = sorted(q for q, ss in cache_state.items()
-                          if all(s == "cold" for s in ss))
-        if all_cold:
-            out["cold_only"] = all_cold
     gates = [r.get("settle_gate") for r in runs]
     if any(gates):
         # per-run pre-run settle gate result (bench.py holds each run

@@ -57,18 +57,6 @@ def main():
         print(f"  {q:34s} {oq[q]:8.2f} -> {nq[q]:8.2f}  "
               f"({ratios[q]:.2f}x, {nq[q] - oq[q]:+.2f}s)")
 
-    # cold-build reads are measurement artifacts, not plan regressions:
-    # a query whose NEW number only ever ran against a cold
-    # content-addressed rebuild (bench_minof "cold_only", or a single
-    # run marked "cold") is excluded from the gate and reported —
-    # re-measure warm instead of flagging (round-10 ann_pq precedent)
-    def cold_only(art, q):
-        st = art.get("cache_state", {}).get(q)
-        if st is None:
-            return False
-        states = st if isinstance(st, list) else [st]
-        return all(s == "cold" for s in states)
-
     def steal_only(art, q):
         # co-tenant CPU steal >= 2% on every run that produced the
         # number (bench.py host_steal; bench_minof keeps per-run lists)
@@ -78,26 +66,24 @@ def main():
         flags = st if isinstance(st, list) else [st]
         return all(f is not None for f in flags)
 
-    cold_skip = sorted(q for q in common
-                       if (cold_only(new, q) or steal_only(new, q))
-                       and ratios[q] > 1.5)
+    steal_skip = sorted(q for q in common
+                        if steal_only(new, q) and ratios[q] > 1.5)
     bad = [q for q in common
            if max(oq[q], nq[q]) >= 2.0 and ratios[q] > 1.5
-           and q not in cold_skip]
-    if cold_skip:
-        print(f"\ncold-build / steal-polluted reads excluded from the "
-              f"gate (re-measure clean): {cold_skip}")
+           and q not in steal_skip]
+    if steal_skip:
+        print(f"\nsteal-polluted reads excluded from the gate "
+              f"(re-measure clean): {steal_skip}")
     if bad:
         print(f"\nREGRESSION GATE: {len(bad)} queries >=2s regressed "
               f">1.5x: {bad}")
-    # an exclusion is a deferred verdict, not a pass: a broken
-    # IndexCache commit (every run cold forever) or a persistently
+    # an exclusion is a deferred verdict, not a pass: a persistently
     # noisy host would otherwise make a real regression permanently
     # ungated. Exit 2 = "re-measure these clean before signing off";
     # --allow-excluded acknowledges a re-measure happened elsewhere.
     if bad:
         sys.exit(1)
-    if cold_skip and "--allow-excluded" not in sys.argv:
+    if steal_skip and "--allow-excluded" not in sys.argv:
         print("GATE NOT CLEAN: excluded readings above need a clean "
               "re-measure (or pass --allow-excluded with the re-measure "
               "artifact committed)")
