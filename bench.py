@@ -122,8 +122,8 @@ def warm_session(spark, sf_dir: str) -> None:
     for t in TABLES:
         load_table(spark, sf_dir, t).count()
     # the FIRST parquet write in a session pays ~4-5s of committer/codec
-    # JIT — warm it so index-persisting queries (ann_ivf_index, ann_pq)
-    # time their actual fit/save/search, not JVM warmup
+    # JIT — warm it so ann_ivf_index times its actual fit/save/search,
+    # not JVM warmup
     import tempfile
     with tempfile.TemporaryDirectory(prefix="hsq_bench_warm_") as d:
         spark.range(1).coalesce(1).write.mode("overwrite").parquet(

@@ -31,8 +31,8 @@ def clamp_expr(df: DataFrame, c: str, lo: Column, hi: Column) -> Column:
     """``greatest(lo, least(hi, c))`` over ``df``'s column ``c``, with
     NULL and NaN kept missing: Spark's NaN-is-largest ordering would
     clamp NaN to ``hi``, and ``least`` skips a NULL argument, so NULL
-    would become ``hi``; pandas clip keeps both. ``fence`` and ``ml.base.HandyFencer`` apply fences with
-    it."""
+    would become ``hi``; pandas clip keeps both. ``fence`` and
+    ``ml.base.HandyFencer`` apply fences with it."""
     clamped = F.greatest(lo, F.least(hi, F.col(c).cast("double")))
     return F.when(_is_missing(df, c), F.col(c)).otherwise(clamped)
 

@@ -380,20 +380,21 @@ def _topk_scan(rows: DataFrame, qt: pa.Table, C: np.ndarray, nprobe: int,
     residual codes of ``books``). Each Arrow batch decodes to cells and
     a (rows x dim) matrix R: exact rows are their unit vectors, in the
     nearest of the centroids ``C``; PQ rows are the codebook
-    reconstruction of their code, one fancy index into ``books``. One
-    BLAS product scores the batch, Q @ R.T, plus <q, C[cell]> for PQ
-    residuals (``_tile_scores``, so a row's score does not depend on
-    its batch); exact scores are rounded to 6 digits, as
+    reconstruction of their code, one fancy index into ``books``. BLAS
+    products in fixed tiles score the batch, Q @ R.T (``_tile_scores``,
+    so a row's score does not depend on its batch), plus <q, C[cell]>
+    for PQ residuals; exact scores are rounded to 6 digits, as
     ``_cosine_pairs`` rounds. A zero vector scores 0 (``_unit``'s norm
     floor). Rows outside a query's ``nprobe`` nearest cells and rows
-    whose id is the query's own are masked before the cut, as the file pruning of a
-    cell-partitioned layout would skip them. Each batch then emits, per
+    whose id is the query's own are masked before the cut, as the file
+    pruning of a cell-partitioned layout would skip them. Each batch then emits, per
     query, every row scoring at least its ``take``-th best: ties at the
     cut are all kept (at most one batch of rows per query), and the
     window's (score desc, neighbor_id asc) order picks among them.
 
-    ``source`` (default ``rows``) is the frame ``_arrow_sized`` sizes the scan by: the
-    corpus under an encode the caller chained into ``rows``."""
+    ``source`` (default ``rows``) is the frame ``_arrow_sized`` sizes
+    the scan by: the corpus under an encode the caller chained into
+    ``rows``."""
     sc = rows.sparkSession.sparkContext
     n_cells, dim = C.shape
     Q = _unit_rows(qt["_q"], vec_col, dim)
