@@ -181,9 +181,10 @@ def main():
     # hypervisor preemption (visible as CPU steal) amplifies into
     # lock-holder-preemption kernel spin and stretched GC — bracketed
     # tpch_q5 runs read 4.6-7.1s at steal <2% and 12.5-24.1s at steal
-    # 2.6-5.6% on a byte-identical plan (tools/bracket_host.py,
-    # BRACKET_SF10_r11). A query whose run saw steal >= 2% is flagged so
-    # min-of-N and the diff gate can discount the polluted reading.
+    # 2.6-5.6% on a byte-identical plan (artifacts/BRACKET_SF10_r11_q5_*,
+    # recorded by a since-deleted bracketing harness). A query whose run
+    # saw steal >= 2% is flagged so min-of-N and the diff gate can
+    # discount the polluted reading.
     proc_stat = _read_proc_stat
 
     host_steal: dict[str, float] = {}

@@ -252,142 +252,41 @@ def mutual_info_plan(df: DataFrame, col_x: str, col_y: str,
 
 def corr_plan(df: DataFrame, colnames: list[str], method: str = "pearson",
               strata: list[str] | None = None,
-              pairwise: bool = False,
-              max_dim_rows: int = 4_000_000) -> DataFrame:
+              pairwise: bool = False) -> DataFrame:
     """Pairwise correlation matrix as a long-form DataFrame
-    (col_x, col_y, corr). Pearson via native F.corr (one agg, all pairs at
-    once); Spearman via rank transform + Pearson (ref dataframe.py:495-505
-    used mllib RDD Statistics — replaced with pure DataFrame ops).
+    (*strata, col_x, col_y, corr), one lazy plan (the reference,
+    dataframe.py:495-505, used mllib RDD Statistics).
 
-    Spearman without strata: a column pair runs ``rank.joint_spearman``
-    (one ``groupBy(x, y).count()``) unless the pair is near-unique;
-    otherwise ranks come from broadcast rank dims when the combined
-    distinct count is at most ``max_dim_rows``, else (and always with
-    strata) from the melted-window ranks. EAGER: the row count, the
-    joint table's checkpoint and the dim probe run jobs at plan
-    construction; ``max_dim_rows=0`` skips them all for a fully lazy
-    melted-window plan.
+    Pearson: one aggregate for all pairs,
+    ``try_divide(covar_samp(x, y), stddev_samp(x) * stddev_samp(y))``
+    with each stddev over the pair's complete rows — ``F.corr``'s value,
+    but NULL instead of an ANSI divide-by-zero where a column is
+    constant (a ``when`` guard cannot help: the aggregate evaluates
+    ``Corr`` before any result projection).
 
-    ``pairwise`` (spearman only): pandas-parity mode for MISALIGNED
-    nulls — each (x, y) pair filters to its pairwise-complete rows and
-    RE-RANKS within that subset before correlating, exactly
-    ``pandas.DataFrame.corr(method='spearman')``. Costs one
-    rank-and-correlate pass PER PAIR (O(M²) passes), so it is off by
-    default: the fused one-pass path ranks each column once over its
-    own non-nulls and lets F.corr skip incomplete pairs — identical on
-    null-free or aligned-null data, documented deviation otherwise."""
+    Spearman: ``rank.joint_spearman`` for every shape — ranks on the
+    joint frequency table, then one aggregate of centered co-moments.
+    Each column ranks over its own non-nulls and a corr skips
+    incomplete pairs. ``pairwise`` (spearman only) is pandas parity for
+    MISALIGNED nulls: each (x, y) pair re-ranks within its
+    pairwise-complete rows, exactly
+    ``pandas.DataFrame.corr(method='spearman')``; on null-free or
+    aligned-null data both modes agree."""
     strata = strata or []
-    if method == "spearman" and pairwise:
-        from .rank import melted_avg_ranks
-        # Shape parity with the fused path: that path emits EVERY
-        # stratum for every pair (F.corr -> NULL when no complete
-        # rows), while the per-pair groupBy here would silently DROP a
-        # (stratum, pair) whose pairwise-complete subset is empty — so
-        # each pair's result is left-joined back onto the distinct
-        # strata spine, NULL-corr where absent. (Diagonal note: a
-        # zero-variance or <2-row stratum gives NULL on the diagonal
-        # in BOTH modes — pandas' corr diagonal is NaN there too, so
-        # no lit(1.0) special case belongs here.)
-        from functools import reduce as _reduce
-        # every pair's branch reads the spine and shares its distinct
-        # exchange (ReusedExchange), so it is computed once
-        spine = df.select(*strata).distinct() if strata else None
-        outs = []
-        for i, cx in enumerate(colnames):
-            for cy in colnames[i:]:
-                pair = [cx] if cx == cy else [cx, cy]
-                sub = df.filter(F.col(cx).isNotNull()
-                                & F.col(cy).isNotNull()) \
-                        .select(*strata, *pair)
-                ranked = melted_avg_ranks(sub, pair, strata=strata)
-                res = summary_plan(
-                    ranked,
-                    [F.corr(F.col(f"_rk_{cx}"), F.col(f"_rk_{cy}"))
-                     .alias("corr")],
-                    strata).select(*strata, "corr")
-                if spine is not None:
-                    # NULL-SAFE stratum equality: a name-list join uses
-                    # plain `=`, under which a NULL-valued stratum in
-                    # `res` could never match its spine row and would
-                    # always surface corr=NULL even when a real corr
-                    # exists for the NULL bucket.
-                    sp, rs = spine.alias("_sp"), res.alias("_rs")
-                    cond = _reduce(
-                        lambda a, b: a & b,
-                        [F.col(f"_sp.{c}").eqNullSafe(F.col(f"_rs.{c}"))
-                         for c in strata])
-                    res = sp.join(rs, cond, "left").select(
-                        *[F.col(f"_sp.{c}").alias(c) for c in strata],
-                        F.col("_rs.corr").alias("corr"))
-                outs.append(res.select(
-                    *strata, F.lit(cx).alias("col_x"),
-                    F.lit(cy).alias("col_y"), "corr"))
-        out = outs[0]
-        for o in outs[1:]:
-            out = out.unionByName(o)
-        return out
     if method == "spearman":
-        # average ranks per column, computed at DISTINCT-VALUE
-        # granularity: rank(v) = #smaller + (cnt_v + 1)/2, via a
-        # cumulative window over distinct values joined back in. The
-        # window input is |distinct values| rows — never a
-        # single-partition pass over all rows (the naive row_number form
-        # moves the whole dataset to one task).
-        # NULL convention: each column is ranked over ITS OWN non-null
-        # values; F.corr then skips incomplete pairs. When nulls are
-        # misaligned across columns this differs from pandas, which
-        # RE-RANKS within each pairwise-complete subset — that exact
-        # semantics is available as the O(pairs)-passes ``pairwise=True``
-        # slow path above (identical results on null-free or
-        # aligned-null data either way).
-        # ranks over NON-NULL values only; NULL values keep a NULL rank
-        # and F.corr then skips them PAIRWISE — the pandas/scipy
-        # convention (listwise-dropping would remove the row from every
-        # other column's correlation too).
-        # ALL columns rank in one melted pass — exchange count constant
-        # in M both unkeyed and stratified (strata keys join every
-        # window/agg key), where the old loops paid one full-table
-        # exchange (unkeyed) or one distinct-agg + join-back (keyed)
-        # PER column
-        from .rank import (broadcast_dim_ranks, joint_spearman,
-                           melted_avg_ranks)
-        if (not strata and max_dim_rows > 0 and len(colnames) == 2
-                and colnames[0] != colnames[1]):
-            # joint-frequency plan: no per-row rank attachment at all;
-            # the count bounds |joint| and picks its branch. The count
-            # is near-free only for base parquet scans (empty
-            # ReadSchema); a computed df re-executes here, which every
-            # branch below would do too.
-            out = joint_spearman(df, list(colnames), df.count())
-            if out is not None:
-                return out
-        ranked = None
-        if not strata and max_dim_rows > 0:
-            # Zero-exchange fast path (round 8): when the ranked
-            # columns' combined distinct-value count is bounded
-            # (MEASURED, not guessed — see broadcast_dim_ranks), rank
-            # dims broadcast-join onto the base scan and F.corr
-            # reduces map-side: no melt, no pivot, no full-table
-            # shuffle. Unbounded-cardinality columns return None here
-            # and take the melted-window path below; stratified ranks
-            # always do (dims would need per-stratum keys). The probe
-            # is an EAGER job — max_dim_rows=0 opts out (see docstring).
-            ranked = broadcast_dim_ranks(df, list(colnames),
-                                         max_dim_rows=max_dim_rows)
-        df = ranked if ranked is not None \
-            else melted_avg_ranks(df, list(colnames), strata=strata)
-        src = {c: f"_rk_{c}" for c in colnames}
-    else:
-        src = {c: c for c in colnames}
+        from .rank import joint_spearman
+        return joint_spearman(df, list(colnames), strata, pairwise)
+    pairs = [(cx, cy) for i, cx in enumerate(colnames)
+             for cy in colnames[i:]]
     exprs = []
-    for i, cx in enumerate(colnames):
-        for cy in colnames[i:]:
-            exprs.append(F.corr(F.col(src[cx]).cast("double"),
-                                F.col(src[cy]).cast("double"))
-                         .alias(f"{cx}__{cy}"))
+    for cx, cy in pairs:
+        x, y = F.col(cx).cast("double"), F.col(cy).cast("double")
+        exprs.append(F.try_divide(
+            F.covar_samp(x, y),
+            F.stddev_samp(F.when(y.isNotNull(), x))
+            * F.stddev_samp(F.when(x.isNotNull(), y))).alias(f"{cx}__{cy}"))
     wide = summary_plan(df, exprs, strata)
     # unpivot to long form
-    pairs = [(cx, cy) for i, cx in enumerate(colnames) for cy in colnames[i:]]
     stack = F.expr("stack({}, {})".format(
         len(pairs),
         ", ".join(f"'{cx}', '{cy}', `{cx}__{cy}`" for cx, cy in pairs)))

@@ -17,6 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from ..core.util import HandyException
 from . import agg as A
 from .fill import fit_fence_values
 from .special import chi2_ppf
@@ -49,13 +50,32 @@ def mahalanobis_distance_col(df, colnames: list[str]):
         df, [F.mean(F.col(c).cast("double")).alias(f"_mu_{c}") for c in colnames]
             + [F.stddev(F.col(c).cast("double")).alias(f"_sd_{c}")
                for c in colnames]).collect()[0]
+    for c in colnames:
+        sd = stats[f"_sd_{c}"]
+        if sd is None or not sd > 0:
+            why = ("fewer than 2 non-null values" if sd is None
+                   else f"standard deviation {sd}")
+            raise HandyException(
+                f"mahalanobis: column {c!r} has {why}; the distance "
+                "needs a positive variance in every column")
     corr = A.corr_plan(df, colnames).toPandas()
     k = len(colnames)
     S = np.eye(k)
     pos = {c: i for i, c in enumerate(colnames)}
     for _, r in corr.iterrows():
+        if pd.isna(r["corr"]):
+            raise HandyException(
+                f"mahalanobis: the correlation of {r.col_x!r} and "
+                f"{r.col_y!r} is undefined (fewer than 2 rows where both "
+                "are non-null, or a constant column on those rows)")
         S[pos[r.col_x], pos[r.col_y]] = S[pos[r.col_y], pos[r.col_x]] = r["corr"]
-    inv = np.linalg.inv(S)
+    try:
+        inv = np.linalg.inv(S)
+    except np.linalg.LinAlgError:
+        raise HandyException(
+            f"mahalanobis: the correlation matrix of {colnames} is "
+            "singular (a column is a linear function of the others)"
+        ) from None
     z = [((F.col(c).cast("double") - F.lit(float(stats[f"_mu_{c}"])))
           / F.lit(float(stats[f"_sd_{c}"]))) for c in colnames]
     d2 = F.lit(0.0)

@@ -30,12 +30,12 @@ row in a single-branch plan and the driver applies the offsets.
 Callers: ``ranged_cumsum`` — the ROC/PR curve (ml/evaluation.py), the KS
 ECDF and ``ks_2samp`` (operators/stats.py), exact distributed
 percentiles and quantile normalization (operators/agg.py),
-``joint_spearman``'s ranged form (below), ``pack_sequences``
-(pipeline/text.py) and ``token_budget_sample`` (pipeline/sample.py);
-``ranged_row_number`` — ``_gen_row_ids`` (core/frame.py);
-``grouped_rank_suite`` — the rank_suite query; ``ranged_partition_aggs``
-— ``areaUnderROC``. Spearman's M-column ranks use value-derived buckets
-instead (``melted_avg_ranks``, ``broadcast_dim_ranks``).
+``pack_sequences`` (pipeline/text.py) and ``token_budget_sample``
+(pipeline/sample.py); ``ranged_row_number`` — ``_gen_row_ids``
+(core/frame.py); ``grouped_rank_suite`` — the rank_suite query;
+``ranged_partition_aggs`` — ``areaUnderROC``. Spearman ranks need none
+of them: ``joint_spearman`` ranks the rows of the joint frequency
+table, an aggregate, never the data rows.
 """
 from __future__ import annotations
 
@@ -45,7 +45,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
 
-__all__ = ["grouped_rank_suite", "keyed_top_k", "melted_avg_ranks",
+__all__ = ["grouped_rank_suite", "joint_spearman", "keyed_top_k",
            "ntile_expr", "ranged_cumsum", "ranged_partition_aggs",
            "ranged_row_number"]
 
@@ -166,293 +166,88 @@ def ranged_row_number(df: DataFrame, order_by: list,
             .drop("_lrn", "_cnt", "_off_cnt"))
 
 
-_BKT = "_rar_bkt"
-
-
-def melted_avg_ranks(df: DataFrame, cols: list[str],
-                     bounds: dict[str, list[float]] | None = None,
-                     num_partitions: int | None = None,
-                     prefix: str = "_rk_",
-                     strata: list[str] | None = None) -> DataFrame:
-    """Fractional (average) ranks of SEVERAL numeric columns in ONE wide
-    exchange — a per-column loop pays one full-table bucket exchange
-    PER column (an M-column spearman matrix = M sequential full
-    shuffles, each over a frame one rank-column wider than the last).
-
-    Shape: melt rows to ``(row_id, col_id, value)`` (a projection +
-    ``posexplode`` — no shuffle), bucket every melted row against ITS
-    column's approx-quantile boundaries (value-derived buckets: every
-    plan branch derives the identical bucket for a value and ties always
-    share one, so no pid alignment and no dependence on exchange reuse),
-    rank all columns under a single ``(col_id, bucket)``-keyed window,
-    then pivot ranks back to one row per input row. Exchange count is
-    CONSTANT in M: one M·N-row window exchange, one vocabulary-sized
-    counts aggregation, one M·N-row pivot-back exchange (vs 2M+…
-    growing exchanges for the per-column loop). Total shuffled bytes are ~2× one melt of the ranked columns —
-    but the table's OTHER columns never enter any exchange, while the
-    per-column loop reshuffles the full accumulating frame every time.
-
-    Returns one row per input row that has at least one non-null ranked
-    value: ``(_rid, {prefix}{col}...)`` — rank columns NULL where the
-    input value was NULL (the pairwise-skip convention). Rows with every
-    ranked value NULL are absent (they contribute nothing to rank
-    positions or correlations).
-
-    ``strata``: rank WITHIN each stratum — every window/aggregation key
-    gains the strata columns (so the exchange count stays constant in M
-    with strata too, vs the old per-column distinct-agg + join-back
-    loop: M joins for an M-column stratified spearman). Bucket
-    boundaries stay GLOBAL per column — buckets are a parallelism
-    device, not a semantic one; correctness comes from the
-    (strata, col, bucket) window keys plus per-(strata, col) prefix
-    offsets, and a stratum concentrated in few buckets just uses fewer
-    tasks. Output gains the strata columns (constant per row id).
-    """
-    strata = list(strata or [])
-    n = int(num_partitions or _shuffle_partitions(df))
-    if bounds is None:
-        probs = [i / n for i in range(1, n)]
-        bs = df.stat.approxQuantile(list(cols), probs,
-                                    max(0.25 / n, 1e-4))
-        bounds = dict(zip(cols, bs))
-    # per-column boundary arrays as ONE nested literal, indexed by col_id
-    blit = F.array(*[
-        F.array(*[F.lit(float(b)) for b in sorted(set(bounds[c]))])
-        for c in cols])
-    vals = F.array(*[F.col(c).cast("double") for c in cols])
-    # the row id MUST be projected BEFORE the generator — evaluated in
-    # the same select as posexplode it runs once per EMITTED row, giving
-    # every melted value its own id and breaking the pivot-back
-    melted = (df.select(F.monotonically_increasing_id().alias("_rid"),
-                        *[F.col(s) for s in strata],
-                        vals.alias("_vals"))
-              .select("_rid", *strata,
-                      F.posexplode("_vals").alias("_cid", "_v"))
-              .filter(F.col("_v").isNotNull()))
-    arr = F.element_at(blit, F.col("_cid") + 1)
-    # NaN sorts greater than every number in Spark, so b < NaN is true
-    # for all boundaries -> NaN lands in the LAST bucket and ranks after
-    # everything, matching the single-column path
-    melted = melted.withColumn(
-        _BKT, F.size(F.filter(arr, lambda b: b < F.col("_v"))))
-    w_rank = Window.partitionBy(*strata, "_cid", _BKT).orderBy("_v")
-    w_ties = w_rank.rangeBetween(Window.currentRow, Window.currentRow)
-    local = (melted.withColumn("_lrk", F.rank().over(w_rank))
-             .withColumn("_ties", F.count(F.lit(1)).over(w_ties)))
-    # counts from the POST-window frame: its required distribution
-    # (_cid, bucket) is already satisfied by the window exchange, so this
-    # branch adds no exchange of its own and no second source scan —
-    # Catalyst prunes the unused rank/tie window exprs and reuses the
-    # exchange between the main branch and this broadcast branch
-    counts = local.groupBy(*strata, "_cid", _BKT).agg(
-        F.count(F.lit(1)).alias("_cnt"))
-    # prefix offsets across each column's buckets: <= M x num_partitions
-    # rows, keyed by column — bounded by parallelism, not data size
-    w_off = (Window.partitionBy(*strata, "_cid").orderBy(_BKT)
-             .rowsBetween(Window.unboundedPreceding, -1))
-    off = counts.select(
-        *strata, "_cid", _BKT,
-        F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"))
-    ranked = (local.join(F.broadcast(off),
-                         on=strata + ["_cid", _BKT], how="left")
-              .withColumn("_r", F.col("_off") + F.col("_lrk")
-                          + (F.col("_ties") - 1) / 2.0))
-    aggs = ([F.first(s).alias(s) for s in strata]
-            + [F.max(F.when(F.col("_cid") == i, F.col("_r")))
-               .alias(f"{prefix}{c}") for i, c in enumerate(cols)])
-    return ranked.groupBy("_rid").agg(*aggs)
-
-
-def broadcast_dim_ranks(df: DataFrame, cols: list[str],
-                        max_dim_rows: int = 4_000_000) -> DataFrame | None:
-    """Fractional (average) ranks via DISTINCT-VALUE rank dimensions —
-    the zero-full-table-exchange form, applicable when the ranked
-    columns' combined cardinality is bounded.
-
-    A column's average rank is a FUNCTION OF ITS VALUE:
-    ``rank(v) = #smaller + (cnt_v + 1) / 2``. So instead of shuffling
-    every row through a ranked window and pivoting back (two M·N-row
-    exchanges in ``melted_avg_ranks`` — the right shape when
-    cardinality ~ rows), build one (column, value, rank) DIM TABLE
-    with a map-side-combined distinct aggregation, cumulative-sum it
-    over |distinct| rows, and BROADCAST-join it back onto the base
-    scan: the data rows never enter an exchange at all, and the
-    downstream consumer (a corr aggregate) reduces map-side. Measured
-    at sf10 on lineitem (60M rows, 2 columns): 57s melted → see
-    SCALE.md round-8.
-
-    Returns the base frame plus ``_rk_{col}`` double columns (NULL
-    where the value was NULL — the pairwise-skip convention), or
-    ``None`` when the combined dim exceeds ``max_dim_rows`` (truly
-    continuous columns at scale): the caller falls back to the melted
-    path. The gate is a MEASURED count of the already-needed dim, not
-    a guess, so the broadcast can never blow up the driver.
-
-    NaN note: Spark normalizes NaN in groupBy and join keys (NaN
-    groups with and joins to NaN) and sorts it after every number, so
-    NaN values get the same terminal rank the melted path assigns.
-    """
-    vals = F.array(*[F.col(c).cast("double") for c in cols])
-    dims = (df.select(F.posexplode(vals).alias("_cid", "_v"))
-            .filter(F.col("_v").isNotNull())
-            .groupBy("_cid", "_v")
-            .agg(F.count(F.lit(1)).alias("_cnt")))
-    # the gate's count and the broadcast joins read ONE materialization
-    dims = dims.localCheckpoint(eager=False)
-    if dims.count() > max_dim_rows:
-        return None
-    # rank(v) = #smaller + (cnt_v + 1)/2 — cumulative window over the
-    # |distinct| dim rows only (per column, so a 4M-row worst case)
-    w = (Window.partitionBy("_cid").orderBy("_v")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    ranked = dims.withColumn(
-        "_r", F.coalesce(F.sum("_cnt").over(w), F.lit(0))
-        + (F.col("_cnt") + 1) / 2.0)
-    out = df
-    for i, c in enumerate(cols):
-        dim_c = F.broadcast(
-            ranked.filter(F.col("_cid") == i)
-            .select(F.col("_v").alias(f"_dv_{i}"),
-                    F.col("_r").alias(f"_rk_{c}")))
-        out = (out.join(dim_c,
-                        F.col(c).cast("double") == F.col(f"_dv_{i}"),
-                        "left")
-               .drop(f"_dv_{i}"))
-    return out
-
-
-#: Joint-table row count at or below which ``joint_spearman`` ranks
-#: with range-frame windows directly on the joint rows instead of the
-#: ranged form (melted dims + grouped ``ranged_cumsum``). A
-#: single-partition window is allowed here, as in the exact-quantile
-#: family's ``agg._quantile_row``, because its input is the aggregated
-#: joint table, never raw rows.
-COMPACT_SPEARMAN_MAX_JOINT = 1_000_000
-
-#: Joint cardinality above which ``joint_spearman`` declines: both
-#: columns are near-unique, the joint table is corpus-sized, and the
-#: caller's rank paths cost no more. Probed (HLL) only when the input
-#: has more rows than this, since ``|joint| <= rows``.
-SPEARMAN_MAX_JOINT = 32_000_000
-
-
 def joint_spearman(df: DataFrame, cols: list[str],
-                   nrows: int) -> DataFrame | None:
-    """Spearman correlation of TWO columns from their joint frequency
-    table ``g = groupBy(x, y).count()`` — the ONLY corpus-sized exchange
-    (one count buffer per group), with no per-row rank attachment:
-    ``broadcast_dim_ranks`` + ``F.corr`` instead probes a value-sized
-    broadcast relation twice per row.
+                   strata: Sequence[str] = (),
+                   pairwise: bool = False) -> DataFrame:
+    """Spearman correlation matrix of ``cols`` (per ``strata`` group
+    when given) from their joint frequency table
+    ``g = groupBy(*strata, *cols).count()`` — the ONLY corpus-sized
+    exchange (one count buffer per group); no rank is ever attached to
+    a data row.
 
-    ``nrows`` is the caller's row count of ``df``; ``|joint| <= nrows``
-    decides what must be measured. Above ``SPEARMAN_MAX_JOINT`` rows an
-    HLL probe of ``struct(x, y)`` returns ``None`` for a near-unique
-    pair (the caller falls back). At most ``COMPACT_SPEARMAN_MAX_JOINT``
-    rows take the compact form FULLY LAZY; otherwise ``g`` is eagerly
-    ``localCheckpoint``'d and its measured count picks compact or
-    ranged.
+    1. Ranks on ``g``'s rows: one range-frame window per column,
+       partitioned by the strata, ``rank(v) = S - (E - 1)/2`` centered
+       by ``(N + 1)/2`` (S the count-weighted prefix INCLUSIVE of the
+       tie group, E the tie group's count, N the column's non-null
+       total). Without strata the window runs in one task, as in
+       ``agg._quantile_row``: its input is the aggregated table, never
+       raw rows.
+    2. One ``groupBy(*strata)`` aggregate of count-weighted centered
+       co-moments over pairwise-complete rows for every pair; it reuses
+       the window's partitioning, so the plan has two exchanges for any
+       M, with or without strata.
 
-    Compact form: average ranks attached to the joint rows by
-    range-frame windows, ``rank(v) = S - (E - 1)/2`` centered by
-    ``(N + 1)/2``, where S is the count-weighted prefix INCLUSIVE of the
-    tie group (range frame to ``currentRow``), E the tie group's count
-    and N the column's non-null total — one window sort per column.
-    Ranged form: melted dims + grouped ``ranged_cumsum`` + shuffle rank
-    joins, so a large joint table never funnels into one task.
+    Each column ranks over its own non-null rows, NaN is one terminal
+    tie group (Spark's total order; groupBy normalizes it), and ranks
+    are centered before the sums so they don't cancel at scale. With
+    ``pairwise`` column i instead ranks, per partner j, over the rows
+    where both are non-null (pandas' ``corr(method='spearman')``): the
+    masks differ, the window spec does not, so it is still one sort per
+    column. A corr is NULL where its pair has < 2 rows or a zero
+    denominator; a diagonal is 1.0 exactly when its column holds >= 2
+    distinct values (a nonzero rank variance), else NULL.
 
-    Semantics match the fused rank-then-``F.corr`` paths: each column
-    ranks over its own non-null rows, NaN is one terminal tie group
-    (Spark's total order; groupBy normalizes it), ranks are centered
-    before the sums so they don't cancel at scale, and corr runs over
-    pairwise-complete rows. A diagonal is 1.0 exactly when its column
-    has >= 2 rows and ``sum(c * r^2) > 0`` — exactly zero for a single
-    distinct value (every centered rank is 0), and a sum of
-    non-negative terms cannot cancel otherwise.
+    Returns the long-form matrix ``(*strata, col_x, col_y, corr)``, the
+    pairs ``(i, j >= i)`` in ``cols`` order."""
+    strata = list(strata)
+    m = len(cols)
+    v = [F.col(f"_v{i}") for i in range(m)]
+    g = df.groupBy(*strata, *[F.col(c).cast("double").alias(f"_v{i}")
+                              for i, c in enumerate(cols)]) \
+        .agg(F.count(F.lit(1)).alias("_c"))
 
-    Returns the 3-row long-form matrix ``(col_x, col_y, corr)`` in
-    ``[(x,x), (x,y), (y,y)]`` order (NULL where the denominator is
-    zero), or ``None`` for non-pair inputs and near-unique pairs."""
-    if len(cols) != 2 or cols[0] == cols[1]:
-        return None
-    cx, cy = cols
-    x, y = F.col(cx).cast("double"), F.col(cy).cast("double")
-    if nrows > SPEARMAN_MAX_JOINT:
-        dxy = df.agg(F.approx_count_distinct(F.struct(x, y))).first()[0]
-        if dxy > SPEARMAN_MAX_JOINT:
-            return None
-    g = (df.filter(x.isNotNull() | y.isNotNull())
-         .groupBy(x.alias("_x"), y.alias("_y"))
-         .agg(F.count(F.lit(1)).alias("_c")))
-    if nrows <= COMPACT_SPEARMAN_MAX_JOINT:
-        compact = True       # |joint| <= rows: provably small, stay lazy
-    else:
-        g = g.localCheckpoint(eager=True)
-        compact = g.count() <= COMPACT_SPEARMAN_MAX_JOINT  # cached count
+    def both(i, j):
+        return v[i].isNotNull() & v[j].isNotNull()
 
-    if compact:
-        def rank_over(frame: DataFrame, key: str, alias: str) -> DataFrame:
-            w = Window.orderBy(key)
-            cnt = F.when(F.col(key).isNotNull(), F.col("_c"))
-            s = F.sum(cnt).over(w.rangeBetween(Window.unboundedPreceding,
-                                               Window.currentRow))
-            e = F.sum(cnt).over(w.rangeBetween(Window.currentRow,
-                                               Window.currentRow))
-            n_ = F.sum(cnt).over(w.rangeBetween(Window.unboundedPreceding,
-                                                Window.unboundedFollowing))
-            r = F.when(F.col(key).isNotNull(),
-                       s - (e - 1) / 2.0 - (n_ + 1) / 2.0)
-            return frame.select("*", r.alias(alias))
+    def rank(i, mask):
+        w = Window.partitionBy(*strata).orderBy(v[i])
+        cnt = F.when(mask, F.col("_c"))
+        s = F.sum(cnt).over(w.rangeBetween(Window.unboundedPreceding,
+                                           Window.currentRow))
+        e = F.sum(cnt).over(w.rangeBetween(Window.currentRow,
+                                           Window.currentRow))
+        n = F.sum(cnt).over(w.rangeBetween(Window.unboundedPreceding,
+                                           Window.unboundedFollowing))
+        return F.when(mask, s - (e - 1) / 2.0 - (n + 1) / 2.0)
 
-        ranked = rank_over(rank_over(g, "_x", "_rx"), "_y", "_ry")
-    else:
-        # ranged form: ONE melted dim subtree for both columns (a
-        # single groupBy over 2|joint| melted rows; posexplode keeps
-        # each non-null side, so each marginal still includes rows the
-        # other column would drop), distributed cumsum, shuffle joins
-        # back
-        melted = (g.select(F.posexplode(F.array("_x", "_y"))
-                           .alias("_cid", "_v"), "_c")
-                  .filter(F.col("_v").isNotNull()))
-        dims = melted.groupBy("_cid", "_v").agg(F.sum("_c").alias("_k"))
-        cum = ranged_cumsum(dims, ["_v"], ["_k"], ["_cid"])
-        r = (F.col("_cum__k") - (F.col("_k") - 1) / 2.0
-             - (F.col("_n__k") + 1) / 2.0)
-        rdim = cum.select("_cid", "_v", r.alias("_r"))
-        xr = (rdim.filter(F.col("_cid") == 0)
-              .select(F.col("_v").alias("_xv"), F.col("_r").alias("_rx")))
-        yr = (rdim.filter(F.col("_cid") == 1)
-              .select(F.col("_v").alias("_yv"), F.col("_r").alias("_ry")))
-        ranked = (g.join(xr, F.col("_x").eqNullSafe(F.col("_xv")), "left")
-                  .join(yr, F.col("_y").eqNullSafe(F.col("_yv")), "left")
-                  .select("_x", "_y", "_c", "_rx", "_ry"))
+    def name(i, j):   # column i's rank column when paired with j
+        return f"_r{i}_{j}" if pairwise else f"_r{i}"
 
-    c = F.col("_c")
-    cx_ = F.when(F.col("_x").isNotNull(), c)
-    cy_ = F.when(F.col("_y").isNotNull(), c)
-    cb = F.when(F.col("_x").isNotNull() & F.col("_y").isNotNull(), c)
-    res = ranked.agg(
-        F.sum(cb).alias("n"),
-        F.sum(cb * F.col("_rx")).alias("sx"),
-        F.sum(cb * F.col("_rx") * F.col("_rx")).alias("sxx"),
-        F.sum(cb * F.col("_ry")).alias("sy"),
-        F.sum(cb * F.col("_ry") * F.col("_ry")).alias("syy"),
-        F.sum(cb * F.col("_rx") * F.col("_ry")).alias("sxy"),
-        F.sum(cx_).alias("nx"),
-        F.sum(cx_ * F.col("_rx") * F.col("_rx")).alias("dx"),
-        F.sum(cy_).alias("ny"),
-        F.sum(cy_ * F.col("_ry") * F.col("_ry")).alias("dy"))
-    n = F.col("n")
-    num = F.col("sxy") - F.col("sx") * F.col("sy") / n
-    den2 = ((F.col("sxx") - F.col("sx") * F.col("sx") / n)
-            * (F.col("syy") - F.col("sy") * F.col("sy") / n))
-    corr_xy = F.when((n >= 2) & (den2 > 0), num / F.sqrt(den2))
-    diag_x = F.when((F.col("nx") >= 2) & (F.col("dx") > 0), F.lit(1.0))
-    diag_y = F.when((F.col("ny") >= 2) & (F.col("dy") > 0), F.lit(1.0))
-    return res.select(F.stack(
-        F.lit(3),
-        F.lit(cx), F.lit(cx), diag_x,
-        F.lit(cx), F.lit(cy), corr_xy,
-        F.lit(cy), F.lit(cy), diag_y).alias("col_x", "col_y", "corr"))
+    owner = {name(i, j): (i, j) for i in range(m) for j in range(m) if i != j}
+    ranked = g.withColumns({
+        k: rank(i, both(i, j) if pairwise else v[i].isNotNull())
+        for k, (i, j) in owner.items()})
+
+    def cell(i, j):
+        if i == j:
+            return F.when(F.min(v[i]) < F.max(v[i]), F.lit(1.0))
+        cb = F.when(both(i, j), F.col("_c"))
+        x, y = F.col(name(i, j)), F.col(name(j, i))
+        n = F.sum(cb)
+        sx, sy = F.sum(cb * x), F.sum(cb * y)
+        num = F.sum(cb * x * y) - sx * sy / n
+        den2 = ((F.sum(cb * x * x) - sx * sx / n)
+                * (F.sum(cb * y * y) - sy * sy / n))
+        return F.when((n >= 2) & (den2 > 0), num / F.sqrt(den2))
+
+    pairs = [(i, j) for i in range(m) for j in range(i, m)]
+    res = ranked.groupBy(*strata).agg(
+        *[cell(i, j).alias(f"_p{k}") for k, (i, j) in enumerate(pairs)])
+    return res.select(*strata, F.stack(
+        F.lit(len(pairs)),
+        *[e for k, (i, j) in enumerate(pairs)
+          for e in (F.lit(cols[i]), F.lit(cols[j]), F.col(f"_p{k}"))])
+        .alias("col_x", "col_y", "corr"))
 
 
 def keyed_top_k(df: DataFrame, key_cols: list[str], order_by: list,

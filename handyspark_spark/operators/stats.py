@@ -179,8 +179,9 @@ def make_cdf(dist: str, params: tuple):
 # agg ride the SAME action as a broadcast 1-row crossJoin instead of a
 # separate collect-to-driver corpus pass (guide §2.4).
 _NATIVE_CDF = {
-    "uniform": lambda x, lo, hi: F.least(
-        F.lit(1.0), F.greatest(F.lit(0.0), (x - lo) / (hi - lo))),
+    # NULL for an empty range (max == min): ``ks_test`` names it
+    "uniform": lambda x, lo, hi: F.when(hi > lo, F.least(
+        F.lit(1.0), F.greatest(F.lit(0.0), (x - lo) / (hi - lo)))),
     "exponential": lambda x, mean: F.lit(1.0) - F.exp(
         -F.greatest(F.lit(0.0), x) / mean),
 }
@@ -249,6 +250,12 @@ def ks_test(df: DataFrame, colname: str, dist: str = "normal",
     round-1 behavior."""
     row = _ks_plan(df, colname, dist, params, cdf).collect()[0]
     n = int(row["n"]) if row["n"] is not None else 0
+    if n and row["d"] is None:      # only a uniform CDF can be NULL
+        raise HandyException(
+            f"ks_test: the uniform CDF of column {colname!r} has an "
+            "empty range (b <= a; a fitted range is empty when the "
+            "column holds one distinct value); pass params=(a, b) with "
+            "a < b")
     d = float(row["d"]) if row["d"] is not None else 0.0
     crit = 1.358 / math.sqrt(n) if n else float("nan")
     return {"statistic": d, "n": n, "critical_05": crit,

@@ -12,11 +12,12 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 @pytest.fixture(scope="session")
 def spark():
+    import shutil
     import tempfile
+    warehouse = tempfile.mkdtemp(prefix="hs_wh_")
     spark = (SparkSession.builder
              .master("local[8]")
-             .config("spark.sql.warehouse.dir",
-                     tempfile.mkdtemp(prefix="hs_wh_"))
+             .config("spark.sql.warehouse.dir", warehouse)
              .appName("handyspark_spark-tests")
              .config("spark.sql.shuffle.partitions", "8")
              .config("spark.sql.adaptive.enabled", "true")
@@ -27,6 +28,7 @@ def spark():
              .getOrCreate())
     yield spark
     spark.stop()
+    shutil.rmtree(warehouse, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

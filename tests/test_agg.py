@@ -1,7 +1,5 @@
 """Aggregation core vs pandas oracle (the reference's differential-test
 strategy, SURVEY.md §5)."""
-import re
-
 import numpy as np
 import numpy.testing as npt
 import pytest
@@ -109,6 +107,28 @@ def test_corr_spearman(hdf, pdf):
     mat = hdf.cols[["l_quantity", "l_extendedprice"]].corr(method="spearman")
     pmat = pdf[["l_quantity", "l_extendedprice"]].corr(method="spearman")
     npt.assert_array_almost_equal(mat.values, pmat.values, decimal=4)
+
+
+def test_pearson_constant_column_is_null(spark):
+    """A zero-variance column has NULL Pearson cells (its diagonal too)
+    instead of an ANSI divide-by-zero, through ``corr_plan`` and
+    ``HandyColumns.corr``; a non-constant pair keeps ``F.corr``'s
+    value, also when the pair's NULLs are misaligned."""
+    from pyspark.sql import functions as F
+
+    from handyspark_spark.operators.agg import corr_plan
+    rows = [(1.0, float(i), float((i * 7) % 11) if i % 4 else None)
+            for i in range(30)]
+    sdf = spark.createDataFrame(rows, "x double, y double, z double")
+    got = {(r.col_x, r.col_y): r.corr
+           for r in corr_plan(sdf, ["x", "y", "z"]).collect()}
+    assert got[("x", "y")] is None and got[("x", "x")] is None
+    assert got[("x", "z")] is None
+    want = sdf.agg(F.corr("y", "z")).first()[0]
+    assert abs(got[("y", "z")] - want) < 1e-12
+    assert abs(got[("y", "y")] - 1.0) < 1e-12
+    mat = toHandy(sdf).cols[["x", "y"]].corr()
+    assert np.isnan(mat.loc["x", "y"]) and np.isnan(mat.loc["y", "x"])
 
 
 def test_mutual_info(hdf, pdf):
@@ -238,8 +258,8 @@ def test_exact_quantiles_match_numpy(tables, pdf_tables):
 
 
 def test_corr_spearman_stratified_vs_pandas(tables, pdf_tables):
-    """Keyed spearman (melted one-pass ranks with strata keys) matches
-    pandas groupby spearman per stratum."""
+    """Keyed spearman (joint-frequency ranks partitioned by the strata)
+    matches pandas groupby spearman per stratum."""
     from handyspark_spark.operators import agg as A
     cols = ["l_quantity", "l_extendedprice", "l_discount"]
     got = {(r.l_returnflag, r.col_x, r.col_y): r.corr
@@ -368,76 +388,6 @@ def test_corr_pairwise_shape_matches_fused_on_empty_strata(spark):
     assert (None, "x", "y") in pw and (None, "x", "y") in fused
     # well-formed strata still agree between modes (aligned-null data)
     assert abs(pw[("a", "x", "y")] - fused[("a", "x", "y")]) < 1e-9
-
-
-def test_spearman_broadcast_dim_fast_path_equals_melted(spark, monkeypatch):
-    """Round-8 zero-exchange spearman: the broadcast rank-dim path must
-    equal the melted-window path (and pandas) on data with ties,
-    misordered ids, and NULLs; forcing the dim gate to reject must
-    fall back to the melted path with identical results. Each forced
-    path is checked in the plan that ran: the broadcast path joins on
-    the ``_dv_`` dim key, the melted path pivots back on ``_rid``."""
-    import math
-    import random
-
-    import pandas as pd
-
-    from handyspark_spark.operators.agg import corr_plan
-    from handyspark_spark.operators.rank import broadcast_dim_ranks
-
-    rng = random.Random(7)
-    rows = [(float(rng.randint(0, 8)),                 # heavy ties
-             rng.choice([None, float(rng.randint(0, 30)) / 3.0]))
-            for _ in range(500)]
-    sdf = spark.createDataFrame(rows, "x double, y double")
-
-    def corr_of(df_out):
-        return {(r.col_x, r.col_y): r.corr for r in df_out.collect()}
-
-    def plan_of(df_out):
-        return df_out._jdf.queryExecution().executedPlan().toString()
-
-    fast = corr_of(corr_plan(sdf, ["x", "y"], method="spearman"))
-    # force the OTHER strategies by making each gate reject: joint
-    # plan off -> broadcast-dim path; joint + broadcast off -> melted
-    import handyspark_spark.operators.rank as R
-    monkeypatch.setattr(R, "joint_spearman", lambda *a, **k: None)
-    out = corr_plan(sdf, ["x", "y"], method="spearman")
-    plan = plan_of(out)
-    assert re.search(r"BroadcastHashJoin \[[^\]]*\], \[[^\]]*_dv_\d",
-                     plan), plan
-    assert "_rid" not in plan
-    bcast = corr_of(out)
-    monkeypatch.setattr(R, "broadcast_dim_ranks", lambda *a, **k: None)
-    out = corr_plan(sdf, ["x", "y"], method="spearman")
-    plan = plan_of(out)
-    assert "_rid" in plan and "_dv_" not in plan, plan
-    melted = corr_of(out)
-    monkeypatch.undo()
-    assert set(fast) == set(bcast) == set(melted)
-    for k in fast:
-        assert abs(fast[k] - melted[k]) < 1e-9, k
-        assert abs(bcast[k] - melted[k]) < 1e-9, k
-    # pandas agreement (rank-then-pearson, scipy-free) on the
-    # complete-pair subset — conventions coincide because y's NULLs
-    # are the only nulls, so x's own-non-null ranks restricted to
-    # complete pairs are a monotone transform of the re-ranked subset
-    # only on null-FREE data; check there
-    pdf = pd.DataFrame(rows, columns=["x", "y"]).dropna()
-    sub = spark.createDataFrame(pdf, schema="x double, y double")
-    fast_nf = corr_of(corr_plan(sub, ["x", "y"], method="spearman"))
-    want = pdf["x"].rank(method="average").corr(
-        pdf["y"].rank(method="average"))
-    assert abs(fast_nf[("x", "y")] - want) < 1e-9
-    assert math.isclose(fast[("x", "x")], 1.0)
-    # direct rank check: fast-path ranks equal pandas average ranks
-    # (over ALL x rows, not the complete-pair subset)
-    full = pd.DataFrame(rows, columns=["x", "y"])
-    ranked = broadcast_dim_ranks(sdf, ["x"]).select("x", "_rk_x")
-    got = {r.x: r._rk_x for r in ranked.distinct().collect()}
-    exp = full["x"].rank(method="average")
-    for xv, g in got.items():
-        assert abs(g - exp[full["x"] == xv].iloc[0]) < 1e-9
 
 
 def test_exact_quantiles_no_values_named_error(tables):

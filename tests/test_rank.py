@@ -24,13 +24,13 @@ def _window_specs(df):
 
 def assert_no_global_window_on(df, *data_cols):
     """Every window that orders by one of ``data_cols`` must be
-    partitioned by the range-partition id or the quantile-bucket id (the
-    tiny offsets window orders by _rcs_pid/_rar_bkt only, which is
-    allowed — its input is one row per range partition or bucket)."""
+    partitioned by the range-partition id (the tiny offsets window
+    orders by _rcs_pid only, which is allowed — its input is one row per
+    range partition)."""
     for spec in _window_specs(df):
         for c in data_cols:
             if re.search(rf"\b{re.escape(c)}#", spec):
-                assert "_rcs_pid#" in spec or "_rar_bkt#" in spec, (
+                assert "_rcs_pid#" in spec, (
                     f"global (unpartitioned) window over {c}: {spec}")
 
 
@@ -205,6 +205,20 @@ def test_ks_accepts_matching_family(spark, dist, params, gen):
     assert not res["reject_at_05"], (dist, res)
 
 
+def test_ks_uniform_empty_range_named_error(spark):
+    """The uniform auto-fit over one row or a constant column (max ==
+    min) raises a ``HandyException`` naming the column instead of an
+    ANSI divide-by-zero; an empty frame still returns n = 0."""
+    from handyspark_spark.core.util import HandyException
+    from handyspark_spark.operators.stats import ks_test
+    for rows in ([(3.0,)], [(2.0,)] * 5):
+        df = spark.createDataFrame(rows, "v double")
+        with pytest.raises(HandyException, match="column 'v'.*empty range"):
+            ks_test(df, "v", dist="uniform")
+    empty = spark.createDataFrame([], "v double")
+    assert ks_test(empty, "v", dist="uniform")["n"] == 0
+
+
 def test_ks_unknown_dist_raises(spark):
     from handyspark_spark.operators.stats import ks_test
     df = spark.range(10).select(F.col("id").cast("double").alias("v"))
@@ -212,74 +226,6 @@ def test_ks_unknown_dist_raises(spark):
         ks_test(df, "v", dist="zipf", params=(1.0,))
     with pytest.raises(ValueError, match="needs explicit params"):
         ks_test(df, "v", dist="gamma")
-
-
-def test_melted_avg_ranks_matches_pandas(spark):
-    """All-columns-at-once ranks == per-column pandas average ranks,
-    including ties and NULLs (null rank stays null, rows with every
-    value null are absent)."""
-    from handyspark_spark.operators.rank import melted_avg_ranks
-    rng = np.random.RandomState(11)
-    pdf = pd.DataFrame({
-        "x": np.round(rng.uniform(0, 30, 3000), 0),   # heavy ties
-        "y": rng.randn(3000),
-        "z": np.round(rng.exponential(5, 3000), 1),
-    })
-    pdf.loc[::13, "x"] = None
-    pdf.loc[::7, "y"] = None
-    rows = pdf.astype(object).where(pdf.notna(), None)
-    sdf = spark.createDataFrame(rows, "x double, y double, z double") \
-        .repartition(5)
-    got = (melted_avg_ranks(sdf, ["x", "y", "z"], num_partitions=8)
-           .toPandas())
-    for c in ["x", "y", "z"]:
-        exp = pdf[c].rank(method="average").dropna()
-        gv = np.sort(got[f"_rk_{c}"].dropna().values)
-        np.testing.assert_allclose(gv, np.sort(exp.values))
-    # ranks stay PAIRED per input row: z is a strictly-ordered copy of
-    # the row index modulo rounding? use correlation-free pairing check:
-    # rank of x and y on the same _rid must come from the same input row
-    # -> spearman via the melted path equals pandas (null-free columns)
-    from handyspark_spark.operators.agg import corr_plan
-    sub = pdf[["y", "z"]].dropna()
-    want = sub.corr(method="spearman").loc["y", "z"]
-    out = corr_plan(sdf.select("y", "z").dropna(), ["y", "z"],
-                    method="spearman")
-    gotc = {(r.col_x, r.col_y): r.corr for r in out.collect()}
-    assert abs(gotc[("y", "z")] - want) < 1e-9
-
-
-def test_melted_rank_exchange_count_constant_in_M(spark):
-    """The MELTED spearman plan keeps a constant exchange count as the
-    matrix grows (the per-column loop paid +2 exchanges per column).
-    Forced onto the melted path via the ``max_dim_rows=0`` opt-out
-    (which must also keep plan construction LAZY — no eager dim-count
-    probe); on this bounded-cardinality data the round-8 broadcast-dim
-    fast path would otherwise engage; its own property (no data-row
-    exchange at all) is pinned separately."""
-    from handyspark_spark.core.util import exchange_count
-    from handyspark_spark.operators.agg import corr_plan
-    rng = np.random.RandomState(5)
-    pdf = pd.DataFrame({f"c{i}": rng.randn(500) for i in range(6)})
-    sdf = spark.createDataFrame(pdf)
-    e2 = exchange_count(corr_plan(sdf, ["c0", "c1"],
-                                  method="spearman", max_dim_rows=0))
-    e6 = exchange_count(corr_plan(sdf, [f"c{i}" for i in range(6)],
-                                  method="spearman", max_dim_rows=0))
-    assert e6 == e2 <= 5
-    # the opt-out must not have engaged the broadcast-dim fast path
-    plan0 = corr_plan(sdf, ["c0", "c1"], method="spearman",
-                      max_dim_rows=0) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "_rid" in plan0      # melted pivot-back key (fast path has none)
-    # fast path: every data-side join is a broadcast of a dim — the
-    # base rows never sort-merge or window-shuffle
-    plan = corr_plan(sdf, [f"c{i}" for i in range(6)],
-                     method="spearman") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "windowspecdefinition(_rid" not in plan   # no pivot-back
 
 
 def test_grouped_rank_suite_matches_window_and_stays_parallel(
@@ -358,126 +304,150 @@ def test_keyed_top_k_equals_plain_window(spark):
 
 
 def _spearman_inputs(spark):
-    """(name, frame, rows) inputs for ``joint_spearman``: ties, NULLs on
-    both sides (misaligned), NaN, a constant column, an all-NULL column
-    and an empty frame. Every non-empty input repeats its rows, so its
-    joint table is smaller than its row count and every branch can be
-    forced on it."""
+    """(name, frame, rows) inputs for ``joint_spearman``: rows are
+    ``(g, x, y, z)`` with a stratum ``g`` that is sometimes NULL, ties,
+    NULLs on every column (misaligned), NaN, a constant column, an
+    all-NULL column and an empty frame."""
     import random
 
     rng = random.Random(13)
-    base = [(rng.choice([None, float(rng.randint(0, 6))]),          # ties
-             rng.choice([None, float(rng.randint(0, 4000)) / 7]))   # wide
+
+    def pick(*vals):
+        return rng.choice(vals)
+
+    base = [(pick("a", "b", None),
+             pick(None, float(rng.randint(0, 6))),                 # ties
+             pick(None, float(rng.randint(0, 4000)) / 7),          # wide
+             pick(None, float(rng.randint(0, 40))))
             for _ in range(1500)]
     nan = float("nan")
-    with_nan = [(rng.choice([None, nan, float(rng.randint(0, 5))]),
-                 rng.choice([None, nan, float(rng.randint(0, 300)) / 7]))
+    with_nan = [(pick("a", "b"),
+                 pick(None, nan, float(rng.randint(0, 5))),
+                 pick(None, nan, float(rng.randint(0, 300)) / 7),
+                 pick(nan, float(rng.randint(0, 9))))
                 for _ in range(1000)]
     inputs = {
         "misaligned_nulls": base + base[::-1],
         "nan": with_nan * 2,
-        "constant": [(1.0, float(i % 25)) for i in range(50)],
-        "all_null": [(None, float(i % 25)) for i in range(50)],
+        "constant": [("a" if i % 3 else "b", 1.0, float(i % 25),
+                      float(i % 7)) for i in range(50)],
+        "all_null": [("a", None, float(i % 25), float(i % 4))
+                     for i in range(50)],
         "empty": [],
     }
-    return [(name, spark.createDataFrame(rows, "x double, y double"), rows)
+    schema = "g string, x double, y double, z double"
+    return [(name, spark.createDataFrame(rows, schema), rows)
             for name, rows in inputs.items()]
 
 
-def _pandas_spearman(rows, cx, cy):
-    """The fused convention in pandas: each column ranked (average) over
-    its own non-null rows, corr over pairwise-complete rows. NaN maps to
-    +inf, Spark's order: one NaN tie group, sorted last. Returns the
-    ``{(a, b): corr}`` matrix, None where undefined."""
+def _pandas_spearman(rows, cols, strata=False, pairwise=False):
+    """The plan's contract in pandas: each column ranked (average) over
+    its own non-null rows — or, with ``pairwise``, over the rows where
+    both columns of the pair are non-null — and corr over
+    pairwise-complete rows, per stratum ``g`` when ``strata``. NaN maps
+    to +inf, Spark's order: one NaN tie group, sorted last. Returns
+    ``{(g, a, b): corr}`` (``g`` is None without strata), None where
+    undefined."""
     import math
 
     def val(v):
-        return math.inf if v is not None and math.isnan(v) else v
+        return math.inf if isinstance(v, float) and math.isnan(v) else v
 
-    pdf = pd.DataFrame([(val(x), val(y)) for x, y in rows],
-                       columns=["x", "y"], dtype="float64")
-    rk = {c: pdf[c].rank(method="average") for c in ("x", "y")}
+    pdf = pd.DataFrame([[val(v) for v in r] for r in rows],
+                       columns=["g", "x", "y", "z"])
+    pdf[["x", "y", "z"]] = pdf[["x", "y", "z"]].astype("float64")
+    groups = (pdf.groupby("g", dropna=False) if strata
+              else [(None, pdf)])
     out = {}
-    for a, b in ((cx, cx), (cx, cy), (cy, cy)):
-        m = pdf[a].notna() & pdf[b].notna()
-        v = rk[a][m].corr(rk[b][m])
-        out[(a, b)] = None if pd.isna(v) else v
+    for g, part in groups:
+        g = None if pd.isna(g) else g
+        for i, a in enumerate(cols):
+            for b in cols[i:]:
+                m = part[a].notna() & part[b].notna()
+                if pairwise:
+                    ra, rb = part[a][m].rank(), part[b][m].rank()
+                else:
+                    ra = part[a].rank(method="average")[m]
+                    rb = part[b].rank(method="average")[m]
+                v = ra.corr(rb)
+                out[(g, a, b)] = None if pd.isna(v) else v
     return out
 
 
-def _force_joint_branch(monkeypatch, branch, nrows, njoint):
-    """Set the two Spearman constants so ``joint_spearman`` takes
-    ``branch`` on an input of ``nrows`` rows and ``njoint`` joint
-    groups (all-NULL pairs excluded, as the joint table drops them)."""
-    import handyspark_spark.operators.rank as R
-    compact, cap = {
-        "lazy_compact": (nrows, nrows),
-        "measured_compact": (njoint, nrows),
-        "ranged": (njoint - 1, nrows),
-        "probed_compact": (njoint, nrows - 1),   # HLL runs and accepts
-    }[branch]
-    monkeypatch.setattr(R, "COMPACT_SPEARMAN_MAX_JOINT", compact)
-    monkeypatch.setattr(R, "SPEARMAN_MAX_JOINT", cap)
+@pytest.mark.parametrize("cols,strata,pairwise", [
+    (["x", "y"], False, False), (["y", "x"], False, False),
+    (["x", "y", "z"], False, False), (["x", "y", "z"], True, False),
+    (["x", "y", "z"], False, True), (["z", "x", "y"], True, True)],
+    ids=["pair", "pair_flipped", "m3", "m3_strata", "m3_pairwise",
+         "m3_strata_pairwise"])
+def test_joint_spearman_matches_pandas(spark, cols, strata, pairwise):
+    """The one Spearman plan reproduces pandas (1e-9) on ties,
+    misaligned NULLs, NaN and degenerate columns, for a pair in both
+    orientations, M=3, strata and ``pairwise`` — and building it runs
+    no Spark job."""
+    from handyspark_spark.operators.agg import corr_plan
 
-
-@pytest.mark.parametrize("branch", ["lazy_compact", "measured_compact",
-                                    "ranged", "probed_compact"])
-def test_joint_spearman_branches_match_pandas(spark, monkeypatch, branch):
-    """Every branch of ``joint_spearman`` reproduces the fused-path
-    semantics (pandas, 1e-9) on ties, misaligned NULLs, NaN and
-    degenerate columns, in both column orientations — and the branch
-    forced is the one that ran: the HLL probe and the joint table's
-    eager checkpoint are spied on, the ranged form's melted dims (``_cid``)
-    are read from the plan."""
-    from handyspark_spark.operators.rank import joint_spearman
-
-    DataFrame = type(spark.range(0))     # the concrete (classic) class
-    ran = []
-    cp, acd = DataFrame.localCheckpoint, F.approx_count_distinct
-    monkeypatch.setattr(DataFrame, "localCheckpoint",
-                        lambda self, eager=True, **k: (
-                            eager and ran.append("checkpoint"))
-                        or cp(self, eager, **k))
-    monkeypatch.setattr(F, "approx_count_distinct", lambda *a, **k:
-                        ran.append("probe") or acd(*a, **k))
-    forced_ran = {"lazy_compact": [], "measured_compact": ["checkpoint"],
-                  "ranged": ["checkpoint"],
-                  "probed_compact": ["probe", "checkpoint"]}[branch]
+    sc = spark.sparkContext
     for name, sdf, rows in _spearman_inputs(spark):
-        if rows:
-            njoint = len({(repr(x), repr(y)) for x, y in rows
-                          if (x, y) != (None, None)})
-            assert njoint < len(rows), name
-            _force_joint_branch(monkeypatch, branch, len(rows), njoint)
-        for cols in (["x", "y"], ["y", "x"]):
-            del ran[:]
-            out = joint_spearman(sdf, cols, len(rows))
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            got = {(r.col_x, r.col_y): r.corr for r in out.collect()}
-            want = _pandas_spearman(rows, *cols)
-            assert list(got) == list(want), (name, cols)
-            for k, v in want.items():
-                if v is None:
-                    assert got[k] is None, (name, k)
-                else:
-                    assert abs(got[k] - v) < 1e-9, (name, k)
-            # 0 rows is under every gate: always the lazy compact form
-            assert ran == (forced_ran if rows else []), (name, ran)
-            assert ("_cid" in plan) == (branch == "ranged"
-                                        and bool(rows)), name
+        sc.setJobGroup("spearman-build", "spearman-build")
+        try:
+            out = corr_plan(sdf, cols, method="spearman",
+                            strata=["g"] if strata else None,
+                            pairwise=pairwise)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert not sc.statusTracker().getJobIdsForGroup("spearman-build")
+        got = {(r.g if strata else None, r.col_x, r.col_y): r.corr
+               for r in out.collect()}
+        want = _pandas_spearman(rows, cols, strata, pairwise)
+        if rows or not strata:
+            assert set(got) == set(want), (name, set(got) ^ set(want))
+        else:
+            assert not got, name
+        for k, v in want.items():
+            if v is None:
+                assert got[k] is None, (name, k, got[k])
+            else:
+                assert abs(got[k] - v) < 1e-9, (name, k, got[k], v)
 
 
-def test_joint_spearman_declines_near_unique_and_non_pairs(spark,
-                                                           monkeypatch):
-    """``None`` (the caller falls through to its rank paths) when the HLL
-    probe measures a joint table above ``SPEARMAN_MAX_JOINT``, and for
-    inputs that are not a pair of distinct columns."""
-    import handyspark_spark.operators.rank as R
+def test_spearman_constant_column_is_null(spark):
+    """A constant column (in M=3, and inside one stratum) has NULL corr
+    cells and a NULL diagonal instead of a divide-by-zero; its partners
+    keep their values."""
+    from handyspark_spark.operators.agg import corr_plan
 
-    rows = [(float(i % 7), float(i)) for i in range(200)]
-    sdf = spark.createDataFrame(rows, "x double, y double")
-    assert R.joint_spearman(sdf, ["x"], 200) is None
-    assert R.joint_spearman(sdf, ["x", "x"], 200) is None
-    assert R.joint_spearman(sdf, ["x", "y"], 200) is not None
-    monkeypatch.setattr(R, "SPEARMAN_MAX_JOINT", 100)
-    assert R.joint_spearman(sdf, ["x", "y"], 200) is None
+    rows = [("a", 1.0, float(i), float(i % 5)) for i in range(20)] + \
+           [("b", float(i), float(-i), float(i % 3)) for i in range(20)]
+    sdf = spark.createDataFrame(rows, "g string, x double, y double, "
+                                      "z double")
+    got = {(r.col_x, r.col_y): r.corr for r in corr_plan(
+        sdf.filter("g = 'a'"), ["x", "y", "z"],
+        method="spearman").collect()}
+    assert got[("x", "x")] is None and got[("x", "y")] is None
+    assert got[("x", "z")] is None and got[("y", "y")] == 1.0
+    assert got[("y", "z")] is not None
+    st = {(r.g, r.col_x, r.col_y): r.corr for r in corr_plan(
+        sdf, ["x", "y", "z"], method="spearman", strata=["g"]).collect()}
+    assert st[("a", "x", "y")] is None and st[("a", "x", "x")] is None
+    assert abs(st[("b", "x", "y")] + 1.0) < 1e-12
+    assert st[("b", "x", "x")] == 1.0
+
+
+@pytest.mark.parametrize("strata", [[], ["g"]], ids=["plain", "strata"])
+def test_spearman_exchange_count_constant_in_m(spark, strata):
+    """One plan for every M: the joint table's exchange and the ranks'
+    window exchange (a single partition without strata), which the
+    co-moment aggregate reuses — equal for M = 2, 3 and 6 and for
+    ``pairwise``."""
+    from handyspark_spark.core.util import exchange_count
+    from handyspark_spark.operators.agg import corr_plan
+    rng = np.random.RandomState(5)
+    pdf = pd.DataFrame({f"c{i}": rng.randn(500) for i in range(6)})
+    pdf["g"] = rng.choice(["a", "b", "c"], 500)
+    sdf = spark.createDataFrame(pdf)
+    counts = {(m, pw): exchange_count(corr_plan(
+        sdf, [f"c{i}" for i in range(m)], method="spearman",
+        strata=strata, pairwise=pw)) for m in (2, 3, 6)
+        for pw in (False, True)}
+    assert set(counts.values()) == {2}, counts

@@ -184,6 +184,32 @@ def test_mahalanobis_outliers(hdf, pdf):
     assert d == sorted(d, reverse=True)
 
 
+def test_mahalanobis_degenerate_fit_named_error(spark):
+    """An empty or one-row frame, a constant column, a pair with no
+    complete rows and collinear columns raise a ``HandyException``
+    naming the column(s) and the reason, not a ``TypeError``, an ANSI
+    divide-by-zero or numpy's ``LinAlgError``."""
+    import pytest
+
+    from handyspark_spark import toHandy
+    from handyspark_spark.core.util import HandyException
+    schema = "x double, y double"
+    cases = [
+        ([], "column 'x' has fewer than 2 non-null"),
+        ([(1.0, 2.0)], "column 'x' has fewer than 2 non-null"),
+        ([(1.0, float(i)) for i in range(10)],
+         "column 'x' has standard deviation 0.0"),
+        ([(float(i), None) for i in range(5)]
+         + [(None, float(i)) for i in range(5)],
+         "correlation of 'x' and 'y' is undefined"),
+        ([(float(i), 2.0 * i) for i in range(10)], "is singular"),
+    ]
+    for rows, msg in cases:
+        h = toHandy(spark.createDataFrame(rows, schema))
+        with pytest.raises(HandyException, match=msg):
+            h.get_outliers(["x", "y"], critical_value=0.5)
+
+
 def test_mahalanobis_distances_k5_vs_numpy(hdf, pdf):
     """Per-row distance differential at k=5 (the oracle query pins only
     the 2-D closed form): Spark native-expression d must match the numpy
