@@ -192,6 +192,10 @@ def _ks_plan(df: DataFrame, colname: str, dist: str = "normal",
     """The pre-collect aggregation plan behind ``ks_test`` — exposed so
     plan dumps / tests can inspect it. One row, columns (d, n)."""
     key = dist.lower().strip() if cdf is None else None
+    if key == "exponential" and params is not None and not params[0] > 0:
+        raise HandyException(
+            f"ks_test: the exponential CDF of column {colname!r} needs a "
+            f"positive mean, got params=({params[0]},)")
     fit_df = None
     if cdf is None and params is None:
         if key == "normal":

@@ -205,10 +205,11 @@ def test_ks_accepts_matching_family(spark, dist, params, gen):
     assert not res["reject_at_05"], (dist, res)
 
 
-def test_ks_uniform_empty_range_named_error(spark):
-    """The uniform auto-fit over one row or a constant column (max ==
-    min) raises a ``HandyException`` naming the column instead of an
-    ANSI divide-by-zero; an empty frame still returns n = 0."""
+def test_ks_degenerate_cdf_named_error(spark):
+    """A CDF that cannot be evaluated raises a ``HandyException`` naming
+    the column instead of an ANSI divide-by-zero: the uniform auto-fit
+    over one row or a constant column (max == min), and an exponential
+    mean <= 0 (before any job). An empty frame still returns n = 0."""
     from handyspark_spark.core.util import HandyException
     from handyspark_spark.operators.stats import ks_test
     for rows in ([(3.0,)], [(2.0,)] * 5):
@@ -217,6 +218,10 @@ def test_ks_uniform_empty_range_named_error(spark):
             ks_test(df, "v", dist="uniform")
     empty = spark.createDataFrame([], "v double")
     assert ks_test(empty, "v", dist="uniform")["n"] == 0
+    df = spark.range(10).select(F.col("id").cast("double").alias("v"))
+    for mean in (0.0, -1.0):
+        with pytest.raises(HandyException, match="column 'v'.*positive mean"):
+            ks_test(df, "v", dist="exponential", params=(mean,))
 
 
 def test_ks_unknown_dist_raises(spark):
