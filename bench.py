@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "host": {cores, driver memory, CPU
+count}}.
 
 $SPARK_GRAFT_BENCH_SINK: "collect" (default — driver contract: the wall
 time includes emitting results to the driver) or "noop" (terminate each
@@ -93,21 +94,31 @@ def settle_gate(threshold=1.0, window=5.0, max_wait=600.0):
               f"({waited:.0f}/{max_wait:.0f}s)", file=sys.stderr)
 
 
+def host() -> dict:
+    """What a bench run ran on: the session's cores
+    ($SPARK_GRAFT_CPUS, default 32) and driver memory
+    ($SPARK_GRAFT_DRIVER_MEM, default 16g), and the host's CPU count.
+    Recorded in the artifact so ``tools/diff_bench.py`` can tell a host
+    change from a regression."""
+    return {"spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+            "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            "cpu_count": os.cpu_count()}
+
+
 def bench_session(app: str = "handyspark_spark-bench"):
     """The one benchmark session of ``bench.py`` and the timing tools:
-    local[$SPARK_GRAFT_CPUS] (default 32) with as many shuffle
-    partitions, AQE and Arrow on, UI off, driver memory
-    $SPARK_GRAFT_DRIVER_MEM (default 16g)."""
+    local[cores] with as many shuffle partitions, AQE and Arrow on, UI
+    off, and the driver memory of ``host()``."""
     from pyspark.sql import SparkSession
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    h = host()
+    cpus = h["spark_graft_cpus"]
     spark = (SparkSession.builder
              .master(f"local[{cpus}]")
              .appName(app)
              .config("spark.sql.shuffle.partitions", cpus)
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+             .config("spark.driver.memory", h["driver_mem"])
              .config("spark.ui.enabled", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
@@ -233,6 +244,7 @@ def main():
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "host": host(),
     }
     if noop_timings:
         payload["queries_noop"] = noop_timings

@@ -1,6 +1,6 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Six dedup strategies, each chosen for a different scale/fidelity point:
+Seven dedup strategies, each chosen for a different scale/fidelity point:
 
 - ``exact_duplicates``: md5-keyed hash groupBy — one shuffle on a 128-bit
   key, the 100 TB workhorse for byte-identical dedup.
@@ -14,11 +14,21 @@ Six dedup strategies, each chosen for a different scale/fidelity point:
 - ``minhash_signatures`` / ``minhash_lsh_pairs``: MinHash + banded LSH —
   the scale path. Hashes are md5-derived (first 8 hex chars as uint), so
   signatures are engine-reproducible (DuckDB computes identical values).
+  ``minhash_lsh_groups`` / ``minhash_lsh_components`` give linear-size
+  cluster labels over the same buckets.
 - ``simhash_fingerprints``: 64-bit SimHash via an Arrow pandas UDF
   (vectorized numpy bit-twiddling; a pure projection, no shuffle).
 - ``embedding_neardup_pairs``: cosine-over-threshold pairs on an embedding
   column; exact self-join here, LSH-bucketed variant in
   ``pipeline.similarity``.
+- ``duplicate_ngram_spans`` / ``strip_duplicate_spans``: ExactSubstr
+  (Lee et al. 2021) duplicate n-gram spans, found and removed.
+
+Plans are picked from the input and the caller's caps, never by a
+strategy flag; the LSH pair and ExactSubstr plans are lazy (building
+them runs no Spark job). Tuning values that no caller sets are module
+constants (``_SMALL_GRAPH_EDGES``, ``_HOT_MIN`` and its neighbours),
+read at call time.
 """
 from __future__ import annotations
 
@@ -479,11 +489,11 @@ def _banded_arrays(df: DataFrame, text_col: str, id_col: str,
 
 
 def _banded(df: DataFrame, text_col: str, id_col: str, num_hashes: int,
-            bands: int, sigs: DataFrame | None = None) -> DataFrame:
+            bands: int) -> DataFrame:
     """(id, band, band_hash): one row per band per doc, a posexplode of
     ``_banded_arrays`` — still map-only, and the band hash has one
     definition (the persisted ``lsh_bucket_state`` rows are these)."""
-    return (_banded_arrays(df, text_col, id_col, num_hashes, bands, sigs)
+    return (_banded_arrays(df, text_col, id_col, num_hashes, bands)
             .select(id_col, F.posexplode("_bhs").alias("band", "band_hash")))
 
 
@@ -537,9 +547,9 @@ def _canonical_sigs(df: DataFrame, text_col: str, id_col: str,
     """One canonical signature row per id: the lexicographically-min
     ``sig`` array (partial-agg min, one narrow exchange — the exchange
     ``dropDuplicates([id])`` paid anyway, made deterministic). Ids are
-    expected to uniquely identify text; when they don't, every job
-    derived from this frame (emit-once pre-pass, pair emission, the
-    DISTINCT fallback) still agrees on WHICH row represents the id."""
+    expected to uniquely identify text; when they don't, every branch
+    derived from this frame (the bucket counts, the masked arrays, pair
+    emission) agrees on WHICH row represents the id."""
     return (minhash_signature_arrays(df, text_col, id_col, num_hashes)
             .groupBy(id_col).agg(F.min("sig").alias("sig")))
 
@@ -566,79 +576,65 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     measured sf10: 21.6M raw pairs for 21.0M distinct, with the distinct
     costing more than the candidate generation itself. Instead each
     bucket member carries its full band-hash array and a pair is emitted
-    ONLY from the first band where it collides in a SURVIVING bucket
-    (oversized buckets don't count: a pair whose first collision was
-    skipped must still emit from its first kept bucket, so the predicate
-    consults the collected oversized-bucket keys — a handful of plan
-    literals from a count-only pre-pass; if that set is implausibly
-    large the operator falls back to the DISTINCT formulation rather
-    than bloat the plan). The pair stream then never crosses an
-    exchange at all; measured sf10 warm 7.3 -> 4.1s with the pre-pass
-    included. Pair-set equality with the distinct form is pinned in
-    tests/test_pipeline.py.
+    ONLY from the first band where it collides in a SURVIVING bucket, so
+    the pair stream never crosses an exchange.
+
+    With a cap, one window counts each (band, band_hash) bucket (the
+    ``_bucket_mins`` shape), an oversized bucket's hash is set to NULL
+    in its members' rows, and one ``groupBy(id)`` rebuilds the masked
+    hash arrays; NULL rows never reach the bucket ``collect_list``, so
+    no task builds an oversized bucket's member array. A pair that
+    collides in band i shares that bucket, so both of its band-i hashes
+    are masked or neither is: "collided earlier in a kept bucket" is
+    plain equality over the masked arrays. The plan is lazy — building
+    it runs no Spark job. Without a cap the arrays are not masked (two
+    exchanges: the id canonicalization and the bucket aggregate).
 
     Duplicate ids: ids are expected to uniquely identify text. If an id
     appears on rows with DIFFERENT texts, exactly one signature per id
     is kept — deterministically the lexicographically smallest ``sig``
-    array — so the oversized-key pre-pass, the main pair job, and the
-    DISTINCT fallback all see the same canonical row (a plain
-    ``dropDuplicates`` would let independent jobs keep different rows).
-
-    NOTE (eager pre-pass): when ``max_bucket_size`` is set, building the
-    plan runs ONE eager Spark job at call time (the count-only
-    oversized-bucket key collect) — callers that need a pure lazy plan
-    builder, or that construct plans on a driver without cluster access,
-    should call ``_minhash_lsh_pairs_distinct`` directly (same pair set,
-    no pre-pass, pays the DISTINCT exchange at execution instead)."""
+    array — so the bucket counts and the pair emission see the same
+    canonical row (a plain ``dropDuplicates`` could keep different
+    rows in different branches). Pair-set equality with a DISTINCT
+    bucket self-join is pinned in tests/test_pipeline.py."""
     sigs = _canonical_sigs(df, text_col, id_col, num_hashes)
-    arr = _banded_arrays(df, text_col, id_col, num_hashes, bands,
-                         sigs=sigs)
     # id-dedup happened at the SIGNATURE level (one narrow exchange in
     # _canonical_sigs), NOT array_distinct on the collected member
     # array: array_distinct/array_sort over structs with nested arrays
     # fall back to O(k²) deep comparisons — measured 166s (vs 2.6s) at
     # sf10, all of it in the oversized boilerplate buckets. Deduped
     # input + least/greatest pair orientation below need neither.
-    banded = (arr.select(F.col(id_col), F.col("_bhs"),
-                         F.posexplode("_bhs"))
-              .withColumnRenamed("pos", "band")
-              .withColumnRenamed("col", "band_hash"))
+    arr = _banded_arrays(df, text_col, id_col, num_hashes, bands,
+                         sigs=sigs)
+
+    def explode(a):
+        return a.select(id_col, "_bhs",
+                        F.posexplode("_bhs").alias("band", "band_hash"))
+
+    banded = explode(arr)
+    if max_bucket_size is not None:
+        # one row per id after _canonical_sigs: the row count IS the
+        # bucket's distinct-id count
+        size = F.count(F.lit(1)).over(Window.partitionBy("band",
+                                                         "band_hash"))
+        masked = banded.select(id_col, "band", F.when(
+            size <= max_bucket_size, F.col("band_hash")).alias("_h"))
+        arr = masked.groupBy(id_col).agg(F.array(*[
+            F.max(F.when(F.col("band") == i, F.col("_h")))
+            for i in range(bands)]).alias("_bhs"))
+        banded = explode(arr).filter(F.col("band_hash").isNotNull())
     buckets = (banded.groupBy("band", "band_hash")
                .agg(F.collect_list(
                    F.struct(F.col(id_col).alias("_i"),
                             F.col("_bhs").alias("_h"))).alias("_m")))
-    ov_by_band: list[list[int]] = [[] for _ in range(bands)]
-    if max_bucket_size is not None:
-        # oversized keys come from a COUNT-only agg (no member arrays,
-        # no persist): the banded frame re-derives from the signature
-        # table cheaply, and a cached copy of the member-array buckets
-        # would outlive the query and churn the block store across
-        # repeated invocations
-        ov = (banded.groupBy("band", "band_hash")
-              .agg(F.count(F.lit(1)).alias("_k"))
-              .filter(F.col("_k") > max_bucket_size)
-              .select("band", "band_hash").collect())
-        if len(ov) > 5000:
-            # sigs were canonicalized above — skip the idempotent-but-
-            # redundant second groupBy(id).min(sig) exchange, which
-            # would land on exactly the large inputs that trigger this
-            return _minhash_lsh_pairs_distinct(
-                df, text_col, id_col, num_hashes, bands,
-                max_bucket_size, sigs=sigs)
-        for r in ov:
-            ov_by_band[r["band"]].append(r["band_hash"])
-        buckets = buckets.filter(F.size("_m") <= max_bucket_size)
-    ov_lit = F.array(*[
-        F.array(*[F.lit(h) for h in hs]).cast("array<bigint>")
-        for hs in ov_by_band])
 
     def seen_earlier(xh, yh):
         # collided in a kept bucket of any band strictly before this one
+        # (a masked hash is NULL on both sides of a shared bucket)
         return F.when(F.col("band") > 0, F.exists(
             F.sequence(F.lit(1), F.col("band")),
-            lambda i: (F.element_at(xh, i) == F.element_at(yh, i))
-            & ~F.array_contains(F.element_at(ov_lit, i),
-                                F.element_at(xh, i)))
+            lambda i: F.coalesce(F.element_at(xh, i) == F.element_at(yh, i),
+                                 F.lit(False)))
         ).otherwise(F.lit(False))
 
     m = F.col("_m")
@@ -659,41 +655,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     return (buckets.filter(n >= 2)
             .select(F.explode(pair_arrays).alias("_p"))
             .select(F.col("_p.id_a"), F.col("_p.id_b")))
-
-
-def _minhash_lsh_pairs_distinct(df: DataFrame, text_col: str,
-                                id_col: str, num_hashes: int, bands: int,
-                                max_bucket_size: int | None,
-                                sigs: DataFrame | None = None
-                                ) -> DataFrame:
-    """The DISTINCT-dedup formulation of ``minhash_lsh_pairs`` — the
-    fallback when the oversized-bucket key set is too large to inline as
-    plan literals for the emit-once predicate. Pure lazy plan builder
-    (no eager pre-pass). Duplicate ids are canonicalized to the same
-    min-sig row as the emit-once path so the two formulations stay
-    pair-set-identical on any input. ``sigs``: the ``_canonical_sigs``
-    table that ``minhash_lsh_pairs`` built in the same call (its
-    oversized-key fallback), so it is not canonicalized twice."""
-    if sigs is None:
-        sigs = _canonical_sigs(df, text_col, id_col, num_hashes)
-    # one row per id after _canonical_sigs: bucket arrays hold no repeats
-    buckets = (_banded(df, text_col, id_col, num_hashes, bands, sigs)
-               .groupBy("band", "band_hash")
-               .agg(F.array_sort(F.collect_list(id_col)).alias("_ids")))
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("_ids") <= max_bucket_size)
-    ids = F.col("_ids")
-    n = F.size(ids)
-    pair_arrays = F.flatten(F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.transform(
-            F.slice(ids, i + 1, F.greatest(n - i, F.lit(0))),
-            lambda y: F.struct(F.element_at(ids, i).alias("id_a"),
-                               y.alias("id_b")))))
-    return (buckets.filter(n >= 2)
-            .select(F.explode(pair_arrays).alias("_p"))
-            .select(F.col("_p.id_a"), F.col("_p.id_b"))
-            .distinct())
 
 
 def minhash_lsh_groups(df: DataFrame, text_col: str = "text",
@@ -999,11 +960,14 @@ def _components_unionfind(edge_rows) -> dict:
     return {n: find(n) for n in parent}
 
 
+# connected_components: largest edge list solved by the driver union-find
+_SMALL_GRAPH_EDGES = 2_000_000
+
+
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b",
                          max_iterations: int = 20,
                          initial: DataFrame | None = None,
-                         small_graph_threshold: int = 2_000_000,
                          seeds_from_edges: bool = False) -> DataFrame:
     """Exact duplicate clusters from a pair list: iterative min-label
     propagation to a fixpoint (the transitive closure one-round
@@ -1013,12 +977,13 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
     ADAPTIVE physical strategy: after dedup pruning (LSH buckets emit
     star edges, not cliques) the edge list is often tiny relative to the
-    corpus — when it fits ``small_graph_threshold`` rows, an exact
+    corpus — when it fits ``_SMALL_GRAPH_EDGES`` rows, an exact
     driver-side union-find replaces the iterative loop: one collect of
     the (already checkpointed, already distinct) edges versus
     ~log(diameter) multi-join rounds, each a full Spark job. 2M edges
-    ≈ tens of MB on the driver. Pass ``small_graph_threshold=0`` to
-    force the distributed loop; results are identical (tests pin it).
+    ≈ tens of MB on the driver. Results are identical on both paths
+    (tests pin it by setting the constant to 0, which forces the
+    distributed loop).
 
     ``initial``: optional seed labels with columns (node, component) —
     e.g. ``minhash_lsh_groups(...).withColumnRenamed("doc_id", "node")
@@ -1047,15 +1012,15 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
              .distinct()
              # reused by the probe and every iteration — compute once
              .localCheckpoint(eager=False))
-    if small_graph_threshold and (initial is None or seeds_from_edges):
+    if _SMALL_GRAPH_EDGES and (initial is None or seeds_from_edges):
         # limit-probe: costs one job over the checkpointed edges and
         # never materializes more than threshold+1 rows on the driver.
         # Skipped when FOREIGN seed labels are supplied: the union-find
         # only sees the edge list, so a seed from a different edge
         # universe would yield labels that depend on which physical path
         # ran (seeds_from_edges callers assert same-universe seeds).
-        probe = edges.limit(small_graph_threshold + 1).count()
-        if probe <= small_graph_threshold:
+        probe = edges.limit(_SMALL_GRAPH_EDGES + 1).count()
+        if probe <= _SMALL_GRAPH_EDGES:
             et = edges.toArrow()
             comp = _components_unionfind(
                 zip(et["src"].to_pylist(), et["dst"].to_pylist()))
@@ -1429,16 +1394,24 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
 # ExactSubstr: duplicate n-gram span detection / removal
 # ---------------------------------------------------------------------------
 
+# Hot-gram routing of ``duplicate_ngram_spans`` (rationale there): a
+# 1/_SAMPLE_RATE_INV position sample, grams with >= _HOT_MIN sampled
+# hits go to a broadcast hot list capped at _MAX_HOT_GRAMS, and a hot
+# gram's occurrences spread over _N_SALTS window partitions. They are
+# read at call time.
+_HOT_MIN = 8
+_SAMPLE_RATE_INV = 64
+_N_SALTS = 64
+_MAX_HOT_GRAMS = 4_000_000
+
+
 def _hot_gram_hits(df: DataFrame, g: DataFrame, text_col: str,
-                   id_col: str, nn: int, min_count: int, hot_min: int,
-                   sample_rate_inv: int, n_salts: int,
-                   max_hot_grams: int) -> DataFrame:
-    """Duplicate-position decision for ``duplicate_ngram_spans``'s
-    ``strategy='hot'`` (full rationale there): a sampled prepass
-    builds the broadcast hot list, then ONE projection of ``g`` is
-    window-counted over (gram, salt) — salt spreads hot grams, count
-    decides cold ones exactly. Returns (id_col, _pos) duplicate
-    positions."""
+                   id_col: str, nn: int, min_count: int) -> DataFrame:
+    """Duplicate-position decision for ``duplicate_ngram_spans`` (full
+    rationale there): a sampled prepass builds the broadcast hot list,
+    then ONE projection of ``g`` is window-counted over (gram, salt) —
+    salt spreads hot grams, count decides cold ones exactly. Returns
+    (id_col, _pos) duplicate positions."""
     from .text import gram_at, let_bound, tokens as _toks
 
     id_c = F.col(id_col)
@@ -1456,7 +1429,7 @@ def _hot_gram_hits(df: DataFrame, g: DataFrame, text_col: str,
             idx,
             lambda i: F.pmod(F.xxhash64(id_c, i,
                                         F.lit("dup-span-sample")),
-                             F.lit(sample_rate_inv)) == 0)
+                             F.lit(_SAMPLE_RATE_INV)) == 0)
         return F.transform(
             keep,
             lambda i: F.struct(
@@ -1471,19 +1444,19 @@ def _hot_gram_hits(df: DataFrame, g: DataFrame, text_col: str,
                    F.col("_g.h2").alias("_h2"))
            .groupBy("_h1", "_h2")
            .agg(F.count(F.lit(1)).alias("_scnt"))
-           .filter(F.col("_scnt") >= max(min_count, hot_min))
+           .filter(F.col("_scnt") >= max(min_count, _HOT_MIN))
            # bounded broadcast: keep the HOTTEST grams; anything
            # truncated falls to the exact cold path (slower task,
            # same answer)
            .orderBy(F.desc("_scnt"), "_h1", "_h2")
-           .limit(max_hot_grams)
+           .limit(_MAX_HOT_GRAMS)
            .select("_h1", "_h2", F.lit(True).alias("_hot")))
 
     j = g.join(F.broadcast(hot), ["_h1", "_h2"], "left")
     salt = F.when(
         F.col("_hot"),
         F.pmod(F.xxhash64(id_c, F.col("_pos"), F.lit("dup-span-spread")),
-               F.lit(n_salts))).otherwise(F.lit(0))
+               F.lit(_N_SALTS))).otherwise(F.lit(0))
     wc = Window.partitionBy("_h1", "_h2", "_salt")
     return (j.withColumn("_salt", salt)
              .withColumn("_cnt", F.count(F.lit(1)).over(wc))
@@ -1494,10 +1467,7 @@ def _hot_gram_hits(df: DataFrame, g: DataFrame, text_col: str,
 
 def duplicate_ngram_spans(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", n: int = 16,
-                          min_count: int = 2, strategy: str = "hot",
-                          hot_min: int = 8, sample_rate_inv: int = 64,
-                          n_salts: int = 64,
-                          max_hot_grams: int = 4_000_000) -> DataFrame:
+                          min_count: int = 2) -> DataFrame:
     """ExactSubstr-style duplicate-span detection (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better"): find,
     per document, the maximal token spans covered by ``n``-token
@@ -1510,51 +1480,38 @@ def duplicate_ngram_spans(df: DataFrame, text_col: str = "text",
     sequential, single-machine construction. The distributed
     re-expression: every document emits one 128-bit hash per n-gram
     START POSITION (a pure projection — token array let-bound, grams
-    hashed in place, nothing corpus-sized is materialized per row), a
-    ``groupBy(hash).count()`` + equi-join back decides duplication —
-    NOT a COUNT window over the hash: a window partition key cannot be
-    split, so a boilerplate gram repeated k times corpus-wide would
-    serialize into one k-row task, while the grouped form gets
-    map-side partial counts (shuffled rows = |distinct grams|) and the
-    join is AQE-skew-splittable. The surviving positions then fold
-    into maximal spans with a classic gaps-and-islands pass (one
-    exchange on the doc id).
+    hashed in place, nothing corpus-sized is materialized per row),
+    one window count over the hash decides duplication, and the
+    surviving positions fold into maximal spans with a classic
+    gaps-and-islands pass (one exchange on the doc id).
 
     Hash note: duplication is decided on an (xxhash64(gram),
     xxhash64(gram, salt)) pair — 128 bits, so a false-duplicate
     collision needs ~2^64 distinct grams; the DuckDB oracle groups the
     raw gram string and agrees at every tested SF.
 
-    ``strategy``:
-
-    - ``'hot'`` (default, round 8) — single-full-projection hybrid.
-      The grouped form below pays TWO full gram projections (the
-      aggregate side shuffles combined rows, the join side raw rows,
-      so the exchanges differ by construction and exchange reuse
-      cannot merge them — the documented ~2x trade of round 6). The
-      hybrid replaces the second projection with a CHEAP prepass: a
-      deterministic 1/``sample_rate_inv`` position sample (tokenize +
-      index filter, gram hashes computed only for surviving indices)
-      is counted per gram, and every gram with ``>= max(min_count,
-      hot_min)`` SAMPLED occurrences goes into a bounded broadcast
-      hot list (top-``max_hot_grams`` by sample count). Because the
-      sample is a subset of the corpus, sample_count >= min_count
-      PROVES corpus_count >= min_count — the hot bypass is exact, not
-      heuristic. The main pass then projects grams ONCE, left-joins
-      the broadcast list, and window-counts over (gram, salt): hot
-      rows are already decided (their count is ignored) and carry a
-      position-derived salt so a boilerplate gram repeated k times
-      corpus-wide spreads over ``n_salts`` tasks instead of
-      serializing into one; cold rows keep salt 0, so their window
-      partition holds ALL their occurrences and the count stays
-      exact. Skew bound: a cold gram's corpus count C has a sampled
-      Binomial(C, 1/64) count that must have stayed below hot_min=8 —
-      P < 1e-9 once C > ~3000 — so cold window partitions are small
-      with overwhelming probability, and a miss only slows one task,
-      never changes the answer.
-    - ``'grouped'`` — the round-6 two-pass groupBy+join form:
-      deterministic skew-splittability (AQE skew join) with no
-      probabilistic argument, at the cost of the second projection.
+    Skew: a window partition key cannot be split, so a boilerplate
+    gram repeated k times corpus-wide would serialize into one k-row
+    task. A CHEAP prepass routes those grams around it: a deterministic
+    1/``_SAMPLE_RATE_INV`` position sample (tokenize + index filter,
+    gram hashes computed only for surviving indices) is counted per
+    gram, and every gram with ``>= max(min_count, _HOT_MIN)`` SAMPLED
+    occurrences goes into a bounded broadcast hot list
+    (top-``_MAX_HOT_GRAMS`` by sample count). Because the sample is a
+    subset of the corpus, sample_count >= min_count PROVES
+    corpus_count >= min_count — the hot bypass is exact, not
+    heuristic. The main pass projects grams ONCE, left-joins the
+    broadcast list, and window-counts over (gram, salt): hot rows are
+    already decided (their count is ignored) and carry a
+    position-derived salt so they spread over ``_N_SALTS`` tasks; cold
+    rows keep salt 0, so their window partition holds ALL their
+    occurrences and the count stays exact. Skew bound: a cold gram's
+    corpus count C has a sampled Binomial(C, 1/64) count that must have
+    stayed below _HOT_MIN=8 — P < 1e-9 once C > ~3000 — so cold window
+    partitions are small with overwhelming probability, and a miss only
+    slows one task, never changes the answer. Measured against a
+    two-pass groupBy + join form (two full gram projections): sf0.1
+    8.2 -> 2.8 s, sf1 21.2 -> 11.6 s (SCALE.md).
 
     Returns (id_col, span_start, span_end, span_tokens): 1-based token
     coordinates, ``span_end`` exclusive; overlapping/adjacent duplicate
@@ -1580,19 +1537,7 @@ def duplicate_ngram_spans(df: DataFrame, text_col: str = "text",
                    F.explode(let_bound(_toks(text_col), body)).alias("_g"))
          .select(id_col, F.col("_g.pos").alias("_pos"),
                  F.col("_g.h1").alias("_h1"), F.col("_g.h2").alias("_h2")))
-    if strategy == "hot":
-        hits = _hot_gram_hits(df, g, text_col, id_col, nn, int(min_count),
-                              int(hot_min), int(sample_rate_inv),
-                              int(n_salts), int(max_hot_grams))
-    elif strategy == "grouped":
-        dup = (g.groupBy("_h1", "_h2")
-               .agg(F.count(F.lit(1)).alias("_cnt"))
-               .filter(F.col("_cnt") >= int(min_count)))
-        hits = (g.join(dup.select("_h1", "_h2"), ["_h1", "_h2"])
-                .drop("_h1", "_h2"))
-    else:
-        raise ValueError(f"unknown strategy {strategy!r} "
-                         "(expected 'hot' or 'grouped')")
+    hits = _hot_gram_hits(df, g, text_col, id_col, nn, int(min_count))
     wd = Window.partitionBy(id_col).orderBy("_pos")
     new_island = F.when(
         F.lag("_pos").over(wd).isNull()
@@ -1610,14 +1555,14 @@ def duplicate_ngram_spans(df: DataFrame, text_col: str = "text",
 
 def strip_duplicate_spans(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", n: int = 16,
-                          min_count: int = 2,
-                          strategy: str = "hot") -> DataFrame:
+                          min_count: int = 2) -> DataFrame:
     """Remove every duplicate span found by ``duplicate_ngram_spans``
     and reassemble the surviving text — the apply step of ExactSubstr
     dedup.
 
-    Plan: the span table (linear in duplicated regions, far smaller
-    than the corpus) is grouped to a per-doc span ARRAY (bounded by
+    Plan: the span table of ``duplicate_ngram_spans`` (built in this
+    call; linear in duplicated regions, far smaller than the corpus)
+    is grouped to a per-doc span ARRAY (bounded by
     doc length / n, so the array is small by construction) and joined
     back LEFT onto the corpus — one exchange of the span table, one of
     the doc keys; the token filter is a native higher-order expression
@@ -1627,10 +1572,9 @@ def strip_duplicate_spans(df: DataFrame, text_col: str = "text",
     Returns (id_col, n_tokens, n_removed, clean_text); ``clean_text``
     is '' when the whole document was duplicated.
     """
-    from .text import gram_at, let_bound, tokens as _toks
+    from .text import let_bound, tokens as _toks
 
-    spans = (duplicate_ngram_spans(df, text_col, id_col, n, min_count,
-                                   strategy=strategy)
+    spans = (duplicate_ngram_spans(df, text_col, id_col, n, min_count)
              .groupBy(id_col)
              .agg(F.collect_list(F.struct("span_start", "span_end"))
                   .alias("_spans")))

@@ -264,10 +264,13 @@ def pii_counts(col) -> list[Column]:
 def fingerprint(col) -> Column:
     """Canonical document fingerprint: md5 of the sorted distinct lowercase
     token set (the classic 'fingerprint clustering' key). A pure projection;
-    dedup on it is one hash-groupBy."""
+    dedup on it is one hash-groupBy. A NULL text has a NULL fingerprint
+    (``array_join`` keeps the NULL that ``concat_ws`` would turn into
+    ``""``), so it never collides with an empty document — as in the
+    DuckDB form ``md5(array_to_string(...))``."""
     toks = F.array_sort(F.array_distinct(tokens(F.lower(
         F.col(col) if isinstance(col, str) else col))))
-    return F.md5(F.concat_ws(" ", toks))
+    return F.md5(F.array_join(toks, " "))
 
 
 def rolling_hashes(col, k: int = 5) -> Column:

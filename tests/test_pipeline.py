@@ -554,16 +554,17 @@ def test_lsh_pairs_no_self_pairs_on_duplicate_ids(spark):
     assert pairs == {(1, 2)}
 
 
-def test_lsh_pairs_duplicate_id_different_text_deterministic(spark):
+def test_lsh_pairs_duplicate_id_different_text_deterministic(
+        spark, lsh_pairs_ref):
     """A duplicate id carrying DIFFERENT texts is canonicalized to ONE
-    deterministic signature (min sig array) — the emit-once path, a
-    repeat invocation, and the DISTINCT fallback must all agree on the
-    resulting pair set (a plain dropDuplicates would let the pre-pass
-    and the pair job keep different arbitrary rows)."""
+    deterministic signature (min sig array) — repeat invocations, the
+    capped plan (whose bucket counts and pair emission read the same
+    canonical rows) and the DISTINCT reference must all agree on the
+    resulting pair set (a plain dropDuplicates could let two branches
+    of one plan keep different arbitrary rows)."""
     import pandas as pd
 
-    from handyspark_spark.pipeline.dedup import (
-        _minhash_lsh_pairs_distinct, minhash_lsh_pairs)
+    from handyspark_spark.pipeline.dedup import minhash_lsh_pairs
     # id=1 appears twice with different texts; one variant collides
     # with doc 2, the other with doc 3 — which pairs appear depends
     # entirely on which row is kept, so determinism is observable.
@@ -577,24 +578,20 @@ def test_lsh_pairs_duplicate_id_different_text_deterministic(spark):
          minhash_lsh_pairs(df, num_hashes=8, bands=4,
                            max_bucket_size=cap).collect()}
         for cap in (None, None, 50)]
-    fallback = {(r.id_a, r.id_b) for r in
-                _minhash_lsh_pairs_distinct(df, "text", "doc_id", 8, 4,
-                                            None).collect()}
-    assert runs[0] == runs[1] == runs[2] == fallback
+    assert runs[0] == runs[1] == runs[2] == lsh_pairs_ref(df, 8, 4, None)
     # only ONE canonical text represents id 1, so it can never pair
     # with both twins (that would require banding both variants)
     assert not ((1, 2) in runs[0] and (1, 3) in runs[0])
 
 
-def test_lsh_pairs_emit_once_equals_distinct(spark):
-    """The emit-once pair stream must equal the DISTINCT formulation
+def test_lsh_pairs_emit_once_equals_distinct(spark, lsh_pairs_ref):
+    """The emit-once pair stream must equal a DISTINCT bucket self-join
     exactly — including under a bucket cap, where a pair whose FIRST
     collision bucket was dropped as oversized must still emit from its
     first surviving bucket."""
     import pandas as pd
 
-    from handyspark_spark.pipeline.dedup import (
-        _minhash_lsh_pairs_distinct, minhash_lsh_pairs)
+    from handyspark_spark.pipeline.dedup import minhash_lsh_pairs
     rng = __import__("numpy").random.RandomState(3)
     words = [f"w{i}" for i in range(40)]
     rows = []
@@ -614,34 +611,70 @@ def test_lsh_pairs_emit_once_equals_distinct(spark):
         got = {(r.id_a, r.id_b) for r in
                minhash_lsh_pairs(df, num_hashes=8, bands=4,
                                  max_bucket_size=cap).collect()}
-        exp = {(r.id_a, r.id_b) for r in
-               _minhash_lsh_pairs_distinct(df, "text", "doc_id", 8, 4,
-                                           cap).collect()}
+        exp = lsh_pairs_ref(df, 8, 4, cap)
         assert got == exp and (cap is None or exp)
 
 
-def test_lsh_pairs_distinct_precanonical_sigs(spark):
-    """The oversized-key fallback passes its already-canonicalized sigs
-    (skipping the redundant second min-sig exchange) — the pair set
-    must be identical to re-canonicalizing,
-    including on duplicate-id inputs where canonicalization matters."""
-    import pandas as pd
+def test_lsh_pairs_capped_plan_is_lazy(spark, docs):
+    """Building the capped plan runs no Spark job, and the plan carries
+    no oversized-bucket keys as literals: the cap is one bucket-count
+    window, so the plan text is the same for any cap value."""
+    from handyspark_spark.pipeline.dedup import minhash_lsh_pairs
+    sc = spark.sparkContext
+    plans = []
+    for cap in (2, 500):
+        sc.setJobGroup("lsh-build", "lsh-build")
+        try:
+            out = minhash_lsh_pairs(docs, num_hashes=16, bands=2,
+                                    max_bucket_size=cap)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert not sc.statusTracker().getJobIdsForGroup("lsh-build")
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "Window" in plan
+        # expression ids and lambda variable names differ per build
+        plans.append(re.sub(r"(#|x_)\d+L?", "", plan).replace(
+            f"<= {cap})", "<= CAP)"))
+    assert plans[0] == plans[1]
 
-    from handyspark_spark.pipeline.dedup import (
-        _canonical_sigs, _minhash_lsh_pairs_distinct)
-    pdf = pd.DataFrame({
-        "doc_id": [1, 1, 2, 3, 4],
-        "text": ["a b c d", "p q r s", "a b c d x",
-                 "p q r s y", "zz yy xx ww"]})
-    df = spark.createDataFrame(pdf)
-    canon = _canonical_sigs(df, "text", "doc_id", 8)
-    fast = {(r.id_a, r.id_b) for r in
-            _minhash_lsh_pairs_distinct(df, "text", "doc_id", 8, 4, None,
-                                        sigs=canon).collect()}
-    ref = {(r.id_a, r.id_b) for r in
-           _minhash_lsh_pairs_distinct(df, "text", "doc_id", 8, 4,
-                                       None).collect()}
-    assert fast == ref
+
+def test_lsh_pairs_uncapped_plan_has_two_exchanges(docs):
+    """Without a cap the band-hash arrays are not masked: the plan keeps
+    its two exchanges (id canonicalization, bucket aggregate) and has
+    no window."""
+    from handyspark_spark.pipeline.dedup import minhash_lsh_pairs
+    plan = minhash_lsh_pairs(docs, num_hashes=16, bands=4) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange ", plan)) == 2
+    assert "Window" not in plan
+
+
+def test_fingerprint_of_null_text_is_null(spark):
+    """A NULL text has a NULL fingerprint, as DuckDB's
+    ``md5(array_to_string(...))`` gives: it groups with no empty
+    document, and fingerprint decontamination keeps it against a
+    benchmark that holds an empty text, as the exact and n-gram
+    methods do."""
+    from handyspark_spark.pipeline.dedup import (decontaminate,
+                                                 decontaminate_bloom,
+                                                 fingerprint_duplicates)
+    from handyspark_spark.pipeline.text import fingerprint
+    df = spark.createDataFrame(
+        [(1, None), (2, "a b c d"), (3, "q r s t"), (4, ""), (5, "d c b a")],
+        "doc_id long, text string")
+    fps = {r.doc_id: r.fp for r in
+           df.select("doc_id", fingerprint("text").alias("fp")).collect()}
+    assert fps[1] is None and fps[4] is not None
+    groups = sorted(sorted(r.doc_ids) for r in
+                    fingerprint_duplicates(df).collect())
+    assert groups == [[2, 5]]
+    bench = spark.createDataFrame([("",), ("b a c d",)], "text string")
+    for method in ("exact", "fingerprint", "ngram"):
+        kept = {r.doc_id for r in
+                decontaminate(df, bench, method=method).collect()}
+        assert 1 in kept and 3 in kept, method
+    kept = {r.doc_id for r in decontaminate_bloom(df, bench).collect()}
+    assert kept == {1, 3}
 
 
 def test_connected_components_transitive_closure(spark):
@@ -753,17 +786,17 @@ def test_capped_groups_keep_overcap_docs_as_singletons(docs):
     assert capped.select("doc_id").distinct().count() == docs.count()
 
 
-def test_components_raise_on_nonconvergence(spark):
+def test_components_raise_on_nonconvergence(spark, monkeypatch):
     import pytest as _pytest
 
-    from handyspark_spark.pipeline.dedup import connected_components
+    from handyspark_spark.pipeline import dedup
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long")
+    # force the distributed loop: the driver union-find fast path has
+    # no iteration limit to trip
+    monkeypatch.setattr(dedup, "_SMALL_GRAPH_EDGES", 0)
     with _pytest.raises(RuntimeError, match="converge"):
-        # force the distributed loop: the driver union-find fast path
-        # has no iteration limit to trip
-        connected_components(pairs, max_iterations=1,
-                             small_graph_threshold=0)
+        dedup.connected_components(pairs, max_iterations=1)
 
 
 def test_decontaminate_methods(spark, docs):
@@ -1388,16 +1421,16 @@ def test_top_ngram_fraction_matches_python(spark, tables):
         assert abs(got[row["doc_id"]] - want) < 1e-12
 
 
-def test_components_driver_path_equals_distributed(spark, tables):
-    from handyspark_spark.pipeline.dedup import (connected_components,
-                                                 minhash_lsh_pairs)
-    pairs = minhash_lsh_pairs(tables["documents"], num_hashes=16,
-                              bands=2).persist()
+def test_components_driver_path_equals_distributed(spark, tables,
+                                                  monkeypatch):
+    from handyspark_spark.pipeline import dedup
+    pairs = dedup.minhash_lsh_pairs(tables["documents"], num_hashes=16,
+                                    bands=2).persist()
     fast = {(r["node"], r["component"]) for r in
-            connected_components(pairs).collect()}
+            dedup.connected_components(pairs).collect()}
+    monkeypatch.setattr(dedup, "_SMALL_GRAPH_EDGES", 0)
     slow = {(r["node"], r["component"]) for r in
-            connected_components(pairs,
-                                 small_graph_threshold=0).collect()}
+            dedup.connected_components(pairs).collect()}
     assert fast == slow and fast
     pairs.unpersist()
 
@@ -1478,19 +1511,19 @@ def test_quantile_normalize_matches_pandas_ecdf(spark, tables, pdf_tables):
 # round 4: ADVICE regression fixes
 # ---------------------------------------------------------------------------
 
-def test_components_seed_respected_on_small_graphs(spark):
+def test_components_seed_respected_on_small_graphs(spark, monkeypatch):
     """A seed label outside the edge universe must win regardless of
     which physical path runs (the union-find fast path used to ignore
     ``initial`` and relabel from the edges alone)."""
-    from handyspark_spark.pipeline.dedup import connected_components
+    from handyspark_spark.pipeline import dedup
     pairs = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
     seed = spark.createDataFrame([(1, 0)], "node long, component long")
     # default threshold (fast path would fire on 4 edges if allowed)
     got = {r.node: r.component for r in
-           connected_components(pairs, initial=seed).collect()}
+           dedup.connected_components(pairs, initial=seed).collect()}
+    monkeypatch.setattr(dedup, "_SMALL_GRAPH_EDGES", 0)
     want = {r.node: r.component for r in
-            connected_components(pairs, initial=seed,
-                                 small_graph_threshold=0).collect()}
+            dedup.connected_components(pairs, initial=seed).collect()}
     assert got == want
     assert got[1] == 0 and got[2] == 0     # seed label propagated
     assert got[3] == 3 and got[4] == 3     # unseeded component untouched
@@ -1819,12 +1852,14 @@ def hot_docs(spark, docs):
 
 
 @pytest.mark.parametrize("cap", [None, 5, 500])
-def test_lsh_cluster_family_matches_bucket_reference(hot_docs, cap):
+def test_lsh_cluster_family_matches_bucket_reference(hot_docs, cap,
+                                                    monkeypatch):
     """Star edges, groups and components all derive from one bucket-min
     plan; each equals a pure-Python reference built from the
     ``lsh_bucket_state`` rows, the cap counted in distinct ids. The
     components are checked on both physical paths (driver union-find
     and the seeded distributed loop)."""
+    from handyspark_spark.pipeline import dedup
     from handyspark_spark.pipeline.dedup import (
         connected_components, lsh_bucket_state, minhash_lsh_components,
         minhash_lsh_groups, minhash_lsh_star_edges)
@@ -1861,9 +1896,9 @@ def test_lsh_cluster_family_matches_bucket_reference(hot_docs, cap):
             minhash_lsh_components(hot_docs, **kw).collect()} == want_comp
     seed = groups.select(F.col("doc_id").alias("node"),
                          F.col("cluster_id").alias("component"))
+    monkeypatch.setattr(dedup, "_SMALL_GRAPH_EDGES", 0)
     assert {r.node: r.component for r in
             connected_components(star, initial=seed,
-                                 small_graph_threshold=0,
                                  seeds_from_edges=True).collect()} == \
         want_comp
 
@@ -2643,48 +2678,80 @@ def test_index_cache_protocol_on_memory_fs():
     assert cache2.current(5) is None
 
 
-def test_dup_spans_hot_strategy_equals_grouped(docs, spark):
-    """The round-8 single-projection 'hot' hybrid must be VALUE-
-    IDENTICAL to the round-6 grouped form in every routing regime:
-    everything-cold (nothing sampled -> pure window path),
-    everything-hot (every position sampled, hot_min at min_count ->
-    pure broadcast-bypass path), and the default mixed routing."""
-    from handyspark_spark.pipeline.dedup import duplicate_ngram_spans
+def _exact_substr_reference(rows, n, min_count):
+    """Pure-Python ExactSubstr: count every n-token gram over the whole
+    corpus, keep the start positions of grams seen >= min_count times,
+    and merge each doc's positions into islands (a gap of more than n
+    starts a new one). Returns sorted (doc_id, start, end, tokens)."""
+    from collections import Counter
+    toks = {d: t.split(" ") for d, t in rows}
+    grams = {d: [" ".join(ts[i:i + n]) for i in range(len(ts) - n + 1)]
+             for d, ts in toks.items()}
+    count = Counter(g for gs in grams.values() for g in gs)
+    out = []
+    for d, gs in grams.items():
+        pos = [i + 1 for i, g in enumerate(gs) if count[g] >= min_count]
+        start = None
+        for k, p in enumerate(pos):
+            if start is None:
+                start = p
+            if k + 1 == len(pos) or pos[k + 1] - p > n:
+                out.append((d, start, p + n, p + n - start))
+                start = None
+    return sorted(out)
 
-    d = docs.limit(400)
-    want = sorted(tuple(r) for r in duplicate_ngram_spans(
-        d, n=8, min_count=2, strategy="grouped").collect())
+
+def test_dup_spans_routing_regimes_match_reference(docs, spark,
+                                                   monkeypatch):
+    """The hot-gram routing must give the exact ExactSubstr spans in
+    every regime: the default mixed routing, everything-hot (every
+    position sampled, _HOT_MIN at min_count -> pure broadcast bypass),
+    everything-cold (nothing sampled -> pure window path), and a
+    truncated hot list (the rest falls to the cold path)."""
+    from handyspark_spark.pipeline import dedup
+
+    rows = [(r.doc_id, r.text) for r in
+            docs.select("doc_id", "text").orderBy("doc_id").limit(400)
+            .collect()]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    want = _exact_substr_reference(rows, 8, 2)
     assert len(want) > 0
     regimes = [
         {},                                          # default mixed
-        {"sample_rate_inv": 1, "hot_min": 2},        # all duplicates hot
-        {"sample_rate_inv": 1 << 40},                # nothing sampled
-        {"sample_rate_inv": 1, "hot_min": 2,
-         "max_hot_grams": 1},                        # truncation -> cold
+        {"_SAMPLE_RATE_INV": 1, "_HOT_MIN": 2},      # all duplicates hot
+        {"_SAMPLE_RATE_INV": 1 << 40},               # nothing sampled
+        {"_SAMPLE_RATE_INV": 1, "_HOT_MIN": 2,
+         "_MAX_HOT_GRAMS": 1},                       # truncation -> cold
     ]
     for kw in regimes:
-        got = sorted(tuple(r) for r in duplicate_ngram_spans(
-            d, n=8, min_count=2, strategy="hot", **kw).collect())
-        assert got == want, f"hot regime {kw} diverged"
+        with monkeypatch.context() as mp:
+            for name, value in kw.items():
+                mp.setattr(dedup, name, value)
+            got = sorted(tuple(r) for r in dedup.duplicate_ngram_spans(
+                d, n=8, min_count=2).collect())
+        assert got == want, f"regime {kw} diverged"
     # same-doc repeats and gaps keep ExactSubstr semantics on the
     # hot bypass too
     text = "a b c d " + "f1 f2 f3 f4 f5 f6 f7 f8 " + "a b c d"
     one = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    rows = sorted(duplicate_ngram_spans(
-        one, n=4, min_count=2, strategy="hot", sample_rate_inv=1,
-        hot_min=2).collect(), key=lambda r: r["span_start"])
+    monkeypatch.setattr(dedup, "_SAMPLE_RATE_INV", 1)
+    monkeypatch.setattr(dedup, "_HOT_MIN", 2)
+    rows = sorted(dedup.duplicate_ngram_spans(
+        one, n=4, min_count=2).collect(), key=lambda r: r["span_start"])
     assert [(r["span_start"], r["span_end"]) for r in rows] \
         == [(1, 5), (13, 17)]
+    assert _exact_substr_reference([(1, text)], 4, 2) \
+        == [(1, 1, 5, 4), (1, 13, 17, 4)]
 
 
 def test_dup_spans_hot_plan_shape(docs):
     """Plan pins for the hot hybrid: the hot list arrives by BROADCAST
     (no shuffle of the corpus for the routing decision), the count
     window is keyed by (_h1, _h2, _salt) so a hot gram spreads over
-    n_salts tasks instead of serializing, and no Python evaluator
+    ``_N_SALTS`` tasks instead of serializing, and no Python evaluator
     appears anywhere."""
     from handyspark_spark.pipeline.dedup import duplicate_ngram_spans
-    plan = duplicate_ngram_spans(docs, n=8, strategy="hot") \
+    plan = duplicate_ngram_spans(docs, n=8) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "_salt" in plan and "windowspecdefinition(_h1" in plan

@@ -519,13 +519,13 @@ def test_ordered_window_ops_fuzz_match_pandas(spark, data):
 
 @given(data=st.data())
 @settings(**SETTINGS)
-def test_lsh_pairs_emit_once_equals_distinct_fuzz(spark, data):
-    """Emit-once LSH pair stream == DISTINCT formulation on random
+def test_lsh_pairs_emit_once_equals_distinct_fuzz(spark, lsh_pairs_ref,
+                                                  data):
+    """Emit-once LSH pair stream == a DISTINCT bucket self-join on random
     corpora across random (num_hashes, bands, cap) — including caps
     small enough that first-collision buckets get dropped and the
-    oversized-key predicate has to rescue pairs."""
-    from handyspark_spark.pipeline.dedup import (
-        _minhash_lsh_pairs_distinct, minhash_lsh_pairs)
+    masked band hashes have to rescue pairs."""
+    from handyspark_spark.pipeline.dedup import minhash_lsh_pairs
     bands = data.draw(st.sampled_from([2, 4, 8]), label="bands")
     num_hashes = bands * data.draw(st.integers(1, 3), label="rpb")
     cap = data.draw(st.sampled_from([None, 2, 5, 20]), label="cap")
@@ -542,10 +542,7 @@ def test_lsh_pairs_emit_once_equals_distinct_fuzz(spark, data):
     got = {(r.id_a, r.id_b) for r in
            minhash_lsh_pairs(df, num_hashes=num_hashes, bands=bands,
                              max_bucket_size=cap).collect()}
-    exp = {(r.id_a, r.id_b) for r in
-           _minhash_lsh_pairs_distinct(df, "text", "doc_id", num_hashes,
-                                       bands, cap).collect()}
-    assert got == exp
+    assert got == lsh_pairs_ref(df, num_hashes, bands, cap)
 
 
 @given(values=st.lists(st.one_of(

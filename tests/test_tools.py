@@ -62,6 +62,16 @@ def test_diff_bench_gate_codes(tmp_path):
     assert r.returncode == 2 and "re-measure" in r.stdout
     assert _run_diff(tmp_path, base, stolen,
                      "--allow-excluded").returncode == 0
+    # artifacts from different hosts: both hosts printed, no verdict
+    here = {"spark_graft_cpus": "4", "driver_mem": "8g", "cpu_count": 4}
+    there = dict(here, spark_graft_cpus="32", cpu_count=32)
+    r = _run_diff(tmp_path, dict(base, host=here), dict(bad, host=there))
+    assert r.returncode == 3 and "'cpu_count': 32" in r.stdout \
+        and "'cpu_count': 4" in r.stdout and "REGRESSION" not in r.stdout
+    # same host (or a side that records none): the usual verdicts
+    assert _run_diff(tmp_path, dict(base, host=here),
+                     dict(bad, host=here)).returncode == 1
+    assert _run_diff(tmp_path, base, dict(ok, host=there)).returncode == 0
 
 
 def test_audit_plans_splice_replaces_only_named_rows():

@@ -10,6 +10,11 @@ and best improvements (absolute-seconds-weighted: a 1.3x on a 0.1s query
 is noise; on a 40s query it is not). Exit code 1 when any query >= 2s in
 either artifact regressed by more than 1.5x — a loud gate suitable for
 round close-out.
+
+When both artifacts record their ``host`` (bench.py: session cores,
+driver memory, host CPU count) and the hosts differ, the timings are
+not comparable: both hosts are printed and the exit code is 3, with no
+regression verdict.
 """
 from __future__ import annotations
 
@@ -66,6 +71,10 @@ def main():
         flags = st if isinstance(st, list) else [st]
         return all(f is not None for f in flags)
 
+    if "host" in old and "host" in new and old["host"] != new["host"]:
+        print(f"\nDIFFERENT HOSTS: old {old['host']}, new {new['host']}: "
+              "no regression verdict; re-run both artifacts on one host")
+        sys.exit(3)
     steal_skip = sorted(q for q in common
                         if steal_only(new, q) and ratios[q] > 1.5)
     bad = [q for q in common
