@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core.schema import COLTYPES
+from ..core.util import broadcast_sized
 from ..operators import agg as A
 
 
@@ -116,7 +117,8 @@ class HandyColumns:
     def _agg(self, name: str, fn) -> pd.Series | float:
         cols = self._cols()
         exprs = [fn(c).alias(c) for c in cols]
-        pdf = A.summary_plan(self._df, exprs, self._strata or None).toPandas()
+        pdf = A.summary_plan(broadcast_sized(self._df), exprs,
+                             self._strata or None).toPandas()
         return self._shape(pdf, name)
 
     # -- statistics (ref dataframe.py:736-776, §2.4) ------------------------
@@ -144,6 +146,9 @@ class HandyColumns:
         return self._agg("var", lambda c: F.variance(c))
 
     def percentile(self, perc, precision: float = 0.01, exact: bool = False):
+        """``exact=False`` is ``percentile_approx`` at accuracy
+        1/precision: a one-task read merges one sketch, a spread read one
+        per partition, so the value may move within that rank error."""
         q = perc / 100.0 if perc > 1 else perc
         return self._agg(f"percentile_{perc}",
                          lambda c: A.percentile_expr(c, q, precision, exact))
@@ -158,19 +163,19 @@ class HandyColumns:
         return self.percentile(0.75, precision, exact)
 
     def nunique(self, exact: bool = False):
-        pdf = A.nunique_plan(self._df, self._cols(), self._strata or None,
-                             exact=exact).toPandas()
+        pdf = A.nunique_plan(broadcast_sized(self._df), self._cols(),
+                             self._strata or None, exact=exact).toPandas()
         return self._shape(pdf, "nunique")
 
     def isnull(self, ratio: bool = False):
-        pdf = A.isnull_plan(self._df, self._cols(), ratio,
+        pdf = A.isnull_plan(broadcast_sized(self._df), self._cols(), ratio,
                             self._strata or None).toPandas()
         return self._shape(pdf, "missing" + ("(ratio)" if ratio else ""))
 
     def value_counts(self, dropna: bool = True, ascending: bool = False):
         col = self._cols()[0]
-        pdf = A.value_counts_plan(self._df, [col], self._strata or None,
-                                  dropna).toPandas()
+        pdf = A.value_counts_plan(broadcast_sized(self._df), [col],
+                                  self._strata or None, dropna).toPandas()
         pdf = pdf.set_index((self._strata or []) + [col])["count"]
         pdf = pdf.sort_values(ascending=ascending)
         pdf.name = col
@@ -178,13 +183,14 @@ class HandyColumns:
 
     def mode(self):
         col = self._cols()[0]
-        pdf = A.mode_plan(self._df, col, self._strata or None).toPandas()
+        pdf = A.mode_plan(broadcast_sized(self._df), col,
+                          self._strata or None).toPandas()
         if self._strata:
             return pdf.set_index(self._strata)[col]
         return pdf[col].iloc[0]
 
     def entropy(self):
-        pdf = A.entropy_plan(self._df, self._cols(),
+        pdf = A.entropy_plan(broadcast_sized(self._df), self._cols(),
                              self._strata or None).toPandas()
         if self._strata:
             return pdf.set_index(self._strata + ["colname"])["entropy"]
@@ -197,18 +203,19 @@ class HandyColumns:
     def mutual_info(self) -> pd.DataFrame:
         cols = self._cols()
         mat = pd.DataFrame(0.0, index=cols, columns=cols)
+        src = broadcast_sized(self._df)
         for i, cx in enumerate(cols):
-            ent = A.entropy_plan(self._df, [cx]).toPandas()
+            ent = A.entropy_plan(src, [cx]).toPandas()
             mat.loc[cx, cx] = ent["entropy"].iloc[0]
             for cy in cols[i + 1:]:
-                mi = A.mutual_info_plan(self._df, cx, cy).toPandas()
+                mi = A.mutual_info_plan(src, cx, cy).toPandas()
                 v = mi["mutual_info"].iloc[0]
                 mat.loc[cx, cy] = mat.loc[cy, cx] = v
         return mat
 
     def corr(self, method: str = "pearson") -> pd.DataFrame:
         cols = self._cols()
-        long = A.corr_plan(self._df, cols, method).toPandas()
+        long = A.corr_plan(broadcast_sized(self._df), cols, method).toPandas()
         mat = pd.DataFrame(1.0, index=cols, columns=cols)
         for _, r in long.iterrows():
             mat.loc[r.col_x, r.col_y] = mat.loc[r.col_y, r.col_x] = r["corr"]

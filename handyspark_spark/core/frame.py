@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.schema import ColumnTaxonomy
+from ..core.util import broadcast_sized
 
 
 class Handy:
@@ -56,6 +57,14 @@ class HandyFrame:
     ``handyspark_spark.operators``; aggregation results come back as pandas
     objects (the reference's contract), while row-level transformations stay
     lazy Spark DataFrames wrapped in new HandyFrames.
+
+    Every plan whose result goes back to the driver reads its frame
+    through ``core.util.broadcast_sized``: a materialized frame (a
+    loaded cache or a local relation under plain projections) no larger
+    than ``spark.sql.autoBroadcastJoinThreshold`` is read through
+    ``coalesce(1)``, so the call runs as one job of one task with no
+    exchange. Frames handed back to the caller (``fill``, ``fence``,
+    transforms, ``notHandy()``) keep the caller's partitioning.
     """
 
     def __init__(self, df: DataFrame, handy: Handy | None = None):
@@ -160,8 +169,8 @@ class HandyFrame:
         self._handy.response = colname
         if colname not in self._types.continuous:
             self._handy.is_classification = True
-            classes = [r[0] for r in
-                       self._df.select(colname).distinct().collect()]
+            classes = [r[0] for r in broadcast_sized(self._df)
+                       .select(colname).distinct().collect()]
             self._handy.classes = sorted(classes)
             self._handy.nclasses = len(classes)
         return self
@@ -234,7 +243,8 @@ class HandyFrame:
     # -- missing data / outliers (operators) --------------------------------
     def isnull(self, ratio: bool = False) -> pd.Series:
         from ..operators import agg as A
-        pdf = A.isnull_plan(self._df, self._df.columns, ratio=ratio).toPandas()
+        pdf = A.isnull_plan(broadcast_sized(self._df), self._df.columns,
+                            ratio=ratio).toPandas()
         s = pdf.iloc[0]
         s.name = "missing" + ("(ratio)" if ratio else "")
         return s
@@ -247,7 +257,11 @@ class HandyFrame:
         aggregate, the quartiles (one fused percentile pass per column)
         in their own. Sharing one aggregate with the percentile sketches
         would force an ``ObjectHashAggregate`` and run every moment
-        interpreted."""
+        interpreted.
+
+        On a one-task read (``broadcast_sized``) the quartiles merge one
+        sketch instead of one per partition: they may differ from a
+        spread read's within the sketch's rank error (``precision``)."""
         from ..operators import agg as A
         cols = colnames or self._types.numerical
         moments, quartiles = [], []
@@ -260,8 +274,9 @@ class HandyFrame:
                         F.max(d).alias(f"max__{c}")]
             quartiles.append(A.percentile_expr(
                 c, [0.25, 0.5, 0.75], precision, exact).alias(f"q__{c}"))
-        row = (A.summary_plan(self._df, moments)
-               .crossJoin(A.summary_plan(self._df, quartiles))
+        src = broadcast_sized(self._df)
+        row = (A.summary_plan(src, moments)
+               .crossJoin(A.summary_plan(src, quartiles))
                .collect()[0])
         out = {}
         nan = float("nan")
@@ -279,12 +294,14 @@ class HandyFrame:
         aggregation (HLL distinct by default, ``exact=True`` for the
         multi-distinct expand). Beyond-reference surface."""
         from ..operators import agg as A
-        return (A.profile_plan(self._df, colnames, exact=exact)
+        return (A.profile_plan(broadcast_sized(self._df), colnames,
+                               exact=exact)
                 .toPandas().set_index("column"))
 
     def nunique(self, exact: bool = False) -> pd.Series:
         from ..operators import agg as A
-        pdf = A.nunique_plan(self._df, self._df.columns, exact=exact).toPandas()
+        pdf = A.nunique_plan(broadcast_sized(self._df), self._df.columns,
+                             exact=exact).toPandas()
         s = pdf.iloc[0]
         s.name = "nunique"
         return s

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import re
 
+from pyspark.sql import DataFrame
+
 ANSI_BOLD_RED = "\033[1;31m"
 ANSI_RESET = "\033[0m"
 
@@ -39,9 +41,111 @@ def summarize_spark_error(text: str) -> str:
 
 
 def exchange_count(df) -> int:
-    """Number of shuffle exchanges in the executed physical plan."""
+    """Number of shuffle exchanges in the executed physical plan. A
+    cached input's build plan (printed under its ``InMemoryRelation``)
+    is left out: its exchanges ran when the cache was built."""
     plan = df._jdf.queryExecution().executedPlan().toString()
-    return len(re.findall(r"\bExchange\b", plan))
+    n, cached = 0, None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cached is not None and depth > cached:
+            continue
+        cached = depth if "InMemoryRelation" in line else None
+        n += bool(re.search(r"\bExchange\b", line))
+    return n
+
+
+# expression nodes of a plain projection: column picks, renames, casts
+# and constants; a Project of anything else (a computed column) is work
+# a one-task read would pull into its task
+_PLAIN_EXPRS = ("AttributeReference", "Alias", "Cast", "Literal")
+
+
+def _plain(expr) -> bool:
+    kids = expr.children()
+    return expr.nodeName() in _PLAIN_EXPRS and all(
+        _plain(kids.apply(i)) for i in range(kids.size()))
+
+
+def _stated(frame: DataFrame):
+    """``(plan, rows)`` when ``frame`` is materialized: its analyzed
+    plan, with the session's cached data substituted, is a loaded
+    ``InMemoryRelation`` or a ``LocalRelation`` under plain projections
+    and repartitions only; ``plan`` is that plan (its ``stats()`` are
+    the frame's size) and ``rows`` the exact row count. None otherwise
+    (a file scan, a range, a Python UDF or a computed column on the
+    way, an unloaded cache).
+
+    The walk never runs the optimizer: the cache substitution is the
+    one ``QueryExecution.withCachedData`` applies, done afresh (the
+    frame's own may predate the cache it reads). With no cache in the
+    session, only a ``LocalRelation`` leaf can be stated, so a file
+    scan costs a handful of py4j calls and no plan walk."""
+    cm = frame.sparkSession._jsparkSession.sharedState().cacheManager()
+    plan = frame._jdf.queryExecution().analyzed()
+    if cm.isEmpty():
+        leaves = plan.collectLeaves()
+        if (leaves.size() != 1
+                or leaves.head().nodeName() != "LocalRelation"):
+            return None
+    else:
+        plan = cm.useCachedData(plan)
+    top = plan
+    while plan.nodeName() in ("Project", "Repartition", "SubqueryAlias"):
+        if plan.nodeName() == "Project":
+            exprs = plan.projectList()
+            if not all(_plain(exprs.apply(i)) for i in range(exprs.size())):
+                return None
+        plan = plan.child()
+    if plan.nodeName() == "LocalRelation":
+        return top, int(plan.data().size())
+    if (plan.nodeName() == "InMemoryRelation"
+            and plan.cacheBuilder().isCachedColumnBuffersLoaded()):
+        return top, int(plan.stats().rowCount().get())
+    return None
+
+
+def _stated_rows(frame: DataFrame) -> int | None:
+    """``frame``'s exact row count when it is materialized
+    (``_stated``), else None. The one "is this frame materialized, and
+    how big is it" check: ``broadcast_sized`` bounds the stated plan's
+    bytes, ``pipeline.similarity._arrow_sized`` adds its Arrow bounds
+    (rows per batch, scores per scan task) on top of the rows."""
+    stated = _stated(frame)
+    return None if stated is None else stated[1]
+
+
+def broadcast_sized(frame: DataFrame) -> DataFrame:
+    """The input of a plan whose result goes back to the driver:
+    ``frame.coalesce(1)`` when ``frame`` is materialized (``_stated``)
+    and its plan's ``sizeInBytes`` is at most
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1 turns the rule off),
+    else ``frame`` unchanged.
+
+    Such a frame is one Spark would already ship whole to every task of
+    a join. Read through ``coalesce(1)`` (narrow, no shuffle) it is one
+    partition, so an aggregate, groupBy, window or sort over it sees
+    ``SinglePartition``: EnsureRequirements plans no exchange and the
+    call runs as one job of one task, where the spread input runs a
+    partial aggregate per partition, then a shuffle whose reduce side
+    AQE coalesces to one partition anyway.
+
+    Results: exact aggregates (counts, min/max, exact percentiles,
+    value counts) are identical; double sums re-associate (means,
+    stds, t, corr move in the last bits); ``percentile_approx`` merges
+    one sketch instead of one per partition, so approximate quantiles
+    may move within their 1/accuracy rank error.
+
+    Frames handed back to the caller never go through it: a returned
+    frame keeps the caller's partitioning."""
+    conf = frame.sparkSession._jsparkSession.sessionState().conf()
+    bound = conf.autoBroadcastJoinThreshold()
+    if bound < 0:
+        return frame
+    stated = _stated(frame)
+    if stated is not None and stated[0].stats().sizeInBytes() <= bound:
+        return frame.coalesce(1)
+    return frame
 
 
 def explain_str(df, mode: str = "formatted") -> str:

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.util import HandyException
+from ..core.util import HandyException, broadcast_sized
 from ..operators.rank import ranged_cumsum, ranged_partition_aggs
 
 
@@ -59,7 +59,9 @@ def _auc_from_sums(area2: float | None, P: float | None,
 class BinaryClassificationMetrics:
     """Constructed from a DataFrame with a score (double or probability
     vector/array — element [1] taken as P(class 1), ref evaluation.py:
-    138-152) and a binary label column."""
+    138-152) and a binary label column. A small materialized input is
+    read in one task (``core.util.broadcast_sized``): the grouped scores
+    need no exchange; the curve's range exchange stays."""
 
     def __init__(self, scoreAndLabels: DataFrame, scoreCol: str = "score",
                  labelCol: str = "label", score_bins: int | None = None):
@@ -71,9 +73,9 @@ class BinaryClassificationMetrics:
         score = score.cast("double")
         if score_bins:
             score = F.round(score, score_bins)
-        self._scores = df.select(score.alias("score"),
-                                 F.col(labelCol).cast("double")
-                                 .alias("label"))
+        self._scores = broadcast_sized(df).select(
+            score.alias("score"),
+            F.col(labelCol).cast("double").alias("label"))
         self._cum = None
 
     def _grouped(self) -> DataFrame:
@@ -118,7 +120,9 @@ class BinaryClassificationMetrics:
                  .select("fpr", "tpr"))
 
     def pr(self) -> DataFrame:
-        """(recall, precision) with (0, p@lowest-recall) prepended."""
+        """(recall, precision) with (0, p@lowest-recall) prepended; a
+        frame with no rows has no curve (``HandyException``), and so no
+        ``areaUnderPR``."""
         # the head row's collect and the returned plan both read the
         # curve: the lazy checkpoint runs its cumulative sums once
         c = self._curve().select(
@@ -126,6 +130,9 @@ class BinaryClassificationMetrics:
             (F.col("tp") / (F.col("tp") + F.col("fp"))).alias("precision"),
             "score").localCheckpoint(eager=False)
         first = c.orderBy(F.desc("score")).first()
+        if first is None:
+            raise HandyException("the PR curve is undefined: the scores "
+                                 "frame has no rows")
         spark = c.sparkSession
         head = _const_rows(spark, ["recall", "precision", "score"],
                            [(0.0, first.precision, float("inf"))])

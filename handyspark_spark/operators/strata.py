@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..core.columns import HandyColumns
 from ..core.frame import HandyFrame
-from ..core.util import HandyException
+from ..core.util import HandyException, broadcast_sized
 from . import agg as A
 
 
@@ -145,9 +145,13 @@ class HandyStrata:
         df = hdf._df
         self._colnames: list[str] = []
         self._labelers: dict[str, dict] = {}
+        # the edge fits go back to the driver; the stratified frame
+        # ``_aug`` keeps the caller's partitioning (``take`` and
+        # ``apply_in_pandas`` hand it back). A bucket column is computed,
+        # so the stratified calls over it read it spread
         for s in strata:
             if isinstance(s, Bucket):
-                s._fit(df)
+                s._fit(broadcast_sized(hdf._df))
                 name = f"_bkt_{s.colname}"     # temp col, dropped on the edge
                 df = df.withColumn(name, s._col())
                 self._colnames.append(name)
@@ -185,7 +189,8 @@ class HandyStrata:
     def combinations(self) -> pd.DataFrame:
         """Observed strata combinations (one groupBy job,
         ref dataframe.py:1846-1848)."""
-        return (self._aug._df.groupBy(*self._colnames).count()
+        return (broadcast_sized(self._aug._df)
+                .groupBy(*self._colnames).count()
                 .orderBy(*self._colnames).toPandas())
 
     def clause_for(self, combo: dict) -> str:
@@ -307,7 +312,7 @@ class StrataColumns(HandyColumns):
         """Stratified correlation — one grouped job over all strata (the
         reference looped filtered children, dataframe.py:1926-1929)."""
         cols = self._cols()
-        long = A.corr_plan(self._df, cols, method,
+        long = A.corr_plan(broadcast_sized(self._df), cols, method,
                            self._strata).toPandas()
         return self._strata_obj._relabel(
             long.set_index(self._strata + ["col_x", "col_y"])["corr"]

@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core.util import HandyException
+from ..core.util import HandyException, _stated_rows
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -265,12 +265,6 @@ def _cosine_pairs(tbl: pa.Table, col: str, threshold: float,
                      "cosine": pa.array(c, pa.float64())})
 
 
-# expression nodes of a plain projection: column picks, renames, casts
-# and constants, as the family's callers put over a corpus; a Project of
-# anything else (a computed column) is work the one-task path would pull
-# into its task
-_PLAIN_EXPRS = ("AttributeReference", "Alias", "Cast", "Literal")
-
 # most |queries| x |rows| scores one scan task holds (32 MB at fp64).
 # Measured on a cached 10k x 64 corpus, 4-core host, one task vs four:
 # at 1.3M scores (128 queries) one task is faster (PQ 0.39 vs 0.48 s,
@@ -278,33 +272,6 @@ _PLAIN_EXPRS = ("AttributeReference", "Alias", "Cast", "Literal")
 # within 0.1 s on ~1 s less CPU; at 20M (2000 queries) it takes twice
 # the wall time (PQ 1.53 vs 0.69 s)
 _ONE_TASK_SCORES = 1 << 22
-
-
-def _plain(expr) -> bool:
-    kids = expr.children()
-    return expr.nodeName() in _PLAIN_EXPRS and all(
-        _plain(kids.apply(i)) for i in range(kids.size()))
-
-
-def _stated_rows(frame: DataFrame) -> int | None:
-    """``frame``'s exact row count, when its optimized plan is a
-    materialized cache or a local relation under plain projections and
-    repartitions only; None otherwise (a file scan, a range, a Python
-    UDF or a computed column on the way, an unloaded cache)."""
-    # a fresh plan: the frame's own may predate the cache it reads
-    plan = frame.select("*")._jdf.queryExecution().optimizedPlan()
-    while plan.nodeName() in ("Project", "Repartition"):
-        if plan.nodeName() == "Project":
-            exprs = plan.projectList()
-            if not all(_plain(exprs.apply(i)) for i in range(exprs.size())):
-                return None
-        plan = plan.child()
-    if plan.nodeName() == "LocalRelation":
-        return int(plan.data().size())
-    if (plan.nodeName() == "InMemoryRelation"
-            and plan.cacheBuilder().isCachedColumnBuffersLoaded()):
-        return int(plan.stats().rowCount().get())
-    return None
 
 
 def _arrow_sized(frame: DataFrame, source: DataFrame | None = None,
@@ -319,7 +286,9 @@ def _arrow_sized(frame: DataFrame, source: DataFrame | None = None,
     stage's work, not its input's files or the cluster's cores:
 
     - when ``source`` (default ``frame``: the input before the stage's
-      own kernel) states its row count (``_stated_rows``), the count
+      own kernel) states its row count (``core.util._stated_rows``, the
+      library's one materialized-frame check; ``broadcast_sized`` bounds
+      the same check by bytes for the driver-bound plans), the count
       fits one Arrow batch (``spark.sql.execution.arrow.
       maxRecordsPerBatch``; <= 0 is no limit) and a scan's
       |queries| x |rows| scores stay within ``_ONE_TASK_SCORES``, the

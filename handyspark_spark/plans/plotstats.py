@@ -5,6 +5,11 @@ handyspark/plot.py + dataframe.py:332-473, 779-838).
 Outputs are plain data (bin edges/counts, matplotlib ``bxp`` stat dicts,
 2-D bucket proportions) so tests assert on statistics, not pixels
 (SURVEY.md §5). Rendering is a thin optional veneer.
+
+Every plan here goes back to the driver, so each reads its frame through
+``core.util.broadcast_sized`` (one task on a small materialized frame).
+A plotted column with no non-NULL value (an empty frame, an all-NULL
+column) has no range or quartiles: ``HandyException`` naming it.
 """
 from __future__ import annotations
 
@@ -12,8 +17,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from ..core.util import HandyException, broadcast_sized
 from ..operators import agg as A
-from ..operators.fill import fit_fence_values
 
 
 def _bucket_col(c: str, lo: float, hi: float, bins: int):
@@ -27,6 +32,11 @@ def _bucket_col(c: str, lo: float, hi: float, bins: int):
                     F.lit(bins - 1))).cast("int")
 
 
+def _no_values(plot: str, c: str, where: str = "") -> HandyException:
+    return HandyException(f"{plot} of column {c!r} is undefined{where}: "
+                          "it has no non-null values")
+
+
 def hist_stats(hdf, colname: str, bins: int = 10,
                strata: list[str] | None = None) -> pd.DataFrame:
     """Histogram statistics (ref plot.py:126-148; dataframe.py:817-838).
@@ -35,11 +45,13 @@ def hist_stats(hdf, colname: str, bins: int = 10,
     groupBy(bucket).count -> dense spine with zero-filled empty bins.
     Categorical: top-``bins`` value counts.
     Returns DataFrame(bin_left, bin_right, mid, count [, strata...])."""
-    df = hdf._df
+    df = broadcast_sized(hdf._df)
     strata = strata or []
     if colname in hdf._types.continuous:
         r = df.agg(F.min(colname).alias("mn"),
                    F.max(colname).alias("mx")).collect()[0]
+        if r.mn is None:
+            raise _no_values("hist", colname)
         lo, hi = float(r.mn), float(r.mx)
         edges = np.linspace(lo, hi, bins + 1)
         counts = (df.withColumn("_b", _bucket_col(colname, lo, hi, bins))
@@ -72,7 +84,7 @@ def boxplot_stats(hdf, colnames: list[str], k: float = 1.5,
     Pass 2 (one agg): whiskers = min/max of in-fence values per column.
     Pass 3 (top-k): fliers = top ``max_fliers`` by |value| outside fences.
     """
-    df = hdf._df
+    df = broadcast_sized(hdf._df)
     if isinstance(colnames, str):
         colnames = [colnames]
     exprs = []
@@ -84,6 +96,11 @@ def boxplot_stats(hdf, colnames: list[str], k: float = 1.5,
     if strata:   # deterministic box order (plans no longer orderBy)
         stats = stats.sort_values(strata).reset_index(drop=True)
     for c in colnames:   # unpack the fused quantile arrays
+        missing = stats[stats[f"_qq_{c}"].isna()]
+        if stats.empty or len(missing):
+            where = (f" in stratum {missing.iloc[0][strata].to_dict()}"
+                     if strata and len(missing) else "")
+            raise _no_values("boxplot", c, where)
         stats[[f"_q1_{c}", f"_med_{c}", f"_q3_{c}"]] = pd.DataFrame(
             stats[f"_qq_{c}"].tolist(), index=stats.index)
 
@@ -131,11 +148,14 @@ def scatterplot_stats(hdf, col_x: str, col_y: str, bins: int = 30,
     """2-D bucketized proportions (ref plot.py:50-108): 30×30 grid,
     one groupBy(bucket_x, bucket_y) job, proportions on the driver.
     Returns DataFrame(x_mid, y_mid, count, proportion [, strata...])."""
-    df = hdf._df
+    df = broadcast_sized(hdf._df)
     strata = strata or []
     r = df.agg(F.min(col_x).alias("x0"), F.max(col_x).alias("x1"),
                F.min(col_y).alias("y0"), F.max(col_y).alias("y1")) \
           .collect()[0]
+    for c, lo in ((col_x, r.x0), (col_y, r.y0)):
+        if lo is None:
+            raise _no_values("scatterplot", c)
     ex = np.linspace(float(r.x0), float(r.x1), bins + 1)
     ey = np.linspace(float(r.y0), float(r.y1), bins + 1)
     counts = (df.withColumn("_bx", _bucket_col(col_x, float(r.x0),
