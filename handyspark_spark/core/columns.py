@@ -15,7 +15,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core.schema import COLTYPES
-from ..core.util import broadcast_sized
 from ..operators import agg as A
 
 
@@ -117,7 +116,7 @@ class HandyColumns:
     def _agg(self, name: str, fn) -> pd.Series | float:
         cols = self._cols()
         exprs = [fn(c).alias(c) for c in cols]
-        pdf = A.summary_plan(broadcast_sized(self._df), exprs,
+        pdf = A.summary_plan(self._hdf._src, exprs,
                              self._strata or None).toPandas()
         return self._shape(pdf, name)
 
@@ -163,18 +162,18 @@ class HandyColumns:
         return self.percentile(0.75, precision, exact)
 
     def nunique(self, exact: bool = False):
-        pdf = A.nunique_plan(broadcast_sized(self._df), self._cols(),
+        pdf = A.nunique_plan(self._hdf._src, self._cols(),
                              self._strata or None, exact=exact).toPandas()
         return self._shape(pdf, "nunique")
 
     def isnull(self, ratio: bool = False):
-        pdf = A.isnull_plan(broadcast_sized(self._df), self._cols(), ratio,
+        pdf = A.isnull_plan(self._hdf._src, self._cols(), ratio,
                             self._strata or None).toPandas()
         return self._shape(pdf, "missing" + ("(ratio)" if ratio else ""))
 
     def value_counts(self, dropna: bool = True, ascending: bool = False):
         col = self._cols()[0]
-        pdf = A.value_counts_plan(broadcast_sized(self._df), [col],
+        pdf = A.value_counts_plan(self._hdf._src, [col],
                                   self._strata or None, dropna).toPandas()
         pdf = pdf.set_index((self._strata or []) + [col])["count"]
         pdf = pdf.sort_values(ascending=ascending)
@@ -183,14 +182,14 @@ class HandyColumns:
 
     def mode(self):
         col = self._cols()[0]
-        pdf = A.mode_plan(broadcast_sized(self._df), col,
+        pdf = A.mode_plan(self._hdf._src, col,
                           self._strata or None).toPandas()
         if self._strata:
             return pdf.set_index(self._strata)[col]
         return pdf[col].iloc[0]
 
     def entropy(self):
-        pdf = A.entropy_plan(broadcast_sized(self._df), self._cols(),
+        pdf = A.entropy_plan(self._hdf._src, self._cols(),
                              self._strata or None).toPandas()
         if self._strata:
             return pdf.set_index(self._strata + ["colname"])["entropy"]
@@ -203,7 +202,7 @@ class HandyColumns:
     def mutual_info(self) -> pd.DataFrame:
         cols = self._cols()
         mat = pd.DataFrame(0.0, index=cols, columns=cols)
-        src = broadcast_sized(self._df)
+        src = self._hdf._src
         for i, cx in enumerate(cols):
             ent = A.entropy_plan(src, [cx]).toPandas()
             mat.loc[cx, cx] = ent["entropy"].iloc[0]
@@ -215,7 +214,7 @@ class HandyColumns:
 
     def corr(self, method: str = "pearson") -> pd.DataFrame:
         cols = self._cols()
-        long = A.corr_plan(broadcast_sized(self._df), cols, method).toPandas()
+        long = A.corr_plan(self._hdf._src, cols, method).toPandas()
         mat = pd.DataFrame(1.0, index=cols, columns=cols)
         for _, r in long.iterrows():
             mat.loc[r.col_x, r.col_y] = mat.loc[r.col_y, r.col_x] = r["corr"]

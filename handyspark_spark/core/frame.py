@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.schema import ColumnTaxonomy
-from ..core.util import broadcast_sized
+from ..core.util import collect_sized
 
 
 class Handy:
@@ -58,10 +58,10 @@ class HandyFrame:
     objects (the reference's contract), while row-level transformations stay
     lazy Spark DataFrames wrapped in new HandyFrames.
 
-    Every plan whose result goes back to the driver reads its frame
-    through ``core.util.broadcast_sized``: a materialized frame (a
-    loaded cache or a local relation under plain projections) no larger
-    than ``spark.sql.autoBroadcastJoinThreshold`` is read through
+    Every plan whose result goes back to the driver reads ``_src``
+    (``core.util.collect_sized``): a materialized frame (a loaded
+    cache or a local relation under plain projections) of at most
+    ``core.util._ONE_TASK_CELLS`` rows x columns is read through
     ``coalesce(1)``, so the call runs as one job of one task with no
     exchange. Frames handed back to the caller (``fill``, ``fence``,
     transforms, ``notHandy()``) keep the caller's partitioning.
@@ -97,6 +97,13 @@ class HandyFrame:
     @property
     def df(self) -> DataFrame:
         return self._df
+
+    @property
+    def _src(self) -> DataFrame:
+        """The frame as a plan whose result goes back to the driver reads
+        it: ``core.util.collect_sized(self._df)``. Decided on each read,
+        as the frame's cache can be loaded or dropped between calls."""
+        return collect_sized(self._df)
 
     # -- safety valve (ref dataframe.py:64, 1112-1150) ----------------------
     def set_safety_limit(self, limit: int) -> None:
@@ -169,8 +176,8 @@ class HandyFrame:
         self._handy.response = colname
         if colname not in self._types.continuous:
             self._handy.is_classification = True
-            classes = [r[0] for r in broadcast_sized(self._df)
-                       .select(colname).distinct().collect()]
+            classes = [r[0] for r in
+                       self._src.select(colname).distinct().collect()]
             self._handy.classes = sorted(classes)
             self._handy.nclasses = len(classes)
         return self
@@ -243,7 +250,7 @@ class HandyFrame:
     # -- missing data / outliers (operators) --------------------------------
     def isnull(self, ratio: bool = False) -> pd.Series:
         from ..operators import agg as A
-        pdf = A.isnull_plan(broadcast_sized(self._df), self._df.columns,
+        pdf = A.isnull_plan(self._src, self._df.columns,
                             ratio=ratio).toPandas()
         s = pdf.iloc[0]
         s.name = "missing" + ("(ratio)" if ratio else "")
@@ -259,7 +266,7 @@ class HandyFrame:
         would force an ``ObjectHashAggregate`` and run every moment
         interpreted.
 
-        On a one-task read (``broadcast_sized``) the quartiles merge one
+        On a one-task read (``_src``) the quartiles merge one
         sketch instead of one per partition: they may differ from a
         spread read's within the sketch's rank error (``precision``)."""
         from ..operators import agg as A
@@ -274,7 +281,7 @@ class HandyFrame:
                         F.max(d).alias(f"max__{c}")]
             quartiles.append(A.percentile_expr(
                 c, [0.25, 0.5, 0.75], precision, exact).alias(f"q__{c}"))
-        src = broadcast_sized(self._df)
+        src = self._src
         row = (A.summary_plan(src, moments)
                .crossJoin(A.summary_plan(src, quartiles))
                .collect()[0])
@@ -294,13 +301,12 @@ class HandyFrame:
         aggregation (HLL distinct by default, ``exact=True`` for the
         multi-distinct expand). Beyond-reference surface."""
         from ..operators import agg as A
-        return (A.profile_plan(broadcast_sized(self._df), colnames,
-                               exact=exact)
+        return (A.profile_plan(self._src, colnames, exact=exact)
                 .toPandas().set_index("column"))
 
     def nunique(self, exact: bool = False) -> pd.Series:
         from ..operators import agg as A
-        pdf = A.nunique_plan(broadcast_sized(self._df), self._df.columns,
+        pdf = A.nunique_plan(self._src, self._df.columns,
                              exact=exact).toPandas()
         s = pdf.iloc[0]
         s.name = "nunique"

@@ -41,18 +41,9 @@ def summarize_spark_error(text: str) -> str:
 
 
 def exchange_count(df) -> int:
-    """Number of shuffle exchanges in the executed physical plan. A
-    cached input's build plan (printed under its ``InMemoryRelation``)
-    is left out: its exchanges ran when the cache was built."""
+    """Number of shuffle exchanges in the executed physical plan."""
     plan = df._jdf.queryExecution().executedPlan().toString()
-    n, cached = 0, None
-    for line in plan.splitlines():
-        depth = len(line) - len(line.lstrip(" :+-"))
-        if cached is not None and depth > cached:
-            continue
-        cached = depth if "InMemoryRelation" in line else None
-        n += bool(re.search(r"\bExchange\b", line))
-    return n
+    return len(re.findall(r"\bExchange\b", plan))
 
 
 # expression nodes of a plain projection: column picks, renames, casts
@@ -67,14 +58,15 @@ def _plain(expr) -> bool:
         _plain(kids.apply(i)) for i in range(kids.size()))
 
 
-def _stated(frame: DataFrame):
-    """``(plan, rows)`` when ``frame`` is materialized: its analyzed
-    plan, with the session's cached data substituted, is a loaded
-    ``InMemoryRelation`` or a ``LocalRelation`` under plain projections
-    and repartitions only; ``plan`` is that plan (its ``stats()`` are
-    the frame's size) and ``rows`` the exact row count. None otherwise
-    (a file scan, a range, a Python UDF or a computed column on the
-    way, an unloaded cache).
+def _stated_rows(frame: DataFrame) -> int | None:
+    """``frame``'s exact row count when it is materialized: its
+    analyzed plan, with the session's cached data substituted, is a
+    loaded ``InMemoryRelation`` or a ``LocalRelation`` under plain
+    projections and repartitions only. None otherwise (a file scan, a
+    range, a Python UDF or a computed column on the way, an unloaded
+    cache). ``collect_sized`` bounds the rows by the frame's cells,
+    ``pipeline.similarity._arrow_sized`` adds its Arrow bounds (rows
+    per batch, scores per scan task).
 
     The walk never runs the optimizer: the cache substitution is the
     one ``QueryExecution.withCachedData`` applies, done afresh (the
@@ -90,7 +82,6 @@ def _stated(frame: DataFrame):
             return None
     else:
         plan = cm.useCachedData(plan)
-    top = plan
     while plan.nodeName() in ("Project", "Repartition", "SubqueryAlias"):
         if plan.nodeName() == "Project":
             exprs = plan.projectList()
@@ -98,32 +89,31 @@ def _stated(frame: DataFrame):
                 return None
         plan = plan.child()
     if plan.nodeName() == "LocalRelation":
-        return top, int(plan.data().size())
+        return int(plan.data().size())
     if (plan.nodeName() == "InMemoryRelation"
             and plan.cacheBuilder().isCachedColumnBuffersLoaded()):
-        return top, int(plan.stats().rowCount().get())
+        return int(plan.stats().rowCount().get())
     return None
 
 
-def _stated_rows(frame: DataFrame) -> int | None:
-    """``frame``'s exact row count when it is materialized
-    (``_stated``), else None. The one "is this frame materialized, and
-    how big is it" check: ``broadcast_sized`` bounds the stated plan's
-    bytes, ``pipeline.similarity._arrow_sized`` adds its Arrow bounds
-    (rows per batch, scores per scan task) on top of the rows."""
-    stated = _stated(frame)
-    return None if stated is None else stated[1]
+# most rows x columns a driver-bound plan reads in one task. Measured on
+# cached frames, 4-core host, one task vs four (SCALE.md "Round 20"):
+# the summed wall of the single-aggregate calls (fill median, hist,
+# value_counts, strata mean, exact percentile on a 12-column frame;
+# hist, value_counts on a 3-column one) is lower on one task at 360k
+# cells (0.88x, 0.95x) and crosses over by 600k (12 columns 0.94x at
+# 480k, 1.00x at 600k; 3 columns 1.04x at 480k). Up to 720k cells one
+# task also took less CPU in every call.
+_ONE_TASK_CELLS = 400_000
 
 
-def broadcast_sized(frame: DataFrame) -> DataFrame:
+def collect_sized(frame: DataFrame) -> DataFrame:
     """The input of a plan whose result goes back to the driver:
-    ``frame.coalesce(1)`` when ``frame`` is materialized (``_stated``)
-    and its plan's ``sizeInBytes`` is at most
-    ``spark.sql.autoBroadcastJoinThreshold`` (-1 turns the rule off),
-    else ``frame`` unchanged.
+    ``frame.coalesce(1)`` when ``frame`` is materialized
+    (``_stated_rows``) and its rows x columns are at most
+    ``_ONE_TASK_CELLS``, else ``frame`` unchanged.
 
-    Such a frame is one Spark would already ship whole to every task of
-    a join. Read through ``coalesce(1)`` (narrow, no shuffle) it is one
+    Read through ``coalesce(1)`` (narrow, no shuffle) the frame is one
     partition, so an aggregate, groupBy, window or sort over it sees
     ``SinglePartition``: EnsureRequirements plans no exchange and the
     call runs as one job of one task, where the spread input runs a
@@ -136,14 +126,13 @@ def broadcast_sized(frame: DataFrame) -> DataFrame:
     one sketch instead of one per partition, so approximate quantiles
     may move within their 1/accuracy rank error.
 
-    Frames handed back to the caller never go through it: a returned
-    frame keeps the caller's partitioning."""
-    conf = frame.sparkSession._jsparkSession.sessionState().conf()
-    bound = conf.autoBroadcastJoinThreshold()
-    if bound < 0:
-        return frame
-    stated = _stated(frame)
-    if stated is not None and stated[0].stats().sizeInBytes() <= bound:
+    The HandyFrame surface reads it as ``HandyFrame._src``; the
+    operators that take a plain DataFrame (``ttest``, ``ks_test``,
+    ``BinaryClassificationMetrics``) apply it themselves. Frames handed
+    back to the caller never go through it: a returned frame keeps the
+    caller's partitioning."""
+    rows = _stated_rows(frame)
+    if rows is not None and rows * len(frame.columns) <= _ONE_TASK_CELLS:
         return frame.coalesce(1)
     return frame
 

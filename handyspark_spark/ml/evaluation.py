@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.util import HandyException, broadcast_sized
+from ..core.util import HandyException, collect_sized
 from ..operators.rank import ranged_cumsum, ranged_partition_aggs
 
 
@@ -60,7 +60,7 @@ class BinaryClassificationMetrics:
     """Constructed from a DataFrame with a score (double or probability
     vector/array — element [1] taken as P(class 1), ref evaluation.py:
     138-152) and a binary label column. A small materialized input is
-    read in one task (``core.util.broadcast_sized``): the grouped scores
+    read in one task (``core.util.collect_sized``): the grouped scores
     need no exchange; the curve's range exchange stays."""
 
     def __init__(self, scoreAndLabels: DataFrame, scoreCol: str = "score",
@@ -73,7 +73,7 @@ class BinaryClassificationMetrics:
         score = score.cast("double")
         if score_bins:
             score = F.round(score, score_bins)
-        self._scores = broadcast_sized(df).select(
+        self._scores = collect_sized(df).select(
             score.alias("score"),
             F.col(labelCol).cast("double").alias("label"))
         self._cum = None

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..core.util import HandyException, broadcast_sized
+from ..core.util import HandyException
 from . import agg as A
 
 
@@ -87,7 +87,7 @@ def fill(hdf, *args, categorical=None, continuous=None, strategy=None,
     categorical=['Embarked'])`` — returns a new HandyFrame with nulls/NaNs
     imputed and fitted values recorded in ``statistics_``. A median is
     ``percentile_approx`` at accuracy 1/precision: fitted on a one-task
-    read (``broadcast_sized``) it merges one sketch, so it may differ
+    read (``HandyFrame._src``) it merges one sketch, so it may differ
     from a spread fit's within that rank error."""
     from ..core.frame import HandyFrame
 
@@ -110,10 +110,8 @@ def fill(hdf, *args, categorical=None, continuous=None, strategy=None,
     elif isinstance(strategy, str):
         strategy = {c: strategy for c in continuous}
 
-    # the fit reads one task on a small materialized frame; the filled
-    # frame keeps the caller's partitioning
-    rows = fit_fill_values(broadcast_sized(df), continuous, categorical,
-                           strategy, strata, precision)
+    rows = fit_fill_values(hdf._src, continuous, categorical, strategy,
+                           strata, precision)
     targets = continuous + categorical
 
     if not strata:
@@ -200,8 +198,8 @@ def fence(hdf, colnames, k: float = 1.5, strata: list[str] | None = None,
     if isinstance(colnames, str):
         colnames = [colnames]
     df, handy = hdf._df, hdf._handy.copy()
-    rows = fit_fence_values(broadcast_sized(df), colnames, k, strata,
-                            precision, exact)
+    rows = fit_fence_values(hdf._src, colnames, k, strata, precision,
+                            exact)
 
     out = df
     if not strata:

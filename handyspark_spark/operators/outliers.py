@@ -17,7 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ..core.util import HandyException, broadcast_sized
+from ..core.util import HandyException
 from . import agg as A
 from .fill import fit_fence_values
 from .special import chi2_ppf
@@ -26,7 +26,7 @@ from .special import chi2_ppf
 def tukey_outliers(hdf, ratio: bool = False, k: float = 1.5,
                    precision: float = 0.01, exact: bool = False) -> pd.Series:
     """Count per numerical column of values outside [q1-k*iqr, q3+k*iqr]."""
-    df = broadcast_sized(hdf._df)
+    df = hdf._src
     cols = hdf._types.numerical
     fences = fit_fence_values(df, cols, k, None, precision, exact)[0]
     exprs = []
@@ -96,8 +96,7 @@ def mahalanobis_outliers(hdf, colnames=None, critical_value: float = 0.999,
     df = hdf._df
     if colnames is None:
         colnames = hdf._types.numerical
-    # the fit goes back to the driver; the rows keep their partitioning
-    d2 = mahalanobis_distance_col(broadcast_sized(df), colnames)
+    d2 = mahalanobis_distance_col(hdf._src, colnames)
     thr = chi2_ppf(critical_value, len(colnames))
     out = df.withColumn("__mahalanobis", F.sqrt(d2))
     if keep:

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.util import HandyException, broadcast_sized
+from ..core.util import HandyException, collect_sized
 from .rank import ranged_cumsum
 from .special import betainc_reg, gammainc_lower, norm_cdf, t_sf
 
@@ -65,9 +65,9 @@ def ttest(df: DataFrame, colname: str, group_col: str) -> pd.DataFrame:
     """Pairwise Welch t-tests between every pair of groups
     (ref stats.py:22-34). One Spark job total. Fewer than two groups
     give no pair: 0 rows with the same five columns. A small
-    materialized ``df`` is read in one task (``broadcast_sized``); the
+    materialized ``df`` is read in one task (``collect_sized``); the
     summed moments then re-associate, so t moves in the last bits."""
-    ssv = StatisticalSummaryValues(broadcast_sized(df), colname, group_col)
+    ssv = StatisticalSummaryValues(collect_sized(df), colname, group_col)
     rows = []
     for g1, g2 in combinations(sorted(ssv.groups), 2):
         t, dof, p = welch_t(ssv.groups[g1], ssv.groups[g2])
@@ -254,7 +254,7 @@ def ks_test(df: DataFrame, colname: str, dist: str = "normal",
     pandas UDF over distinct values, with normal/uniform auto-fitting
     params via one extra tiny agg when ``params`` is None, matching the
     round-1 behavior."""
-    row = _ks_plan(broadcast_sized(df), colname, dist, params,
+    row = _ks_plan(collect_sized(df), colname, dist, params,
                    cdf).collect()[0]
     n = int(row["n"]) if row["n"] is not None else 0
     if n and row["d"] is None:      # only a uniform CDF can be NULL

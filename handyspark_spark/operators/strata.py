@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..core.columns import HandyColumns
 from ..core.frame import HandyFrame
-from ..core.util import HandyException, broadcast_sized
+from ..core.util import HandyException
 from . import agg as A
 
 
@@ -151,7 +151,7 @@ class HandyStrata:
         # so the stratified calls over it read it spread
         for s in strata:
             if isinstance(s, Bucket):
-                s._fit(broadcast_sized(hdf._df))
+                s._fit(hdf._src)
                 name = f"_bkt_{s.colname}"     # temp col, dropped on the edge
                 df = df.withColumn(name, s._col())
                 self._colnames.append(name)
@@ -189,8 +189,7 @@ class HandyStrata:
     def combinations(self) -> pd.DataFrame:
         """Observed strata combinations (one groupBy job,
         ref dataframe.py:1846-1848)."""
-        return (broadcast_sized(self._aug._df)
-                .groupBy(*self._colnames).count()
+        return (self._aug._src.groupBy(*self._colnames).count()
                 .orderBy(*self._colnames).toPandas())
 
     def clause_for(self, combo: dict) -> str:
@@ -312,7 +311,7 @@ class StrataColumns(HandyColumns):
         """Stratified correlation — one grouped job over all strata (the
         reference looped filtered children, dataframe.py:1926-1929)."""
         cols = self._cols()
-        long = A.corr_plan(broadcast_sized(self._df), cols, method,
+        long = A.corr_plan(self._hdf._src, cols, method,
                            self._strata).toPandas()
         return self._strata_obj._relabel(
             long.set_index(self._strata + ["col_x", "col_y"])["corr"]

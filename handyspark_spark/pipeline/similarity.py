@@ -287,8 +287,8 @@ def _arrow_sized(frame: DataFrame, source: DataFrame | None = None,
 
     - when ``source`` (default ``frame``: the input before the stage's
       own kernel) states its row count (``core.util._stated_rows``, the
-      library's one materialized-frame check; ``broadcast_sized`` bounds
-      the same check by bytes for the driver-bound plans), the count
+      library's one materialized-frame check; ``collect_sized`` bounds
+      the same rows by cells for the driver-bound plans), the count
       fits one Arrow batch (``spark.sql.execution.arrow.
       maxRecordsPerBatch``; <= 0 is no limit) and a scan's
       |queries| x |rows| scores stay within ``_ONE_TASK_SCORES``, the

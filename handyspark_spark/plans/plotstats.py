@@ -6,8 +6,8 @@ Outputs are plain data (bin edges/counts, matplotlib ``bxp`` stat dicts,
 2-D bucket proportions) so tests assert on statistics, not pixels
 (SURVEY.md §5). Rendering is a thin optional veneer.
 
-Every plan here goes back to the driver, so each reads its frame through
-``core.util.broadcast_sized`` (one task on a small materialized frame).
+Every plan here goes back to the driver, so each reads
+``HandyFrame._src`` (one task on a small materialized frame).
 A plotted column with no non-NULL value (an empty frame, an all-NULL
 column) has no range or quartiles: ``HandyException`` naming it.
 """
@@ -17,7 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ..core.util import HandyException, broadcast_sized
+from ..core.util import HandyException
 from ..operators import agg as A
 
 
@@ -45,7 +45,7 @@ def hist_stats(hdf, colname: str, bins: int = 10,
     groupBy(bucket).count -> dense spine with zero-filled empty bins.
     Categorical: top-``bins`` value counts.
     Returns DataFrame(bin_left, bin_right, mid, count [, strata...])."""
-    df = broadcast_sized(hdf._df)
+    df = hdf._src
     strata = strata or []
     if colname in hdf._types.continuous:
         r = df.agg(F.min(colname).alias("mn"),
@@ -84,7 +84,7 @@ def boxplot_stats(hdf, colnames: list[str], k: float = 1.5,
     Pass 2 (one agg): whiskers = min/max of in-fence values per column.
     Pass 3 (top-k): fliers = top ``max_fliers`` by |value| outside fences.
     """
-    df = broadcast_sized(hdf._df)
+    df = hdf._src
     if isinstance(colnames, str):
         colnames = [colnames]
     exprs = []
@@ -148,7 +148,7 @@ def scatterplot_stats(hdf, col_x: str, col_y: str, bins: int = 30,
     """2-D bucketized proportions (ref plot.py:50-108): 30×30 grid,
     one groupBy(bucket_x, bucket_y) job, proportions on the driver.
     Returns DataFrame(x_mid, y_mid, count, proportion [, strata...])."""
-    df = broadcast_sized(hdf._df)
+    df = hdf._src
     strata = strata or []
     r = df.agg(F.min(col_x).alias("x0"), F.max(col_x).alias("x1"),
                F.min(col_y).alias("y0"), F.max(col_y).alias("y1")) \

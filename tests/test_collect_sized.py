@@ -1,23 +1,23 @@
-"""The driver-bound read rule (``core.util.broadcast_sized``): a small
+"""The driver-bound read rule (``core.util.collect_sized``): a small
 materialized frame is read through ``coalesce(1)`` by every HandyFrame
 plan that collects, so the call runs as one job of one task with no
 exchange. Each call is pinned equal on the one-task branch (a small
 cached fixture) and the spread branch (the same data as a file scan,
-or the threshold at -1); the one-task plans hold no ``Exchange``; the
-eda call script's job counts are pinned per call."""
+or the cell bound below the fixture); the one-task plans hold no
+``Exchange``; the eda call script's job counts are pinned per call."""
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from handyspark_spark import toHandy
+from handyspark_spark.core import util as U
 from handyspark_spark.core.util import (HandyException, _stated_rows,
-                                        broadcast_sized, exchange_count)
+                                        collect_sized, exchange_count)
 from handyspark_spark.ml.evaluation import BinaryClassificationMetrics
 from handyspark_spark.operators.stats import ks_test, ttest
 
 N = 2000
-THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
 
 def _passengers(spark):
@@ -65,15 +65,6 @@ def frames(spark, tmp_path_factory):
     yield tuple(cached) + tuple(spread)
     for f in cached:
         f.unpersist()
-
-
-@pytest.fixture
-def no_rule(spark):
-    """The spread branch on the cached frames: threshold -1."""
-    old = spark.conf.get(THRESHOLD)
-    spark.conf.set(THRESHOLD, "-1")
-    yield
-    spark.conf.set(THRESHOLD, old)
 
 
 def _rank_ok(values, value, q, tol):
@@ -152,63 +143,47 @@ def _assert_same(one, spread, ages, fares):
     pd.testing.assert_frame_equal(one["corr"], spread["corr"], rtol=1e-12)
 
 
-def test_rule_takes_small_materialized_frames_only(spark, frames):
-    """A loaded cache under plain projections within the threshold is
-    one partition; a file scan, a computed column, a frame over the
-    threshold and a threshold of -1 keep their partitions (the frame
-    itself comes back)."""
+def test_rule_takes_small_materialized_frames_only(spark, frames,
+                                                   monkeypatch):
+    """A loaded cache under plain projections within the cell bound is
+    one partition; a file scan, a computed column, an unloaded cache and
+    a frame of one cell more than the bound keep their partitions (the
+    frame itself comes back)."""
     cached, _, scan, _ = frames
+    cells = N * len(cached.columns)
     assert _stated_rows(cached) == N
-    assert broadcast_sized(cached).rdd.getNumPartitions() == 1
+    monkeypatch.setattr(U, "_ONE_TASK_CELLS", cells)
+    assert collect_sized(cached).rdd.getNumPartitions() == 1
     plain = cached.select(F.col("fare").cast("string").alias("f"))
-    assert broadcast_sized(plain).rdd.getNumPartitions() == 1
+    assert collect_sized(plain).rdd.getNumPartitions() == 1
     computed = cached.withColumn("x", F.col("fare") * 2)
     for frame in (scan, computed):
-        assert broadcast_sized(frame) is frame
-    old = spark.conf.get(THRESHOLD)
-    try:
-        for bound in ("-1", "100"):
-            spark.conf.set(THRESHOLD, bound)
-            assert broadcast_sized(cached) is cached, bound
-    finally:
-        spark.conf.set(THRESHOLD, old)
+        assert collect_sized(frame) is frame
+    monkeypatch.setattr(U, "_ONE_TASK_CELLS", cells - 1)
+    assert collect_sized(cached) is cached
     unloaded = spark.range(10).cache()
     try:
-        assert broadcast_sized(unloaded) is unloaded
+        assert collect_sized(unloaded) is unloaded
     finally:
         unloaded.unpersist()
 
 
-def test_eda_calls_equal_on_both_branches(spark, frames, no_rule):
+def test_eda_calls_equal_on_both_branches(spark, frames, monkeypatch):
     """Every driver-bound call gives the same result on the one-task
     branch as on the spread branch (the same data as a file scan, and
-    the cached frames with the rule off): exact aggregates identical,
-    double sums within re-association, approximate quantiles within
-    their rank error."""
+    the cached frames with the bound below them): exact aggregates
+    identical, double sums within re-association, approximate quantiles
+    within their rank error."""
     cached, cached_scored, scan, spread_scored = frames
     pdf = scan.toPandas()
     ages, fares = pdf["age"].dropna(), pdf["fare"]
-    spread_off = _eda(cached, cached_scored)
+    with monkeypatch.context() as m:
+        m.setattr(U, "_ONE_TASK_CELLS", 0)
+        spread_off = _eda(cached, cached_scored)
     spread_scan = _eda(scan, spread_scored)
-    spark.conf.set(THRESHOLD, "10485760")
     one = _eda(cached, cached_scored)
     for spread in (spread_off, spread_scan):
         _assert_same(one, spread, ages, fares)
-
-
-def test_exchange_count_leaves_out_a_cache_build(frames):
-    """A cache built through a shuffle prints its build plan, exchange
-    included, under its ``InMemoryRelation``; that exchange ran when the
-    cache was built, so a one-task read of it counts none."""
-    built = frames[0].repartition(3).cache()
-    try:
-        built.count()
-        grouped = broadcast_sized(built).groupBy("sex").count()
-        assert "Exchange" in grouped._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert exchange_count(grouped) == 0
-    finally:
-        built.unpersist()
 
 
 @pytest.fixture
@@ -235,6 +210,19 @@ CALLS = {
     "percentile": lambda h, df: h.cols["fare"].percentile(0.9),
     "percentile_exact": lambda h, df: h.cols["fare"].percentile(
         0.9, exact=True),
+    # the other driver-bound HandyFrame calls
+    "nunique": lambda h, df: h.nunique(),
+    "isnull": lambda h, df: h.isnull(),
+    "mode": lambda h, df: h.cols["embarked"].mode(),
+    "entropy": lambda h, df: h.cols["pclass"].entropy(),
+    "mutual_info": lambda h, df: h.cols[["pclass", "sex"]].mutual_info(),
+    "corr": lambda h, df: h.cols[["age", "fare"]].corr(),
+    "corr_spearman": lambda h, df: h.cols[["age", "fare"]].corr(
+        method="spearman"),
+    "profile": lambda h, df: h.profile(),
+    "fill_median": lambda h, df: h.fill(continuous=["age"],
+                                        strategy="median"),
+    "outliers": lambda h, df: h.outliers(exact=True),
 }
 
 
@@ -315,7 +303,7 @@ def test_plot_stats_name_a_column_without_values(empties, kind, branch):
     raise a ``HandyException`` naming it, on both branches; a boxplot
     stratum without values is named too."""
     df = empties[kind][branch]
-    assert (broadcast_sized(df) is df) == bool(branch)
+    assert (collect_sized(df) is df) == bool(branch)
     h = toHandy(df)
     for call in (lambda: h.cols["x"].hist(bins=5),
                  lambda: h.cols["x"].boxplot(),
